@@ -52,6 +52,15 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    // the core count every official record was measured at
+    val recordDefaultCpus = "32"
+    // stdout is parsed as JSON, so the notice goes to stderr
+    if (cpus != recordDefaultCpus)
+      System.err.println(s"graft.Bench: cpus=$cpus is not the record " +
+        s"core count $recordDefaultCpus: baselines use only cpus=$cpus " +
+        "history artifacts and the printed line reports this run, not " +
+        s"the record (set SPARK_GRAFT_CPUS=$recordDefaultCpus to compare " +
+        "against it)")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -244,48 +253,38 @@ object Bench {
     // Fallback to the all-time min (or this run's own best sample —
     // first-ever run on a box) when fewer than 3 timestamped
     // artifacts exist.
-    val canaryRef = {
-      val allTime = (prev.get("q1_agg").toSeq ++
-        (if (canarySamples.nonEmpty) Seq(canarySamples.min) else Nil))
-        .minOption.getOrElse(0.0)
-      // QUALIFYING artifacts only: a contended run records an inflated
-      // q1_agg, and several consecutive ones would ratchet the median
-      // up until an equally contended run reads canary_ratio ~1.0 and
-      // ships as an official record — the gate gating itself open.
-      // Disqualified runs therefore never move the reference; and as a
-      // backstop the median is clamped to 1.5× the all-time minimum
-      // (total worst-case acceptance 1.5×clamp · 1.5×canary_ok =
-      // 2.25× the all-time-clean q1_agg — drift beyond that is a real
-      // machine change that SHOULD block official records until
-      // investigated).
-      val recentQ1 = artifacts
-        .filter(_.qualifies)
-        .flatMap(a => """bench_(\d+)\.json""".r.findFirstMatchIn(a.file)
-          .flatMap(m => a.queries.get("q1_agg")
-            .map(q => (m.group(1).toLong, q))))
-        .sortBy(-_._1).take(7).map(_._2)
-      if (recentQ1.size >= 3)
-        math.max(allTime,
-          math.min(recentQ1.sorted.apply(recentQ1.size / 2), allTime * 1.5))
-      else allTime
-    }
+    val allTimeQ1 = (prev.get("q1_agg").toSeq ++
+      (if (canarySamples.nonEmpty) Seq(canarySamples.min) else Nil))
+      .minOption.getOrElse(0.0)
+    // QUALIFYING artifacts only: a contended run records an inflated
+    // q1_agg, and several consecutive ones would ratchet the median
+    // up until an equally contended run reads canary_ratio ~1.0 and
+    // ships as an official record — the gate gating itself open.
+    // Disqualified runs therefore never move the reference; and as a
+    // backstop the median is clamped to 1.5× the all-time minimum
+    // (total worst-case acceptance 1.5×clamp · 1.5×canary_ok =
+    // 2.25× the all-time-clean q1_agg — drift beyond that is a real
+    // machine change that SHOULD block official records until
+    // investigated).
+    val recentQ1 = artifacts
+      .filter(_.qualifies)
+      .flatMap(a => """bench_(\d+)\.json""".r.findFirstMatchIn(a.file)
+        .flatMap(m => a.queries.get("q1_agg")
+          .map(q => (m.group(1).toLong, q))))
+      .sortBy(-_._1).take(7).map(_._2)
+    val recentMedianQ1 =
+      if (recentQ1.size >= 3) Some(recentQ1.sorted.apply(recentQ1.size / 2))
+      else None
+    val canaryRef = recentMedianQ1
+      .map(m => math.max(allTimeQ1, math.min(m, allTimeQ1 * 1.5)))
+      .getOrElse(allTimeQ1)
     // surface WHEN the 1.5× clamp binds (r10 ADVICE): a qualifying
     // median above 1.5× the all-time q1_agg minimum means the host is
     // persistently slower than the record epoch — official records
     // stay blocked by design, but the condition must be readable off
     // the bench line, not only by diffing raw artifacts
-    val canaryClampEngaged = {
-      val allTime = (prev.get("q1_agg").toSeq ++
-        (if (canarySamples.nonEmpty) Seq(canarySamples.min) else Nil))
-        .minOption.getOrElse(0.0)
-      val recentQ1 = artifacts.filter(_.qualifies)
-        .flatMap(a => """bench_(\d+)\.json""".r.findFirstMatchIn(a.file)
-          .flatMap(m => a.queries.get("q1_agg")
-            .map(q => (m.group(1).toLong, q))))
-        .sortBy(-_._1).take(7).map(_._2)
-      recentQ1.size >= 3 && allTime > 0 &&
-        recentQ1.sorted.apply(recentQ1.size / 2) > allTime * 1.5
-    }
+    val canaryClampEngaged =
+      allTimeQ1 > 0 && recentMedianQ1.exists(_ > allTimeQ1 * 1.5)
     // MEDIAN sample vs ref: sustained contention (the failure mode the
     // start/end sentinel is blind to) inflates most samples; a single
     // GC pause or scheduler hiccup inflates one and must not
@@ -303,10 +302,12 @@ object Bench {
 
     // flag > 1.5× slowdowns vs best-known (ignoring sub-0.3 s queries,
     // which are dominated by scheduling noise)
-    val regressions = results.flatMap { case (k, v) =>
-      prev.get(k).filter(p => p >= 0.3 && v > p * 1.5)
-        .map(p => "\"" + k + "\":" + math.round(v / p * 100.0) / 100.0)
+    def regressionsOf(qs: Seq[(String, Double)]): String = qs.flatMap {
+      case (k, v) =>
+        prev.get(k).filter(p => p >= 0.3 && v > p * 1.5)
+          .map(p => "\"" + k + "\":" + math.round(v / p * 100.0) / 100.0)
     }.mkString("{", ",", "}")
+    val regressions = regressionsOf(results)
 
     val errJson = errors.map { case (k, v) =>
       "\"" + k + "\":\"" + v.replace("\\", "\\\\").replace("\"", "'") + "\""
@@ -347,7 +348,6 @@ object Bench {
     // each query scales — serving it a historical record makes that
     // measurement blind), so historical artifacts — already filtered
     // to same-cpus above — are additionally excluded from selection.
-    val recordDefaultCpus = "32"
     val candidates =
       (if (qualifies && only.isEmpty) Seq(Artifact("this_run", total, resMap, true, fingerprint)) else Nil) ++
       (if (cpus == recordDefaultCpus)
@@ -366,10 +366,7 @@ object Bench {
     // so no reader can attribute them to the selected artifact; the
     // verbatim bench_history record (thisRunJson above) keeps the
     // original names.
-    val officialRegressions = officialQs.flatMap { case (k, v) =>
-      prev.get(k).filter(p => p >= 0.3 && v > p * 1.5)
-        .map(p => "\"" + k + "\":" + math.round(v / p * 100.0) / 100.0)
-    }.mkString("{", ",", "}")
+    val officialRegressions = regressionsOf(officialQs)
     val officialProtocolFields =
       s""""reps":$reps,"cpus":$cpus,"this_run_sentinel_start_sec":$sentStart,"this_run_sentinel_end_sec":$sentEnd,"this_run_sentinel_ratio":${r2(sentRatio)},"this_run_canary_samples":$canaryJson,"canary_ref_sec":${r2(canaryRef)},"canary_clamp_engaged":$canaryClampEngaged,"this_run_canary_ratio":${r2(canaryRatio)},"this_run_canary_ok":$canaryOk,"this_run_qualifies":$qualifies,"fingerprint":"$fingerprint","best_known_total":$bestKnownTotal,"sf":"$sfDir""""
     val fullLine = s"""{"metric":"total","value":${officialQs.map(_._2).sum},"unit":"sec","queries":${qJson(officialQs)},"errors":$errJson,"regressions":$officialRegressions,$selJson,$officialProtocolFields}"""

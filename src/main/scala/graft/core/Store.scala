@@ -2576,7 +2576,7 @@ object Store {
     // a ∈ [0, 2^20) and b ∈ [0, 2^14) the top 6 z bits come from `a`
     // alone, so the top-level file split degenerates to a 1-D sort on
     // `a` and a b-range predicate prunes almost nothing (measured:
-    // 58% of rows still read; buckets cut it to ~12% — ZOrderStudy,
+    // 58% of rows still read; buckets cut it to ~12% — see
     // SURVEY §5). Normalization also makes ANY long domain (negative
     // keys included) legal and well-ordered — the contract hole
     // ZInterleave's low-32-bit read would otherwise leave opens only
@@ -2972,7 +2972,7 @@ final case class StoredFrame(frame: IndexedFrame, persistedIndex: DataFrame,
           // top-k by (round(score+baseline, 6), key) — the plan's
           // orderBy(distance, idCol) tie rule. Rounding every row
           // through BigDecimal + a full sort measured 312 ms of the
-          // 671 ms op at 600k rows (KnnWalkStudy); 6dp HALF_UP
+          // 671 ms op at 600k rows (SURVEY §2a row 14c); 6dp HALF_UP
           // rounding is MONOTONE in the raw double, so the top-k is
           // selected on RAW distances with a k-bounded max-heap and
           // only the boundary window (raws that could round into a

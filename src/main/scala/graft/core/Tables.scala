@@ -21,10 +21,11 @@ object Tables {
     * inference Spark JOB per call (~0.1-0.15 s steady-state) — every
     * query pays it for every table it touches, three reps each, so
     * the suite paid hundreds of pure-metadata jobs per bench run
-    * (r15 optimization round; measured by SchemaProbe: 1 job/140 ms
-    * inferred vs 0 jobs/4 ms explicit). The mtime+length key makes a
-    * regenerated dataset re-infer — this caches table METADATA the
-    * way a catalog/table format would (guide §6), never results.
+    * (r15 optimization round; OPTIMIZATION_r15.md §Schema-inference
+    * jobs: 1 job/140 ms inferred vs 0 jobs/4 ms explicit). The
+    * mtime+length key makes a regenerated dataset re-infer — this
+    * caches table METADATA the way a catalog/table format would
+    * (guide §6), never results.
     */
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[
@@ -140,7 +141,7 @@ object Tables {
   // always types containsNull=true and VecUnit's static no-null
   // specialization cannot fire on this table. The specialization
   // stays (non-file inputs benefit); the per-element null branch's
-  // cost on the file path is measured by graft.VecNullStudy (≈0 —
+  // cost on the file path was measured in r13 (SURVEY §7a: ≈0 —
   // the r12 ANN bench drift is host-epoch, not the kernel; the most
   // drifted rows use VecDot/VecLshSig, which carry no null branch).
   def embeddings(s: SparkSession, d: String): DataFrame = apply(s, d, "embeddings")

@@ -22,8 +22,9 @@ import org.apache.spark.sql.types._
   * struct(score, id) where some scores are null picks the FIRST
   * null-scored entry in array order — replicated here by returning at
   * the first null score encountered. Bit-equality is pinned by
-  * KernelEquivSpec against the retained declarative spellings, and the
-  * operators stay hash-oracled end-to-end.
+  * KernelEquivSpec against the declarative spellings it keeps as
+  * reference expressions, and the operators stay hash-oracled
+  * end-to-end.
   */
 object MlKernels {
 

@@ -94,7 +94,8 @@ object Bpe {
     // the pending merges on the fly (vocab-bounded work, measured
     // cheaper than the job it replaces) and the merge sequence is
     // IDENTICAL (BpeSpec pins it against the single-node trainer).
-    // Default 4 was A/B'd against 2/6/8/12 in r16 (BpeCadenceStudy).
+    // Default 4 was A/B'd against 2/6/8/12 in r16
+    // (OPTIMIZATION_r16.md §Verdict item 8).
     var sinceCk = 0
     while (r <= rounds && !done) {
       val top = pairCounts(syms)

@@ -250,21 +250,18 @@ object Dedup {
   def substringPairs(df: DataFrame, text: Column, id: Column,
                      k: Int = 16, winnowWindow: Int = 8,
                      minShared: Int = 2,
-                     maxHashFreq: Long = 1000L): DataFrame = {
-    val fps = df.select(id.as("doc_id"),
+                     maxHashFreq: Long = 1000L): DataFrame =
+    sharedFpPairs(winnowedFps(df, text, id, k, winnowWindow),
+      minShared, maxHashFreq)
+
+  /** the winnowing families' (doc_id, h) fingerprint stream — distinct
+    * per doc by construction ([[graft.functions.WinnowedHashes]])
+    */
+  private def winnowedFps(df: DataFrame, text: Column, id: Column,
+                          k: Int, winnowWindow: Int): DataFrame =
+    df.select(id.as("doc_id"),
       explode(graft.functions.TextHash.winnowedHashes(text, k, winnowWindow))
         .as("h"))
-    // mass-boilerplate fingerprints capped via [[Skew.dropHotKeys]]
-    // (exchange default / grouped / window — see Skew's tradeoff note)
-    val capped = Skew.dropHotKeys(fps, Seq("h"), maxHashFreq)
-    capped.as("x").join(capped.as("y"),
-        col("x.h") === col("y.h") &&
-        col("x.doc_id") < col("y.doc_id"))
-      .groupBy(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
-      .agg(count(lit(1)).as("shared"))
-      .where(col("shared") >= minShared)
-      .orderBy("a", "b")
-  }
 
   /** ENGINE-PORTABLE duplicated-span pairs (§2c.27e): k-gram
     * fingerprints selected by 0-mod-s sampling (the Manber 1994 /
@@ -289,8 +286,18 @@ object Dedup {
   def substringPairsPortable(df: DataFrame, text: Column, id: Column,
                              k: Int = 16, sampleMod: Int = 16,
                              minShared: Int = 2,
-                             maxHashFreq: Long = 1000L): DataFrame = {
-    val fps = portableKgramFps(df, text, id, k, sampleMod)
+                             maxHashFreq: Long = 1000L): DataFrame =
+    sharedFpPairs(portableKgramFps(df, text, id, k, sampleMod),
+      minShared, maxHashFreq)
+
+  /** the span-pair families' shared tail over a (doc_id, h) fingerprint
+    * stream: mass-boilerplate fingerprints capped via
+    * [[Skew.dropHotKeys]] (exchange default / grouped / window — see
+    * Skew's tradeoff note), then the a < b self-join on h counted per
+    * doc pair and kept at ≥ `minShared` shared fingerprints.
+    */
+  private def sharedFpPairs(fps: DataFrame, minShared: Int,
+                            maxHashFreq: Long): DataFrame = {
     val capped = Skew.dropHotKeys(fps, Seq("h"), maxHashFreq)
     capped.as("x").join(capped.as("y"),
         col("x.h") === col("y.h") &&
@@ -347,21 +354,8 @@ object Dedup {
     * join partition.
     */
   def spanDupStats(df: DataFrame, text: Column, id: Column,
-                   k: Int = 16, winnowWindow: Int = 8): DataFrame = {
-    val fps = df.select(id.as("doc_id"),
-      explode(graft.functions.TextHash.winnowedHashes(text, k, winnowWindow))
-        .as("h"))
-    // winnowed hashes are distinct per doc, so a per-hash count > 1
-    // means ">1 distinct doc carries this fingerprint"
-    val counts = fps.groupBy("h").agg(count(lit(1)).as("hc"))
-    fps.join(counts, "h")
-      .withColumn("shared", when(col("hc") > 1, 1L).otherwise(0L))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_fps"),
-        round(sum(col("shared")).cast("double") / count(lit(1)), 6)
-          .as("dup_fraction"))
-      .orderBy("doc_id")
-  }
+                   k: Int = 16, winnowWindow: Int = 8): DataFrame =
+    dupFraction(winnowedFps(df, text, id, k, winnowWindow))
 
   /** ENGINE-PORTABLE twin of [[spanDupStats]]: the same no-join
     * per-doc duplicated-span fraction over the portable 0-mod-s
@@ -379,8 +373,15 @@ object Dedup {
     * row, identically in both engines.
     */
   def spanDupStatsPortable(df: DataFrame, text: Column, id: Column,
-                           k: Int = 16, sampleMod: Int = 16): DataFrame = {
-    val fps = portableKgramFps(df, text, id, k, sampleMod)
+                           k: Int = 16, sampleMod: Int = 16): DataFrame =
+    dupFraction(portableKgramFps(df, text, id, k, sampleMod))
+
+  /** the span-fraction families' shared tail over a (doc_id, h)
+    * fingerprint stream that is DISTINCT per doc — so a per-hash count
+    * > 1 means ">1 distinct doc carries this fingerprint": grouped
+    * per-hash counts, the count join, then the per-doc fraction.
+    */
+  private def dupFraction(fps: DataFrame): DataFrame = {
     val counts = fps.groupBy("h").agg(count(lit(1)).as("hc"))
     fps.join(counts, "h")
       .withColumn("shared", when(col("hc") > 1, 1L).otherwise(0L))
@@ -659,8 +660,28 @@ object Dedup {
     */
   def exactSubstrScrub(df: DataFrame, text: Column, id: Column,
                        minTokens: Int = 12,
-                       maxWindowFreq: Long = 1000L,
-                       nativeKernel: Boolean = true): DataFrame = {
+                       maxWindowFreq: Long = 1000L): DataFrame =
+    // the index filter is a native two-pointer merge over the SORTED
+    // covp (r16 optimization round): the HOF spelling it replaced
+    // probed array_contains per token — O(tokens × covered) per doc,
+    // quadratic for heavily-duplicated docs — and was CodegenFallback
+    // besides. Same kept tokens in the same order (KernelEquivSpec;
+    // scrubbed_md5 hash-oracled end-to-end).
+    scrubInputs(df, text, id, minTokens, maxWindowFreq)
+      .select(col("doc_id"),
+        size(col("toks")).cast("long").as("n_tokens"),
+        coalesce(size(col("covp")), lit(0)).cast("long").as("n_scrubbed"),
+        md5(array_join(graft.functions.MlKernels.scrubKeep(col("toks"),
+          col("covp")), " ")).as("scrubbed_md5"))
+      .orderBy("doc_id")
+
+  /** [[exactSubstrScrub]]'s per-doc filter input: (doc_id, toks, covp =
+    * the sorted distinct 1-based covered token positions, null when
+    * the doc has nothing to scrub), one row per non-null text.
+    */
+  private[graft] def scrubInputs(df: DataFrame, text: Column, id: Column,
+                                 minTokens: Int,
+                                 maxWindowFreq: Long): DataFrame = {
     val n = minTokens
     val win = tokenWindows(df, text, id, n)
     val capped = Skew.dropHotKeys(win, Seq("w"), maxWindowFreq)
@@ -681,27 +702,9 @@ object Dedup {
       .groupBy("doc_id")
       .agg(sort_array(array_distinct(flatten(collect_list(
         sequence(col("p"), col("p") + (n - 1)))))).as("covp"))
-    // the index filter is a native two-pointer merge over the SORTED
-    // covp by default (r16 optimization round): the HOF spelling's
-    // per-token array_contains probe is O(|covered|) — O(tokens ×
-    // covered) per doc, quadratic for heavily-duplicated docs — and
-    // CodegenFallback besides. Same kept tokens in the same order
-    // (KernelEquivSpec; scrubbed_md5 hash-oracled end-to-end).
-    val kept =
-      if (nativeKernel)
-        graft.functions.MlKernels.scrubKeep(col("toks"), col("covp"))
-      else
-        filter(col("toks"), (tok, i) =>
-          !coalesce(array_contains(col("covp"), (i + 1).cast("long")),
-            lit(false)))
     df.select(id.as("doc_id"), split(text, " ").as("toks"))
       .where(col("toks").isNotNull)
       .join(covered, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        size(col("toks")).cast("long").as("n_tokens"),
-        coalesce(size(col("covp")), lit(0)).cast("long").as("n_scrubbed"),
-        md5(array_join(kept, " ")).as("scrubbed_md5"))
-      .orderBy("doc_id")
   }
 
   // ------------------------------------------------------------- minhash

@@ -60,7 +60,7 @@ object Embed {
     * and power-iteration vectors ~3e17), silently breaking the
     * bit-identical-to-DuckDB contract.
     */
-  private def floorDiv(num: Column, den: Column): Column = {
+  private[graft] def floorDiv(num: Column, den: Column): Column = {
     val exact = num - pmod(num, den)
     GraftShims.column(new IntegralDivide(
       GraftShims.expression(exact), GraftShims.expression(den)))
@@ -102,9 +102,9 @@ object Embed {
     * power steps are array arithmetic (zip_with/aggregate — exact
     * long sums in index order; integer addition is associative, so
     * the fold equals the former SQL sum) — zero per-iteration
-    * shuffles vs. the former join+agg round per step. PcaStudy keeps
-    * the former spelling as [[pcaPowerV1]] for paired A/B evidence;
-    * PcaEquivSpec pins bit-equality of the two shapes.
+    * shuffles vs. the former join+agg round per step (paired A/B in
+    * OPTIMIZATION_r15.md §embed_pca). PcaEquivSpec keeps the former
+    * spelling as its reference and pins bit-equality of the two shapes.
     */
   def pcaPower(df: DataFrame, vec: Column, id: Column,
                iterations: Int = 3): DataFrame = {
@@ -170,50 +170,6 @@ object Embed {
     g1.select(posexplode(wFinal).as(Seq("dim", "w_micro")))
       .select(col("dim").cast("long").as("dim"),
         col("w_micro").cast("long").as("w_micro"))
-      .orderBy("dim")
-  }
-
-  /** The pre-r15 spelling of [[pcaPower]] — mean pass, mean
-    * equi-join, corpus self-join on vec_id for the Gram, then one
-    * join+agg Spark round per power step over the localCheckpoint'd
-    * 4096-row S'. Kept ONLY as the paired-A/B reference arm
-    * (PcaStudy) and the bit-equality oracle (PcaEquivSpec) for the
-    * r15 single-pass shape; never registered as a query.
-    */
-  private[graft] def pcaPowerV1(df: DataFrame, vec: Column, id: Column,
-               iterations: Int = 3,
-               checkpointGram: Boolean = true): DataFrame = {
-    require(iterations >= 1)
-    val vm = df.select(id.as("vec_id"),
-        posexplode(transform(vec,
-          x => round(x.cast("double") * 1e6, 0).cast("long")))
-          .as(Seq("dim", "v")))
-    val mean = vm.groupBy("dim")
-      .agg(sum("v").as("s"), count(lit(1)).as("n"))
-      .select(col("dim"), floorDiv(col("s"), col("n")).cast("long").as("mu"))
-    val cent = vm.join(mean, "dim")
-      .select(col("vec_id"), col("dim"), (col("v") - col("mu")).as("c"))
-    val gram = cent.as("p").join(cent.as("q"), "vec_id")
-      .groupBy(col("p.dim").as("i"), col("q.dim").as("j"))
-      .agg(sum(col("p.c") * col("q.c")).as("s"))
-      .select(col("i"), col("j"),
-        floorDiv(col("s"), lit(1000000L)).cast("long").as("s"))
-    val gramCk =
-      if (checkpointGram) gram.localCheckpoint() // built once; reused
-      else gram
-    val w0 = mean.select(col("dim"), lit(1000000L).as("w"))
-    val wT = (1 to iterations).foldLeft(w0) { (w, _) =>
-      val u = gramCk.join(w, gramCk("j") === w("dim"))
-        .groupBy(col("i")).agg(sum(col("s") * col("w")).as("u"))
-      val m = u.agg(max(abs(col("u"))).as("m"))
-      u.crossJoin(broadcast(m))
-        .select(col("i").as("dim"),
-          when(col("m") < 1000000L, col("u"))
-            .otherwise(floorDiv(col("u"),
-              floorDiv(col("m"), lit(1000000L)).cast("long")))
-            .cast("long").as("w"))
-    }
-    wT.select(col("dim").cast("long").as("dim"), col("w").as("w_micro"))
       .orderBy("dim")
   }
 }

@@ -116,9 +116,10 @@ object Graph {
     * overflows codegen). The rank table is therefore localCheckpoint'd
     * every `checkpointEvery` rounds (the cadence Graph.scala has
     * always documented as the cluster-scale requirement — now
-    * implemented and measured, PageRankStudy). The rank table is 2
-    * columns × n_nodes — tiny relative to the edge list — so the
-    * default cadence of 1 materializes it every round, which the
+    * implemented and measured, SURVEY §5 "PageRank checkpoint
+    * cadence"; OPTIMIZATION_r15.md §Examined, left alone). The rank
+    * table is 2 columns × n_nodes — tiny relative to the edge list —
+    * so the default cadence of 1 materializes it every round, which the
     * convergence delta (an action per round) forces anyway: per-round
     * cost is FLAT by construction. A larger cadence trades up to
     * (cadence−1) steps of recompute inside each window for fewer
@@ -163,7 +164,7 @@ object Graph {
       // LAZILY checkpoint-marked, so the convergence aggregate below
       // is the ONE action per round: it materializes the round's rank
       // blocks (truncating lineage) and reads max|Δ| off the same
-      // pass. Halves per-round job count; PageRankStudy re-measured.
+      // pass. Halves per-round job count (SURVEY §2b row 26u2).
       var next = prStep(edgesDeg, ranks, base, dampNum, dampDen)
         .join(ranks.select(col("node"),
           col("rank_micro").as("prev_micro")), "node")

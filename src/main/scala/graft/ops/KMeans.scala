@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.MlKernels
 
 /** Lloyd's k-means over an embedding column, in EXACT integer
   * micro-units (the SURVEY §6 cross-engine protocol): components are
@@ -37,49 +38,35 @@ object KMeans {
     * dist2 is the squared L2 distance in micro² units.
     */
   def assign(df: DataFrame, vec: Column, id: Column,
-             k: Int = 8, iterations: Int = 3,
-             nativeKernel: Boolean = true): DataFrame = {
+             k: Int = 8, iterations: Int = 3): DataFrame = {
     require(k >= 1 && iterations >= 1)
-    // micro conversion + per-row argmin are native codegen'd loop
-    // expressions by default (r16 optimization round — the r15 HOF
-    // spelling below is CodegenFallback, i.e. interpreted per CORPUS
-    // row; KernelEquivSpec pins bit-equality of the two spellings,
-    // the hash oracle gates the operator end-to-end)
-    val vm = df.select(id.as("vec_id"),
-      (if (nativeKernel) graft.functions.MlKernels.vecMicro(vec)
-       else transform(vec, x => round(x.cast("double") * 1e6, 0).cast("long")))
-        .as("v"))
+    // the micro conversion is a native codegen'd loop expression (r16
+    // optimization round: the `transform` spelling it replaced is
+    // CodegenFallback, interpreted per CORPUS row; KernelEquivSpec
+    // pins bit-equality, the hash oracle gates the operator end-to-end)
+    val vm = df.select(id.as("vec_id"), MlKernels.vecMicro(vec).as("v"))
+    assigned(vm, centroids(vm, k, iterations), carryV = false)
+      .select(col("vec_id"), col("m.cluster").as("cluster"),
+        col("m.dist2").as("dist2"))
+      .orderBy("vec_id")
+  }
+
+  /** the ONE-row broadcast centroid table (`cents`: the sorted
+    * (cluster, centroid) array) that the final assignment pass reads:
+    * the k lowest-id vectors, then `iterations` − 1 Lloyd updates.
+    * `vm` is the (vec_id, v ARRAY<BIGINT>) micro table.
+    */
+  private[graft] def centroids(vm: DataFrame, k: Int,
+                               iterations: Int): DataFrame = {
     val w = Window.orderBy("vec_id")
     val c0 = vm.orderBy("vec_id").limit(k)
       .select((row_number().over(w) - 1).cast("long").as("cluster"),
         col("v").as("c"))
-    // centroids ride as ONE broadcast row holding the sorted
-    // (cluster, centroid) array; the per-row argmin is array math
-    // (r15 optimization round — replaces the k× crossJoin row
-    // explode + per-round groupBy(vec_id) reduce with a map-only
-    // pass; same min(struct(dist2, cluster)) ordering, ties to the
-    // smaller cluster id, so assignments are bit-identical)
-    def toArr(cents: DataFrame): DataFrame =
-      cents.agg(sort_array(collect_list(
-        struct(col("cluster"), col("c")))).as("cents"))
-    def assigned(centsArr: DataFrame, carryV: Boolean): DataFrame = {
-      val m =
-        if (nativeKernel)
-          graft.functions.MlKernels.kmArgMin(col("v"), col("cents"))
-        else array_min(transform(col("cents"), e =>
-          struct(aggregate(zip_with(col("v"), e.getField("c"),
-              (x, y) => (x - y) * (x - y)), lit(0L), (acc, d) => acc + d)
-              .as("dist2"),
-            e.getField("cluster").as("cluster"))))
-      vm.crossJoin(broadcast(centsArr))
-        .select(Seq(col("vec_id")) ++
-          (if (carryV) Seq(col("v")) else Nil) :+ m.as("m"): _*)
-    }
-    val cFinal = (1 until iterations).foldLeft(toArr(c0)) { (cents, _) =>
+    (1 until iterations).foldLeft(toArr(c0)) { (cents, _) =>
       // centroid update: exact floored integer mean per (cluster, dim)
       // — the assignment rides the same map-only pass, so each Lloyd
       // round is ONE corpus-sized aggregation
-      toArr(assigned(cents, carryV = true)
+      toArr(assigned(vm, cents, carryV = true)
         .select(col("m.cluster").as("cluster"),
           posexplode(col("v")).as(Seq("dim", "x")))
         .groupBy("cluster", "dim")
@@ -90,9 +77,23 @@ object KMeans {
         .agg(transform(array_sort(collect_list(struct(col("dim"), col("c")))),
           s => s.getField("c")).as("c")))
     }
-    assigned(cFinal, carryV = false)
-      .select(col("vec_id"), col("m.cluster").as("cluster"),
-        col("m.dist2").as("dist2"))
-      .orderBy("vec_id")
   }
+
+  // centroids ride as ONE broadcast row holding the sorted
+  // (cluster, centroid) array; the per-row argmin is array math
+  // (r15 optimization round — replaces the k× crossJoin row
+  // explode + per-round groupBy(vec_id) reduce with a map-only
+  // pass; same min(struct(dist2, cluster)) ordering, ties to the
+  // smaller cluster id, so assignments are bit-identical). The
+  // argmin is the native codegen'd [[MlKernels.kmArgMin]] loop.
+  private def toArr(cents: DataFrame): DataFrame =
+    cents.agg(sort_array(collect_list(
+      struct(col("cluster"), col("c")))).as("cents"))
+
+  private def assigned(vm: DataFrame, centsArr: DataFrame,
+                       carryV: Boolean): DataFrame =
+    vm.crossJoin(broadcast(centsArr))
+      .select(Seq(col("vec_id")) ++
+        (if (carryV) Seq(col("v")) else Nil) :+
+        MlKernels.kmArgMin(col("v"), col("cents")).as("m"): _*)
 }

@@ -303,8 +303,8 @@ object Search {
     * The per-step argmax is array_min over struct(−score, id) — the
     * same (−score, id) ordering min(struct(...)) used before, so the
     * selection sequence (tie → smaller id) is unchanged.
-    * [[mmrTopKV1]] keeps the former spelling as the paired-A/B and
-    * bit-equality reference (MmrEquivSpec).
+    * MmrEquivSpec keeps the former spelling as its bit-equality
+    * reference; the paired A/B is in OPTIMIZATION_r15.md §search_mmr.
     */
   def mmrTopK(emb: DataFrame, vec: Column, id: Column,
               queries: DataFrame, k: Int = 5, shortlist: Int = 20,
@@ -390,77 +390,5 @@ object Search {
       .select(col("qid"), col("s.step").as(rankCol),
         col("s.nbr").as("nbr"), col("s.cos").as("cos"))
       .orderBy("qid", rankCol)
-  }
-
-  /** The pre-r15 spelling of [[mmrTopK]] — corpus re-join for
-    * shortlist vectors, a localCheckpoint'd C²-per-query pair table,
-    * and one 3-join + argmax Spark round per greedy step. Kept ONLY
-    * as the paired-A/B reference arm (MmrStudy) and the bit-equality
-    * oracle (MmrEquivSpec) for the r15 array-tail shape; never
-    * registered as a query.
-    */
-  private[graft] def mmrTopKV1(emb: DataFrame, vec: Column, id: Column,
-              queries: DataFrame, k: Int = 5, shortlist: Int = 20,
-              rankCol: String = "step"): DataFrame = {
-    import graft.functions.VecMath.{vecDot, vecNorm}
-    require(k >= 1 && shortlist >= k)
-    val c = emb.select(id.as("vec_id"), vec.as("e"),
-      vecNorm(vec).as("cn"))
-    val q = queries.select(id.as("qid"), vec.as("qv"),
-      vecNorm(vec).as("qn"))
-    val scored = c.join(broadcast(q), col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("nbr"),
-        round(vecDot(col("qv"), col("e")) / (col("qn") * col("cn")), 6)
-          .as("cos"))
-    // built once, reused by every greedy step (and by the pair table
-    // below): WITHOUT the checkpoint, the k-step foldLeft's final
-    // plan re-runs the corpus-wide brute scoring + top-k 3(k−1)+1
-    // times — measured 7.8 s for k=5 at sf0.1 vs ~1.5 s checkpointed.
-    // localCheckpoint, not persist(): the Graph/Bpe cache-hygiene
-    // contract (blocks GC-reclaimed, lineage truncated per step).
-    val short = graft.ops.TopK.perGroup(scored, Seq(col("qid")),
-        Seq(desc("cos"), asc("nbr")), shortlist, rankCol = "sl")
-      .select(col("qid"), col("nbr"), col("cos"))
-      .localCheckpoint()
-    // attach shortlist vectors once (broadcast the tiny shortlist id
-    // set against the corpus), then the ≤C²-per-query similarity table
-    val shortE = emb.select(id.as("nbr"), vec.as("ne"),
-        vecNorm(vec).as("nn"))
-      .join(broadcast(short), "nbr")
-    val pair = shortE.select(col("qid"), col("nbr").as("x"),
-        col("ne").as("xe"), col("nn").as("xn"))
-      .join(broadcast(shortE.select(col("qid"), col("nbr").as("y"),
-        col("ne").as("ye"), col("nn").as("yn"))), Seq("qid"))
-      .where(col("x") =!= col("y"))
-      .select(col("qid"), col("x"), col("y"),
-        round(vecDot(col("xe"), col("ye")) / (col("xn") * col("yn")), 6)
-          .as("sim"))
-      // ≤ C²·|q| rows (C=shortlist); every step joins against it
-      .localCheckpoint()
-    // greedy selection, k steps unrolled; per-query argmax via
-    // min(struct(-score, id)) — no sort
-    def argmax(cands: DataFrame, score: Column, step: Int): DataFrame =
-      cands
-        .groupBy("qid")
-        .agg(min(struct(negate(score), col("nbr"), col("cos"))).as("m"))
-        .select(col("qid"), lit(step.toLong).as(rankCol),
-          col("m").getField("nbr").as("nbr"),
-          col("m").getField("cos").as("cos"))
-    val sel1 = argmax(short, col("cos"), 1)
-    val selFinal = (2 to k).foldLeft(sel1) { (sel, step) =>
-      val cands = short
-        .join(sel.select(col("qid"), col("nbr")), Seq("qid", "nbr"),
-          "left_anti")
-        .join(pair.withColumnRenamed("x", "nbr")
-          .withColumnRenamed("y", "snbr"), Seq("qid", "nbr"))
-        .join(sel.select(col("qid"), col("nbr").as("snbr")),
-          Seq("qid", "snbr"))
-        .groupBy("qid", "nbr", "cos")
-        .agg(max(col("sim")).as("ms"))
-      val picked = argmax(cands,
-        lit(0.5) * col("cos") - lit(0.5) * col("ms"), step)
-      sel.unionByName(picked)
-    }
-    selFinal.orderBy("qid", rankCol)
   }
 }

@@ -408,8 +408,24 @@ object TextAnalysis {
     * no driver state.
     */
   def naiveBayesConfusion(df: DataFrame, text: Column, id: Column,
-                          label: Column,
-                          nativeKernel: Boolean = true): DataFrame = {
+                          label: Column): DataFrame =
+    // the per-doc argmax is a native codegen'd loop (r16 optimization
+    // round — it replaced an interpreted CodegenFallback HOF spelling;
+    // KernelEquivSpec pins bit-equality, including the null-text
+    // all-scores-null tie)
+    naiveBayesScoring(df, text, id, label)
+      .select(col("lang"), graft.functions.MlKernels.nbArgMin(col("cls"),
+        col("om"), col("n_tokens")).as("pred_lang"))
+      .groupBy("lang", "pred_lang").agg(count(lit(1)).as("n"))
+      .orderBy("lang", "pred_lang")
+
+  /** [[naiveBayesConfusion]]'s per-doc scoring input, before the
+    * argmax: (doc_id, lang, n_tokens, om = the doc's class→obs map,
+    * cls = the sorted (c, prior_micro, denom_micro) class array).
+    */
+  private[graft] def naiveBayesScoring(df: DataFrame, text: Column,
+                                       id: Column,
+                                       label: Column): DataFrame = {
     val toks = tokensOf(text)
     def lnMicro(x: Column): Column =
       round(log(x.cast("double")) * 1e6, 0).cast("long")
@@ -450,27 +466,9 @@ object TextAnalysis {
         struct(col("c"), col("obs_micro"))))).as("om"))
     val classArr = classes.agg(sort_array(collect_list(
       struct(col("c"), col("prior_micro"), col("denom_micro")))).as("cls"))
-    // the per-doc argmax is a native codegen'd loop by default (r16
-    // optimization round — the HOF spelling is CodegenFallback,
-    // interpreted per DOC row; KernelEquivSpec pins bit-equality,
-    // including the null-text all-scores-null tie)
-    val argmax =
-      if (nativeKernel)
-        graft.functions.MlKernels.nbArgMin(col("cls"), col("om"),
-          col("n_tokens"))
-      else
-        array_min(transform(col("cls"), k =>
-          struct(negate(k.getField("prior_micro") +
-              coalesce(element_at(col("om"), k.getField("c")), lit(0L)) -
-              col("n_tokens") * k.getField("denom_micro")).as("ns"),
-            k.getField("c").as("c"))))
-          .getField("c")
-    val pred = docs.select(col("doc_id"), col("lang"), col("n_tokens"))
+    docs.select(col("doc_id"), col("lang"), col("n_tokens"))
       .join(obs, Seq("doc_id"), "left")
       .crossJoin(broadcast(classArr))
-      .select(col("lang"), argmax.as("pred_lang"))
-    pred.groupBy("lang", "pred_lang").agg(count(lit(1)).as("n"))
-      .orderBy("lang", "pred_lang")
   }
 
   /** document fingerprint: md5 over the sorted distinct token set

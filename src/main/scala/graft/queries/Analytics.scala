@@ -749,10 +749,11 @@ object Analytics {
     // round is data-dependent, so no fixed SQL unroll exists; the
     // fixed-5 twin above IS the hash oracle — GraphMlSpec proves the
     // two operators share each prefix exactly, for both checkpoint
-    // cadences, and PageRankStudy measures flat per-round cost at 20
-    // rounds on the 3× corpus). The trade graph is bipartite, so the
-    // hub↔leaf oscillation decays at the damping factor (~0.85ⁿ):
-    // epsilon 300000 micro fires around round 7 — the row
+    // cadences, and SURVEY §5 "PageRank checkpoint cadence" records
+    // flat per-round cost at 20 rounds on the 3× corpus). The trade
+    // graph is bipartite, so the hub↔leaf oscillation decays at the
+    // damping factor (~0.85ⁿ): epsilon 300000 micro fires around
+    // round 7 — the row
     // demonstrably CONVERGES below its cap rather than just running
     // out. Mod-10 customer subsample keeps this driver row at point-
     // query cost; the operator itself is the full-scale path.

@@ -1,29 +1,76 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.functions.{MlKernels, VecMicroLong}
 import graft.ops.{Dedup, KMeans, TextAnalysis}
 
 /** r16 optimization round: the ml_kmeans / ml_naive_bayes / scrub
   * per-row kernels moved from interpreted HOF spellings
   * (CodegenFallback) to native codegen'd loop expressions
   * (functions/MlKernels). The operators' arithmetic is exact-integer,
-  * so the two spellings must agree BIT FOR BIT — pinned here on live
-  * data and on adversarial synthetic corpora (HALF_UP rounding
-  * boundaries, null text, null embedding elements); the DuckDB mirror
-  * additionally hash-gates the shipped queries.
+  * so each kernel must agree BIT FOR BIT with the HOF spelling it
+  * replaced. Those spellings live on here as reference expressions,
+  * and every kernel is compared with its twin row for row, on the
+  * kernel's own input columns as the operator builds them: live data
+  * and adversarial synthetic corpora (HALF_UP rounding boundaries,
+  * null text, null embedding elements, fully covered docs). The
+  * DuckDB mirror additionally hash-gates the shipped queries.
   */
 class KernelEquivSpec extends SparkSpec {
 
+  // ------------------------------------- the replaced HOF spellings
+
+  private def vecMicroHof(v: Column): Column =
+    transform(v, x => round(x.cast("double") * 1e6, 0).cast("long"))
+
+  private def kmArgMinHof(v: Column, cents: Column): Column =
+    array_min(transform(cents, e =>
+      struct(aggregate(zip_with(v, e.getField("c"),
+          (x, y) => (x - y) * (x - y)), lit(0L), (acc, d) => acc + d)
+          .as("dist2"),
+        e.getField("cluster").as("cluster"))))
+
+  private def nbArgMinHof(cls: Column, om: Column, nTokens: Column): Column =
+    array_min(transform(cls, k =>
+      struct(negate(k.getField("prior_micro") +
+          coalesce(element_at(om, k.getField("c")), lit(0L)) -
+          nTokens * k.getField("denom_micro")).as("ns"),
+        k.getField("c").as("c"))))
+      .getField("c")
+
+  private def scrubKeepHof(toks: Column, covp: Column): Column =
+    filter(toks, (_, i) =>
+      !coalesce(array_contains(covp, (i + 1).cast("long")), lit(false)))
+
+  /** native and HOF evaluated side by side over `in`: every row must
+    * carry the same value in both
+    */
+  private def assertSameRows(in: DataFrame, key: String,
+                             native: Column, hof: Column): Unit = {
+    val rows = in.select(col(key), native.as("native"), hof.as("hof"))
+      .collect()
+    assert(rows.nonEmpty)
+    rows.foreach(r => assert(r.get(1) == r.get(2), s"$key=${r.get(0)}"))
+  }
+
   // ---------------------------------------------------------- kmeans
 
+  /** vecMicro on the raw embeddings, then kmArgMin against the
+    * centroid table of every round `KMeans.assign(k, iters)` runs:
+    * the k lowest-id vectors, then each Lloyd update
+    */
   private def assertKmSame(df: DataFrame, k: Int = 8, iters: Int = 3): Unit = {
-    val v2 = KMeans.assign(df, col("embedding"), col("vec_id"), k, iters,
-      nativeKernel = true).collect().toSeq
-    val v1 = KMeans.assign(df, col("embedding"), col("vec_id"), k, iters,
-      nativeKernel = false).collect().toSeq
-    assert(v2 == v1)
+    assertSameRows(df, "vec_id", MlKernels.vecMicro(col("embedding")),
+      vecMicroHof(col("embedding")))
+    val vm = df.select(col("vec_id"),
+      MlKernels.vecMicro(col("embedding")).as("v"))
+    for (round <- 1 to iters)
+      assertSameRows(vm.crossJoin(KMeans.centroids(vm, k, round)), "vec_id",
+        MlKernels.kmArgMin(col("v"), col("cents")),
+        kmArgMinHof(col("v"), col("cents")))
   }
 
   private def embSchema = StructType(Seq(
@@ -44,6 +91,15 @@ class KernelEquivSpec extends SparkSpec {
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(rows, 3), embSchema)
     assertKmSame(df, k = 4, iters = 3)
+    // exact dist2 ties: two centroids equal to the row's own vector,
+    // so the tie rule alone (smaller cluster id) decides
+    val tied = df.select(col("vec_id"),
+      MlKernels.vecMicro(col("embedding")).as("v"))
+      .select(col("vec_id"), col("v"), array(
+        struct(lit(0L).as("cluster"), col("v").as("c")),
+        struct(lit(1L).as("cluster"), col("v").as("c"))).as("cents"))
+    assertSameRows(tied, "vec_id", MlKernels.kmArgMin(col("v"), col("cents")),
+      kmArgMinHof(col("v"), col("cents")))
   }
 
   test("kmeans: equality when some vectors carry null elements") {
@@ -59,25 +115,45 @@ class KernelEquivSpec extends SparkSpec {
     assertKmSame(df, k = 3, iters = 2)
   }
 
-  // ----------------------------------------------------- naive bayes
-
-  private def assertNbSame(df: DataFrame): Unit = {
-    val v2 = TextAnalysis.naiveBayesConfusion(df, col("text"),
-      col("doc_id"), col("lang"), nativeKernel = true).collect().toSeq
-    val v1 = TextAnalysis.naiveBayesConfusion(df, col("text"),
-      col("doc_id"), col("lang"), nativeKernel = false).collect().toSeq
-    assert(v2 == v1)
+  test("vecMicro maps NaN to 0 and ±Inf to Long.Max/Min (non-ANSI cast)") {
+    // the documented edge, asserted directly: the replaced ANSI cast
+    // chain raises on these inputs, so there is no HOF twin to match
+    val vals = Seq(Float.NaN, Float.PositiveInfinity, Float.NegativeInfinity,
+      1.5f)
+    val expected = Seq(0L, Long.MaxValue, Long.MinValue, 1500000L)
+    for (containsNull <- Seq(false, true)) {
+      val t = ArrayType(FloatType, containsNull)
+      val df = spark.createDataFrame(spark.sparkContext.parallelize(
+        Seq(Row(vals)), 1), StructType(Seq(StructField("v", t))))
+      val generated = df.select(MlKernels.vecMicro(col("v")))
+        .head().getSeq[Long](0)
+      assert(generated == expected, s"codegen, containsNull=$containsNull")
+      val interpreted = VecMicroLong(Literal.create(vals, t)).eval()
+        .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+        .toLongArray().toSeq
+      assert(interpreted == expected, s"eval, containsNull=$containsNull")
+    }
   }
 
+  // ----------------------------------------------------- naive bayes
+
+  private def nbInputs(df: DataFrame): DataFrame =
+    TextAnalysis.naiveBayesScoring(df, col("text"), col("doc_id"), col("lang"))
+
+  private def assertNbSame(in: DataFrame): Unit =
+    assertSameRows(in, "doc_id",
+      MlKernels.nbArgMin(col("cls"), col("om"), col("n_tokens")),
+      nbArgMinHof(col("cls"), col("om"), col("n_tokens")))
+
   test("naive bayes: native kernel equals the HOF spelling on sf0.001") {
-    assertNbSame(graft.core.Tables.documents(spark, sfDir))
+    assertNbSame(nbInputs(graft.core.Tables.documents(spark, sfDir)))
   }
 
   test("naive bayes: equality with null/empty texts (all-scores-null tie)") {
     val rows = Seq(
       Row(1L, "the cat sat on the mat", "en"),
       Row(2L, "le chat est noir", "fr"),
-      Row(3L, null, "en"),          // null text → null n_tokens
+      Row(3L, null, "en"),          // null text → null n_tokens, null om
       Row(4L, "", "fr"),            // empty text → [""] token
       Row(5L, "the chat sat", "en"),
       Row(6L, "zzz unseen tokens only", "fr"))
@@ -85,24 +161,38 @@ class KernelEquivSpec extends SparkSpec {
       StructField("doc_id", LongType),
       StructField("text", StringType),
       StructField("lang", StringType)))
-    val df = spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 2), schema)
-    assertNbSame(df)
+    val in = nbInputs(spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, 2), schema))
+    assert(in.where(col("doc_id") === 3L && col("n_tokens").isNull &&
+      col("om").isNull).count() == 1)
+    assertNbSame(in)
+    // exact score ties: no observed tokens and two classes with the
+    // same prior and denominator, so the tie rule alone (smaller
+    // class) decides
+    assertNbSame(in.select(col("doc_id"),
+      lit(null).cast("map<string,bigint>").as("om"), col("n_tokens"),
+      array(struct(lit("en").as("c"), lit(-700000L).as("prior_micro"),
+          lit(9000000L).as("denom_micro")),
+        struct(lit("fr").as("c"), lit(-700000L).as("prior_micro"),
+          lit(9000000L).as("denom_micro"))).as("cls")))
   }
 
   // ----------------------------------------------------------- scrub
 
-  private def assertScrubSame(df: DataFrame): Unit = {
-    val v2 = Dedup.exactSubstrScrub(df, col("text"), col("doc_id"),
-      nativeKernel = true).collect().toSeq
-    val v1 = Dedup.exactSubstrScrub(df, col("text"), col("doc_id"),
-      nativeKernel = false).collect().toSeq
-    assert(v2 == v1)
-  }
+  private def scrubInputs(df: DataFrame): DataFrame =
+    Dedup.scrubInputs(df, col("text"), col("doc_id"), minTokens = 12,
+      maxWindowFreq = 1000L)
+
+  private def assertScrubSame(in: DataFrame): Unit =
+    assertSameRows(in, "doc_id",
+      MlKernels.scrubKeep(col("toks"), col("covp")),
+      scrubKeepHof(col("toks"), col("covp")))
 
   test("scrub: native two-pointer filter equals the HOF spelling on sf0.001") {
-    assertScrubSame(Dedup.plantSpanDups(
+    val in = scrubInputs(Dedup.plantSpanDups(
       graft.core.Tables.documents(spark, sfDir)))
+    assert(in.where(col("covp").isNotNull).count() > 0)
+    assertScrubSame(in)
   }
 
   test("scrub: equality on constructed duplicates incl. fully-covered docs") {
@@ -116,8 +206,22 @@ class KernelEquivSpec extends SparkSpec {
     val schema = StructType(Seq(
       StructField("doc_id", LongType),
       StructField("text", StringType)))
-    val df = spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 2), schema)
-    assertScrubSame(df)
+    val in = scrubInputs(spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, 2), schema))
+    assert(in.where(col("doc_id") === 2L && size(col("covp")) === 40)
+      .count() == 1)
+    assertScrubSame(in)
+    // the covp shapes the operator leaves to the left-join miss (null)
+    // plus an empty array and a null token list
+    val edges = spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+      Row(1L, Seq("a", "b"), Seq.empty[Long]),
+      Row(2L, Seq("a", "b"), null),
+      Row(3L, null, Seq(1L)),
+      Row(4L, Seq("a", null, "c"), Seq(1L, 3L))), 1),
+      StructType(Seq(
+        StructField("doc_id", LongType),
+        StructField("toks", ArrayType(StringType)),
+        StructField("covp", ArrayType(LongType)))))
+    assertScrubSame(edges)
   }
 }
