@@ -37,6 +37,37 @@ object Store {
     (path.getFileSystem(spark.sparkContext.hadoopConfiguration), path)
   }
 
+  /** run `a` and `b` concurrently: the independent Spark writes of one
+    * commit (disjoint paths, no data dependency) overlap instead of
+    * queueing behind each other's scheduler floor. `b` runs on a fresh
+    * thread, which inherits a clone of the caller's SparkContext local
+    * properties (job group, description, scheduler pool — they live in
+    * an InheritableThreadLocal) and gets the caller's active session,
+    * so its jobs are attributed to, and cancelled with, the caller's.
+    * Waits for BOTH before returning or rethrowing (a's failure first,
+    * b's attached as suppressed): no write of the pair is still running
+    * when the caller publishes a marker or handles the error.
+    */
+  private def inParallel[A, B](spark: SparkSession)(a: => A, b: => B): (A, B) = {
+    @volatile var rb: Either[Throwable, B] = null
+    val t = new Thread(() => {
+      SparkSession.setActiveSession(spark)
+      rb = try Right(b) catch { case e: Throwable => Left(e) }
+    }, "graft-store-write")
+    t.setDaemon(true)
+    t.start()
+    val ra = try Right(a) catch { case e: Throwable => Left(e) }
+    var interrupted = false
+    while (t.isAlive)
+      try t.join() catch { case _: InterruptedException => interrupted = true }
+    if (interrupted) Thread.currentThread.interrupt()
+    (ra, rb) match {
+      case (Right(x), Right(y)) => (x, y)
+      case (Left(e), other) => other.left.foreach(e.addSuppressed); throw e
+      case (_, Left(e)) => throw e
+    }
+  }
+
   /** (root path, generation number) of the highest committed index
     * generation; generation 0 is the base `<dir>/index` layout.
     */
@@ -635,7 +666,12 @@ object Store {
   }
 
   /** anti-join `df` against the key sets of `dels` (grouped by key
-    * column so same-column tombstones probe as ONE union)
+    * column so same-column tombstones probe as ONE union). Key sets
+    * are SET-SEMANTIC: every consumer — these anti-joins, the victim
+    * semi-joins, [[tombstoneKeysOverlap]] and PointRead's driver-side
+    * victim sets — gives the same answer for a key listed twice, so
+    * neither the persisted sets nor their union is de-duplicated (a
+    * `distinct` would only add a shuffle stage to every scan branch).
     */
   private def applyTombstones(spark: SparkSession, root: String,
                               df: DataFrame,
@@ -644,7 +680,7 @@ object Store {
       case (acc, (keyCol, ds)) =>
         val keys = ds.map { case (id, _) =>
           readKeys(spark, s"$root/del_$id/keys")
-        }.reduce(_ unionByName _).distinct()
+        }.reduce(_ unionByName _)
           .select(col("key").as("__graft_del_key"))
         acc.join(keys, acc(keyCol) === col("__graft_del_key"), "left_anti")
     }
@@ -815,8 +851,10 @@ object Store {
     * appears in `keys` (any single-column frame; values cast to the
     * data column's type). Merge-on-read: nothing is rewritten — the
     * call writes one tombstone unit (key set + negative index
-    * segment) and costs one scan of the MATCHING rows to index them,
-    * never a corpus rewrite; every open/openAt/rowsOf read serves the
+    * segment). Indexing the victims scans every committed segment
+    * below the tombstone's id, semi-joined to the persisted key set
+    * (only the matching rows reach the index build), but never
+    * rewrites the corpus; every open/openAt/rowsOf read serves the
     * post-delete state, and [[compact]] later folds the tombstones
     * into the data physically. Returns the tombstone's snapshot id.
     *
@@ -833,13 +871,19 @@ object Store {
              keyCol: String, keys: DataFrame): Int =
     writeTombstone(spark, dir, spec, keyCol, keys, commit = true)
 
-  /** the tombstone write shared by [[delete]] and [[upsert]] — the
-    * latter defers the `_COMMITTED` marker until its replacement
-    * segment has committed (crash-atomicity, see [[upsert]]).
+  /** [[delete]]'s tombstone write (claim, then [[writeTombstoneAt]]);
+    * `commit = false` defers the `_COMMITTED` marker to a later
+    * [[commitTombstone]], as [[upsert]] does (crash-atomicity).
     */
   private[core] def writeTombstone(spark: SparkSession, dir: String,
                              spec: IndexSpec, keyCol: String,
-                             keys: DataFrame, commit: Boolean): Int = {
+                             keys: DataFrame, commit: Boolean): Int =
+    writeTombstoneAt(spark, dir, spec, keyCol, keys, commit,
+      claimTombstoneId(spark, dir, spec, keyCol))
+
+  /** validate a delete against the live store, then claim its unit id */
+  private def claimTombstoneId(spark: SparkSession, dir: String,
+                               spec: IndexSpec, keyCol: String): Int = {
     val (root, _) = currentIndexRoot(spark, dir)
     val (fs, _) = fsFor(spark, dir)
     // cheap validations BEFORE claiming the unit id (r13 advice #5 —
@@ -859,13 +903,16 @@ object Store {
     val liveCols = dataAsOf(spark, dir, None).columns
     require(liveCols.contains(keyCol),
       s"no column '$keyCol' in store data (${liveCols.mkString(",")})")
-    writeTombstoneAt(spark, dir, spec, keyCol, keys, commit,
-      claimUnitId(fs, root))
+    claimUnitId(fs, root)
   }
 
   /** [[writeTombstone]] at an EXPLICIT (already claimed or
-    * deterministically owned) unit id — the [[upsertBatch]] face
-    * needs batch-keyed ids for redelivery idempotence
+    * deterministically owned) unit id — [[upsert]] claims its id
+    * before the segment's, and the [[upsertBatch]] face needs
+    * batch-keyed ids for redelivery idempotence. `_KEYCOL` is the
+    * unit's last write before the marker: its presence means the
+    * tombstone is fully written (upsert publishes its segment only
+    * after this returns; upsertBatch's redelivery gate relies on it).
     */
   private def writeTombstoneAt(spark: SparkSession, dir: String,
                                spec: IndexSpec, keyCol: String,
@@ -887,7 +934,8 @@ object Store {
       s"no column '$keyCol' in store data (${live0.columns.mkString(",")})")
     val kt = live0.schema(keyCol).dataType
     val inCol = keys.columns.head
-    val k = keys.select(col(inCol).cast(kt).as("key")).distinct()
+    // no distinct: key sets are set-semantic (see applyTombstones)
+    val k = keys.select(col(inCol).cast(kt).as("key"))
     // commit protocol: keys + ixdelta + keycol first, marker LAST —
     // a crash leaves an uncommitted unit no reader ever applies
     k.write.mode(SaveMode.Overwrite).parquet(s"$root/del_$id/keys")
@@ -1385,20 +1433,24 @@ object Store {
     * be key-unique (duplicate keys in one batch all land — they
     * cannot tombstone each other). Returns the append's snapshot id.
     *
-    * CRASH-ATOMIC (r11 advice): the tombstone is fully written first
-    * but its `_COMMITTED` marker is DEFERRED until the replacement
-    * segment has committed — so a crash anywhere before the append
-    * commits leaves the store byte-for-byte UNCHANGED for readers
-    * (the uncommitted tombstone is invisible; vacuum reclaims it),
-    * never in the matched-keys-deleted-with-no-replacement state the
-    * eager commit allowed. The one remaining window — crash between
-    * the append's commit and the tombstone's marker — leaves BOTH
-    * copies visible (duplicates, no data loss); re-running the same
-    * upsert repairs it, because the new tombstone postdates and
-    * covers both copies. The id order stays correct by construction:
-    * the tombstone claims its id before the append claims a larger
-    * one, so the deferred-commit tombstone still scopes over exactly
-    * the pre-existing segments.
+    * CRASH-ATOMIC (r11 advice). The tombstone claims its id first,
+    * then the segment claims a larger one, so the tombstone scopes
+    * over exactly the pre-existing segments. The two units' files
+    * are then written side by side — the tombstone (keys, victim
+    * `ixdelta`, `_KEYCOL`; no marker) beside the segment's data,
+    * entries and refs — and published in a fixed order: the
+    * segment's `_MANIFEST` only after the tombstone unit is fully
+    * written (its `_KEYCOL` exists), then the tombstone's
+    * `_COMMITTED` marker through [[commitTombstone]]. Each marker
+    * lands after the files it covers, so there are two crash states
+    * (unchanged by the overlap). A crash anywhere before the
+    * manifest leaves the store byte-for-byte UNCHANGED for readers
+    * (both units uncommitted and invisible; vacuum reclaims them),
+    * never the matched-keys-deleted-with-no-replacement state an
+    * eager commit allowed. A crash between the manifest and the
+    * tombstone's marker leaves BOTH copies visible (duplicates, no
+    * data loss); re-running the same upsert repairs it, because the
+    * new tombstone postdates and covers both copies.
     *
     * Like every write here: single writer; when the store carries
     * row-refs, `keyCol` must be the refs key column (delegated check).
@@ -1406,9 +1458,15 @@ object Store {
   def upsert(batch: DataFrame, dir: String, spec: IndexSpec,
              keyCol: String): Int = {
     val spark = batch.sparkSession
-    val delId = writeTombstone(spark, dir, spec, keyCol,
-      batch.select(keyCol), commit = false)
-    append(batch, dir, spec)
+    rejectReservedNames(batch.schema, spec)
+    val delId = claimTombstoneId(spark, dir, spec, keyCol)
+    // a tombstone needs a manifest-carrying store (checked above), so
+    // append()'s legacy-index migration cannot apply here
+    val (root, _) = currentIndexRoot(spark, dir)
+    val (fs, _) = fsFor(spark, dir)
+    appendSegment(batch, dir, spec, claimUnitId(fs, root), root,
+      beside = writeTombstoneAt(spark, dir, spec, keyCol,
+        batch.select(keyCol), commit = false, delId))
     // the deferred marker goes through the same validate-at-commit as
     // delete's (the upsert's own replacement segment has a larger id
     // and is correctly out of scope)
@@ -1489,23 +1547,39 @@ object Store {
     // inference job a schema-less read runs (r16; the write-side twin
     // of the r15 read-layer fix — one fewer job per store write).
     val persisted = spark.read.schema(df.schema).parquet(s"$dir/data")
-    val ix = IndexedFrame(persisted, spec)
-    ix.entries.write.mode(SaveMode.Overwrite)
-      .options(PointRead.SegWriteOptions).parquet(s"$dir/index/seg_0")
-    // optional per-entry row-refs artifact (the reference's bitmap
-    // payload, Dfs.scala:330-408) — segment-parallel to the f index
-    if (spec.rowRefs.isDefined) {
-      val rr = ix.rowRefs
-      rr.write.mode(SaveMode.Overwrite)
-        .options(PointRead.RefsWriteOptions)
-        .parquet(s"$dir/index/rows_0")
-      writeSchemaSidecar(fs, s"$dir/index/rows_0", rr.schema)
-    }
+    writeSegmentIndex(spark, IndexedFrame(persisted, spec), s"$dir/index", 0,
+      oneTask = false)
     val dataNames = fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/data"))
       .map(_.getPath.getName)
       .filterNot(n => n.startsWith("_") || n.startsWith(".")).toSeq
     writeManifest(fs, s"$dir/index/seg_0", dataNames)
-    writeSchemaSidecar(fs, s"$dir/index/seg_0", persisted.schema)
+  }
+
+  /** a segment's index units, built from its persisted rows: the
+    * (field,value,f) entries at `seg_<id>` with the data's schema
+    * sidecar, and — when the spec asks — the per-entry row-refs
+    * artifact (the reference's bitmap payload, Dfs.scala:330-408) at
+    * `rows_<id>`. The two are independent reads of the same rows onto
+    * disjoint paths, so they are written side by side; the caller
+    * publishes the manifest only after both have finished.
+    * `oneTask` writes each as one task, so an empty batch's parquet
+    * still gets a readable footer.
+    */
+  private def writeSegmentIndex(spark: SparkSession, ix: IndexedFrame,
+                                root: String, id: Int,
+                                oneTask: Boolean): Unit = {
+    val (fs, _) = fsFor(spark, root)
+    def shaped(df: DataFrame) = if (oneTask) df.repartition(1) else df
+    inParallel(spark)({
+      shaped(ix.entries).write.mode(SaveMode.Overwrite)
+        .options(PointRead.SegWriteOptions).parquet(s"$root/seg_$id")
+      writeSchemaSidecar(fs, s"$root/seg_$id", ix.df.schema)
+    }, ix.spec.rowRefs.foreach { _ =>
+      val rr = shaped(ix.rowRefs)
+      rr.write.mode(SaveMode.Overwrite)
+        .options(PointRead.RefsWriteOptions).parquet(s"$root/rows_$id")
+      writeSchemaSidecar(fs, s"$root/rows_$id", rr.schema)
+    })
   }
 
   /** DRIVER-SIDE read of a small persisted weight artifact (the
@@ -1820,11 +1894,16 @@ object Store {
 
   /** the post-claim half of [[append]] — everything that happens
     * under an already-claimed unit id (separated so the conflict-
-    * detection interleavings are deterministically testable)
+    * detection interleavings are deterministically testable). The
+    * entries write runs beside the row-refs write ([[writeSegmentIndex]]);
+    * `beside` (an [[upsert]]'s tombstone) runs beside the whole
+    * segment write. The `_MANIFEST` commit marker still lands last,
+    * after every write of the pair has finished.
     */
   private[core] def appendSegment(batch: DataFrame, dir: String,
                                   spec: IndexSpec, segId: Int,
-                                  root: String): Unit = {
+                                  root: String,
+                                  beside: => Unit = ()): Unit = {
     val spark = batch.sparkSession
     val (fs, _) = fsFor(spark, dir)
     // VALIDATE BEFORE MUTATING: a type-changed column rejected only by
@@ -1854,29 +1933,21 @@ object Store {
     // batch (sample/rand/changing source), index a DIFFERENT row set
     // than the one the data write just persisted.
     val sub = s"seg_$segId"
-    batch.write.mode(SaveMode.Overwrite).parquet(s"$dir/data/$sub")
-    val names = fs.listStatus(
-        new org.apache.hadoop.fs.Path(s"$dir/data/$sub"))
-      .map(_.getPath.getName)
-      .filterNot(n => n.startsWith("_") || n.startsWith(".")).toSeq.sorted
-    if (names.nonEmpty) {
-      // writer's own schema — skips the inference job (see write())
-      val persisted = spark.read.schema(batch.schema)
-        .parquet(s"$dir/data/$sub")
-      val ix = IndexedFrame(persisted, spec)
-      ix.entries
-        .write.mode(SaveMode.Overwrite)
-        .options(PointRead.SegWriteOptions).parquet(s"$root/seg_$segId")
-      // row-refs segment mirrors the f segment 1:1 — O(batch), the
+    val (_, names) = inParallel(spark)(beside, {
+      batch.write.mode(SaveMode.Overwrite).parquet(s"$dir/data/$sub")
+      val names = fs.listStatus(
+          new org.apache.hadoop.fs.Path(s"$dir/data/$sub"))
+        .map(_.getPath.getName)
+        .filterNot(n => n.startsWith("_") || n.startsWith(".")).toSeq.sorted
+      // writer's own schema — skips the inference job (see write());
+      // the row-refs segment mirrors the f segment 1:1 — O(batch), the
       // existing refs are neither read nor rewritten
-      if (spec.rowRefs.isDefined) {
-        val rr = ix.rowRefs
-        rr.write.mode(SaveMode.Overwrite)
-          .options(PointRead.RefsWriteOptions)
-          .parquet(s"$root/rows_$segId")
-        writeSchemaSidecar(fs, s"$root/rows_$segId", rr.schema)
-      }
-      writeSchemaSidecar(fs, s"$root/seg_$segId", persisted.schema)
+      if (names.nonEmpty)
+        writeSegmentIndex(spark, IndexedFrame(spark.read.schema(batch.schema)
+          .parquet(s"$dir/data/$sub"), spec), root, segId, oneTask = false)
+      names
+    })
+    if (names.nonEmpty) {
       writeManifest(fs, s"$root/seg_$segId", names.map(n => s"$sub/$n"))
       // appender half of delete∥append conflict detection: a
       // concurrently-committing tombstone with a larger id may have
@@ -1916,7 +1987,16 @@ object Store {
     * batchId fails loudly. Single writer, as for append/compact.
     */
   def appendBatch(batch: DataFrame, dir: String, spec: IndexSpec,
-                  batchId: Long): Boolean = {
+                  batchId: Long): Boolean =
+    appendBatchBeside(batch, dir, spec, batchId, ())
+
+  /** [[appendBatch]] with `beside` ([[upsertBatch]]'s tombstone)
+    * written beside the segment's data and index units, past every
+    * gate and validation; the `_MANIFEST` still lands last, after both
+    */
+  private def appendBatchBeside(batch: DataFrame, dir: String,
+                                spec: IndexSpec, batchId: Long,
+                                beside: => Unit): Boolean = {
     val spark = batch.sparkSession
     rejectReservedNames(batch.schema, spec)
     require(batchId >= 0 && batchId <= Int.MaxValue.toLong,
@@ -1963,30 +2043,21 @@ object Store {
     storedSchema(spark, dir, None)
       .foreach(existing => validateAppendSchema(existing, batch.schema))
     val sub = s"batch_$segId"
-    batch.write.mode(SaveMode.Overwrite).parquet(s"$dir/data/$sub")
-    val names = fs.listStatus(
-        new org.apache.hadoop.fs.Path(s"$dir/data/$sub"))
-      .map(_.getPath.getName)
-      .filterNot(n => n.startsWith("_") || n.startsWith(".")).toSeq.sorted
-    // read-back discipline (see append): index exactly what persisted
-    val persisted =
-      if (names.nonEmpty) spark.read.parquet(s"$dir/data/$sub")
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema)
-    val ix = IndexedFrame(persisted, spec)
-    // single-task write for an empty batch's entries so the segment
-    // parquet always has a readable footer
-    val entries = if (names.nonEmpty) ix.entries else ix.entries.repartition(1)
-    entries.write.mode(SaveMode.Overwrite)
-      .options(PointRead.SegWriteOptions).parquet(s"$root/seg_$segId")
-    if (spec.rowRefs.isDefined) {
-      val refs = if (names.nonEmpty) ix.rowRefs else ix.rowRefs.repartition(1)
-      refs.write.mode(SaveMode.Overwrite)
-        .options(PointRead.RefsWriteOptions)
-        .parquet(s"$root/rows_$segId")
-      writeSchemaSidecar(fs, s"$root/rows_$segId", refs.schema)
-    }
-    writeSchemaSidecar(fs, s"$root/seg_$segId", persisted.schema)
+    val (_, names) = inParallel(spark)(beside, {
+      batch.write.mode(SaveMode.Overwrite).parquet(s"$dir/data/$sub")
+      val names = fs.listStatus(
+          new org.apache.hadoop.fs.Path(s"$dir/data/$sub"))
+        .map(_.getPath.getName)
+        .filterNot(n => n.startsWith("_") || n.startsWith(".")).toSeq.sorted
+      // read-back discipline (see append): index exactly what persisted
+      val persisted =
+        if (names.nonEmpty) spark.read.parquet(s"$dir/data/$sub")
+        else spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema)
+      writeSegmentIndex(spark, IndexedFrame(persisted, spec), root, segId,
+        oneTask = names.isEmpty)
+      names
+    })
     writeManifest(fs, s"$root/seg_$segId", names.map(n => s"$sub/$n"))
     // appender half of delete∥append conflict detection (see append)
     repairTombstonesFor(spark, dir, spec, segId)
@@ -2002,8 +2073,10 @@ object Store {
     * exactly-once visibility, the [[appendBatch]] contract extended
     * to the two-unit commit:
     *   - before anything persisted: redelivery re-runs in full;
-    *   - after the (uncommitted) tombstone, before the segment:
-    *     redelivery Overwrites the same unit dirs — byte-idempotent;
+    *   - before the segment's manifest (the tombstone and the segment
+    *     are written side by side, the manifest only after the
+    *     tombstone's `_KEYCOL`): redelivery Overwrites the same unit
+    *     dirs — byte-idempotent;
     *   - after the segment's manifest, before the tombstone's marker
     *     (the [[upsert]] duplicate window): redelivery FINISHES the
     *     tombstone commit instead of re-appending — the one window
@@ -2096,12 +2169,15 @@ object Store {
     // empty store has nothing to replace — and writeTombstone's
     // victim scan requires a manifest-carrying store)
     val hasPrior = segSnapshots(spark, dir).exists(_ < delId)
-    if (hasPrior)
-      writeTombstoneAt(spark, dir, spec, keyCol, batch.select(keyCol),
-        commit = false, id = delId)
     // the replacement segment rides appendBatch's own idempotent
-    // commit protocol at the batch-keyed segment id
-    appendBatch(batch, dir, spec, segId.toLong)
+    // commit protocol at the batch-keyed segment id, with the
+    // tombstone written beside it: the segment's manifest lands only
+    // after the tombstone's _KEYCOL, which keeps the redelivery gate's
+    // "_KEYCOL exists => tombstone fully written" true (as in upsert)
+    appendBatchBeside(batch, dir, spec, segId.toLong,
+      if (hasPrior)
+        writeTombstoneAt(spark, dir, spec, keyCol, batch.select(keyCol),
+          commit = false, id = delId))
     if (hasPrior) commitTombstone(spark, dir, spec, keyCol, delId)
     true
   }
@@ -2292,13 +2368,21 @@ object Store {
     * SINGLE WRITER: reader-safe does not mean writer-safe — see the
     * contract on [[append]]; do not run compact concurrently with an
     * in-flight append on the same store.
+    *
+    * OVERLAP: the data rewrite, the folded-entries write and the refs
+    * fold write disjoint paths and read only the retiring generation
+    * (unchanged until the publish), so they run side by side; the folded segment's manifest and sidecar,
+    * `_HIGHWATER` and `_COMMITTED` are written only after all three
+    * have finished, so the publish point still covers complete files.
     */
   def compact(spark: SparkSession, dir: String): Unit = {
     import org.apache.spark.sql.functions.col
-    // eager checkpoint: every read of the old generation completes
-    // here, before any directory is created or deleted
-    val merged = mergedIndex(spark, dir).localCheckpoint(true)
-    val rows = rowRefsFrame(spark, dir).map(_.localCheckpoint(true))
+    // eager checkpoints (independent, so side by side): every read of
+    // the old generation's index completes here, before any directory
+    // is created or deleted
+    val (merged, rows) = inParallel(spark)(
+      mergedIndex(spark, dir).localCheckpoint(true),
+      rowRefsFrame(spark, dir).map(_.localCheckpoint(true)))
     val (fs, base) = fsFor(spark, dir)
     val (oldRoot, gen) = currentIndexRoot(spark, dir)
     val newRoot = s"$dir/index_g${gen + 1}"
@@ -2349,8 +2433,9 @@ object Store {
     // retired unit id, so no rename unit can apply to it — its files
     // must carry the CURRENT names, which only a rewrite guarantees
     val rens = committedRenames(spark, dir)
-    var rewrittenSchema: Option[org.apache.spark.sql.types.StructType] = None
-    val manifestEntries: Option[Seq[String]] =
+    // (manifest entries, rewritten schema) of the folded segment
+    def foldData(): (Option[Seq[String]],
+                     Option[org.apache.spark.sql.types.StructType]) =
       if (dels.isEmpty && !mixed && rens.isEmpty) {
         // only when EVERY old segment carried a manifest is the union
         // a faithful snapshot description (a pure-legacy store stays
@@ -2358,14 +2443,17 @@ object Store {
         // correct and rewriting 100 TB for protocol hygiene is the
         // caller's call via write(), not compact's)
         if (oldManifests.nonEmpty && oldManifests.forall(_.isDefined))
-          Some(oldManifests.flatMap(_.get).distinct)
-        else None
+          (Some(oldManifests.flatMap(_.get).distinct), None)
+        else (None, None)
       } else {
+        // nothing else writes under <dir>/data while compact runs (it
+        // is exclusive; the index folds below write under newRoot), so
+        // the listing diff is exactly this rewrite's files
         val before = dataFilesRel(fs, dir)
         val data = dataAsOf(spark, dir, None)
-        rewrittenSchema = Some(data.schema)
         data.write.mode(SaveMode.Append).parquet(s"$dir/data")
-        Some((dataFilesRel(fs, dir) -- before).toSeq.sorted)
+        (Some((dataFilesRel(fs, dir) -- before).toSeq.sorted),
+          Some(data.schema))
       }
     // sorted (field,value) clustering belongs to the WRITE, not the
     // read ([[mergedIndex]] serves unordered): the folded segment's
@@ -2385,19 +2473,27 @@ object Store {
             org.apache.spark.sql.functions.lit(1)).as("f"))
       case _ => merged
     }
-    foldedEntries.orderBy("field", "value")
-      .write.mode(SaveMode.Overwrite)
-      .options(PointRead.SegWriteOptions).parquet(s"$newRoot/seg_$foldId")
-    // row-refs fold to one re-clustered segment inside the same
-    // atomic publish (the _COMMITTED marker below covers both)
-    rows.foreach { r =>
-      r.repartitionByRange(col("field"), col("value"), col("row_key"))
-        .sortWithinPartitions("field", "value", "row_key")
-        .write.mode(SaveMode.Overwrite)
-        .options(PointRead.RefsWriteOptions)
-        .parquet(s"$newRoot/rows_$foldId")
-      writeSchemaSidecar(fs, s"$newRoot/rows_$foldId", r.schema)
-    }
+    // the data rewrite, the folded-entries write and the refs fold
+    // read the checkpoints / old generation and write disjoint paths,
+    // so they run side by side; the manifest, sidecar, _HIGHWATER and
+    // _COMMITTED below still land after all three have finished
+    val ((manifestEntries, rewrittenSchema), _) = inParallel(spark)(
+      foldData(),
+      inParallel(spark)(
+        foldedEntries.orderBy("field", "value")
+          .write.mode(SaveMode.Overwrite)
+          .options(PointRead.SegWriteOptions)
+          .parquet(s"$newRoot/seg_$foldId"),
+        // row-refs fold to one re-clustered segment inside the same
+        // atomic publish (the _COMMITTED marker below covers both)
+        rows.foreach { r =>
+          r.repartitionByRange(col("field"), col("value"), col("row_key"))
+            .sortWithinPartitions("field", "value", "row_key")
+            .write.mode(SaveMode.Overwrite)
+            .options(PointRead.RefsWriteOptions)
+            .parquet(s"$newRoot/rows_$foldId")
+          writeSchemaSidecar(fs, s"$newRoot/rows_$foldId", r.schema)
+        }))
     manifestEntries.foreach(writeManifest(fs, s"$newRoot/seg_$foldId", _))
     // the folded segment's schema: the REWRITTEN data's when the fold
     // rewrote (tombstones/renames/mixed — current names, widened

@@ -436,7 +436,9 @@ object Dedup {
     * Window TABLES persisted under the v1 (hex string) format are
     * incompatible — the artifact paths are format-versioned
     * (`xswin_v2_*` / `xswin2_base`), and a caller-supplied stale table
-    * fails loudly in the join's type resolution.
+    * is refused by the consumers' format check (a string `w` would
+    * otherwise join the binary `w` with zero matches and silently
+    * dedup nothing).
     *
     * PUBLIC because it is this family's persistable artifact (the
     * banded-signature analog): a production ingest pipeline builds it
@@ -480,11 +482,21 @@ object Dedup {
     else None
   }
 
-  private def requireWindowN(windows: DataFrame, n: Int): Unit =
+  /** the consumer-side contract of a corpus window table: the v2
+    * binary16 `w` format and the operator's window width — either
+    * mismatch would match nothing (or the wrong windows) silently
+    */
+  private[graft] def requireWindowN(windows: DataFrame, n: Int): Unit = {
+    val wt = windows.schema("w").dataType
+    require(wt == org.apache.spark.sql.types.BinaryType,
+      s"corpus window table has a ${wt.simpleString} `w` (the v1 hex " +
+        s"format?) but the v2 format is binary — it would match " +
+        s"nothing; rebuild it with exactSubstrWindows(n=$n)")
     windowN(windows).foreach(stored => require(stored == n.toLong,
       s"corpus window table was built with n=$stored but the operator " +
         s"runs with minTokens=$n — matches would be silently wrong; " +
         s"rebuild the window table with exactSubstrWindows(n=$n)"))
+  }
 
   /** ExactSubstr-grade duplicated-extent dedup (Lee et al. 2022,
     * "Deduplicating Training Data Makes Language Models Better" —

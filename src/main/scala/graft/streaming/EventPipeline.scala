@@ -250,12 +250,9 @@ object EventPipeline {
                         minTokens: Int = 12, maxWindowFreq: Long = 1000L,
                         broadcastWindowLimit: Long = 5_000_000L): DataFrame = {
     val n = minTokens
-    // FAIL LOUDLY on a window table built with a different n (the
-    // column metadata exactSubstrWindows stamps): a mismatched table
-    // would silently match nothing
-    graft.ops.Dedup.windowN(corpusWindows).foreach(stored =>
-      require(stored == n.toLong,
-        s"corpusWindows built with n=$stored but minTokens=$n"))
+    // FAIL LOUDLY on a stale-format window table or one built with a
+    // different n: either would silently match nothing
+    graft.ops.Dedup.requireWindowN(corpusWindows, n)
     // MATERIALIZED once at stream construction (see crossDedupStream):
     // the stream-static join re-plans the static side per micro-batch;
     // without the checkpoint the cap + distinct would re-run over the

@@ -85,6 +85,26 @@ class Round11Spec extends SparkSpec {
     assert(errS.getMessage.contains("n=8"))
   }
 
+  test("a stale v1 (hex string) window table fails loudly on both faces") {
+    val docs = Tables.documents(spark, sfDir).limit(50)
+    val v2 = Dedup.exactSubstrWindows(docs, col("text"), col("doc_id"))
+    // the v1 format: the same windows with `w` as a 32-char hex string,
+    // window-n metadata intact — it would join the binary `w` with
+    // zero matches and silently dedup nothing
+    val v1 = v2.select(col("doc_id"), col("p"),
+      lower(hex(col("w"))).as("w", v2.schema("w").metadata))
+    assert(Dedup.windowN(v1) === Some(12L))
+    val err = intercept[IllegalArgumentException] {
+      Dedup.exactSubstrIncrementalIndexed(docs, v1, col("text"), col("doc_id"))
+    }
+    assert(err.getMessage.contains("exactSubstrWindows"))
+    val errS = intercept[IllegalArgumentException] {
+      graft.streaming.EventPipeline.extentDedupStream(
+        docs, "text", "doc_id", "ts", v1)
+    }
+    assert(errS.getMessage.contains("exactSubstrWindows"))
+  }
+
   test("incremental faces never self-match a doc_id present on both sides") {
     // r10 ADVICE: overlapping batch/corpus id sets used to emit
     // full-length a==b self-extents that would corrupt downstream

@@ -221,4 +221,205 @@ class StoreConcurrencySpec extends SparkSpec {
     Store.delete(spark, dir, spec, "id", Seq(3L).toDF("id"))
     assert(Store.open(spark, dir, spec).frame.df.count() === 2)
   }
+
+  // ---- overlapped commit writes: crash atomicity and job attribution
+
+  private def live(dir: String, sp: IndexSpec) = Store.open(spark, dir, sp)
+    .frame.df.orderBy("id").collect()
+    .map(r => (r.getLong(0), r.getString(1))).toSeq
+
+  /** the served index equals a from-scratch index of the live rows */
+  private def assertIndexExact(dir: String, sp: IndexSpec): Unit = {
+    val st = Store.open(spark, dir, sp)
+    def asMap(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+    assert(asMap(st.persistedIndex) ===
+      asMap(graft.core.IndexedFrame(st.frame.df, sp).entries))
+  }
+
+  private def exists(dir: String, rel: String) =
+    fsOf(dir).exists(new org.apache.hadoop.fs.Path(s"$dir/index/$rel"))
+
+  /** an injected fault: a string UDF that passes its input through,
+    * but throws on `on` while armed; returns (udf, arm, clear)
+    */
+  private def fault(on: String) = {
+    val flag = java.io.File.createTempFile("fault", "")
+    flag.delete()
+    val path = flag.getPath
+    val f = udf { (x: String) =>
+      if (x == on && new java.io.File(path).exists())
+        throw new IllegalStateException(s"injected fault on '$x'")
+      x
+    }
+    (f, () => { flag.createNewFile(); () }, () => { flag.delete(); () })
+  }
+
+  private val base = Seq((1L, "a", 1.0), (2L, "b", 2.0))
+  private val repl = Seq((2L, "bb", 20.0), (3L, "c", 3.0))
+  private val want = Seq((1L, "a"), (2L, "bb"), (3L, "c"))
+
+  /** the tombstone branch fails: the analyzer throws on "b", a value
+    * only the victim row (id 2) carries, so only the tombstone's
+    * victim index build hits it
+    */
+  private def tombstoneFault() = {
+    val (f, arm, clear) = fault("b")
+    (IndexSpec(Seq("cat")).withAnalyzer("cat", c => array(f(c))), arm, clear)
+  }
+
+  /** the segment branch fails: the batch's `cat` throws on "bb"; the
+    * key column alone (all the tombstone branch reads) computes fine.
+    * An RDD-backed frame, so the optimizer cannot fold the UDF into a
+    * local relation before pruning it from the key projection.
+    */
+  private def segmentFault() = {
+    val (f, arm, clear) = fault("bb")
+    val batch = spark.sparkContext.parallelize(repl, 1).toDF("id", "cat0", "v")
+      .select($"id", f($"cat0").as("cat"), $"v")
+    (batch, arm, clear)
+  }
+
+  test("overlapped upsert: a failed tombstone branch commits no segment; re-run converges") {
+    val dir = java.nio.file.Files.createTempDirectory("upsfailT").toString
+    val (tspec, arm, clear) = tombstoneFault()
+    Store.write(base.toDF("id", "cat", "v"), dir, tspec)
+    val before = live(dir, tspec)
+    val batch = repl.toDF("id", "cat", "v")
+    arm()
+    intercept[Exception](Store.upsert(batch, dir, tspec, "id")) // del_1, seg_2
+    clear()
+    // the segment branch ran to completion beside it, but its manifest
+    // waits for the tombstone: nothing was published
+    assert(exists(dir, "seg_2/_SCHEMA"))
+    assert(!exists(dir, "seg_2/_MANIFEST"))
+    assert(!exists(dir, "del_1/_COMMITTED"))
+    assert(Store.snapshots(spark, dir) === Seq(0))
+    assert(live(dir, tspec) === before)
+    assertIndexExact(dir, tspec)
+    Store.upsert(batch, dir, tspec, "id")
+    assert(live(dir, tspec) === want)
+    assertIndexExact(dir, tspec)
+  }
+
+  test("overlapped upsert: a failed segment branch commits no tombstone; re-run converges") {
+    val dir = java.nio.file.Files.createTempDirectory("upsfailS").toString
+    Store.write(base.toDF("id", "cat", "v"), dir, spec)
+    val before = live(dir, spec)
+    val (batch, arm, clear) = segmentFault()
+    arm()
+    intercept[Exception](Store.upsert(batch, dir, spec, "id"))
+    clear()
+    // the tombstone was fully written beside it, never committed
+    assert(exists(dir, "del_1/_KEYCOL"))
+    assert(!exists(dir, "del_1/_COMMITTED"))
+    assert(!exists(dir, "seg_2/_MANIFEST"))
+    assert(Store.snapshots(spark, dir) === Seq(0))
+    assert(live(dir, spec) === before)
+    assertIndexExact(dir, spec)
+    Store.upsert(batch, dir, spec, "id")
+    assert(live(dir, spec) === want)
+    assertIndexExact(dir, spec)
+  }
+
+  test("overlapped upsertBatch: a failed tombstone branch commits no segment; redelivery converges") {
+    val dir = java.nio.file.Files.createTempDirectory("upbfailT").toString
+    val (tspec, arm, clear) = tombstoneFault()
+    assert(Store.upsertBatch(base.toDF("id", "cat", "v"), dir, tspec, "id", 0L))
+    val before = live(dir, tspec)
+    val batch = repl.toDF("id", "cat", "v")
+    arm()
+    intercept[Exception](Store.upsertBatch(batch, dir, tspec, "id", 1L)) // del_2, seg_3
+    clear()
+    assert(exists(dir, "seg_3/_SCHEMA"))
+    assert(!exists(dir, "seg_3/_MANIFEST"))
+    assert(!exists(dir, "del_2/_COMMITTED"))
+    assert(live(dir, tspec) === before)
+    assertIndexExact(dir, tspec)
+    assert(Store.upsertBatch(batch, dir, tspec, "id", 1L))
+    assert(!Store.upsertBatch(batch, dir, tspec, "id", 1L))
+    assert(live(dir, tspec) === want)
+    assertIndexExact(dir, tspec)
+  }
+
+  test("overlapped upsertBatch: a failed segment branch commits no tombstone; redelivery converges") {
+    val dir = java.nio.file.Files.createTempDirectory("upbfailS").toString
+    assert(Store.upsertBatch(base.toDF("id", "cat", "v"), dir, spec, "id", 0L))
+    val before = live(dir, spec)
+    val (batch, arm, clear) = segmentFault()
+    arm()
+    intercept[Exception](Store.upsertBatch(batch, dir, spec, "id", 1L))
+    clear()
+    assert(exists(dir, "del_2/_KEYCOL"))
+    assert(!exists(dir, "del_2/_COMMITTED"))
+    assert(!exists(dir, "seg_3/_MANIFEST"))
+    assert(live(dir, spec) === before)
+    assertIndexExact(dir, spec)
+    assert(Store.upsertBatch(batch, dir, spec, "id", 1L))
+    assert(!Store.upsertBatch(batch, dir, spec, "id", 1L))
+    assert(live(dir, spec) === want)
+    assertIndexExact(dir, spec)
+  }
+
+  test("overlapped commits carry the caller's job group and description; cancelJobGroup stops both branches") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.jdk.CollectionConverters._
+    val rspec = IndexSpec(Seq("cat")).withRowRefs("id")
+    val dir = java.nio.file.Files.createTempDirectory("props").toString
+    Store.write((0L until 40L).map(i => (i, s"c${i % 4}", i.toDouble))
+      .toDF("id", "cat", "v"), dir, rspec)
+    val sc = spark.sparkContext
+    val rec = new JobRecorder(spark)
+    try {
+      rec.flush()
+      val mark = rec.started.size
+      val group = s"props-${java.util.UUID.randomUUID}"
+      sc.setJobGroup(group, "overlapped store commits")
+      try {
+        Store.append((40L until 60L).map(i => (i, s"c${i % 4}", i.toDouble))
+          .toDF("id", "cat", "v"), dir, rspec)
+        Store.upsert((10L until 30L).map(i => (i, s"u${i % 3}", i.toDouble))
+          .toDF("id", "cat", "v"), dir, rspec, "id")
+        Store.compact(spark, dir)
+      } finally sc.clearJobGroup()
+      rec.flush()
+      val during = rec.started.asScala.toSeq.drop(mark).map(_._2)
+        .filterNot(p => Option(p.getProperty("spark.jobGroup.id"))
+          .exists(_.startsWith("flush-")))
+      assert(during.nonEmpty)
+      during.foreach { p =>
+        assert(p.getProperty("spark.jobGroup.id") === group)
+        assert(p.getProperty("spark.job.description") === "overlapped store commits")
+      }
+
+      // cancelling the caller's group stops both branches of an upsert
+      // whose tombstone and segment jobs are both running
+      val snaps = Store.snapshots(spark, dir)
+      val slow = udf { (i: Long) => Thread.sleep(250); i }
+      val batch = (100L until 120L).map(i => (i, s"s${i % 2}", i.toDouble))
+        .toDF("id0", "cat", "v").select(slow($"id0").as("id"), $"cat", $"v")
+      val cancelled = s"cancel-${java.util.UUID.randomUUID}"
+      val run = Future {
+        sc.setJobGroup(cancelled, "cancel me", interruptOnCancel = true)
+        try Store.upsert(batch, dir, rspec, "id") finally sc.clearJobGroup()
+      }
+      def active = rec.jobsOf(cancelled).map(_._1)
+        .filterNot(id => rec.ended.containsKey(id))
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (active.size < 2) {
+        assert(System.nanoTime() < deadline, "both branches never ran at once")
+        Thread.sleep(10)
+      }
+      val both = active
+      sc.cancelJobGroup(cancelled)
+      intercept[Exception](Await.result(run, 60.seconds))
+      rec.flush()
+      both.foreach(id => assert(
+        rec.ended.get(id).isInstanceOf[org.apache.spark.scheduler.JobFailed],
+        s"job $id of the cancelled group did not fail"))
+      assert(Store.snapshots(spark, dir) === snaps)
+    } finally rec.close()
+  }
 }

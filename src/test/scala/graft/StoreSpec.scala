@@ -496,4 +496,33 @@ class StoreSpec extends SparkSpec {
     // and the store remains fully readable with the original rows
     assert(Store.open(spark, dir, spec).frame.df.count() === 2L)
   }
+
+  test("commit job counts: append, delete and upsert on a row-refs store") {
+    // counts, not timings: exact and repeatable for a fixed input. A
+    // change that re-adds the tombstone key-set de-duplication shuffle
+    // (one more job per delete and per upsert) fails here.
+    val rspec = IndexSpec(Seq("cat")).withRowRefs("id")
+    val rec = new JobRecorder(spark)
+    val sc = spark.sparkContext
+    def jobsOf(kind: String)(commit: String => Unit): Int = {
+      val dir = java.nio.file.Files.createTempDirectory(s"jobs_$kind").toString
+      Store.write(data, dir, rspec) // fresh store: no tombstones
+      val group = s"jobs-$kind-${java.util.UUID.randomUUID}"
+      sc.setJobGroup(group, kind)
+      try commit(dir) finally sc.clearJobGroup()
+      rec.flush()
+      rec.jobsOf(group).size
+    }
+    try {
+      val counts = Map(
+        "append" -> jobsOf("append")(d => Store.append(
+          Seq((5L, "a", 50.0), (6L, "d", 60.0)).toDF("id", "cat", "v"), d, rspec)),
+        "delete" -> jobsOf("delete")(d => Store.delete(spark, d, rspec, "id",
+          Seq(1L, 4L).toDF("id"))),
+        "upsert" -> jobsOf("upsert")(d => Store.upsert(
+          Seq((2L, "bb", 20.0), (7L, "e", 70.0)).toDF("id", "cat", "v"),
+          d, rspec, "id")))
+      assert(counts === Map("append" -> 8, "delete" -> 6, "upsert" -> 12))
+    } finally rec.close()
+  }
 }
