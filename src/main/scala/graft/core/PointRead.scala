@@ -31,9 +31,11 @@ import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
   * HOW: the index (`seg_*`) and row-refs (`rows_*`) parquet are
   * written sorted/range-clustered on (field, value), so footer
   * statistics prune a point key to the file(s) straddling it.
-  * Footers are read ONCE per store handle (lazy, cached); a lookup
-  * then (1) prunes files by the cached (field,value) ranges, (2) lets
-  * parquet-mr's column-index machinery prune row groups and pages
+  * Footers are read ONCE per store handle, on its first lookup, and
+  * cached; every file is opened with read options built from the
+  * session's Hadoop configuration, never a fresh one per file. A
+  * lookup then (1) prunes files by the cached (field,value) ranges,
+  * (2) lets parquet-mr's column-index machinery prune row groups and pages
   * (readNextFilteredRowGroup — only pages whose min/max straddle the
   * key are decompressed), and (3) reads the three projected columns
   * DIRECTLY through row-synchronized ColumnReaders — no per-record
@@ -132,6 +134,16 @@ object PointRead {
   private final case class FileMeta(file: Path, footer: ParquetMetadata,
       range: Rng, blockRanges: Seq[Rng], proj: MessageType)
 
+  /** open one parquet file with read options built from `conf` — the
+    * session's Hadoop configuration. The one-argument
+    * `ParquetFileReader.open` builds its options around a fresh
+    * `Configuration`, whose first lookup parses the default and site
+    * resources again (a classpath search) for every file opened.
+    */
+  private def openFile(conf: Configuration, file: Path): ParquetFileReader =
+    ParquetFileReader.open(HadoopInputFile.fromPath(file, conf),
+      HadoopReadOptions.builder(conf, file).build())
+
   private def partFiles(conf: Configuration, dir: Path): Seq[Path] = {
     val fs = dir.getFileSystem(conf)
     if (!fs.exists(dir)) Seq.empty
@@ -203,7 +215,7 @@ object PointRead {
     // footers read once per store handle, on first lookup
     private lazy val metas: Seq[FileMeta] =
       dirs.flatMap(partFiles(conf, _)).map { file =>
-        val rd = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+        val rd = openFile(conf, file)
         try {
           val footer = rd.getFooter
           val schema = footer.getFileMetaData.getSchema
@@ -637,7 +649,7 @@ object PointRead {
     val out = Seq.newBuilder[Any]
     var read = 0L
     partFiles(conf, dir).foreach { file =>
-      val rd = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+      val rd = openFile(conf, file)
       try {
         val schema = rd.getFooter.getFileMetaData.getSchema
         val fld = schema.getFields.asScala.find(_.getName == column)
@@ -693,9 +705,12 @@ object PointRead {
   type RowsGroup = (Seq[Path], Seq[(Int, String, String)], Seq[Int])
 
   /** the per-store point-read face [[Store.open]] attaches to a
-    * [[StoredFrame]]: everything (file listing, footers, key sets)
-    * is lazy so open() cost is unchanged; `None` from a lookup means
-    * "not eligible — use the plan path" (mixed/exotic layouts only —
+    * [[StoredFrame]]: its unit groups and key-set dirs come from the
+    * handle's open-time unit snapshot (metadata open() has already
+    * read), while the part-file listings, footers, open file readers
+    * and victim key sets load on the first lookup that needs them
+    * and stay cached for the handle's lifetime; `None` from a lookup
+    * means "not eligible — use the plan path" (mixed/exotic layouts only —
     * tombstones and renames are served directly, see the class notes).
     */
   final class StorePoint(conf: Configuration,

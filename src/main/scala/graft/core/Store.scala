@@ -98,7 +98,7 @@ object Store {
   private def writeManifest(fs: org.apache.hadoop.fs.FileSystem,
                             segDir: String, files: Seq[String]): Unit = {
     // the manifest IS the segment's commit marker, and with concurrent
-    // writers another writer may LIST manifests (storedSchema /
+    // writers another writer may LIST manifests (resolveSnapshot /
     // segSnapshots) at any moment — so it must appear atomically:
     // write a temp file, then rename (atomic on HDFS and local FS).
     // A plain create+write+close has a window where a reader sees an
@@ -240,36 +240,6 @@ object Store {
     }
   }
 
-  /** the metadata-derived schema of the store (as of snapshot
-    * `upTo`, or live), or None when any participating segment
-    * predates the sidecar protocol — all-or-nothing, because a
-    * sidecar-less segment may carry columns the union cannot see,
-    * and an explicit read schema would silently DROP them.
-    */
-  private def storedSchema(spark: SparkSession, dir: String,
-                           upTo: Option[Int]): Option[org.apache.spark.sql.types.StructType] = {
-    val (root, _) = currentIndexRoot(spark, dir)
-    val (fs, _) = fsFor(spark, dir)
-    val ids = segSnapshots(spark, dir).filter(id => upTo.forall(id <= _))
-    val rens = committedRenames(spark, dir)
-      .filter(r => upTo.forall(r._1 <= _))
-    if (ids.isEmpty) None
-    else {
-      // each segment's sidecar carries PHYSICAL names; map them
-      // through the renames that postdate the segment before taking
-      // the union, so the union speaks the (as-of-`upTo`) names
-      val sides = ids.map { id =>
-        readSchemaSidecar(fs, s"$root/seg_$id").map { st =>
-          val applicable = rens.filter(_._1 > id)
-          org.apache.spark.sql.types.StructType(st.fields.map(f =>
-            f.copy(name = currentName(f.name, applicable))))
-        }
-      }
-      if (sides.exists(_.isEmpty)) None
-      else Some(unionSchema(sides.flatten))
-    }
-  }
-
   // --------------------------------------------------- tombstone deletes
   // Row-level DELETE as merge-on-read delete vectors (the
   // Iceberg/Delta device) on the store's own manifest protocol: a
@@ -304,16 +274,32 @@ object Store {
                                         dir: String): Seq[(Int, String)] = {
     val (root, _) = currentIndexRoot(spark, dir)
     val (fs, _) = fsFor(spark, dir)
+    tombstonesIn(fs, root, rootNames(fs, root))
+  }
+
+  /** [[committedTombstones]] over an existing listing of `root` */
+  private def tombstonesIn(fs: org.apache.hadoop.fs.FileSystem, root: String,
+                           names: Seq[String]): Seq[(Int, String)] =
+    unitIds(names, "del_")
+      .filter(id => fs.exists(
+        new org.apache.hadoop.fs.Path(s"$root/del_$id/_COMMITTED")))
+      .map(id => (id, readSmallText(fs, s"$root/del_$id/_KEYCOL")))
+
+  /** the entry names directly under a generation root (none before
+    * its first unit)
+    */
+  private def rootNames(fs: org.apache.hadoop.fs.FileSystem,
+                        root: String): Seq[String] = {
     val rp = new org.apache.hadoop.fs.Path(root)
     if (!fs.exists(rp)) Nil
     else fs.listStatus(rp).map(_.getPath.getName).toSeq
-      .collect { case s if s.startsWith("del_") => s.drop(4) }
-      .flatMap(s => scala.util.Try(s.toInt).toOption)
-      .filter(id => fs.exists(
-        new org.apache.hadoop.fs.Path(s"$root/del_$id/_COMMITTED")))
-      .sorted
-      .map(id => (id, readSmallText(fs, s"$root/del_$id/_KEYCOL")))
   }
+
+  /** ids of the `<prefix><int>` unit dirs among `names`, ascending */
+  private def unitIds(names: Seq[String], prefix: String): Seq[Int] =
+    names.collect { case s if s.startsWith(prefix) => s.drop(prefix.length) }
+      .flatMap(s => scala.util.Try(s.toInt).toOption)
+      .sorted
 
   // ----------------------------------------------------------- id claims
   // Unit ids (seg_/del_) are allocated by CLAIM, not by listing: a
@@ -431,7 +417,7 @@ object Store {
   // manifest-scoped read would silently drop the legacy segments'
   // rows and vacuum would then DELETE their now-"unreferenced" data
   // files (r11 advice, medium). The rule is all-or-nothing, mirroring
-  // storedSchema: a mixed store is served by the plain recursive
+  // the sidecar schema union: a mixed store is served by the plain recursive
   // directory read (every data file live), its index is the union of
   // ALL segments, vacuum never reclaims its data files, and the
   // mutating ops that depend on manifest scoping (delete/appendBatch/
@@ -455,10 +441,6 @@ object Store {
       .sorted
   }
 
-  /** true when manifest-carrying and pre-manifest segments coexist */
-  private[core] def isMixedLegacy(spark: SparkSession, dir: String): Boolean =
-    segSnapshots(spark, dir).nonEmpty && legacySegIds(spark, dir).nonEmpty
-
   // -------------------------------------------------------- rename units
   // Column RENAME as a metadata-only unit `ren_<id>` sharing the
   // segment/tombstone id counter (r12 schema evolution): nothing is
@@ -481,18 +463,18 @@ object Store {
                                      dir: String): Seq[(Int, String, String)] = {
     val (root, _) = currentIndexRoot(spark, dir)
     val (fs, _) = fsFor(spark, dir)
-    val rp = new org.apache.hadoop.fs.Path(root)
-    if (!fs.exists(rp)) Nil
-    else fs.listStatus(rp).map(_.getPath.getName).toSeq
-      .collect { case s if s.startsWith("ren_") => s.drop(4) }
-      .flatMap(s => scala.util.Try(s.toInt).toOption)
+    renamesIn(fs, root, rootNames(fs, root))
+  }
+
+  /** [[committedRenames]] over an existing listing of `root` */
+  private def renamesIn(fs: org.apache.hadoop.fs.FileSystem, root: String,
+                        names: Seq[String]): Seq[(Int, String, String)] =
+    unitIds(names, "ren_")
       .filter(id => fs.exists(
         new org.apache.hadoop.fs.Path(s"$root/ren_$id/_COMMITTED")))
-      .sorted
       .map(id => (id,
         readSmallText(fs, s"$root/ren_$id/_FROM"),
         readSmallText(fs, s"$root/ren_$id/_TO")))
-  }
 
   /** a physical name mapped through the renames that apply to its
     * unit (ascending id order — chains fold left)
@@ -544,28 +526,28 @@ object Store {
   private[core] def readIx(spark: SparkSession, paths: Seq[String]): DataFrame =
     spark.read.schema(IxEntriesSchema).parquet(paths: _*)
 
+  /** parquet `paths` read with a recorded schema, or by inference
+    * when there is none (units that predate the sidecars)
+    */
+  private def readParquet(spark: SparkSession,
+                          schema: Option[org.apache.spark.sql.types.StructType],
+                          paths: Seq[String]): DataFrame =
+    schema.fold(spark.read)(spark.read.schema(_)).parquet(paths: _*)
+
+  /** persisted row-refs dirs read with the first dir's `_SCHEMA`
+    * sidecar (fallback: inference for pre-r15 stores) */
+  private[core] def readRefs(spark: SparkSession, dirs: Seq[String]): DataFrame = {
+    val (fs, _) = fsFor(spark, dirs.head)
+    readParquet(spark, readSchemaSidecar(fs, dirs.head), dirs)
+  }
+
   /** a tombstone's persisted key set, read with the `_SCHEMA`
     * sidecar recorded at delete time (falls back to inference for
     * pre-r15 stores) — same inference-job-avoidance as [[readIx]].
     */
-  /** persisted row-refs dirs read with the first dir's `_SCHEMA`
-    * sidecar (fallback: inference for pre-r15 stores) */
-  private[core] def readRefs(spark: SparkSession, dirs: Seq[String]): DataFrame = {
-    val pth = new org.apache.hadoop.fs.Path(dirs.head)
-    val fs = pth.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    readSchemaSidecar(fs, dirs.head) match {
-      case Some(sc) => spark.read.schema(sc).parquet(dirs: _*)
-      case None => spark.read.parquet(dirs: _*)
-    }
-  }
-
   private[core] def readKeys(spark: SparkSession, keysDir: String): DataFrame = {
-    val pth = new org.apache.hadoop.fs.Path(keysDir)
-    val fs = pth.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    readSchemaSidecar(fs, keysDir) match {
-      case Some(sc) => spark.read.schema(sc).parquet(keysDir)
-      case None => spark.read.parquet(keysDir)
-    }
+    val (fs, _) = fsFor(spark, keysDir)
+    readParquet(spark, readSchemaSidecar(fs, keysDir), Seq(keysDir))
   }
 
   /** the hidden-namespace guard every data write runs (r12 advice):
@@ -602,7 +584,8 @@ object Store {
   def dropColumn(spark: SparkSession, dir: String, name: String): Int = {
     require(!name.startsWith(DroppedPrefix),
       s"'$name' is a reserved dropped-column name")
-    val cur = storedSchema(spark, dir, None).getOrElse(
+    val snap = resolveSnapshot(spark, dir)
+    val cur = snap.schema.getOrElse(
       throw new IllegalArgumentException(
         s"drop requires schema sidecars on every segment ($dir)"))
     require(cur.fieldNames.contains(name),
@@ -610,9 +593,8 @@ object Store {
         .filterNot(_.startsWith(DroppedPrefix)).mkString(",")})")
     // the tombstone key columns in use must survive: dropping one
     // would break the anti-join scoping of existing deletes
-    committedTombstones(spark, dir).foreach { case (id, kc) =>
-      val curKc = currentName(kc,
-        committedRenames(spark, dir).filter(_._1 > id))
+    snap.dels.foreach { case (id, kc) =>
+      val curKc = currentName(kc, snap.rens.filter(_._1 > id))
       require(curKc != name,
         s"column '$name' keys tombstone del_$id — compact() first")
     }
@@ -630,7 +612,7 @@ object Store {
     require(segSnapshots(spark, dir).nonEmpty &&
         legacySegIds(spark, dir).isEmpty,
       s"rename requires a manifest-carrying store ($dir)")
-    val cur = storedSchema(spark, dir, None).getOrElse(
+    val cur = resolveSnapshot(spark, dir).schema.getOrElse(
       throw new IllegalArgumentException(
         s"rename requires schema sidecars on every segment ($dir)"))
     require(cur.fieldNames.contains(from),
@@ -673,14 +655,13 @@ object Store {
     * neither the persisted sets nor their union is de-duplicated (a
     * `distinct` would only add a shuffle stage to every scan branch).
     */
-  private def applyTombstones(spark: SparkSession, root: String,
+  private def applyTombstones(spark: SparkSession, snap: UnitSnapshot,
                               df: DataFrame,
                               dels: Seq[(Int, String)]): DataFrame =
     dels.groupBy(_._2).toSeq.sortBy(_._1).foldLeft(df) {
       case (acc, (keyCol, ds)) =>
-        val keys = ds.map { case (id, _) =>
-          readKeys(spark, s"$root/del_$id/keys")
-        }.reduce(_ unionByName _)
+        val keys = ds.map { case (id, _) => snap.keys(spark, id) }
+          .reduce(_ unionByName _)
           .select(col("key").as("__graft_del_key"))
         acc.join(keys, acc(keyCol) === col("__graft_del_key"), "left_anti")
     }
@@ -705,69 +686,150 @@ object Store {
     }
   }
 
-  /** The store's data as of snapshot `upTo` (None = live): planned
-    * over exactly the files the committed segments' manifests name —
-    * the table-format posture (orphans from crashed writes are
-    * invisible; no directory-listing race), which manifest-less
-    * LEGACY stores fall back from to the plain directory read — with
-    * the applicable tombstones anti-joined, SCOPED by the id order: a
-    * tombstone deletes only from segments that precede it, so a
-    * re-appended key survives. Segments between consecutive
-    * tombstones share one applicable set, so the plan is
-    * (#tombstones+1) scan branches, not #segments — and compact
-    * returns the store to a single clean branch.
+  // ------------------------------------------------------ unit snapshots
+  // A handle is pinned to the units that were committed when it was
+  // made: [[resolveSnapshot]] reads the generation's metadata once and
+  // every face of the handle — the data, the merged index, the row
+  // refs and the driver-side point reads — is built from that value,
+  // never from a fresh listing. A face built long after open() (the
+  // plan faces are built on first access) still serves the open-time
+  // units: segment, tombstone and refs units are immutable once
+  // committed, and compact retains the generation they live in. The
+  // exception is the data of a pre-manifest or mixed store, which no
+  // manifest describes: its plain directory read lists `data/` when
+  // the frame is first planned.
+
+  /** the committed units of one generation, as resolved from its
+    * metadata: the root listing, each segment's manifest and schema
+    * sidecar (and their union, the served schema), each tombstone's
+    * key column, index-delta dirs and key-set sidecar, the renames
+    * and the `rows_` ids. With `upTo`, only units with ids at or below
+    * it (time travel, a tombstone's victim scan).
     */
-  private def dataAsOf(spark: SparkSession, dir: String,
-                       upTo: Option[Int],
-                       fixedSegs: Option[Seq[Int]] = None,
-                       excludeDel: Option[Int] = None): DataFrame = {
+  private[core] final case class UnitSnapshot(
+      dir: String,
+      root: String,
+      upTo: Option[Int],
+      segDirs: Seq[String],
+      segIds: Seq[Int],
+      manifests: Map[Int, Seq[String]],
+      sidecars: Map[Int, Option[org.apache.spark.sql.types.StructType]],
+      legacyIds: Seq[Int],
+      dels: Seq[(Int, String)],
+      delIxDirs: Map[Int, Seq[String]],
+      keySchemas: Map[Int, Option[org.apache.spark.sql.types.StructType]],
+      rens: Seq[(Int, String, String)],
+      rowsIds: Seq[Int],
+      schema: Option[org.apache.spark.sql.types.StructType]) {
+
+    /** the `rows_` ids that serve row refs: committed segments' only
+      * (a crashed append's refs segment, written before its manifest,
+      * must stay as invisible as its data), plus a mixed store's
+      * legacy ones (all-or-nothing); every one on a pre-manifest store
+      */
+    def refsIds: Seq[Int] =
+      if (segIds.isEmpty) rowsIds
+      else rowsIds.filter((segIds ++ legacyIds).toSet)
+
+    /** tombstone `id`'s persisted key set, read with its sidecar */
+    def keys(spark: SparkSession, id: Int): DataFrame =
+      readParquet(spark, keySchemas(id), Seq(s"$root/del_$id/keys"))
+  }
+
+  /** resolve the [[UnitSnapshot]] of the live generation of `dir` —
+    * metadata reads only, no Spark job and no parquet footer. Throws
+    * the refusals the metadata alone decides, so they fail where a
+    * handle is made, not where a face is first used: a non-widening
+    * schema union ([[unionSchema]]), and tombstones or time travel on
+    * a mixed (legacy+manifest) store.
+    */
+  private[core] def resolveSnapshot(spark: SparkSession, dir: String,
+                                    upTo: Option[Int] = None): UnitSnapshot = {
     val (root, _) = currentIndexRoot(spark, dir)
     val (fs, _) = fsFor(spark, dir)
-    // fixedSegs pins the plan to an EXACT segment list (the tombstone
-    // victim scan needs its coverage record to equal what the plan
-    // saw — a relisting here could silently include a segment that
-    // committed after the caller's listing)
-    val segIds = fixedSegs.getOrElse(
-      segSnapshots(spark, dir).filter(id => upTo.forall(id <= _)))
-    // excludeDel: the victim RESCAN of an already-committed tombstone
-    // (r14 rescanTombstoneIndex) must view the data as if its own
-    // tombstone were not applied — otherwise its victims net to the
-    // empty set and the rescan erases its own ixdelta
-    val dels = committedTombstones(spark, dir)
-      .filter(d => upTo.forall(d._1 <= _))
-      .filterNot(d => excludeDel.contains(d._1))
-    val rens = committedRenames(spark, dir)
-      .filter(r => upTo.forall(r._1 <= _))
-    // a tombstone's recorded key column is the name CURRENT when it
-    // was written — renames that postdate it must map it forward or
-    // the anti-join misses the (now renamed) data column
-    val delsMapped = dels.map { case (id, kc) =>
-      (id, currentName(kc, rens.filter(_._1 > id)))
-    }
-    val schema = storedSchema(spark, dir, upTo)
-    def read(files: Seq[String]): DataFrame = schema match {
-      case Some(u) => spark.read.schema(u).parquet(files: _*)
-      case None    => spark.read.parquet(files: _*)
-    }
-    if (segIds.isEmpty) {
-      // legacy (pre-manifest) layout — delete() refuses such stores,
-      // so no tombstones can exist here. Recursive: a legacy store
-      // that was compacted after modern (subdir-writing) appends
-      // keeps every file live, wherever it sits.
-      spark.read.option("recursiveFileLookup", "true")
-        .parquet(s"$dir/data")
-    } else if (legacySegIds(spark, dir).nonEmpty) {
+    val names = rootNames(fs, root)
+    def within(id: Int) = upTo.forall(id <= _)
+    val segDirIds = unitIds(names, "seg_")
+    val manifests = segDirIds.flatMap(id =>
+      readManifest(fs, s"$root/seg_$id").map(id -> _))
+    // pre-manifest segments: neither a manifest nor a writer's claim
+    // (a crashed MODERN append keeps its claim and stays invisible)
+    val committed = manifests.map(_._1).toSet
+    val legacyIds = segDirIds.filterNot(id =>
+      committed(id) || names.contains(claimPath(root, id).getName))
+    val segs = manifests.filter(m => within(m._1))
+    val segIds = segs.map(_._1)
+    val sidecars = segIds.map(id =>
+      id -> readSchemaSidecar(fs, s"$root/seg_$id")).toMap
+    val dels = tombstonesIn(fs, root, names).filter(d => within(d._1))
+    val rens = renamesIn(fs, root, names).filter(r => within(r._1))
+    // the served schema: the union of the segments' sidecars, each
+    // mapped from its PHYSICAL names through the renames that postdate
+    // it, so the union speaks the (as-of-`upTo`) names. None when any
+    // segment predates the sidecar protocol — all-or-nothing, because
+    // a sidecar-less segment may carry columns the union cannot see,
+    // and an explicit read schema would silently DROP them.
+    val schema =
+      if (segIds.isEmpty || segIds.exists(sidecars(_).isEmpty)) None
+      else Some(unionSchema(segIds.map { id =>
+        val applicable = rens.filter(_._1 > id)
+        org.apache.spark.sql.types.StructType(sidecars(id).get.fields.map(f =>
+          f.copy(name = currentName(f.name, applicable))))
+      }))
+    if (segIds.nonEmpty && legacyIds.nonEmpty) {
       // MIXED store: all-or-nothing (r11 advice) — the manifest union
-      // does not describe the legacy segments' rows, so the manifest-
-      // scoped read would silently drop them. Serve the plain
-      // recursive directory read instead; refuse the features that
-      // NEED manifest scoping rather than mis-serve them.
+      // does not describe the legacy segments' rows, so the data is
+      // served by the plain recursive directory read; refuse the
+      // features that NEED manifest scoping rather than mis-serve them
       require(upTo.isEmpty,
         s"time travel is unavailable on a mixed (legacy+manifest) " +
           s"store — compact() folds it into a modern one ($dir)")
       require(dels.isEmpty,
         s"tombstones on a mixed store cannot be scoped — compact() " +
           s"first ($dir)")
+    }
+    UnitSnapshot(dir, root, upTo,
+      segDirs = names.filter(_.startsWith("seg_")).sorted,
+      segIds = segIds,
+      manifests = segs.toMap,
+      sidecars = sidecars,
+      legacyIds = legacyIds,
+      dels = dels,
+      delIxDirs = dels.map { case (id, _) =>
+        id -> tombstoneIxDirs(fs, root, id) }.toMap,
+      keySchemas = dels.map { case (id, _) =>
+        id -> readSchemaSidecar(fs, s"$root/del_$id/keys") }.toMap,
+      rens = rens,
+      rowsIds = unitIds(names, "rows_").filter(within),
+      schema = schema)
+  }
+
+  /** The store's data as of `snap`: planned over exactly the files
+    * the committed segments' manifests name — the table-format
+    * posture (orphans from crashed writes are invisible; no
+    * directory-listing race), which manifest-less LEGACY stores fall
+    * back from to the plain directory read — with the applicable
+    * tombstones anti-joined, SCOPED by the id order: a tombstone
+    * deletes only from segments that precede it, so a re-appended key
+    * survives. Segments between consecutive tombstones share one
+    * applicable set, so the plan is (#tombstones+1) scan branches,
+    * not #segments — and compact returns the store to a single clean
+    * branch.
+    */
+  private def dataAsOf(spark: SparkSession, snap: UnitSnapshot): DataFrame = {
+    import snap.{dir, dels, rens, schema}
+    // a tombstone's recorded key column is the name CURRENT when it
+    // was written — renames that postdate it must map it forward or
+    // the anti-join misses the (now renamed) data column
+    val delsMapped = dels.map { case (id, kc) =>
+      (id, currentName(kc, rens.filter(_._1 > id)))
+    }
+    if (snap.segIds.isEmpty || snap.legacyIds.nonEmpty) {
+      // legacy (pre-manifest) layout — delete() refuses such stores,
+      // so no tombstones can exist here — or a MIXED store, whose
+      // refusals [[resolveSnapshot]] has already applied. Recursive:
+      // a legacy store that was compacted after modern (subdir-
+      // writing) appends keeps every file live, wherever it sits.
       spark.read.option("recursiveFileLookup", "true")
         .parquet(s"$dir/data")
     } else {
@@ -775,16 +837,15 @@ object Store {
       // them (both applicable sets are id-suffixes, so the key is a
       // pair of counts); with no renames this is exactly the r11
       // grouping and the single clean-branch plan shape is unchanged
-      val parts = segIds
+      val parts = snap.segIds
         .groupBy(s => (dels.count(_._1 > s), rens.count(_._1 > s))).toSeq
         .flatMap { case ((nDel, nRen), ids) =>
-          val files = ids
-            .flatMap(id => readManifest(fs, s"$root/seg_$id").getOrElse(Nil))
+          val files = ids.flatMap(snap.manifests)
             .distinct.map(n => s"$dir/data/$n")
           if (files.isEmpty) None
           else {
             val df0 =
-              if (rens.isEmpty) read(files)
+              if (rens.isEmpty) readParquet(spark, schema, files)
               else {
                 // RENAME ERA read: request the era's PHYSICAL names
                 // (from the group's sidecars — the union's names
@@ -792,8 +853,7 @@ object Store {
                 // global union's (the reader promotes), then alias
                 // physical -> current and align to the union
                 val groupRens = rens.takeRight(nRen)
-                val sides = ids.map(id =>
-                  readSchemaSidecar(fs, s"$root/seg_$id"))
+                val sides = ids.map(snap.sidecars)
                 val raw =
                   if (sides.exists(_.isEmpty)) spark.read.parquet(files: _*)
                   else {
@@ -821,7 +881,7 @@ object Store {
                   case None => renamed
                 }
               }
-            Some(applyTombstones(spark, root, df0,
+            Some(applyTombstones(spark, snap, df0,
               delsMapped.takeRight(nDel)))
           }
         }
@@ -840,12 +900,6 @@ object Store {
       if (hidden.isEmpty) out else out.drop(hidden.toSeq: _*)
     }
   }
-
-  /** the store's LIVE data frame: manifest-scoped, schema-evolved,
-    * tombstones applied — see [[dataAsOf]]
-    */
-  private def dataFrame(spark: SparkSession, dir: String): DataFrame =
-    dataAsOf(spark, dir, None)
 
   /** Row-level DELETE: remove every live row whose `keyCol` value
     * appears in `keys` (any single-column frame; values cast to the
@@ -900,10 +954,26 @@ object Store {
     require(legacySegIds(spark, dir).isEmpty,
       s"delete on a mixed (legacy+manifest) store cannot be scoped — " +
         s"compact() first ($dir)")
-    val liveCols = dataAsOf(spark, dir, None).columns
+    val liveCols = deleteSchema(spark, dir, None).fieldNames
     require(liveCols.contains(keyCol),
       s"no column '$keyCol' in store data (${liveCols.mkString(",")})")
     claimUnitId(fs, root)
+  }
+
+  /** the columns (and types) a delete keyed as of `upTo` validates
+    * against — the ones the data read serves: the sidecars' union
+    * without the hidden dropped names, so no merge-on-read frame is
+    * planned; the planned frame's own schema only when a segment
+    * predates the sidecars
+    */
+  private def deleteSchema(spark: SparkSession, dir: String,
+                           upTo: Option[Int]): org.apache.spark.sql.types.StructType = {
+    val snap = resolveSnapshot(spark, dir, upTo)
+    snap.schema match {
+      case Some(u) => org.apache.spark.sql.types.StructType(
+        u.fields.filterNot(_.name.startsWith(DroppedPrefix)))
+      case None => dataAsOf(spark, snap).schema
+    }
   }
 
   /** [[writeTombstone]] at an EXPLICIT (already claimed or
@@ -929,10 +999,10 @@ object Store {
     require(legacySegIds(spark, dir).isEmpty,
       s"delete on a mixed (legacy+manifest) store cannot be scoped — " +
         s"compact() first ($dir)")
-    val live0 = dataAsOf(spark, dir, Some(id))
-    require(live0.columns.contains(keyCol),
-      s"no column '$keyCol' in store data (${live0.columns.mkString(",")})")
-    val kt = live0.schema(keyCol).dataType
+    val live0 = deleteSchema(spark, dir, Some(id))
+    require(live0.fieldNames.contains(keyCol),
+      s"no column '$keyCol' in store data (${live0.fieldNames.mkString(",")})")
+    val kt = live0(keyCol).dataType
     val inCol = keys.columns.head
     // no distinct: key sets are set-semantic (see applyTombstones)
     val k = keys.select(col(inCol).cast(kt).as("key"))
@@ -971,16 +1041,18 @@ object Store {
                                   root: String, spec: IndexSpec,
                                   keyCol: String, id: Int,
                                   outDir: String): (Seq[Int], Seq[Int]) = {
-    // listings BEFORE the plan; the plan is pinned to them exactly
-    val scanned = segSnapshots(spark, dir).filter(_ < id)
-    val delsSeen = committedTombstones(spark, dir).map(_._1)
-      .filter(_ < id)
     // SNAPSHOT-SCOPED to ids < this tombstone's own: the tombstone
     // does not delete rows of concurrently-committed HIGHER-id
     // segments, so indexing them as victims would over-negate (the
-    // data read keeps them — index nets wrong)
-    val live = dataAsOf(spark, dir, Some(id), Some(scanned),
-      excludeDel = Some(id))
+    // data read keeps them — index nets wrong); nor is its own key
+    // set applied (a rescan of a committed tombstone would otherwise
+    // net its victims to the empty set). The plan is built from this
+    // one snapshot, so the coverage records equal what it saw exactly
+    // — a relisting could include a segment that committed since.
+    val snap = resolveSnapshot(spark, dir, Some(id - 1))
+    val scanned = snap.segIds
+    val delsSeen = snap.dels.map(_._1)
+    val live = dataAsOf(spark, snap)
     val persisted = readKeys(spark, s"$root/del_$id/keys")
       .select(col("key").as("__graft_del_key"))
     // index the victims read back from the PERSISTED key set (the
@@ -1243,10 +1315,8 @@ object Store {
     val files = readManifest(fs, s"$root/seg_$segId")
       .getOrElse(Nil).map(n => s"$dir/data/$n")
     if (files.isEmpty) { atomicCreate(fs, token); return }
-    val raw = readSchemaSidecar(fs, s"$root/seg_$segId") match {
-      case Some(sc) => spark.read.schema(sc).parquet(files: _*)
-      case None     => spark.read.parquet(files: _*)
-    }
+    val raw = readParquet(spark, readSchemaSidecar(fs, s"$root/seg_$segId"),
+      files)
     // the segment's files carry the names of ITS era; map them to the
     // names current at the tombstone's id so the repair entries match
     // the ixdelta's vocabulary (renames after `id` then apply to both
@@ -1417,7 +1487,8 @@ object Store {
   def deleteWhere(spark: SparkSession, dir: String, spec: IndexSpec,
                   keyCol: String, condition: Column): Int =
     delete(spark, dir, spec, keyCol,
-      dataAsOf(spark, dir, None).where(condition).select(keyCol))
+      dataAsOf(spark, resolveSnapshot(spark, dir)).where(condition)
+        .select(keyCol))
 
   /** UPSERT (merge-by-key) — the CDC / re-curation path ("replace
     * these docs with their rescrubbed versions, add the new ones"):
@@ -1608,18 +1679,32 @@ object Store {
     * (tombstone, segment) pair left by a crashed or still-racing
     * writer is repaired before the merged index is served, so the
     * first reader already sees exact netting.
+    *
+    * COST: metadata only, like the reference's O(footers) reopen.
+    * open() resolves the committed units once ([[resolveSnapshot]]:
+    * listings, manifests and sidecars) and builds the point face
+    * from them; the plan faces — `frame` (the data with its
+    * tombstone anti-joins), `persistedIndex` and `rowRefs` — are
+    * planned from the same snapshot on their first access, so a
+    * handle that only makes point reads plans no DataFrame at all.
+    * Errors the metadata decides (a non-widening schema union,
+    * tombstones on a mixed store) still throw here; one that only
+    * planning meets (say, a data file gone missing) throws at the
+    * first access of the face that plans it.
     */
   def open(spark: SparkSession, dir: String, spec: IndexSpec): StoredFrame = {
     repairUncoveredPairs(spark, dir, spec)
-    StoredFrame(
-      IndexedFrame(dataFrame(spark, dir), spec),
-      mergedIndex(spark, dir),
-      rowRefsFrame(spark, dir),
-      Some(pointReader(spark, dir)))
+    val snap = resolveSnapshot(spark, dir)
+    new StoredFrame(
+      IndexedFrame(dataAsOf(spark, snap), spec),
+      mergedIndex(spark, snap),
+      refsAsOf(spark, snap),
+      Some(pointReader(spark, snap)))
   }
 
   /** the driver-side point-read face for [[StoredFrame.fPoint]] /
-    * [[StoredFrame.rowsOfPoint]] — fully lazy (no footer I/O until
+    * [[StoredFrame.rowsOfPoint]], built from the handle's snapshot
+    * with no I/O (footers, file handles and victim key sets load on
     * the first point lookup). Tombstones and renames are SERVED, not
     * fallback-ed (r13): the freq side sums segment entries plus the
     * tombstones' negative ixdelta/ixrepair units (the id scoping is
@@ -1629,56 +1714,39 @@ object Store {
     * queried field reverse-mapped to the era's physical name.
     */
   private def pointReader(spark: SparkSession,
-                          dir: String): PointRead.StorePoint = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    // SNAPSHOT AT OPEN: the unit lists and era groups are resolved
-    // NOW, so fPoint/rowsOfPoint answer over the same committed
-    // units the handle's plan DataFrames were planned over — a unit
-    // committed between open() and the first point lookup must not
-    // make the two faces of one handle disagree. (Cost: a few
-    // listStatus/manifest probes open() already pays variants of;
-    // only the footer I/O stays lazy.)
-    val (root, _) = currentIndexRoot(spark, dir)
-    val (fs, _) = fsFor(spark, dir)
-    val dels = committedTombstones(spark, dir)
-    val rens = committedRenames(spark, dir)
-    val segIds = (segSnapshots(spark, dir) ++ legacySegIds(spark, dir))
-      .distinct.sorted
+                          snap: UnitSnapshot): PointRead.StorePoint = {
+    // SNAPSHOT AT OPEN: the unit lists and era groups come from the
+    // snapshot the handle's plan faces are built from, so
+    // fPoint/rowsOfPoint answer over the same committed units as the
+    // plan faces — a unit committed between open() and the first
+    // lookup must not make the faces of one handle disagree
+    import snap.{root, dels, rens}
+    val segIds = (snap.segIds ++ snap.legacyIds).distinct.sorted
     // freq units: index segments AND tombstone ix units, each at its
     // own id's rename era
     val freqUnits: Seq[(Int, Seq[String])] =
       segIds.map(id => (id, Seq(s"$root/seg_$id"))) ++
-        dels.map { case (id, _) => (id, tombstoneIxDirs(fs, root, id)) }
+        dels.map { case (id, _) => (id, snap.delIxDirs(id)) }
     val freqGroupsNow: Seq[PointRead.FreqGroup] = freqUnits
       .groupBy { case (id, _) => rens.count(_._1 > id) }.toSeq.sortBy(_._1)
       .map { case (nRen, us) =>
         (us.flatMap(_._2).map(new org.apache.hadoop.fs.Path(_)),
           rens.takeRight(nRen))
       }
-    val rowsGroupsNow: Seq[PointRead.RowsGroup] = {
-      val rp = new org.apache.hadoop.fs.Path(root)
-      val present =
-        if (!fs.exists(rp)) Seq.empty[Int]
-        else fs.listStatus(rp).map(_.getPath.getName).toSeq
-          .collect { case s if s.startsWith("rows_") => s.drop(5).toInt }
-      // committed segments only, mirroring refsAsOf's scoping
-      val committed = segSnapshots(spark, dir)
-      val keep =
-        if (committed.isEmpty) present
-        else present.filter((committed ++ legacySegIds(spark, dir)).toSet)
-      keep.groupBy(s => (dels.count(_._1 > s), rens.count(_._1 > s)))
-        .toSeq.sortBy(_._1)
-        .map { case ((nDel, nRen), ids) =>
-          (ids.sorted.map(id =>
-            new org.apache.hadoop.fs.Path(s"$root/rows_$id")),
-            rens.takeRight(nRen),
-            dels.takeRight(nDel).map(_._1))
-        }
-    }
+    // committed segments only, mirroring refsAsOf's scoping
+    val rowsGroupsNow: Seq[PointRead.RowsGroup] = snap.refsIds
+      .groupBy(s => (dels.count(_._1 > s), rens.count(_._1 > s)))
+      .toSeq.sortBy(_._1)
+      .map { case ((nDel, nRen), ids) =>
+        (ids.sorted.map(id =>
+          new org.apache.hadoop.fs.Path(s"$root/rows_$id")),
+          rens.takeRight(nRen),
+          dels.takeRight(nDel).map(_._1))
+      }
     val keyDirsNow = dels.map { case (id, _) =>
       id -> new org.apache.hadoop.fs.Path(s"$root/del_$id/keys")
     }.toMap
-    new PointRead.StorePoint(conf,
+    new PointRead.StorePoint(spark.sparkContext.hadoopConfiguration,
       eligible = () => true,
       freqGroups = () => freqGroupsNow,
       rowsGroups = () => rowsGroupsNow,
@@ -1723,19 +1791,16 @@ object Store {
              upToSeg: Int): StoredFrame = {
     import org.apache.spark.sql.functions._
     repairUncoveredPairs(spark, dir, spec)
-    val (root, _) = currentIndexRoot(spark, dir)
-    val segIds = segSnapshots(spark, dir).filter(_ <= upToSeg)
-    val delIds = committedTombstones(spark, dir).map(_._1)
-      .filter(_ <= upToSeg)
+    val snap = resolveSnapshot(spark, dir, Some(upToSeg))
+    import snap.{root, segIds, rens}
     require(segIds.nonEmpty,
       s"no snapshot <= $upToSeg in $dir (available: ${snapshots(spark, dir)})")
     // snapshot-scoped data: files of manifests 0..upToSeg, tombstones
     // committed at or before upToSeg applied with their segment
     // scoping — columns/rows/deletes after upToSeg are all invisible
-    val data = dataAsOf(spark, dir, Some(upToSeg))
+    val data = dataAsOf(spark, snap)
     // renames committed at or before the snapshot apply — openAt
     // serves the AS-OF schema, in the index as in the data
-    val rens = committedRenames(spark, dir).filter(_._1 <= upToSeg)
     def mapped(df: DataFrame, unitId: Int): DataFrame = {
       val applicable = rens.filter(_._1 > unitId)
       if (applicable.isEmpty) df
@@ -1744,9 +1809,8 @@ object Store {
     }
     val segFrames = segIds.map(id =>
       mapped(readIx(spark, Seq(s"$root/seg_$id")), id))
-    val (fsA, _) = fsFor(spark, dir)
-    val delFrames = delIds.map(id =>
-      mapped(readIx(spark, tombstoneIxDirs(fsA, root, id)), id))
+    val delFrames = snap.dels.map { case (id, _) =>
+      mapped(readIx(spark, snap.delIxDirs(id)), id) }
     val index0 =
       if (segFrames.size == 1 && delFrames.isEmpty) segFrames.head
       else {
@@ -1762,8 +1826,7 @@ object Store {
       if (rens.exists(_._3.startsWith(DroppedPrefix)))
         index0.where(!col("field").startsWith(DroppedPrefix))
       else index0
-    StoredFrame(IndexedFrame(data, spec), index,
-      refsAsOf(spark, dir, Some(upToSeg)))
+    new StoredFrame(IndexedFrame(data, spec), index, refsAsOf(spark, snap))
   }
 
   /** write-if-absent then open (haveIndexedDf). "Present" means BOTH
@@ -1779,8 +1842,8 @@ object Store {
     val indexOk = fs.exists(new org.apache.hadoop.fs.Path(root))
     // a spec asking for row-refs is not satisfied by a store written
     // without them — re-provide rather than serve a refs-less frame
-    val rowsOk = spec.rowRefs.isEmpty ||
-      rowRefsFrame(spark, dir).isDefined
+    def rowsOk = spec.rowRefs.isEmpty ||
+      resolveSnapshot(spark, dir).refsIds.nonEmpty
     if (!dataOk || !indexOk || !rowsOk) write(provide, dir, spec)
     open(spark, dir, spec)
   }
@@ -1914,12 +1977,12 @@ object Store {
     // union here makes the contract violation fail while the store is
     // still intact. Sidecar-less legacy stores skip the check (their
     // physical schema is unknowable without footer sniffing).
-    // COST: storedSchema reads every segment's schema sidecar —
+    // COST: resolveSnapshot reads every segment's schema sidecar —
     // O(segments) small reads per append. That is the deliberate
     // price of fail-before-mutate; an append-heavy store keeps it
     // cheap by compacting (which folds the segments back to one) —
     // the same cadence merge-on-read amplification already demands.
-    storedSchema(spark, dir, None)
+    resolveSnapshot(spark, dir).schema
       .foreach(existing => validateAppendSchema(existing, batch.schema))
     // the batch's data files live under the CLAIMED unit's own subdir
     // (data/seg_<id>) — concurrent appenders write disjoint paths, so
@@ -2040,7 +2103,7 @@ object Store {
     // an invisible ghost, never as a pre-manifest legacy segment
     atomicCreate(fs, claimPath(root, segId))
     // fail-before-mutate schema validation, as in append()
-    storedSchema(spark, dir, None)
+    resolveSnapshot(spark, dir).schema
       .foreach(existing => validateAppendSchema(existing, batch.schema))
     val sub = s"batch_$segId"
     val (_, names) = inParallel(spark)(beside, {
@@ -2211,18 +2274,14 @@ object Store {
     * do); an always-on global sort here would bill every point lookup
     * for a display order nothing consumes.
     */
-  private[core] def mergedIndex(spark: SparkSession, dir: String): DataFrame = {
+  private[core] def mergedIndex(spark: SparkSession,
+                                snap: UnitSnapshot): DataFrame = {
     import org.apache.spark.sql.functions._
-    val (root, _) = currentIndexRoot(spark, dir)
+    import snap.{root, rens}
     // layout compat: the pre-segment layout wrote the index parquet
     // directly under <dir>/index — serve it as-is when no seg_* dirs
     // exist rather than failing the path glob
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val segs =
-      if (!fs.exists(rootPath)) Array.empty[String]
-      else fs.listStatus(rootPath).map(_.getPath.getName)
-        .filter(_.startsWith("seg_"))
+    val segs = snap.segDirs
     // COMMITTED segments only when the store is manifest-mode: a
     // crashed append may have written its index segment but died
     // before the manifest (the commit point) — its data files are
@@ -2233,18 +2292,17 @@ object Store {
     // serves committed + legacy segments (all-or-nothing, matching
     // its plain recursive data read; only claimed-but-uncommitted
     // modern ghosts stay invisible).
-    val committed = segSnapshots(spark, dir)
-    val legacy = legacySegIds(spark, dir)
+    val committed = snap.segIds
+    val legacy = snap.legacyIds
     val segPaths =
       if (committed.nonEmpty)
         (committed ++ legacy).sorted.map(id => s"$root/seg_$id")
-      else segs.toSeq.sorted.map(n => s"$root/$n")
-    val rens = committedRenames(spark, dir)
-    val delFrames = committedTombstones(spark, dir).map { case (id, _) =>
+      else segs.map(n => s"$root/$n")
+    val delFrames = snap.dels.map { case (id, _) =>
       // a tombstone's ixdelta (and its conflict repairs) speak the
       // names current at its id — later renames map their field
       // column like any older unit's
-      val d = readIx(spark, tombstoneIxDirs(fs, root, id))
+      val d = readIx(spark, snap.delIxDirs(id))
       if (rens.isEmpty) d
       else d.select(mappedFieldExpr(rens.filter(_._1 > id)).as("field"),
         col("value"), col("f"))
@@ -2283,52 +2341,27 @@ object Store {
     }
   }
 
-  /** the persisted row-refs (field, value, row_key) across all
-    * segments of the live generation, or None if the store was
-    * written without [[IndexSpec.withRowRefs]]. No merge shuffle:
-    * row keys are unique across segments by construction (each data
-    * row is appended once), so the union IS the merged refs table;
-    * per-segment (field,value) parquet stats still prune point reads.
+  /** the persisted row-refs (field, value, row_key) of `snap`'s
+    * segments, or None if the store was written without
+    * [[IndexSpec.withRowRefs]]. No merge shuffle: row keys are unique
+    * across segments by construction (each data row is appended
+    * once), so the union IS the merged refs table; per-segment
+    * (field,value) parquet stats still prune point reads. Tombstones
+    * apply with the same segment scoping as the data (delete()
+    * requires the delete key to BE the refs key column, so the
+    * anti-join is on row_key). The live delete-free path stays the
+    * single glob read with no per-segment planning.
     */
-  private[core] def rowRefsFrame(spark: SparkSession,
-                                 dir: String): Option[DataFrame] =
-    refsAsOf(spark, dir, None)
-
-  /** row-refs as of a snapshot, tombstones applied with the same
-    * segment scoping as the data (delete() requires the delete key
-    * to BE the refs key column, so the anti-join is on row_key). The
-    * delete-free path stays the single glob read with no per-segment
-    * planning.
-    */
-  private def refsAsOf(spark: SparkSession, dir: String,
-                       upTo: Option[Int]): Option[DataFrame] = {
-    val (root, _) = currentIndexRoot(spark, dir)
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val present =
-      if (!fs.exists(rootPath)) Seq.empty[Int]
-      else fs.listStatus(rootPath).map(_.getPath.getName).toSeq
-        .collect { case s if s.startsWith("rows_") => s.drop(5).toInt }
-        .filter(id => upTo.forall(id <= _)).sorted
-    // committed segments only, as in mergedIndex: a crashed append's
-    // rows_ segment (written before the manifest) must not serve refs
-    // for data the manifest-scoped read does not show. Mixed stores
-    // include their legacy segments (all-or-nothing).
-    val committedSegs = segSnapshots(spark, dir)
-    val segIds =
-      if (committedSegs.isEmpty) present
-      else {
-        val keep = (committedSegs ++ legacySegIds(spark, dir)).toSet
-        present.filter(keep)
-      }
+  private def refsAsOf(spark: SparkSession,
+                       snap: UnitSnapshot): Option[DataFrame] = {
+    import snap.{root, dels, rens}
+    val present = snap.rowsIds
+    val segIds = snap.refsIds
     if (segIds.isEmpty) None
     else {
-      val dels = committedTombstones(spark, dir)
-        .filter(d => upTo.forall(d._1 <= _))
-      val rens = committedRenames(spark, dir)
-        .filter(r => upTo.forall(r._1 <= _))
-      if (dels.isEmpty && rens.isEmpty && upTo.isEmpty && segIds == present)
-        Some(readRefs(spark, segIds.sorted.map(id => s"$root/rows_$id")))
+      if (dels.isEmpty && rens.isEmpty && snap.upTo.isEmpty &&
+          segIds == present)
+        Some(readRefs(spark, segIds.map(id => s"$root/rows_$id")))
       else Some(segIds
         .groupBy(s => (dels.count(_._1 > s), rens.count(_._1 > s))).toSeq
         .map { case ((nDel, nRen), ids) =>
@@ -2344,7 +2377,7 @@ object Store {
               refs0.where(!col("field").startsWith(DroppedPrefix))
             else refs0
           dels.takeRight(nDel).foldLeft(refs) { case (acc, (id, _)) =>
-            val keys = readKeys(spark, s"$root/del_$id/keys")
+            val keys = snap.keys(spark, id)
               .select(col("key").as("__graft_del_key"))
             acc.join(keys, acc("row_key") === col("__graft_del_key"),
               "left_anti")
@@ -2380,13 +2413,14 @@ object Store {
     // eager checkpoints (independent, so side by side): every read of
     // the old generation's index completes here, before any directory
     // is created or deleted
+    val snap = resolveSnapshot(spark, dir)
     val (merged, rows) = inParallel(spark)(
-      mergedIndex(spark, dir).localCheckpoint(true),
-      rowRefsFrame(spark, dir).map(_.localCheckpoint(true)))
+      mergedIndex(spark, snap).localCheckpoint(true),
+      refsAsOf(spark, snap).map(_.localCheckpoint(true)))
     val (fs, base) = fsFor(spark, dir)
     val (oldRoot, gen) = currentIndexRoot(spark, dir)
     val newRoot = s"$dir/index_g${gen + 1}"
-    val dels = committedTombstones(spark, dir)
+    val dels = snap.dels
     // snapshot history COLLAPSES at compact (documented: like table-
     // format log compaction): the folded seg_0's manifest is the
     // union of the old generation's manifests, so "latest" stays
@@ -2420,7 +2454,7 @@ object Store {
     // branch again. The superseded files are NOT touched here (the
     // retained generation's readers still plan over them); vacuum()
     // reclaims everything the live manifests no longer reference.
-    // The mergedIndex/rowRefsFrame checkpoints above already carry
+    // The mergedIndex/refsAsOf checkpoints above already carry
     // the tombstones netted/anti-joined, so index, refs and data fold
     // consistently inside the same atomic publish.
     // a MIXED store (manifest-carrying and pre-manifest segments
@@ -2428,11 +2462,11 @@ object Store {
     // path: the union of its manifests does not describe the legacy
     // rows, so only a fresh write yields a manifest that does — this
     // is the migration path that turns a mixed store fully modern
-    val mixed = isMixedLegacy(spark, dir)
+    val mixed = snap.segIds.nonEmpty && snap.legacyIds.nonEmpty
     // RENAMES fold physically too: the folded segment's id is the max
     // retired unit id, so no rename unit can apply to it — its files
     // must carry the CURRENT names, which only a rewrite guarantees
-    val rens = committedRenames(spark, dir)
+    val rens = snap.rens
     // (manifest entries, rewritten schema) of the folded segment
     def foldData(): (Option[Seq[String]],
                      Option[org.apache.spark.sql.types.StructType]) =
@@ -2450,7 +2484,7 @@ object Store {
         // is exclusive; the index folds below write under newRoot), so
         // the listing diff is exactly this rewrite's files
         val before = dataFilesRel(fs, dir)
-        val data = dataAsOf(spark, dir, None)
+        val data = dataAsOf(spark, snap)
         data.write.mode(SaveMode.Append).parquet(s"$dir/data")
         (Some((dataFilesRel(fs, dir) -- before).toSeq.sorted),
           Some(data.schema))
@@ -2498,7 +2532,7 @@ object Store {
     // the folded segment's schema: the REWRITTEN data's when the fold
     // rewrote (tombstones/renames/mixed — current names, widened
     // types), else the union of the retired segments' sidecars (same
-    // all-or-nothing rule as storedSchema)
+    // all-or-nothing rule as the served schema, see resolveSnapshot)
     rewrittenSchema match {
       case Some(sc) => writeSchemaSidecar(fs, s"$newRoot/seg_$foldId", sc)
       case None if oldSchemas.nonEmpty && oldSchemas.forall(_.isDefined) =>
@@ -2716,10 +2750,6 @@ object Store {
       .saveAsTable(table)
 }
 
-/** a reopened frame: live IndexedFrame + the persisted index table
-  * (pre-aggregated — index_freqs-style lookups hit the small sorted
-  * parquet instead of rescanning the data).
-  */
 /** the k-entry interactive boolean result ([[StoredFrame.boolPoint]]):
   * the frame row count, per-term frequencies aligned with the query's
   * term order, and the n-way AND / OR counts — every other boolean
@@ -2732,9 +2762,29 @@ final case class BoolPoint(n: Long, fs: Seq[Long], and: Long, or: Long) {
   def notAll: Long = n - and
 }
 
-final case class StoredFrame(frame: IndexedFrame, persistedIndex: DataFrame,
-                             rowRefs: Option[DataFrame] = None,
-                             point: Option[PointRead.StorePoint] = None) {
+/** a reopened store: the live IndexedFrame, the persisted index
+  * table (pre-aggregated — index_freqs-style lookups hit the small
+  * sorted parquet instead of rescanning the data), the row refs when
+  * the store has them, and the driver-side point face.
+  *
+  * The three plan faces are passed BY NAME and built on their first
+  * access: [[Store.open]] hands over builders bound to its open-time
+  * unit snapshot, so a handle that only makes point reads plans no
+  * DataFrame, and a face first used after later commits still serves
+  * the open-time units (see the unit-snapshot notes in [[Store]] for
+  * the one exception). A face whose build throws is built again on
+  * its next access. A plain class, not a case class: there is no
+  * structural equality or `copy`, which would have to build every
+  * face.
+  */
+final class StoredFrame(frameOf: => IndexedFrame,
+                        persistedIndexOf: => DataFrame,
+                        rowRefsOf: => Option[DataFrame] = None,
+                        val point: Option[PointRead.StorePoint] = None) {
+  lazy val frame: IndexedFrame = frameOf
+  lazy val persistedIndex: DataFrame = persistedIndexOf
+  lazy val rowRefs: Option[DataFrame] = rowRefsOf
+
   /** frequency of (field,value) from the persisted index — a pruned
     * point read, the analog of opening one bitmap's popcount.
     */

@@ -169,6 +169,24 @@ class PointReadSpec extends SparkSpec {
     val st2 = Store.open(spark, s"$dir/s", spec)
     assert(st2.fPoint("cat", "c1") === planF(st2, "cat", "c1"))
     assert(st2.fPoint("cat", "c1") > before)
+    // every face of a handle is first used only after an append, a
+    // delete and a compact committed behind it: the plan faces are
+    // built on that first access, yet all of them serve the
+    // open-time rows 0..279 and agree with the point face
+    val st3 = Store.open(spark, s"$dir/s", spec)
+    Store.append(mkDf(280 until 350), s"$dir/s", spec)
+    Store.delete(spark, s"$dir/s", spec, "id",
+      (0 until 350 by 4).map(_.toLong).toDF("id"))
+    Store.compact(spark, s"$dir/s")
+    assert(st3.frame.df.count() === 280L)
+    for (v <- Seq("c1", "c4")) {
+      val want = (0 until 280).filter(i => s"c${i % 7}" == v).map(_.toLong)
+      assert(st3.frame.df.where(col("cat") === v).count() === want.size)
+      assert(planF(st3, "cat", v) === want.size)
+      assert(planRows(st3, "cat", v) === want)
+      assert(st3.fPoint("cat", v) === want.size)
+      assert(fastRows(st3, "cat", v) === want)
+    }
   }
 
   test("fAndPoint equals the plan-path pair intersection, no job") {

@@ -107,6 +107,33 @@ class StoreEvolutionSpec extends SparkSpec {
     assert(st.f("cat", "a").collect().isEmpty) // netted out of the index
   }
 
+  test("a delete keyed on a renamed or a dropped column checks the served columns") {
+    val dir = java.nio.file.Files.createTempDirectory("delkey").toString
+    Store.write(Seq((1L, "a", "x1"), (2L, "b", "x2"), (3L, "a", "x3"))
+      .toDF("id", "cat", "flag"), dir, spec)
+    Store.renameColumn(spark, dir, "id", "doc_id")
+    val e = intercept[IllegalArgumentException] {
+      Store.delete(spark, dir, spec, "id", Seq(1L).toDF("id"))
+    }
+    assert(e.getMessage.contains(
+      "no column 'id' in store data (doc_id,cat,flag)"))
+    // the renamed key deletes, its keys cast to the column's type
+    Store.delete(spark, dir, spec, "doc_id", Seq(1).toDF("k"))
+    val st = Store.open(spark, dir, spec)
+    assert(st.frame.df.select("doc_id").collect().map(_.getLong(0))
+      .sorted.toSeq === Seq(2L, 3L))
+    assert(st.f("cat", "a").head().getLong(0) === 1L)
+    // a dropped column, by its old or its hidden name, is no key
+    val dropId = Store.dropColumn(spark, dir, "flag")
+    for (kc <- Seq("flag", s"__graft_dropped_${dropId}_flag")) {
+      val e2 = intercept[IllegalArgumentException] {
+        Store.delete(spark, dir, spec, kc, Seq("x2").toDF("k"))
+      }
+      assert(e2.getMessage.contains(
+        s"no column '$kc' in store data (doc_id,cat)"))
+    }
+  }
+
   test("chained renames fold in order; a retired name is reusable for a new column") {
     val dir = java.nio.file.Files.createTempDirectory("renchain").toString
     Store.write(Seq((1L, "a", 10L)).toDF("id", "cat", "n"), dir, spec)

@@ -497,6 +497,22 @@ class StoreSpec extends SparkSpec {
     assert(Store.open(spark, dir, spec).frame.df.count() === 2L)
   }
 
+  test("a point-only handle plans nothing: each plan face is built on first access") {
+    val rspec = IndexSpec(Seq("cat")).withRowRefs("id")
+    val dir = java.nio.file.Files.createTempDirectory("lazyfaces").toString
+    Store.write(data, dir, rspec)
+    val st0 = Store.open(spark, dir, rspec)
+    val (f0, rows0) = (st0.fPoint("cat", "a"), st0.rowsOfPoint("cat", "a"))
+    assert((f0, rows0) === (2L, Seq(1L, 3L)))
+    // without its data files, only a face that plans the data can fail
+    new java.io.File(s"$dir/data").listFiles()
+      .filter(_.getName.endsWith(".parquet")).foreach(_.delete())
+    val st = Store.open(spark, dir, rspec)
+    assert(st.fPoint("cat", "a") === f0)
+    assert(st.rowsOfPoint("cat", "a") === rows0)
+    intercept[org.apache.spark.sql.AnalysisException](st.frame.df)
+  }
+
   test("commit job counts: append, delete and upsert on a row-refs store") {
     // counts, not timings: exact and repeatable for a fixed input. A
     // change that re-adds the tombstone key-set de-duplication shuffle
