@@ -47,9 +47,7 @@ object SegmentedArtifact {
   /** identity of a store segment's INPUT: the hash of its manifest's
     * sorted file list (what the artifact build read)
     */
-  private[core] def manifestFingerprint(
-      fs: org.apache.hadoop.fs.FileSystem, segDir: String): String = {
-    val files = Store.readManifest(fs, segDir).getOrElse(Nil)
+  private[core] def manifestFingerprint(files: Seq[String]): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
     files.sorted.foreach(f => md.update((f + "\n").getBytes("UTF-8")))
     md.digest().map("%02x".format(_)).mkString
@@ -78,15 +76,15 @@ object SegmentedArtifact {
     */
   def refresh(spark: SparkSession, dir: String, family: String)
              (buildFor: DataFrame => DataFrame): Seq[Int] = {
-    require(Store.committedRenames(spark, dir).isEmpty,
+    val snap = Store.resolveSnapshot(spark, dir)
+    require(snap.rens.isEmpty,
       s"segmented artifacts on a renamed store: compact() first " +
         s"(folds the renames; the artifact rebuilds at the fold) ($dir)")
-    require(Store.legacySegIds(spark, dir).isEmpty,
+    require(snap.legacyIds.isEmpty,
       s"segmented artifacts need a manifest-carrying store ($dir)")
-    val (root, _) = Store.currentIndexRoot(spark, dir)
     val fam = famRoot(dir, family)
     val (fs, _) = fsFor(spark, dir)
-    val segs = Store.segSnapshots(spark, dir)
+    val segs = snap.segIds
     require(segs.nonEmpty,
       s"segmented artifacts need a manifest-carrying store ($dir)")
     // fresh = the artifact segment exists AND was built from the
@@ -99,23 +97,19 @@ object SegmentedArtifact {
       val art = s"$fam/seg_$id"
       fs.exists(new org.apache.hadoop.fs.Path(s"$art/_SUCCESS")) &&
         scala.util.Try(Store.readSmallText(fs, s"$art/_SRC")).toOption
-          .contains(manifestFingerprint(fs, s"$root/seg_$id"))
+          .contains(manifestFingerprint(snap.manifests(id)))
     }
     missing.foreach { id =>
-      val files = Store.readManifest(fs, s"$root/seg_$id")
-        .getOrElse(Nil).map(n => s"$dir/data/$n")
       // read THIS segment's files with its own sidecar schema (the
       // delta read must not union-plan over other segments)
-      val delta = Store.readSchemaSidecar(fs, s"$root/seg_$id") match {
-        case Some(sc) => spark.read.schema(sc).parquet(files: _*)
-        case None     => spark.read.parquet(files: _*)
-      }
+      val delta = Store.readParquet(spark, snap.sidecars(id),
+        snap.manifests(id).map(n => s"$dir/data/$n"))
       val out = buildFor(delta)
       out.write.mode(SaveMode.Overwrite).parquet(s"$fam/seg_$id")
       Store.writeSchemaSidecar(fs, s"$fam/seg_$id", out.schema)
       val src = fs.create(
         new org.apache.hadoop.fs.Path(s"$fam/seg_$id/_SRC"), true)
-      try src.write(manifestFingerprint(fs, s"$root/seg_$id")
+      try src.write(manifestFingerprint(snap.manifests(id))
         .getBytes("UTF-8")) finally src.close()
     }
     // GC: artifact segments for retired (folded-away) store segments
@@ -138,24 +132,22 @@ object SegmentedArtifact {
     */
   def read(spark: SparkSession, dir: String, family: String,
            keyCol: String): DataFrame = {
-    val (root, _) = Store.currentIndexRoot(spark, dir)
+    val snap = Store.resolveSnapshot(spark, dir)
     val (fs, _) = fsFor(spark, dir)
     val fam = famRoot(dir, family)
-    val segs = Store.segSnapshots(spark, dir)
+    val segs = snap.segIds
     require(segs.nonEmpty, s"no committed segments in $dir")
-    val dels = Store.committedTombstones(spark, dir)
+    val dels = snap.dels
     val parts = segs.groupBy(s => dels.count(_._1 > s)).toSeq
       .map { case (nApplicable, ids) =>
         val segDirs = ids.map(id => s"$fam/seg_$id")
         // explicit schema from the first partial's sidecar: skips
         // the per-call schema-inference job (r15; falls back for
         // pre-r15 artifact dirs)
-        val art = Store.readSchemaSidecar(fs, segDirs.head) match {
-          case Some(sc) => spark.read.schema(sc).parquet(segDirs: _*)
-          case None     => spark.read.parquet(segDirs: _*)
-        }
+        val art = Store.readParquet(spark,
+          Store.readSchemaSidecar(fs, segDirs.head), segDirs)
         dels.takeRight(nApplicable).foldLeft(art) { case (acc, (id, _)) =>
-          val keys = Store.readKeys(spark, s"$root/del_$id/keys")
+          val keys = snap.keys(spark, id)
             .select(col("key").as("__graft_del_key"))
           acc.join(keys, acc(keyCol) === col("__graft_del_key"),
             "left_anti")
@@ -242,51 +234,49 @@ object SegmentedAgg {
   def refresh(spark: SparkSession, dir: String, family: String,
               keyCol: String)
              (buildCounts: DataFrame => DataFrame): Seq[String] = {
-    require(Store.committedRenames(spark, dir).isEmpty,
+    val snap = Store.resolveSnapshot(spark, dir)
+    require(snap.rens.isEmpty,
       s"segmented aggregates on a renamed store: compact() first ($dir)")
-    require(Store.legacySegIds(spark, dir).isEmpty,
+    require(snap.legacyIds.isEmpty,
       s"segmented aggregates need a manifest-carrying store ($dir)")
-    val (root, _) = Store.currentIndexRoot(spark, dir)
     val fam = famRoot(dir, family)
     val (fs, _) = fsFor(spark, dir)
-    val segs = Store.segSnapshots(spark, dir)
+    val segs = snap.segIds
     require(segs.nonEmpty,
       s"segmented aggregates need a manifest-carrying store ($dir)")
-    val dels = Store.committedTombstones(spark, dir)
+    val dels = snap.dels
     dels.foreach { case (_, dk) => require(dk == keyCol,
       s"tombstone keyed on '$dk' but the aggregate family nets on " +
         s"'$keyCol' — they must agree or deletes cannot be netted") }
     val built = Seq.newBuilder[String]
 
-    def fresh(art: String, segDir: String): Boolean =
+    // a partial is keyed to the manifest of the store segment it read
+    def fingerprint(segId: Int) =
+      SegmentedArtifact.manifestFingerprint(snap.manifests(segId))
+
+    def fresh(art: String, segId: Int): Boolean =
       fs.exists(new org.apache.hadoop.fs.Path(s"$art/_SUCCESS")) &&
         scala.util.Try(Store.readSmallText(fs, s"$art/_SRC")).toOption
-          .contains(SegmentedArtifact.manifestFingerprint(fs, segDir))
+          .contains(fingerprint(segId))
 
-    def segData(id: Int): DataFrame = {
-      val files = Store.readManifest(fs, s"$root/seg_$id")
-        .getOrElse(Nil).map(n => s"$dir/data/$n")
-      Store.readSchemaSidecar(fs, s"$root/seg_$id") match {
-        case Some(sc) => spark.read.schema(sc).parquet(files: _*)
-        case None     => spark.read.parquet(files: _*)
-      }
-    }
+    def segData(id: Int): DataFrame =
+      Store.readParquet(spark, snap.sidecars(id),
+        snap.manifests(id).map(n => s"$dir/data/$n"))
 
-    def stamp(art: String, segDir: String): Unit = {
+    def stamp(art: String, segId: Int): Unit = {
       val src = fs.create(new org.apache.hadoop.fs.Path(s"$art/_SRC"), true)
-      try src.write(SegmentedArtifact.manifestFingerprint(fs, segDir)
-        .getBytes("UTF-8")) finally src.close()
+      try src.write(fingerprint(segId).getBytes("UTF-8")) finally src.close()
     }
 
     // per-segment positive partials
     segs.foreach { id =>
       val art = s"$fam/seg_$id"
-      if (!fresh(art, s"$root/seg_$id")) {
+      if (!fresh(art, id)) {
         val counts = buildCounts(segData(id))
         validateCountsSchema(counts.schema, Some(keyCol), s"refresh($fam)")
         counts.write.mode(SaveMode.Overwrite).parquet(art)
         Store.writeSchemaSidecar(fs, art, counts.schema)
-        stamp(art, s"$root/seg_$id")
+        stamp(art, id)
         built += s"seg_$id"
       }
     }
@@ -297,12 +287,12 @@ object SegmentedAgg {
     dels.foreach { case (t, _) =>
       segs.filter(_ < t).foreach { s =>
         val art = s"$fam/del_${t}_seg_$s"
-        if (!fresh(art, s"$root/seg_$s")) {
-          val keys = Store.readKeys(spark, s"$root/del_$t/keys")
+        if (!fresh(art, s)) {
+          val keys = snap.keys(spark, t)
             .select(col("key").as("__graft_del_key"))
           val earlier = dels.map(_._1).filter(t2 => t2 > s && t2 < t)
           val base = earlier.foldLeft(segData(s)) { case (acc, t2) =>
-            val k2 = Store.readKeys(spark, s"$root/del_$t2/keys")
+            val k2 = snap.keys(spark, t2)
               .select(col("key").as("__graft_del_key"))
             acc.join(k2, acc(keyCol) === col("__graft_del_key"),
               "left_anti")
@@ -319,7 +309,7 @@ object SegmentedAgg {
           }.toSeq: _*)
           negated.write.mode(SaveMode.Overwrite).parquet(art)
           Store.writeSchemaSidecar(fs, art, negated.schema)
-          stamp(art, s"$root/seg_$s")
+          stamp(art, s)
           built += s"del_${t}_seg_$s"
         }
       }
@@ -356,16 +346,15 @@ object SegmentedAgg {
   def read(spark: SparkSession, dir: String, family: String): DataFrame = {
     import org.apache.spark.sql.functions.sum
     val fam = famRoot(dir, family)
-    val segs = Store.segSnapshots(spark, dir)
+    val snap = Store.resolveSnapshot(spark, dir)
+    val segs = snap.segIds
     require(segs.nonEmpty, s"no committed segments in $dir")
-    val dels = Store.committedTombstones(spark, dir).map(_._1)
+    val dels = snap.dels.map(_._1)
     val dirs = segs.map(id => s"$fam/seg_$id") ++
       (for (t <- dels; s <- segs if s < t) yield s"$fam/del_${t}_seg_$s")
     val (fs, _) = fsFor(spark, dir)
-    val all = Store.readSchemaSidecar(fs, dirs.head) match {
-      case Some(sc) => spark.read.schema(sc).parquet(dirs: _*)
-      case None     => spark.read.parquet(dirs: _*)
-    }
+    val all = Store.readParquet(spark, Store.readSchemaSidecar(fs, dirs.head),
+      dirs)
     validateCountsSchema(all.schema, None, s"read($fam)")
     val countCols = all.schema.fields
       .filter(_.dataType == org.apache.spark.sql.types.LongType)

@@ -71,8 +71,8 @@ object Store {
   /** (root path, generation number) of the highest committed index
     * generation; generation 0 is the base `<dir>/index` layout.
     */
-  private[core] def currentIndexRoot(spark: SparkSession,
-                                     dir: String): (String, Int) = {
+  private def currentIndexRoot(spark: SparkSession,
+                               dir: String): (String, Int) = {
     val (fs, base) = fsFor(spark, dir)
     val gens =
       if (!fs.exists(base)) Seq.empty[Int]
@@ -98,8 +98,8 @@ object Store {
   private def writeManifest(fs: org.apache.hadoop.fs.FileSystem,
                             segDir: String, files: Seq[String]): Unit = {
     // the manifest IS the segment's commit marker, and with concurrent
-    // writers another writer may LIST manifests (resolveSnapshot /
-    // segSnapshots) at any moment — so it must appear atomically:
+    // writers another writer may LIST manifests (resolveSnapshot) at
+    // any moment — so it must appear atomically:
     // write a temp file, then rename (atomic on HDFS and local FS).
     // A plain create+write+close has a window where a reader sees an
     // empty or partial file list and plans over missing files.
@@ -110,7 +110,7 @@ object Store {
     fs.rename(tmp, new org.apache.hadoop.fs.Path(s"$segDir/_MANIFEST"))
   }
 
-  private[core] def readManifest(fs: org.apache.hadoop.fs.FileSystem,
+  private def readManifest(fs: org.apache.hadoop.fs.FileSystem,
                            segDir: String): Option[Seq[String]] = {
     val p = new org.apache.hadoop.fs.Path(s"$segDir/_MANIFEST")
     if (!fs.exists(p)) None
@@ -267,17 +267,9 @@ object Store {
     finally in.close()
   }
 
-  /** committed tombstones of the live generation: (id, keyCol), id
-    * ascending
+  /** the committed tombstones among the listing `names` of `root`:
+    * (id, keyCol), id ascending
     */
-  private[core] def committedTombstones(spark: SparkSession,
-                                        dir: String): Seq[(Int, String)] = {
-    val (root, _) = currentIndexRoot(spark, dir)
-    val (fs, _) = fsFor(spark, dir)
-    tombstonesIn(fs, root, rootNames(fs, root))
-  }
-
-  /** [[committedTombstones]] over an existing listing of `root` */
   private def tombstonesIn(fs: org.apache.hadoop.fs.FileSystem, root: String,
                            names: Seq[String]): Seq[(Int, String)] =
     unitIds(names, "del_")
@@ -423,23 +415,8 @@ object Store {
   // mutating ops that depend on manifest scoping (delete/appendBatch/
   // openAt) refuse it — compact() folds it into a clean modern store.
   // A crashed MODERN append (claim present, manifest absent) is not
-  // legacy: its ghost stays invisible, as before.
-
-  /** seg_ dir ids of the live generation with neither manifest nor
-    * claim — pre-manifest-protocol segments
-    */
-  private[core] def legacySegIds(spark: SparkSession, dir: String): Seq[Int] = {
-    val (root, _) = currentIndexRoot(spark, dir)
-    val (fs, _) = fsFor(spark, dir)
-    val rp = new org.apache.hadoop.fs.Path(root)
-    if (!fs.exists(rp)) Nil
-    else fs.listStatus(rp).map(_.getPath.getName).toSeq
-      .collect { case s if s.startsWith("seg_") => s.drop(4) }
-      .flatMap(s => scala.util.Try(s.toInt).toOption)
-      .filter(id => readManifest(fs, s"$root/seg_$id").isEmpty &&
-        !fs.exists(claimPath(root, id)))
-      .sorted
-  }
+  // legacy: its ghost stays invisible, as before. The legacy ids are
+  // [[UnitSnapshot.legacyIds]].
 
   // -------------------------------------------------------- rename units
   // Column RENAME as a metadata-only unit `ren_<id>` sharing the
@@ -456,17 +433,9 @@ object Store {
   // folds renames into the data physically, so a generation never
   // carries them forever.
 
-  /** committed renames of the live generation: (id, from, to), id
-    * ascending
+  /** the committed renames among the listing `names` of `root`:
+    * (id, from, to), id ascending
     */
-  private[core] def committedRenames(spark: SparkSession,
-                                     dir: String): Seq[(Int, String, String)] = {
-    val (root, _) = currentIndexRoot(spark, dir)
-    val (fs, _) = fsFor(spark, dir)
-    renamesIn(fs, root, rootNames(fs, root))
-  }
-
-  /** [[committedRenames]] over an existing listing of `root` */
   private def renamesIn(fs: org.apache.hadoop.fs.FileSystem, root: String,
                         names: Seq[String]): Seq[(Int, String, String)] =
     unitIds(names, "ren_")
@@ -529,7 +498,7 @@ object Store {
   /** parquet `paths` read with a recorded schema, or by inference
     * when there is none (units that predate the sidecars)
     */
-  private def readParquet(spark: SparkSession,
+  private[core] def readParquet(spark: SparkSession,
                           schema: Option[org.apache.spark.sql.types.StructType],
                           paths: Seq[String]): DataFrame =
     schema.fold(spark.read)(spark.read.schema(_)).parquet(paths: _*)
@@ -584,7 +553,7 @@ object Store {
   def dropColumn(spark: SparkSession, dir: String, name: String): Int = {
     require(!name.startsWith(DroppedPrefix),
       s"'$name' is a reserved dropped-column name")
-    val snap = resolveSnapshot(spark, dir)
+    val snap = resolveSnapshot(spark, dir).checked
     val cur = snap.schema.getOrElse(
       throw new IllegalArgumentException(
         s"drop requires schema sidecars on every segment ($dir)"))
@@ -598,7 +567,8 @@ object Store {
       require(curKc != name,
         s"column '$name' keys tombstone del_$id — compact() first")
     }
-    renameColumnUnchecked(spark, dir, name,
+    requireManifestStore(snap, "rename/drop")
+    renameColumnUnchecked(spark, snap, name,
       id => s"$DroppedPrefix${id}_$name")
   }
 
@@ -607,33 +577,35 @@ object Store {
     require(from != to, "rename to the same name is a no-op")
     require(!from.startsWith(DroppedPrefix) && !to.startsWith(DroppedPrefix),
       s"the $DroppedPrefix* namespace is reserved for dropColumn")
-    val (root, _) = currentIndexRoot(spark, dir)
-    val (fs, _) = fsFor(spark, dir)
-    require(segSnapshots(spark, dir).nonEmpty &&
-        legacySegIds(spark, dir).isEmpty,
-      s"rename requires a manifest-carrying store ($dir)")
-    val cur = resolveSnapshot(spark, dir).schema.getOrElse(
+    val snap = resolveSnapshot(spark, dir)
+    requireManifestStore(snap, "rename")
+    val cur = snap.checked.schema.getOrElse(
       throw new IllegalArgumentException(
         s"rename requires schema sidecars on every segment ($dir)"))
     require(cur.fieldNames.contains(from),
       s"no column '$from' in store schema (${cur.fieldNames.mkString(",")})")
     require(!cur.fieldNames.contains(to),
       s"column '$to' already exists — rename would collide")
-    renameColumnUnchecked(spark, dir, from, _ => to)
+    renameColumnUnchecked(spark, snap, from, _ => to)
   }
 
-  /** the shared ren_ unit commit for [[renameColumn]]/[[dropColumn]]
-    * (both validate first); `toOf` sees the claimed unit id so drops
-    * can mint a unique hidden name
+  /** the mapping a rename or drop commits is computed from manifests
+    * and sidecars, so every segment must carry them: none legacy, at
+    * least one committed. `op` names the face in the message.
     */
-  private def renameColumnUnchecked(spark: SparkSession, dir: String,
+  private def requireManifestStore(snap: UnitSnapshot, op: String): Unit =
+    require(snap.segIds.nonEmpty && snap.legacyIds.isEmpty,
+      s"$op requires a manifest-carrying store (${snap.dir})")
+
+  /** the shared ren_ unit commit for [[renameColumn]]/[[dropColumn]]
+    * (both validate `snap` first); `toOf` sees the claimed unit id so
+    * drops can mint a unique hidden name
+    */
+  private def renameColumnUnchecked(spark: SparkSession, snap: UnitSnapshot,
                                     from: String,
                                     toOf: Int => String): Int = {
-    val (root, _) = currentIndexRoot(spark, dir)
-    val (fs, _) = fsFor(spark, dir)
-    require(segSnapshots(spark, dir).nonEmpty &&
-        legacySegIds(spark, dir).isEmpty,
-      s"rename/drop requires a manifest-carrying store ($dir)")
+    val root = snap.root
+    val (fs, _) = fsFor(spark, root)
     val id = claimUnitId(fs, root)
     def put(name: String, v: String): Unit = {
       val out = fs.create(
@@ -687,30 +659,56 @@ object Store {
   }
 
   // ------------------------------------------------------ unit snapshots
+  // [[resolveSnapshot]] is the one reader of a generation's units:
+  // every op that asks which segments, tombstones, renames or legacy
+  // segments exist reads them from a [[UnitSnapshot]], never from a
+  // listing of its own, so the answers of one question set always
+  // come from one generation.
+  //
   // A handle is pinned to the units that were committed when it was
-  // made: [[resolveSnapshot]] reads the generation's metadata once and
-  // every face of the handle — the data, the merged index, the row
-  // refs and the driver-side point reads — is built from that value,
-  // never from a fresh listing. A face built long after open() (the
-  // plan faces are built on first access) still serves the open-time
+  // made: every face of the handle — the data, the merged index, the
+  // row refs and the driver-side point reads — is built from its
+  // open-time snapshot. A face built long after open() (the plan
+  // faces are built on first access) still serves the open-time
   // units: segment, tombstone and refs units are immutable once
   // committed, and compact retains the generation they live in. The
   // exception is the data of a pre-manifest or mixed store, which no
   // manifest describes: its plain directory read lists `data/` when
   // the frame is first planned.
+  //
+  // Within one op, questions with no write of the op between them
+  // share a snapshot: that is the schedule in which any other writer
+  // committed a moment later, which the protocol already allows. Each
+  // publish-then-check point of the conflict protocol takes a fresh
+  // snapshot AFTER its own publish, because its check must see every
+  // unit another writer published before it (the later publisher sees
+  // the earlier one): [[commitTombstone]] once per validate-loop
+  // iteration, again after its `_COMMITTED` marker, and again after
+  // each post-commit check that wrote a repair; [[repairTombstonesFor]]
+  // after the segment's manifest lands; [[coverSegment]] once per
+  // uncovered pair it repairs; open() again only when its repair pass
+  // found an uncovered pair.
+  //
+  // Resolving refuses nothing. The refusals the metadata decides
+  // ([[UnitSnapshot.checked]]) are raised by the faces that serve or
+  // extend the store — open, openAt, have, delete, append, rename,
+  // drop and compact — never by the ones that only inspect or repair
+  // it: history, snapshots, vacuum, the conflict passes and
+  // [[SegmentedArtifact]].
 
-  /** the committed units of one generation, as resolved from its
-    * metadata: the root listing, each segment's manifest and schema
-    * sidecar (and their union, the served schema), each tombstone's
-    * key column, index-delta dirs and key-set sidecar, the renames
-    * and the `rows_` ids. With `upTo`, only units with ids at or below
-    * it (time travel, a tombstone's victim scan).
+  /** the units of one generation, as resolved from its metadata: the
+    * root listing, each segment's manifest and schema sidecar (the
+    * served schema is their union), each tombstone's key column,
+    * index-delta dirs and key-set sidecar, the renames and the `rows_`
+    * ids. With `upTo`, only units with ids at or below it (time
+    * travel, a tombstone's victim scan).
     */
   private[core] final case class UnitSnapshot(
       dir: String,
       root: String,
+      gen: Int,
       upTo: Option[Int],
-      segDirs: Seq[String],
+      names: Seq[String],
       segIds: Seq[Int],
       manifests: Map[Int, Seq[String]],
       sidecars: Map[Int, Option[org.apache.spark.sql.types.StructType]],
@@ -719,8 +717,48 @@ object Store {
       delIxDirs: Map[Int, Seq[String]],
       keySchemas: Map[Int, Option[org.apache.spark.sql.types.StructType]],
       rens: Seq[(Int, String, String)],
-      rowsIds: Seq[Int],
-      schema: Option[org.apache.spark.sql.types.StructType]) {
+      rowsIds: Seq[Int]) {
+
+    /** every `seg_` dir of the root listing, committed or not */
+    def segDirs: Seq[String] = names.filter(_.startsWith("seg_")).sorted
+
+    /** the served schema: the union of the committed segments'
+      * sidecars, each mapped from its PHYSICAL names through the
+      * renames that postdate it, so the union speaks the
+      * (as-of-`upTo`) names. None when any segment predates the
+      * sidecar protocol — all-or-nothing, because a sidecar-less
+      * segment may carry columns the union cannot see, and an
+      * explicit read schema would silently DROP them. Throws on a
+      * non-widening union.
+      */
+    lazy val schema: Option[org.apache.spark.sql.types.StructType] =
+      if (segIds.isEmpty || segIds.exists(sidecars(_).isEmpty)) None
+      else Some(unionSchema(segIds.map { id =>
+        val applicable = rens.filter(_._1 > id)
+        org.apache.spark.sql.types.StructType(sidecars(id).get.fields.map(f =>
+          f.copy(name = currentName(f.name, applicable))))
+      }))
+
+    /** this snapshot, once the refusals its metadata decides have
+      * passed: a non-widening schema union, and time travel or
+      * tombstones on a MIXED store. A mixed store is all-or-nothing
+      * (r11 advice): the manifest union does not describe the legacy
+      * segments' rows, so its data is served by the plain recursive
+      * directory read, and the features that NEED manifest scoping
+      * are refused rather than mis-served.
+      */
+    def checked: UnitSnapshot = {
+      schema
+      if (segIds.nonEmpty && legacyIds.nonEmpty) {
+        require(upTo.isEmpty,
+          s"time travel is unavailable on a mixed (legacy+manifest) " +
+            s"store — compact() folds it into a modern one ($dir)")
+        require(dels.isEmpty,
+          s"tombstones on a mixed store cannot be scoped — compact() " +
+            s"first ($dir)")
+      }
+      this
+    }
 
     /** the `rows_` ids that serve row refs: committed segments' only
       * (a crashed append's refs segment, written before its manifest,
@@ -737,15 +775,11 @@ object Store {
   }
 
   /** resolve the [[UnitSnapshot]] of the live generation of `dir` —
-    * metadata reads only, no Spark job and no parquet footer. Throws
-    * the refusals the metadata alone decides, so they fail where a
-    * handle is made, not where a face is first used: a non-widening
-    * schema union ([[unionSchema]]), and tombstones or time travel on
-    * a mixed (legacy+manifest) store.
+    * metadata reads only, no Spark job and no parquet footer
     */
   private[core] def resolveSnapshot(spark: SparkSession, dir: String,
                                     upTo: Option[Int] = None): UnitSnapshot = {
-    val (root, _) = currentIndexRoot(spark, dir)
+    val (root, gen) = currentIndexRoot(spark, dir)
     val (fs, _) = fsFor(spark, dir)
     val names = rootNames(fs, root)
     def within(id: Int) = upTo.forall(id <= _)
@@ -759,49 +793,22 @@ object Store {
       committed(id) || names.contains(claimPath(root, id).getName))
     val segs = manifests.filter(m => within(m._1))
     val segIds = segs.map(_._1)
-    val sidecars = segIds.map(id =>
-      id -> readSchemaSidecar(fs, s"$root/seg_$id")).toMap
     val dels = tombstonesIn(fs, root, names).filter(d => within(d._1))
-    val rens = renamesIn(fs, root, names).filter(r => within(r._1))
-    // the served schema: the union of the segments' sidecars, each
-    // mapped from its PHYSICAL names through the renames that postdate
-    // it, so the union speaks the (as-of-`upTo`) names. None when any
-    // segment predates the sidecar protocol — all-or-nothing, because
-    // a sidecar-less segment may carry columns the union cannot see,
-    // and an explicit read schema would silently DROP them.
-    val schema =
-      if (segIds.isEmpty || segIds.exists(sidecars(_).isEmpty)) None
-      else Some(unionSchema(segIds.map { id =>
-        val applicable = rens.filter(_._1 > id)
-        org.apache.spark.sql.types.StructType(sidecars(id).get.fields.map(f =>
-          f.copy(name = currentName(f.name, applicable))))
-      }))
-    if (segIds.nonEmpty && legacyIds.nonEmpty) {
-      // MIXED store: all-or-nothing (r11 advice) — the manifest union
-      // does not describe the legacy segments' rows, so the data is
-      // served by the plain recursive directory read; refuse the
-      // features that NEED manifest scoping rather than mis-serve them
-      require(upTo.isEmpty,
-        s"time travel is unavailable on a mixed (legacy+manifest) " +
-          s"store — compact() folds it into a modern one ($dir)")
-      require(dels.isEmpty,
-        s"tombstones on a mixed store cannot be scoped — compact() " +
-          s"first ($dir)")
-    }
-    UnitSnapshot(dir, root, upTo,
-      segDirs = names.filter(_.startsWith("seg_")).sorted,
+    UnitSnapshot(dir, root, gen, upTo, names,
       segIds = segIds,
       manifests = segs.toMap,
-      sidecars = sidecars,
+      // committed segments only: an in-flight append writes its sidecar
+      // before its manifest, so an uncommitted one may be partial
+      sidecars = segIds.map(id =>
+        id -> readSchemaSidecar(fs, s"$root/seg_$id")).toMap,
       legacyIds = legacyIds,
       dels = dels,
       delIxDirs = dels.map { case (id, _) =>
         id -> tombstoneIxDirs(fs, root, id) }.toMap,
       keySchemas = dels.map { case (id, _) =>
         id -> readSchemaSidecar(fs, s"$root/del_$id/keys") }.toMap,
-      rens = rens,
-      rowsIds = unitIds(names, "rows_").filter(within),
-      schema = schema)
+      rens = renamesIn(fs, root, names).filter(r => within(r._1)),
+      rowsIds = unitIds(names, "rows_").filter(within))
   }
 
   /** The store's data as of `snap`: planned over exactly the files
@@ -933,48 +940,56 @@ object Store {
                              spec: IndexSpec, keyCol: String,
                              keys: DataFrame, commit: Boolean): Int =
     writeTombstoneAt(spark, dir, spec, keyCol, keys, commit,
-      claimTombstoneId(spark, dir, spec, keyCol))
+      claimTombstoneId(spark, dir, spec, keyCol)._1)
 
-  /** validate a delete against the live store, then claim its unit id */
+  /** validate a delete against the live store, then claim its unit id;
+    * returns (id, the generation root it was claimed under)
+    */
   private def claimTombstoneId(spark: SparkSession, dir: String,
-                               spec: IndexSpec, keyCol: String): Int = {
-    val (root, _) = currentIndexRoot(spark, dir)
-    val (fs, _) = fsFor(spark, dir)
-    // cheap validations BEFORE claiming the unit id (r13 advice #5 —
-    // the r13 claim-first ordering permanently leaked a _claim_<id>
-    // file on any failed require, skipping that id for the rest of
-    // the generation). writeTombstoneAt re-runs the same checks for
-    // its direct (deterministic-id) callers; requires are idempotent.
+                               spec: IndexSpec, keyCol: String): (Int, String) = {
+    val snap = resolveSnapshot(spark, dir)
+    validateDelete(spark, snap, spec, keyCol)
+    (claimUnitId(fsFor(spark, dir)._1, snap.root), snap.root)
+  }
+
+  /** a delete's preconditions, checked over `snap`; returns the key
+    * column's type. Run BEFORE the unit id is claimed (r13 advice #5 —
+    * the r13 claim-first ordering permanently leaked a _claim_<id>
+    * file on any failed require, skipping that id for the rest of the
+    * generation), and again by [[writeTombstoneAt]] at its own id for
+    * its direct (deterministic-id) callers; requires are idempotent.
+    */
+  private def validateDelete(spark: SparkSession, snap: UnitSnapshot,
+                             spec: IndexSpec,
+                             keyCol: String): org.apache.spark.sql.types.DataType = {
     spec.rowRefs.foreach(rk => require(rk == keyCol,
       s"store has row-refs keyed on '$rk' — delete must key on it too " +
         s"(got '$keyCol'), or the refs artifact would serve deleted rows"))
-    require(segSnapshots(spark, dir).nonEmpty,
+    require(snap.segIds.nonEmpty,
       s"delete requires a manifest-carrying store; rewrite legacy " +
-        s"stores with write() first ($dir)")
-    require(legacySegIds(spark, dir).isEmpty,
+        s"stores with write() first (${snap.dir})")
+    require(snap.legacyIds.isEmpty,
       s"delete on a mixed (legacy+manifest) store cannot be scoped — " +
-        s"compact() first ($dir)")
-    val liveCols = deleteSchema(spark, dir, None).fieldNames
-    require(liveCols.contains(keyCol),
-      s"no column '$keyCol' in store data (${liveCols.mkString(",")})")
-    claimUnitId(fs, root)
+        s"compact() first (${snap.dir})")
+    val live = deleteSchema(spark, snap.checked)
+    require(live.fieldNames.contains(keyCol),
+      s"no column '$keyCol' in store data (${live.fieldNames.mkString(",")})")
+    live(keyCol).dataType
   }
 
-  /** the columns (and types) a delete keyed as of `upTo` validates
+  /** the columns (and types) a delete keyed as of `snap` validates
     * against — the ones the data read serves: the sidecars' union
     * without the hidden dropped names, so no merge-on-read frame is
     * planned; the planned frame's own schema only when a segment
     * predates the sidecars
     */
-  private def deleteSchema(spark: SparkSession, dir: String,
-                           upTo: Option[Int]): org.apache.spark.sql.types.StructType = {
-    val snap = resolveSnapshot(spark, dir, upTo)
+  private def deleteSchema(spark: SparkSession,
+                           snap: UnitSnapshot): org.apache.spark.sql.types.StructType =
     snap.schema match {
       case Some(u) => org.apache.spark.sql.types.StructType(
         u.fields.filterNot(_.name.startsWith(DroppedPrefix)))
       case None => dataAsOf(spark, snap).schema
     }
-  }
 
   /** [[writeTombstone]] at an EXPLICIT (already claimed or
     * deterministically owned) unit id — [[upsert]] claims its id
@@ -988,21 +1003,10 @@ object Store {
                                spec: IndexSpec, keyCol: String,
                                keys: DataFrame, commit: Boolean,
                                id: Int): Int = {
-    spec.rowRefs.foreach(rk => require(rk == keyCol,
-      s"store has row-refs keyed on '$rk' — delete must key on it too " +
-        s"(got '$keyCol'), or the refs artifact would serve deleted rows"))
-    val (root, _) = currentIndexRoot(spark, dir)
+    val snap = resolveSnapshot(spark, dir, Some(id))
+    val kt = validateDelete(spark, snap, spec, keyCol)
+    val root = snap.root
     val (fs, _) = fsFor(spark, dir)
-    require(segSnapshots(spark, dir).nonEmpty,
-      s"delete requires a manifest-carrying store; rewrite legacy " +
-        s"stores with write() first ($dir)")
-    require(legacySegIds(spark, dir).isEmpty,
-      s"delete on a mixed (legacy+manifest) store cannot be scoped — " +
-        s"compact() first ($dir)")
-    val live0 = deleteSchema(spark, dir, Some(id))
-    require(live0.fieldNames.contains(keyCol),
-      s"no column '$keyCol' in store data (${live0.fieldNames.mkString(",")})")
-    val kt = live0(keyCol).dataType
     val inCol = keys.columns.head
     // no distinct: key sets are set-semantic (see applyTombstones)
     val k = keys.select(col(inCol).cast(kt).as("key"))
@@ -1095,8 +1099,13 @@ object Store {
   private[core] def commitTombstone(spark: SparkSession, dir: String,
                                     spec: IndexSpec, keyCol: String,
                                     id: Int): Unit = {
-    val (root, _) = currentIndexRoot(spark, dir)
     val (fs, _) = fsFor(spark, dir)
+    def has(p: String) = fs.exists(new org.apache.hadoop.fs.Path(p))
+    var snap = resolveSnapshot(spark, dir)
+    val root = snap.root
+    // committed tombstones below us that no scan of ours has seen
+    def unseenBelow(s: UnitSnapshot) = s.dels.map(_._1).filter(_ < id)
+      .filterNot(t => has(s"$root/del_$id/_delseen_$t"))
     var attempts = 0
     var stable = false
     while (!stable) {
@@ -1109,27 +1118,26 @@ object Store {
       // still negated in our ixdelta — they would net twice): full
       // rescan, which re-lists and re-records everything. Checked
       // FIRST because it resets the segment coverage too.
-      val newDels = committedTombstones(spark, dir).map(_._1)
-        .filter(_ < id).filterNot(t => fs.exists(
-          new org.apache.hadoop.fs.Path(s"$root/del_$id/_delseen_$t")))
-      if (newDels.nonEmpty) {
+      if (unseenBelow(snap).nonEmpty) {
         scanVictimIndex(spark, dir, root, spec, keyCol, id)
       } else {
-        val unseen = segSnapshots(spark, dir).filter(_ < id).filterNot(s =>
-          fs.exists(new org.apache.hadoop.fs.Path(
-            s"$root/del_$id/_scope_$s")))
+        val unseen = snap.segIds.filter(_ < id)
+          .filterNot(s => has(s"$root/del_$id/_scope_$s"))
         if (unseen.isEmpty) stable = true
         else unseen.foreach(s =>
           coverSegment(spark, dir, root, spec, keyCol, id, s))
       }
+      if (!stable) snap = resolveSnapshot(spark, dir)
     }
     fs.create(
       new org.apache.hadoop.fs.Path(s"$root/del_$id/_COMMITTED")).close()
     // post-commit re-check: an append whose manifest landed between
-    // the loop's last listing and the marker is seen HERE (its own
+    // the loop's last snapshot and the marker is seen HERE (its own
     // post-commit check may also see us — the token dedups).
-    segSnapshots(spark, dir).filter(_ < id).foreach(s =>
-      coverSegment(spark, dir, root, spec, keyCol, id, s))
+    snap = resolveSnapshot(spark, dir)
+    if (snap.segIds.filter(_ < id).map(s =>
+        coverSegment(spark, dir, root, spec, keyCol, id, s)).contains(true))
+      snap = resolveSnapshot(spark, dir)
     // tombstone-vs-tombstone post-marker check (r14 — closing the r13
     // residual, which left two overlapping-key DELETES whose markers
     // land inside each other's final listing gap UNDETECTABLE): both
@@ -1151,13 +1159,12 @@ object Store {
     //     unit covers every such tombstone at once (it re-lists), so
     //     detect-any first, heal once, then record the tokens (the
     //     rescan writes them too; atomicCreate is idempotent).
-    val unseenBelow = committedTombstones(spark, dir).map(_._1)
-      .filter(_ < id).filterNot(t => fs.exists(
-        new org.apache.hadoop.fs.Path(s"$root/del_$id/_delseen_$t")))
-    if (unseenBelow.exists(t => tombstoneKeysOverlap(spark, root, t, id)))
+    val below = unseenBelow(snap)
+    if (below.exists(t => tombstoneKeysOverlap(spark, root, t, id)))
       rescanTombstoneIndex(spark, dir, spec, keyCol, id)
-    unseenBelow.foreach(t => atomicCreate(fs,
+    below.foreach(t => atomicCreate(fs,
       new org.apache.hadoop.fs.Path(s"$root/del_$id/_delseen_$t")))
+    if (below.nonEmpty) snap = resolveSnapshot(spark, dir)
     // (b) committed tombstones ABOVE us that missed OUR marker: their
     //     ixdelta is the potentially stale one — rescan each with ITS
     //     recorded key column (valid at its id: dataAsOf maps renames
@@ -1165,9 +1172,9 @@ object Store {
     //     recorded in). The other side may heal itself concurrently;
     //     version slots keep the two rescans apart and either
     //     published result is post-conflict-correct.
-    committedTombstones(spark, dir).filter(_._1 > id)
-      .filterNot { case (t, _) => fs.exists(new org.apache.hadoop.fs.Path(
-        s"$root/del_$t/_delseen_$id")) }.foreach { case (t, kcT) =>
+    snap.dels.filter(_._1 > id)
+      .filterNot { case (t, _) => has(s"$root/del_$t/_delseen_$id") }
+      .foreach { case (t, kcT) =>
         if (tombstoneKeysOverlap(spark, root, id, t))
           rescanTombstoneIndex(spark, dir, spec, kcT, t)
         atomicCreate(fs, new org.apache.hadoop.fs.Path(
@@ -1277,7 +1284,11 @@ object Store {
     * `del_<id>/ixrepair_<segId>` (read by every index merge
     * alongside the main ixdelta). O(segment), never a corpus pass.
     * Shared by the delete-side validate loop, the appender-side
-    * post-commit check, and repair-on-open.
+    * post-commit check, and repair-on-open. A pair without a token
+    * resolves its own snapshot (the segment's manifest and sidecar,
+    * the renames and tombstones between the two ids), so it repairs
+    * against what is committed when it runs. Returns false, having
+    * written nothing, when the pair already carries its token.
     *
     * CRASH-SAFE ORDERING (r15 — closing the r14 "crash between token
     * and repair" residual): the entries are written to a `_ixtmp_*`
@@ -1299,48 +1310,44 @@ object Store {
   private[core] def coverSegment(spark: SparkSession, dir: String,
                                  root: String, spec: IndexSpec,
                                  keyCol: String, id: Int,
-                                 segId: Int): Unit = {
+                                 segId: Int): Boolean = {
     val (fs, _) = fsFor(spark, dir)
     val token = new org.apache.hadoop.fs.Path(
       s"$root/del_$id/_scope_$segId")
-    if (fs.exists(token)) return
+    if (fs.exists(token)) return false
     val repaired = new org.apache.hadoop.fs.Path(
       s"$root/del_$id/ixrepair_$segId")
     if (fs.exists(new org.apache.hadoop.fs.Path(s"$repaired/_SUCCESS"))) {
       // a crashed (or racing) coverer published the repair but not
       // the token — finish its job
       atomicCreate(fs, token)
-      return
+      return true
     }
-    val files = readManifest(fs, s"$root/seg_$segId")
-      .getOrElse(Nil).map(n => s"$dir/data/$n")
-    if (files.isEmpty) { atomicCreate(fs, token); return }
-    val raw = readParquet(spark, readSchemaSidecar(fs, s"$root/seg_$segId"),
-      files)
+    val snap = resolveSnapshot(spark, dir)
+    val files = snap.manifests.getOrElse(segId, Nil).map(n => s"$dir/data/$n")
+    if (files.isEmpty) { atomicCreate(fs, token); return true }
+    val raw = readParquet(spark, snap.sidecars(segId), files)
     // the segment's files carry the names of ITS era; map them to the
     // names current at the tombstone's id so the repair entries match
     // the ixdelta's vocabulary (renames after `id` then apply to both
     // uniformly at read)
-    val rensBetween = committedRenames(spark, dir)
-      .filter(r => r._1 > segId && r._1 <= id)
+    val rensBetween = snap.rens.filter(r => r._1 > segId && r._1 <= id)
     val seg =
       if (rensBetween.isEmpty) raw
       else raw.select(raw.columns.map(c =>
         col(c).as(currentName(c, rensBetween))).toSeq: _*)
     if (!seg.columns.contains(keyCol)) { // no victims possible
-      atomicCreate(fs, token); return
+      atomicCreate(fs, token); return true
     }
     // then-live: exclude rows an intermediate tombstone (segId < t' <
     // id) already killed, or their entries would be negated twice
-    val earlier = committedTombstones(spark, dir)
-      .filter { case (t, _) => t > segId && t < id }
+    val earlier = snap.dels.filter { case (t, _) => t > segId && t < id }
     val base = earlier.foldLeft(seg) { case (acc, (t, kcT)) =>
       val kcAtId = currentName(kcT,
-        committedRenames(spark, dir).filter(r => r._1 > t && r._1 <= id))
+        snap.rens.filter(r => r._1 > t && r._1 <= id))
       if (!acc.columns.contains(kcAtId)) acc
       else {
-        val k2 = readKeys(spark, s"$root/del_$t/keys")
-          .select(col("key").as("__graft_del_key"))
+        val k2 = snap.keys(spark, t).select(col("key").as("__graft_del_key"))
         acc.join(k2, acc(kcAtId) === col("__graft_del_key"), "left_anti")
       }
     }
@@ -1349,7 +1356,7 @@ object Store {
     val victims = base.join(keys,
       base(keyCol) === col("__graft_del_key"), "left_semi")
     if (victims.isEmpty) { // token alone records the coverage
-      atomicCreate(fs, token); return
+      atomicCreate(fs, token); return true
     }
     val tmp = new org.apache.hadoop.fs.Path(s"$root/del_$id/_ixtmp_" +
       s"${segId}_${java.util.UUID.randomUUID.toString.take(8)}")
@@ -1362,6 +1369,7 @@ object Store {
     // staging copy — identical content either way
     if (!fs.rename(tmp, repaired)) fs.delete(tmp, true)
     atomicCreate(fs, token)
+    true
   }
 
   /** the appender half of conflict detection: after a segment's
@@ -1372,15 +1380,11 @@ object Store {
     */
   private def repairTombstonesFor(spark: SparkSession, dir: String,
                                   spec: IndexSpec, segId: Int): Unit = {
-    val (root, _) = currentIndexRoot(spark, dir)
-    val (fs, _) = fsFor(spark, dir)
-    committedTombstones(spark, dir).foreach { case (t, kcT) =>
-      if (t > segId && !fs.exists(new org.apache.hadoop.fs.Path(
-          s"$root/del_$t/_scope_$segId"))) {
-        // the tombstone's keyCol name as of ITS id is what its keys
-        // apply to — map forward is a no-op here (kcT recorded at t)
-        coverSegment(spark, dir, root, spec, kcT, t, segId)
-      }
+    val snap = resolveSnapshot(spark, dir)
+    snap.dels.foreach { case (t, kcT) =>
+      // the tombstone's keyCol name as of ITS id is what its keys
+      // apply to — map forward is a no-op here (kcT recorded at t)
+      if (t > segId) coverSegment(spark, dir, snap.root, spec, kcT, t, segId)
     }
   }
 
@@ -1389,33 +1393,25 @@ object Store {
     * between an append's manifest commit and the completion of its
     * post-commit [[repairTombstonesFor]] pass would briefly serve a
     * merged index missing the tombstone's negations for that segment.
-    * Before serving, scan for committed (tombstone, segment<id) pairs
-    * with NO `_scope_` coverage token and run the idempotent
-    * O(segment) [[coverSegment]] pass on each — the token
+    * Before serving, scan `snap`'s committed (tombstone, segment<id)
+    * pairs for ones with NO `_scope_` coverage token and run the
+    * idempotent O(segment) [[coverSegment]] pass on each — the token
     * create-if-absent keeps this exactly-once against the crashed (or
     * still-running) writer and against other concurrently-opening
     * readers. Steady state (every pair covered) this is pure
     * driver-side metadata probes: #tombstones × #segments existence
-    * checks, zero Spark jobs.
+    * checks, zero Spark jobs. Returns whether any pair was uncovered
+    * (the pass then wrote, and `snap` may lack the repairs).
     */
-  private def repairUncoveredPairs(spark: SparkSession, dir: String,
-                                   spec: IndexSpec): Unit = {
-    val (root, _) = currentIndexRoot(spark, dir)
-    val (fs, _) = fsFor(spark, dir)
-    val dels = committedTombstones(spark, dir)
-    if (dels.isEmpty) return
-    val segs = segSnapshots(spark, dir)
-    dels.foreach { case (t, kcT) =>
-      segs.filter(_ < t).foreach { s =>
-        if (!fs.exists(new org.apache.hadoop.fs.Path(
-            s"$root/del_$t/_scope_$s")))
-          coverSegment(spark, dir, root, spec, kcT, t, s)
-      }
-    }
-  }
+  private def repairUncoveredPairs(spark: SparkSession, snap: UnitSnapshot,
+                                   spec: IndexSpec): Boolean =
+    snap.dels.flatMap { case (t, kcT) =>
+      snap.segIds.filter(_ < t).map(s =>
+        coverSegment(spark, snap.dir, snap.root, spec, kcT, t, s))
+    }.contains(true)
 
-  /** the index-delta directories of one committed tombstone: the
-    * live main delta — the highest PUBLISHED `ixdelta_v<k>` rescan
+  /** the index-delta directories of one committed tombstone: first
+    * the live main delta — the highest PUBLISHED `ixdelta_v<k>` rescan
     * version if any ([[rescanTombstoneIndex]]), else the original
     * `ixdelta` — plus any completed conflict repairs
     * (`ixrepair_<seg>`, published by their `_SUCCESS`) the live
@@ -1464,16 +1460,11 @@ object Store {
     * only — no Spark job.
     */
   def history(spark: SparkSession, dir: String): Seq[(Int, String, String)] = {
-    val (root, _) = currentIndexRoot(spark, dir)
-    val (fs, _) = fsFor(spark, dir)
-    val appends = segSnapshots(spark, dir).map { id =>
-      val files = readManifest(fs, s"$root/seg_$id").getOrElse(Nil)
-      (id, "append", s"files=${files.size}")
-    }
-    val dels = committedTombstones(spark, dir).map { case (id, kc) =>
-      (id, "delete", s"key=$kc")
-    }
-    val rens = committedRenames(spark, dir).map { case (id, from, to) =>
+    val snap = resolveSnapshot(spark, dir)
+    val appends = snap.segIds.map(id =>
+      (id, "append", s"files=${snap.manifests(id).size}"))
+    val dels = snap.dels.map { case (id, kc) => (id, "delete", s"key=$kc") }
+    val rens = snap.rens.map { case (id, from, to) =>
       (id, "rename", s"$from->$to")
     }
     (appends ++ dels ++ rens).sortBy(_._1)
@@ -1487,7 +1478,7 @@ object Store {
   def deleteWhere(spark: SparkSession, dir: String, spec: IndexSpec,
                   keyCol: String, condition: Column): Int =
     delete(spark, dir, spec, keyCol,
-      dataAsOf(spark, resolveSnapshot(spark, dir)).where(condition)
+      dataAsOf(spark, resolveSnapshot(spark, dir).checked).where(condition)
         .select(keyCol))
 
   /** UPSERT (merge-by-key) — the CDC / re-curation path ("replace
@@ -1530,19 +1521,18 @@ object Store {
              keyCol: String): Int = {
     val spark = batch.sparkSession
     rejectReservedNames(batch.schema, spec)
-    val delId = claimTombstoneId(spark, dir, spec, keyCol)
-    // a tombstone needs a manifest-carrying store (checked above), so
-    // append()'s legacy-index migration cannot apply here
-    val (root, _) = currentIndexRoot(spark, dir)
-    val (fs, _) = fsFor(spark, dir)
-    appendSegment(batch, dir, spec, claimUnitId(fs, root), root,
+    // a tombstone needs a manifest-carrying store (checked here), so
+    // append()'s legacy-index migration cannot apply
+    val (delId, root) = claimTombstoneId(spark, dir, spec, keyCol)
+    val segId = claimUnitId(fsFor(spark, dir)._1, root)
+    appendSegment(batch, dir, spec, segId, root,
       beside = writeTombstoneAt(spark, dir, spec, keyCol,
         batch.select(keyCol), commit = false, delId))
     // the deferred marker goes through the same validate-at-commit as
     // delete's (the upsert's own replacement segment has a larger id
     // and is correctly out of scope)
     commitTombstone(spark, dir, spec, keyCol, delId)
-    segSnapshots(spark, dir).max
+    segId
   }
 
   /** next id in the SHARED segment/tombstone counter (their total
@@ -1572,19 +1562,9 @@ object Store {
     * legitimate redelivery of that never-committed batch would be
     * silently no-op'd.
     */
-  private def maxUnitDirId(fs: org.apache.hadoop.fs.FileSystem,
-                           root: String): Int = {
-    val rp = new org.apache.hadoop.fs.Path(root)
-    if (!fs.exists(rp)) -1
-    else fs.listStatus(rp).map(_.getPath.getName)
-      .collect {
-        case s if s.startsWith("seg_") => s.drop(4)
-        case s if s.startsWith("del_") => s.drop(4)
-        case s if s.startsWith("ren_") => s.drop(4)
-      }
-      .flatMap(s => scala.util.Try(s.toInt).toOption)
+  private def maxUnitDirId(snap: UnitSnapshot): Int =
+    Seq("seg_", "del_", "ren_").flatMap(unitIds(snap.names, _))
       .foldLeft(-1)(math.max)
-  }
 
   /** write rows + index as segment 0 (reference writeIndexedDf).
     * Only the store-owned `data/` and index subdirs are cleared —
@@ -1682,19 +1662,22 @@ object Store {
     *
     * COST: metadata only, like the reference's O(footers) reopen.
     * open() resolves the committed units once ([[resolveSnapshot]]:
-    * listings, manifests and sidecars) and builds the point face
-    * from them; the plan faces — `frame` (the data with its
-    * tombstone anti-joins), `persistedIndex` and `rowRefs` — are
-    * planned from the same snapshot on their first access, so a
-    * handle that only makes point reads plans no DataFrame at all.
+    * listings, manifests and sidecars), runs the repair pass over
+    * them — resolving again only when it found an uncovered pair —
+    * and builds the point face from them; the plan faces — `frame`
+    * (the data with its tombstone anti-joins), `persistedIndex` and
+    * `rowRefs` — are planned from the same snapshot on their first
+    * access, so a handle that only makes point reads plans no
+    * DataFrame at all.
     * Errors the metadata decides (a non-widening schema union,
     * tombstones on a mixed store) still throw here; one that only
     * planning meets (say, a data file gone missing) throws at the
     * first access of the face that plans it.
     */
   def open(spark: SparkSession, dir: String, spec: IndexSpec): StoredFrame = {
-    repairUncoveredPairs(spark, dir, spec)
-    val snap = resolveSnapshot(spark, dir)
+    val live = resolveSnapshot(spark, dir)
+    val snap = (if (repairUncoveredPairs(spark, live, spec))
+      resolveSnapshot(spark, dir) else live).checked
     new StoredFrame(
       IndexedFrame(dataAsOf(spark, snap), spec),
       mergedIndex(spark, snap),
@@ -1758,21 +1741,9 @@ object Store {
     * committed tombstone is one too (openAt at a tombstone id reads
     * "just after that delete"); pass an id to [[openAt]].
     */
-  def snapshots(spark: SparkSession, dir: String): Seq[Int] =
-    (segSnapshots(spark, dir) ++
-      committedTombstones(spark, dir).map(_._1) ++
-      committedRenames(spark, dir).map(_._1)).sorted
-
-  /** DATA-segment snapshot ids only (manifest-carrying seg_ units) */
-  private[core] def segSnapshots(spark: SparkSession, dir: String): Seq[Int] = {
-    val (root, _) = currentIndexRoot(spark, dir)
-    val (fs, _) = fsFor(spark, dir)
-    val rp = new org.apache.hadoop.fs.Path(root)
-    if (!fs.exists(rp)) Nil
-    else fs.listStatus(rp).map(_.getPath.getName).toSeq
-      .collect { case s if s.startsWith("seg_") => s.drop(4).toInt }
-      .filter(id => readManifest(fs, s"$root/seg_$id").isDefined)
-      .sorted
+  def snapshots(spark: SparkSession, dir: String): Seq[Int] = {
+    val snap = resolveSnapshot(spark, dir)
+    (snap.segIds ++ snap.dels.map(_._1) ++ snap.rens.map(_._1)).sorted
   }
 
   /** TIME-TRAVEL read: the store AS OF append snapshot `upToSeg` —
@@ -1790,8 +1761,8 @@ object Store {
   def openAt(spark: SparkSession, dir: String, spec: IndexSpec,
              upToSeg: Int): StoredFrame = {
     import org.apache.spark.sql.functions._
-    repairUncoveredPairs(spark, dir, spec)
-    val snap = resolveSnapshot(spark, dir, Some(upToSeg))
+    repairUncoveredPairs(spark, resolveSnapshot(spark, dir), spec)
+    val snap = resolveSnapshot(spark, dir, Some(upToSeg)).checked
     import snap.{root, segIds, rens}
     require(segIds.nonEmpty,
       s"no snapshot <= $upToSeg in $dir (available: ${snapshots(spark, dir)})")
@@ -1843,7 +1814,7 @@ object Store {
     // a spec asking for row-refs is not satisfied by a store written
     // without them — re-provide rather than serve a refs-less frame
     def rowsOk = spec.rowRefs.isEmpty ||
-      resolveSnapshot(spark, dir).refsIds.nonEmpty
+      resolveSnapshot(spark, dir).checked.refsIds.nonEmpty
     if (!dataOk || !indexOk || !rowsOk) write(provide, dir, spec)
     open(spark, dir, spec)
   }
@@ -1982,7 +1953,7 @@ object Store {
     // price of fail-before-mutate; an append-heavy store keeps it
     // cheap by compacting (which folds the segments back to one) —
     // the same cadence merge-on-read amplification already demands.
-    resolveSnapshot(spark, dir).schema
+    resolveSnapshot(spark, dir).checked.schema
       .foreach(existing => validateAppendSchema(existing, batch.schema))
     // the batch's data files live under the CLAIMED unit's own subdir
     // (data/seg_<id>) — concurrent appenders write disjoint paths, so
@@ -1990,32 +1961,53 @@ object Store {
     // r11 diff read whatever appeared between two listings, which a
     // concurrent writer could pollute), and a crashed attempt leaves
     // an orphan subdir that is invisible (no manifest) and reclaimed
-    // by vacuum. The index segment is built from a READ-BACK of the
-    // persisted subdir: re-executing `batch` for the index would
-    // recompute the upstream (2× cost) and, for a nondeterministic
-    // batch (sample/rand/changing source), index a DIFFERENT row set
-    // than the one the data write just persisted.
-    val sub = s"seg_$segId"
+    // by vacuum. An empty batch commits nothing.
+    writeSegment(batch, dir, spec, root, segId, s"seg_$segId",
+      commitEmpty = false, beside)
+  }
+
+  /** the segment write shared by [[appendSegment]] and [[appendBatch]]:
+    * `batch` is written to `data/<sub>` beside `beside`, the segment's
+    * index units ([[writeSegmentIndex]]) are built from a READ-BACK of
+    * the written files, and the `_MANIFEST` commit marker lands last,
+    * after every write of the pair has finished, followed by the
+    * appender half of conflict detection. The read-back declares the
+    * batch's own schema, which skips the inference job (see write()):
+    * re-executing `batch` for the index would recompute the upstream
+    * (2× cost) and, for a nondeterministic batch (sample/rand/changing
+    * source), index a DIFFERENT row set than the one the data write
+    * just persisted. A batch that wrote no data file commits only with
+    * `commitEmpty`, its empty index units written as one task each so
+    * their parquet still gets a readable footer.
+    */
+  private def writeSegment(batch: DataFrame, dir: String, spec: IndexSpec,
+                           root: String, segId: Int, sub: String,
+                           commitEmpty: Boolean, beside: => Unit): Unit = {
+    val spark = batch.sparkSession
+    val (fs, _) = fsFor(spark, dir)
     val (_, names) = inParallel(spark)(beside, {
       batch.write.mode(SaveMode.Overwrite).parquet(s"$dir/data/$sub")
       val names = fs.listStatus(
           new org.apache.hadoop.fs.Path(s"$dir/data/$sub"))
         .map(_.getPath.getName)
         .filterNot(n => n.startsWith("_") || n.startsWith(".")).toSeq.sorted
-      // writer's own schema — skips the inference job (see write());
-      // the row-refs segment mirrors the f segment 1:1 — O(batch), the
-      // existing refs are neither read nor rewritten
-      if (names.nonEmpty)
-        writeSegmentIndex(spark, IndexedFrame(spark.read.schema(batch.schema)
-          .parquet(s"$dir/data/$sub"), spec), root, segId, oneTask = false)
+      if (names.nonEmpty || commitEmpty) {
+        val persisted =
+          if (names.nonEmpty)
+            spark.read.schema(batch.schema).parquet(s"$dir/data/$sub")
+          else spark.createDataFrame(
+            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema)
+        writeSegmentIndex(spark, IndexedFrame(persisted, spec), root, segId,
+          oneTask = names.isEmpty)
+      }
       names
     })
-    if (names.nonEmpty) {
+    if (names.nonEmpty || commitEmpty) {
       writeManifest(fs, s"$root/seg_$segId", names.map(n => s"$sub/$n"))
       // appender half of delete∥append conflict detection: a
       // concurrently-committing tombstone with a larger id may have
       // scanned before this manifest landed — cover it now (see the
-      // concurrency-contract notes; no racing delete ⇒ one listing,
+      // concurrency-contract notes; no racing delete ⇒ one snapshot,
       // zero work)
       repairTombstonesFor(spark, dir, spec, segId)
     }
@@ -2065,65 +2057,44 @@ object Store {
     require(batchId >= 0 && batchId <= Int.MaxValue.toLong,
       s"batchId out of segment-id range: $batchId")
     val segId = batchId.toInt
-    val (root, _) = currentIndexRoot(spark, dir)
+    val snap = resolveSnapshot(spark, dir)
+    val root = snap.root
     val (fs, _) = fsFor(spark, dir)
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    if (fs.exists(rootPath)) {
-      require(!fs.listStatus(rootPath).exists(st =>
-          !st.getPath.getName.startsWith("seg_") &&
-          !st.getPath.getName.startsWith("rows_") &&
-          !st.getPath.getName.startsWith("del_") &&
-          !st.getPath.getName.startsWith("ren_") &&
-          !st.getPath.getName.startsWith("_")),
-        s"appendBatch requires a segment-mode store; migrate legacy " +
-          s"layouts via append() or rewrite with write() ($dir)")
-      require(!committedTombstones(spark, dir).exists(_._1 >= segId),
-        s"a tombstone at id >= $segId exists — its delete would " +
-          s"wrongly scope over this later batch; compact first or " +
-          s"delete at reserved ids below the stream's next batch")
-      require(!committedRenames(spark, dir).exists(_._1 >= segId),
-        s"a rename at id >= $segId exists — it would wrongly remap " +
-          s"this later batch's (already-current) column names; " +
-          s"compact first or rename at ids below the stream's next batch")
-      require(legacySegIds(spark, dir).isEmpty,
-        s"appendBatch on a store with pre-manifest segments — its " +
-          s"batches could not be scoped against them; compact() or " +
-          s"rewrite with write() first ($dir)")
-    }
+    require(!snap.names.exists(n =>
+        !n.startsWith("seg_") && !n.startsWith("rows_") &&
+          !n.startsWith("del_") && !n.startsWith("ren_") &&
+          !n.startsWith("_")),
+      s"appendBatch requires a segment-mode store; migrate legacy " +
+        s"layouts via append() or rewrite with write() ($dir)")
+    require(!snap.dels.exists(_._1 >= segId),
+      s"a tombstone at id >= $segId exists — its delete would " +
+        s"wrongly scope over this later batch; compact first or " +
+        s"delete at reserved ids below the stream's next batch")
+    require(!snap.rens.exists(_._1 >= segId),
+      s"a rename at id >= $segId exists — it would wrongly remap " +
+        s"this later batch's (already-current) column names; " +
+        s"compact first or rename at ids below the stream's next batch")
+    require(snap.legacyIds.isEmpty,
+      s"appendBatch on a store with pre-manifest segments — its " +
+        s"batches could not be scoped against them; compact() or " +
+        s"rewrite with write() first ($dir)")
     // IDEMPOTENCE GATE, two halves: (1) a batch at or below the
     // compact HIGH-WATER mark was folded away — its own manifest no
     // longer exists, but it IS committed (r11 advice: without this, a
     // stream restarted from a pre-compact checkpoint re-appends every
     // folded batch); (2) manifest presence == committed, as before.
     if (readHighWater(fs, root).exists(segId <= _)) return false
-    if (readManifest(fs, s"$root/seg_$segId").isDefined) return false
+    if (snap.manifests.contains(segId)) return false
+    // fail-before-mutate schema validation, as in append()
+    snap.checked.schema
+      .foreach(existing => validateAppendSchema(existing, batch.schema))
     // claim the id (idempotent: re-creating our own claim after a
     // crashed attempt is a no-op) — the claim marks this as a MODERN
     // writer's unit, so a crashed attempt's bare segment dir reads as
     // an invisible ghost, never as a pre-manifest legacy segment
     atomicCreate(fs, claimPath(root, segId))
-    // fail-before-mutate schema validation, as in append()
-    resolveSnapshot(spark, dir).schema
-      .foreach(existing => validateAppendSchema(existing, batch.schema))
-    val sub = s"batch_$segId"
-    val (_, names) = inParallel(spark)(beside, {
-      batch.write.mode(SaveMode.Overwrite).parquet(s"$dir/data/$sub")
-      val names = fs.listStatus(
-          new org.apache.hadoop.fs.Path(s"$dir/data/$sub"))
-        .map(_.getPath.getName)
-        .filterNot(n => n.startsWith("_") || n.startsWith(".")).toSeq.sorted
-      // read-back discipline (see append): index exactly what persisted
-      val persisted =
-        if (names.nonEmpty) spark.read.parquet(s"$dir/data/$sub")
-        else spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema)
-      writeSegmentIndex(spark, IndexedFrame(persisted, spec), root, segId,
-        oneTask = names.isEmpty)
-      names
-    })
-    writeManifest(fs, s"$root/seg_$segId", names.map(n => s"$sub/$n"))
-    // appender half of delete∥append conflict detection (see append)
-    repairTombstonesFor(spark, dir, spec, segId)
+    writeSegment(batch, dir, spec, root, segId, s"batch_$segId",
+      commitEmpty = true, beside)
     true
   }
 
@@ -2214,13 +2185,18 @@ object Store {
       s"a foreign committed tombstone occupies del_$delId — " +
         s"upsertBatch owns the id namespace (tombstone 2b, segment " +
         s"2b+1); keep manual deletes below the stream's ids")
-    require(!committedTombstones(spark, dir).exists(_._1 > delId),
+    val snap = resolveSnapshot(spark, dir)
+    require(!snap.dels.exists(_._1 > delId),
       s"a foreign tombstone at id > $delId exists — upsertBatch owns " +
         s"the id namespace (tombstone 2b, segment 2b+1); compact first " +
         s"or keep manual deletes below the stream's ids")
-    require(!committedRenames(spark, dir).exists(_._1 >= delId),
+    require(!snap.rens.exists(_._1 >= delId),
       s"a rename at id >= $delId exists — it would wrongly remap this " +
         s"later batch's columns; compact first")
+    // tombstone only when prior segments exist (the first batch on an
+    // empty store has nothing to replace — and writeTombstone's
+    // victim scan requires a manifest-carrying store)
+    val hasPrior = snap.segIds.exists(_ < delId)
     // claim both ids (idempotent re-creates after a crash) and stamp
     // stream ownership FIRST — everything later (tombstone subdirs,
     // segment manifest) postdates the marker, so committed-without-
@@ -2228,10 +2204,6 @@ object Store {
     atomicCreate(fs, new org.apache.hadoop.fs.Path(s"$root/del_$delId/_STREAM"))
     atomicCreate(fs, claimPath(root, delId))
     atomicCreate(fs, claimPath(root, segId))
-    // tombstone only when prior segments exist (the first batch on an
-    // empty store has nothing to replace — and writeTombstone's
-    // victim scan requires a manifest-carrying store)
-    val hasPrior = segSnapshots(spark, dir).exists(_ < delId)
     // the replacement segment rides appendBatch's own idempotent
     // commit protocol at the batch-keyed segment id, with the
     // tombstone written beside it: the segment's manifest lands only
@@ -2413,27 +2385,27 @@ object Store {
     // eager checkpoints (independent, so side by side): every read of
     // the old generation's index completes here, before any directory
     // is created or deleted
-    val snap = resolveSnapshot(spark, dir)
+    val snap = resolveSnapshot(spark, dir).checked
     val (merged, rows) = inParallel(spark)(
       mergedIndex(spark, snap).localCheckpoint(true),
       refsAsOf(spark, snap).map(_.localCheckpoint(true)))
     val (fs, base) = fsFor(spark, dir)
-    val (oldRoot, gen) = currentIndexRoot(spark, dir)
+    val gen = snap.gen
     val newRoot = s"$dir/index_g${gen + 1}"
     val dels = snap.dels
     // snapshot history COLLAPSES at compact (documented: like table-
     // format log compaction): the folded seg_0's manifest is the
     // union of the old generation's manifests, so "latest" stays
     // time-travel-readable while intermediate snapshots retire with
-    // their generation
-    val oldSegNames = {
-      val rp = new org.apache.hadoop.fs.Path(oldRoot)
-      if (!fs.exists(rp)) Seq.empty[String]
-      else fs.listStatus(rp).map(_.getPath.getName)
-        .filter(_.startsWith("seg_")).toSeq.sorted
+    // their generation. Every seg_ dir counts, committed or not; the
+    // snapshot holds the committed ones' sidecars, and an uncommitted
+    // one's is read here (compact is exclusive: no writer is mid-write)
+    val oldSegIds = snap.segDirs.map(n => scala.util.Try(n.drop(4).toInt).toOption)
+    val oldManifests = oldSegIds.map(_.flatMap(snap.manifests.get))
+    val oldSchemas = snap.segDirs.zip(oldSegIds).map { case (n, id) =>
+      id.flatMap(snap.sidecars.get)
+        .getOrElse(readSchemaSidecar(fs, s"${snap.root}/$n"))
     }
-    val oldManifests = oldSegNames.map(s => readManifest(fs, s"$oldRoot/$s"))
-    val oldSchemas = oldSegNames.map(s => readSchemaSidecar(fs, s"$oldRoot/$s"))
     // the folded segment KEEPS the max retired unit id — ids never
     // rewind across a compact. This is what makes compaction safe
     // under appendBatch's exactly-once protocol: a crash between an
@@ -2446,7 +2418,7 @@ object Store {
     // id (and with it the high-water mark below), or a legitimate
     // redelivery of that never-committed batch would be silently
     // swallowed by the idempotence gate.
-    val foldId = math.max(0, maxUnitDirId(fs, oldRoot))
+    val foldId = math.max(0, maxUnitDirId(snap))
     // PHYSICAL DELETE: with live tombstones, compact folds them into
     // the data — the surviving rows are rewritten as fresh files and
     // the folded segment's manifest names ONLY those, so the new
@@ -2579,11 +2551,12 @@ object Store {
     */
   def vacuum(spark: SparkSession, dir: String): Unit = {
     val (fs, base) = fsFor(spark, dir)
+    val snap = resolveSnapshot(spark, dir)
+    val root = snap.root
     // here gen IS the live generation (inside compact it is the one
     // being superseded), so "strictly below gen" spares exactly the
     // live index and reclaims everything else, retained or legacy
-    val (root, gen) = currentIndexRoot(spark, dir)
-    reclaimBelow(fs, base, dir, gen)
+    reclaimBelow(fs, base, dir, snap.gen)
     // DATA files the live generation's manifests no longer reference
     // are unreachable by any future read — crashed appends' orphans,
     // and the pre-fold copies a tombstone-folding compact left for
@@ -2592,10 +2565,8 @@ object Store {
     // where every file is live — skip. MIXED stores too (r11 advice):
     // their manifests do not describe the legacy segments' rows, so
     // reclaiming "unreferenced" files would destroy live data.
-    val segIds = segSnapshots(spark, dir)
-    if (segIds.nonEmpty && legacySegIds(spark, dir).isEmpty) {
-      val referenced = segIds.flatMap(id =>
-        readManifest(fs, s"$root/seg_$id").getOrElse(Nil)).toSet
+    if (snap.segIds.nonEmpty && snap.legacyIds.isEmpty) {
+      val referenced = snap.segIds.flatMap(snap.manifests).toSet
       (dataFilesRel(fs, dir) -- referenced).foreach { rel =>
         fs.delete(new org.apache.hadoop.fs.Path(s"$dir/data/$rel"), false)
       }
@@ -2608,52 +2579,39 @@ object Store {
       // uncommitted tombstone/rename units (a delete()/rename that
       // died before its marker) are invisible to every reader —
       // reclaim them too
-      val rp = new org.apache.hadoop.fs.Path(root)
-      if (fs.exists(rp)) fs.listStatus(rp).foreach { st =>
-        val n = st.getPath.getName
-        if ((n.startsWith("del_") || n.startsWith("ren_")) && !fs.exists(
-            new org.apache.hadoop.fs.Path(s"$root/$n/_COMMITTED")))
-          fs.delete(st.getPath, true)
-      }
+      val committed = (snap.dels.map(d => s"del_${d._1}") ++
+        snap.rens.map(r => s"ren_${r._1}")).toSet
+      snap.names.filter(n => (n.startsWith("del_") || n.startsWith("ren_")) &&
+          !committed(n))
+        .foreach(n => fs.delete(new org.apache.hadoop.fs.Path(s"$root/$n"), true))
       // SUPERSEDED tombstone-rescan versions (r15): within a committed
-      // del unit, every published `ixdelta_v<j>` below the highest
-      // published one — and the original `ixdelta` once any version is
-      // published — is unreachable by [[tombstoneIxDirs]], as are the
-      // repair dirs the live version's `_folds` subsumes and any
-      // unpublished (crashed) version dirs. Reclaim under vacuum's
-      // existing no-stale-readers contract (a reader planned before
-      // the heal may still hold the old delta's files).
-      committedTombstones(spark, dir).foreach { case (id, _) =>
+      // del unit, every `ixdelta_v<j>` other than the live main delta
+      // [[tombstoneIxDirs]] serves — and the original `ixdelta` once a
+      // version is live — is unreachable, as are the repair dirs the
+      // live version's `_folds` subsumes. Unpublished versions crashed.
+      // Reclaim under vacuum's existing no-stale-readers contract (a
+      // reader planned before the heal may still hold the old delta's
+      // files).
+      snap.dels.foreach { case (id, _) =>
         val base = s"$root/del_$id"
         val names = fs.listStatus(new org.apache.hadoop.fs.Path(base))
           .map(_.getPath.getName).toSeq
         // crashed coverSegment staging dirs are never read — reclaim
         names.filter(_.startsWith("_ixtmp_")).foreach(n =>
           fs.delete(new org.apache.hadoop.fs.Path(s"$base/$n"), true))
-        val published = names.filter(_.startsWith("ixdelta_v"))
-          .flatMap(n => scala.util.Try(
-            n.stripPrefix("ixdelta_v").toInt).toOption)
-          .filter(k => fs.exists(new org.apache.hadoop.fs.Path(
-            s"$base/ixdelta_v$k/_IXPUBLISHED")))
-        if (published.nonEmpty) {
-          val live = published.max
-          val served = tombstoneIxDirs(fs, root, id).toSet
-          names.foreach { n =>
-            val stale =
-              if (n == "ixdelta") true // superseded by the live version
-              else if (n.startsWith("ixdelta_v"))
-                // only the live version survives: lower published
-                // versions are unreachable, unpublished ones crashed
-                scala.util.Try(n.stripPrefix("ixdelta_v").toInt)
-                  .toOption.exists(_ != live)
-              else if (n.startsWith("ixrepair_"))
-                // folded by the live version's scan, or crashed
-                // (no _SUCCESS) — either way never served again
-                !served.contains(s"$base/$n")
-              else false
-            if (stale)
-              fs.delete(new org.apache.hadoop.fs.Path(s"$base/$n"), true)
-          }
+        val served = snap.delIxDirs(id)
+        val live = served.head.stripPrefix(s"$base/")
+        if (live != "ixdelta") names.foreach { n =>
+          val stale =
+            if (n == "ixdelta") true
+            else if (n.startsWith("ixdelta_v")) n != live
+            else if (n.startsWith("ixrepair_"))
+              // folded by the live version's scan, or crashed
+              // (no _SUCCESS) — either way never served again
+              !served.contains(s"$base/$n")
+            else false
+          if (stale)
+            fs.delete(new org.apache.hadoop.fs.Path(s"$base/$n"), true)
         }
       }
     }

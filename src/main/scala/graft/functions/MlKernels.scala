@@ -40,12 +40,24 @@ object MlKernels {
   def vecMicro(v: Column): Column =
     GraftShims.column(VecMicroLong(GraftShims.expression(v)))
 
-  /** k-means assignment argmin (see [[KmArgMin]]) */
+  /** k-means assignment argmin (see [[KmArgMin]]). PRECONDITION:
+    * no element of `cents` is a null struct — the kernel throws a
+    * NullPointerException on one, where the declarative spelling it
+    * replaces tolerated it. Holds by construction at the call site
+    * (KMeans: `collect_list(struct(...))`, whose structs are never
+    * null and which drops nulls anyway).
+    */
   def kmArgMin(v: Column, cents: Column): Column =
     GraftShims.column(
       KmArgMin(GraftShims.expression(v), GraftShims.expression(cents)))
 
-  /** naive-bayes scoring argmax (see [[NbArgMin]]) */
+  /** naive-bayes scoring argmax (see [[NbArgMin]]). PRECONDITION:
+    * no element of `cls` is a null struct — the kernel throws a
+    * NullPointerException on one, where the declarative spelling it
+    * replaces tolerated it. Holds by construction at the call site
+    * (TextAnalysis: `collect_list(struct(...))`, whose structs are
+    * never null and which drops nulls anyway).
+    */
   def nbArgMin(cls: Column, om: Column, nTokens: Column): Column =
     GraftShims.column(NbArgMin(GraftShims.expression(cls),
       GraftShims.expression(om), GraftShims.expression(nTokens)))

@@ -135,7 +135,9 @@ class StoreDeleteSpec extends SparkSpec {
     val dir = tmp("ups")
     Store.write(data, dir, spec)
     val batch = Seq((2L, "q", 21.0), (9L, "q", 90.0)).toDF("id", "cat", "v")
-    Store.upsert(batch, dir, spec, "id")
+    val segId = Store.upsert(batch, dir, spec, "id")
+    // the returned id is the upsert's own segment: the last append row
+    assert(Store.history(spark, dir).filter(_._2 == "append").last._1 === segId)
     def state() = {
       val st = Store.open(spark, dir, spec)
       (st.frame.df.select("id", "cat", "v").collect()

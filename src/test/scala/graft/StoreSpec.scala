@@ -516,7 +516,9 @@ class StoreSpec extends SparkSpec {
   test("commit job counts: append, delete and upsert on a row-refs store") {
     // counts, not timings: exact and repeatable for a fixed input. A
     // change that re-adds the tombstone key-set de-duplication shuffle
-    // (one more job per delete and per upsert) fails here.
+    // (one more job per delete and per upsert), or a schema-inference
+    // read-back of a written batch (one more per appendBatch and per
+    // upsertBatch), fails here.
     val rspec = IndexSpec(Seq("cat")).withRowRefs("id")
     val rec = new JobRecorder(spark)
     val sc = spark.sparkContext
@@ -537,8 +539,15 @@ class StoreSpec extends SparkSpec {
           Seq(1L, 4L).toDF("id"))),
         "upsert" -> jobsOf("upsert")(d => Store.upsert(
           Seq((2L, "bb", 20.0), (7L, "e", 70.0)).toDF("id", "cat", "v"),
-          d, rspec, "id")))
-      assert(counts === Map("append" -> 8, "delete" -> 6, "upsert" -> 12))
+          d, rspec, "id")),
+        "appendBatch" -> jobsOf("appendBatch")(d => Store.appendBatch(
+          Seq((5L, "a", 50.0), (6L, "d", 60.0)).toDF("id", "cat", "v"),
+          d, rspec, 1L)),
+        "upsertBatch" -> jobsOf("upsertBatch")(d => Store.upsertBatch(
+          Seq((2L, "bb", 20.0), (7L, "e", 70.0)).toDF("id", "cat", "v"),
+          d, rspec, "id", 1L)))
+      assert(counts === Map("append" -> 8, "delete" -> 6, "upsert" -> 12,
+        "appendBatch" -> 8, "upsertBatch" -> 12))
     } finally rec.close()
   }
 }
