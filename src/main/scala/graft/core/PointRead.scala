@@ -738,10 +738,6 @@ object PointRead {
           readColumn(conf, keyDirs(id), "key").toSet)
       }
 
-    /** total f for (field,value): per-era segment sums PLUS the
-      * tombstones' negative entries — the merge-on-read netting,
-      * driver-side. None if the fast path is ineligible.
-      */
     /** the plan path filters the `__graft_dropped_*` hidden namespace
       * out of every merged read (Store.mergedIndex); without this
       * guard a point query BY the reserved physical name would
@@ -752,6 +748,10 @@ object PointRead {
     private def hidden(field: String): Boolean =
       field.startsWith(Store.DroppedPrefix)
 
+    /** total f for (field,value): per-era segment sums PLUS the
+      * tombstones' negative entries — the merge-on-read netting,
+      * driver-side. None if the fast path is ineligible.
+      */
     def freq(field: String, value: String): Option[Long] =
       if (!ok) None
       else if (hidden(field)) Some(0L)
@@ -908,46 +908,13 @@ object PointRead {
       }
     }
 
-    /** INTERSECTION of two entries' row keys, streaming: (fA, fB,
-      * AND count) from ONE two-pointer walk of the merged ascending
-      * streams — O(1) memory beyond the victim sets, no Set of
-      * either side (r13 verdict #2). The hot-entry gate is INLINE:
-      * the walk aborts once either side exceeds `maxF` consumed
-      * keys, so a stopword-class entry costs at most maxF decodes
-      * before the caller falls back to the plan join — no separate
-      * freq reads (a freq-gated draft paid two extra index lookups
-      * per call, doubling the warm latency: 27 ms vs the 12 ms
-      * class). fA/fB are the stream lengths (= net f: refs count ≡ f
-      * by construction), so boolean-algebra callers get all four
-      * counts from this one pass. None = ineligible or gated.
-      */
-    def andStats(f1: String, v1: String, f2: String, v2: String,
-                 maxF: Long): Option[(Long, Long, Long)] = {
-      if (!ok) return None
-      val saOpt = rowStreams(f1, v1)
-      val sbOpt = rowStreams(f2, v2)
-      if (saOpt.isEmpty || sbOpt.isEmpty) return None
-      val x = dedupAsc(kMerge(saOpt.get)).buffered
-      val y = dedupAsc(kMerge(sbOpt.get)).buffered
-      var fa = 0L
-      var fb = 0L
-      var and = 0L
-      while (x.hasNext && y.hasNext) {
-        if (fa > maxF || fb > maxF) return None
-        val c = rowKeyCmp(x.head, y.head)
-        if (c == 0) { and += 1; fa += 1; fb += 1; x.next(); y.next() }
-        else if (c < 0) { fa += 1; x.next() }
-        else { fb += 1; y.next() }
-      }
-      while (x.hasNext) { fa += 1; if (fa > maxF) return None; x.next() }
-      while (y.hasNext) { fb += 1; if (fb > maxF) return None; y.next() }
-      Some((fa, fb, and))
-    }
-
-    /** [[andStats]]'s AND count alone, stopping as soon as EITHER
-      * stream exhausts — the tail of the longer side stays lazy
-      * (undecoded pages), which matters when one entry is much
-      * rarer than the other. Same inline maxF gate.
+    /** the AND count of two entries' row keys from ONE two-pointer
+      * walk of the merged ascending streams, stopping as soon as
+      * EITHER stream exhausts — the tail of the longer side stays
+      * lazy (undecoded pages), which matters when one entry is much
+      * rarer than the other. The hot-entry gate is INLINE, as in
+      * [[multiStats]]: the walk aborts once either side exceeds
+      * `maxF` consumed keys. None = ineligible or gated.
       */
     def andCount(f1: String, v1: String, f2: String, v2: String,
                  maxF: Long): Option[Long] = {
@@ -978,8 +945,11 @@ object PointRead {
       * (rows present in ALL k terms) and the OR count (rows present
       * in ANY) from ONE simultaneous n-way walk of the k merged
       * ascending streams — O(k) state, no side ever materialized,
-      * the same INLINE per-side gate as [[andStats]] (any side
-      * exceeding `maxF` consumed keys aborts to the plan fallback).
+      * with an INLINE per-side gate: any side exceeding `maxF`
+      * consumed keys aborts to the plan fallback, so a stopword-class
+      * entry costs at most maxF decodes and no separate freq read.
+      * f_i are the stream lengths (= net f: refs count ≡ f by
+      * construction), so two-entry callers get (fA, fB, AND) here.
       * Every other boolean combination over k terms is a set
       * identity away for the caller (NOT via the frame row count —
       * [[graft.core.StoredFrame.boolPoint]] supplies it from its
@@ -1072,28 +1042,6 @@ object PointRead {
       }
       Some(out.result())
     }
-
-    /** the intersection's row keys themselves (ascending): memory is
-      * the ANSWER plus victim sets — neither input side is held.
-      */
-    def andRows(f1: String, v1: String,
-                f2: String, v2: String): Option[Seq[Any]] =
-      if (!ok) None
-      else for {
-        sa <- rowStreams(f1, v1)
-        sb <- rowStreams(f2, v2)
-      } yield {
-        val x = dedupAsc(kMerge(sa)).buffered
-        val y = dedupAsc(kMerge(sb)).buffered
-        val out = Seq.newBuilder[Any]
-        while (x.hasNext && y.hasNext) {
-          val c = rowKeyCmp(x.head, y.head)
-          if (c == 0) { out += x.next(); y.next() }
-          else if (c < 0) x.next()
-          else y.next()
-        }
-        out.result()
-      }
 
     /** release the warm file handles (safe to call even if no lookup
       * ever ran — the readers are lazy)

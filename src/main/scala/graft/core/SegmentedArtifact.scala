@@ -137,22 +137,16 @@ object SegmentedArtifact {
     val fam = famRoot(dir, family)
     val segs = snap.segIds
     require(segs.nonEmpty, s"no committed segments in $dir")
-    val dels = snap.dels
-    val parts = segs.groupBy(s => dels.count(_._1 > s)).toSeq
-      .map { case (nApplicable, ids) =>
-        val segDirs = ids.map(id => s"$fam/seg_$id")
-        // explicit schema from the first partial's sidecar: skips
-        // the per-call schema-inference job (r15; falls back for
-        // pre-r15 artifact dirs)
-        val art = Store.readParquet(spark,
-          Store.readSchemaSidecar(fs, segDirs.head), segDirs)
-        dels.takeRight(nApplicable).foldLeft(art) { case (acc, (id, _)) =>
-          val keys = snap.keys(spark, id)
-            .select(col("key").as("__graft_del_key"))
-          acc.join(keys, acc(keyCol) === col("__graft_del_key"),
-            "left_anti")
-        }
-      }
+    val parts = snap.eras(segs, byRens = false).map { e =>
+      val segDirs = e.ids.map(id => s"$fam/seg_$id")
+      // explicit schema from the first partial's sidecar: skips
+      // the per-call schema-inference job (r15; falls back for
+      // pre-r15 artifact dirs)
+      val art = Store.readParquet(spark,
+        Store.readSchemaSidecar(fs, segDirs.head), segDirs)
+      snap.withoutDeleted(spark, art,
+        e.dels.map { case (id, _) => (id, keyCol) })
+    }
     parts.reduce(_ unionByName _)
   }
 }
@@ -281,25 +275,15 @@ object SegmentedAgg {
       }
     }
 
-    // per-(tombstone, earlier segment) negative partials: victims =
-    // rows of segment S matching keys(T), minus rows an EARLIER
-    // tombstone already killed (S < T' < T) — the then-live rule
+    // per-(tombstone, earlier segment) negative partials over the
+    // then-live victims (the snapshot's rule, as for the store's own
+    // ixdelta/ixrepair units)
     dels.foreach { case (t, _) =>
       segs.filter(_ < t).foreach { s =>
         val art = s"$fam/del_${t}_seg_$s"
         if (!fresh(art, s)) {
-          val keys = snap.keys(spark, t)
-            .select(col("key").as("__graft_del_key"))
-          val earlier = dels.map(_._1).filter(t2 => t2 > s && t2 < t)
-          val base = earlier.foldLeft(segData(s)) { case (acc, t2) =>
-            val k2 = snap.keys(spark, t2)
-              .select(col("key").as("__graft_del_key"))
-            acc.join(k2, acc(keyCol) === col("__graft_del_key"),
-              "left_anti")
-          }
-          val victims = base.join(keys,
-            base(keyCol) === col("__graft_del_key"), "left_semi")
-          val counts = buildCounts(victims)
+          val counts = buildCounts(snap.thenLiveVictims(spark, segData(s),
+            s, t, keyCol, snap.keys(spark, t)))
           validateCountsSchema(counts.schema, Some(keyCol),
             s"refresh($fam)")
           val negated = counts.select(counts.schema.fields.map { f =>

@@ -462,13 +462,6 @@ object Store {
       org.apache.spark.sql.functions.when(e === from, to).otherwise(e)
     }
 
-  /** rename a column, metadata-only: claims a unit id and commits a
-    * `ren_<id>` unit (marker-last, like every unit). `from` must
-    * exist and `to` must be free in the CURRENT schema. Requires a
-    * fully-modern (manifest+sidecar) store — the mapping is computed
-    * from sidecars, so a store without them cannot be renamed safely.
-    * Returns the rename's snapshot id.
-    */
   /** reserved name prefix for dropped columns — DROP is a rename to
     * a hidden unique name (`__graft_dropped_<unitId>_<name>`), so the
     * whole rename machinery (era-scoped reads, openAt as-of schema,
@@ -563,8 +556,7 @@ object Store {
     // the tombstone key columns in use must survive: dropping one
     // would break the anti-join scoping of existing deletes
     snap.dels.foreach { case (id, kc) =>
-      val curKc = currentName(kc, snap.rens.filter(_._1 > id))
-      require(curKc != name,
+      require(snap.keyColAt(id, kc) != name,
         s"column '$name' keys tombstone del_$id — compact() first")
     }
     requireManifestStore(snap, "rename/drop")
@@ -572,6 +564,13 @@ object Store {
       id => s"$DroppedPrefix${id}_$name")
   }
 
+  /** rename a column, metadata-only: claims a unit id and commits a
+    * `ren_<id>` unit (marker-last, like every unit). `from` must
+    * exist and `to` must be free in the CURRENT schema. Requires a
+    * fully-modern (manifest+sidecar) store — the mapping is computed
+    * from sidecars, so a store without them cannot be renamed safely.
+    * Returns the rename's snapshot id.
+    */
   def renameColumn(spark: SparkSession, dir: String,
                    from: String, to: String): Int = {
     require(from != to, "rename to the same name is a no-op")
@@ -619,24 +618,21 @@ object Store {
     id
   }
 
-  /** anti-join `df` against the key sets of `dels` (grouped by key
-    * column so same-column tombstones probe as ONE union). Key sets
-    * are SET-SEMANTIC: every consumer — these anti-joins, the victim
-    * semi-joins, [[tombstoneKeysOverlap]] and PointRead's driver-side
-    * victim sets — gives the same answer for a key listed twice, so
-    * neither the persisted sets nor their union is de-duplicated (a
-    * `distinct` would only add a shuffle stage to every scan branch).
+  /** `df` joined on `keyCol` against the UNION of tombstone key sets
+    * `keySets`: `how` is "left_anti" (the rows they delete removed) or
+    * "left_semi" (only those rows kept). Key sets are SET-SEMANTIC:
+    * every consumer — these joins, [[tombstoneKeysOverlap]] and
+    * PointRead's driver-side victim sets — gives the same answer for
+    * a key listed twice, so neither the persisted sets nor their union
+    * is de-duplicated (a `distinct` would only add a shuffle stage to
+    * every scan branch).
     */
-  private def applyTombstones(spark: SparkSession, snap: UnitSnapshot,
-                              df: DataFrame,
-                              dels: Seq[(Int, String)]): DataFrame =
-    dels.groupBy(_._2).toSeq.sortBy(_._1).foldLeft(df) {
-      case (acc, (keyCol, ds)) =>
-        val keys = ds.map { case (id, _) => snap.keys(spark, id) }
-          .reduce(_ unionByName _)
-          .select(col("key").as("__graft_del_key"))
-        acc.join(keys, acc(keyCol) === col("__graft_del_key"), "left_anti")
-    }
+  private def keyJoin(df: DataFrame, keyCol: String, keySets: Seq[DataFrame],
+                      how: String): DataFrame = {
+    val keys = keySets.reduce(_ unionByName _)
+      .select(col("key").as("__graft_del_key"))
+    df.join(keys, df(keyCol) === col("__graft_del_key"), how)
+  }
 
   /** all data files under `<dir>/data`, as paths RELATIVE to it
     * (recursive — appendBatch writes per-batch subdirs); `_`/`.`
@@ -695,6 +691,16 @@ object Store {
   // drop and compact — never by the ones that only inspect or repair
   // it: history, snapshots, vacuum, the conflict passes and
   // [[SegmentedArtifact]].
+  //
+  // The snapshot also owns the SCOPING rule, so no reader spells it
+  // out: a tombstone or rename applies to the units with smaller ids
+  // (units sharing the applicable sets form a read ERA), tombstones
+  // remove rows by one anti-join over their union of key sets, a
+  // tombstone nets only the victims still live when it was written,
+  // and dropped columns stay hidden. Every face, the victim scans and
+  // repairs, and [[SegmentedArtifact]]/[[SegmentedAgg]] read through
+  // its helpers. A tombstone being committed is not in its own
+  // snapshot, so its key set is read by path ([[readKeys]]).
 
   /** the units of one generation, as resolved from its metadata: the
     * root listing, each segment's manifest and schema sidecar (the
@@ -734,7 +740,7 @@ object Store {
     lazy val schema: Option[org.apache.spark.sql.types.StructType] =
       if (segIds.isEmpty || segIds.exists(sidecars(_).isEmpty)) None
       else Some(unionSchema(segIds.map { id =>
-        val applicable = rens.filter(_._1 > id)
+        val applicable = rensAfter(id)
         org.apache.spark.sql.types.StructType(sidecars(id).get.fields.map(f =>
           f.copy(name = currentName(f.name, applicable))))
       }))
@@ -772,7 +778,87 @@ object Store {
     /** tombstone `id`'s persisted key set, read with its sidecar */
     def keys(spark: SparkSession, id: Int): DataFrame =
       readParquet(spark, keySchemas(id), Seq(s"$root/del_$id/keys"))
+
+    /** the renames with ids in (`lo`, `hi`]: they map the names a unit
+      * at `lo` was written with to the names current at `hi` */
+    def rensBetween(lo: Int, hi: Int): Seq[(Int, String, String)] =
+      rens.filter(r => r._1 > lo && r._1 <= hi)
+
+    /** the renames that apply to unit `s`: every one with a larger id */
+    def rensAfter(s: Int): Seq[(Int, String, String)] =
+      rensBetween(s, Int.MaxValue)
+
+    /** tombstone `t`'s key column `kc`, recorded in the names of its
+      * own era, under the names current at `hi` — renames that
+      * postdate it map it forward, or its anti-join would miss the
+      * (now renamed) data column
+      */
+    def keyColAt(t: Int, kc: String, hi: Int = Int.MaxValue): String =
+      currentName(kc, rensBetween(t, hi))
+
+    /** `ids` grouped into read ERAS: the units the same tombstones
+      * and the same renames apply to (those with larger ids, so each
+      * applicable set is an id-suffix, keyed by its count). A reader
+      * plans one branch per era, not per unit. Readers that apply only
+      * renames (index entries) or only tombstones (artifacts) turn the
+      * other side off, and the key is then that one count: branches
+      * come in the key map's order, which AQE's exchange reuse follows.
+      */
+    def eras(ids: Seq[Int], byDels: Boolean = true,
+             byRens: Boolean = true): Seq[Era] =
+      ids.groupBy { s =>
+        val (nDel, nRen) = (dels.count(_._1 > s), rens.count(_._1 > s))
+        if (!byRens) nDel else if (!byDels) nRen else (nDel, nRen)
+      }.toSeq.map { case (_, g) =>
+        Era(g, if (byDels) dels.filter(_._1 > g.head) else Nil,
+          if (byRens) rensAfter(g.head) else Nil)
+      }
+
+    /** `df` without the rows tombstones `ds` delete, each given as
+      * (id, its key column in `df`'s names): tombstones sharing a key
+      * column probe as ONE anti-join over the union of their key sets
+      */
+    def withoutDeleted(spark: SparkSession, df: DataFrame,
+                       ds: Seq[(Int, String)]): DataFrame =
+      ds.groupBy(_._2).toSeq.sortBy(_._1).foldLeft(df) {
+        case (acc, (keyCol, g)) =>
+          keyJoin(acc, keyCol, g.map { case (id, _) => keys(spark, id) },
+            "left_anti")
+      }
+
+    /** the THEN-LIVE victims of tombstone `id` in segment `segId`: the
+      * rows of `seg` (named as of `id`) whose `keyCol` is in `keys`
+      * (`id`'s key set), minus the rows a tombstone t' with
+      * segId < t' < id already deleted — negating those again would
+      * net them twice
+      */
+    def thenLiveVictims(spark: SparkSession, seg: DataFrame, segId: Int,
+                        id: Int, keyCol: String, keys: DataFrame): DataFrame = {
+      val killed = dels.collect {
+        case (t, kc) if t > segId && t < id => (t, keyColAt(t, kc, id))
+      }.filter { case (_, kc) => seg.columns.contains(kc) }
+      keyJoin(withoutDeleted(spark, seg, killed), keyCol, Seq(keys),
+        "left_semi")
+    }
+
+    /** a data frame without the hidden columns dropColumn renamed
+      * away (compact folds them away physically) */
+    def visibleColumns(df: DataFrame): DataFrame = {
+      val hidden = df.columns.filter(_.startsWith(DroppedPrefix))
+      if (hidden.isEmpty) df else df.drop(hidden.toSeq: _*)
+    }
+
+    /** a `field`-keyed entry frame (index or refs) without the entries
+      * of dropped columns, once this snapshot holds a drop */
+    def visibleEntries(df: DataFrame): DataFrame =
+      if (rens.exists(_._3.startsWith(DroppedPrefix)))
+        df.where(!col("field").startsWith(DroppedPrefix))
+      else df
   }
+
+  /** a read era: unit ids and the tombstones and renames that apply */
+  private[core] final case class Era(ids: Seq[Int], dels: Seq[(Int, String)],
+                                     rens: Seq[(Int, String, String)])
 
   /** resolve the [[UnitSnapshot]] of the live generation of `dir` —
     * metadata reads only, no Spark job and no parquet footer
@@ -797,9 +883,10 @@ object Store {
     UnitSnapshot(dir, root, gen, upTo, names,
       segIds = segIds,
       manifests = segs.toMap,
-      // committed segments only: an in-flight append writes its sidecar
-      // before its manifest, so an uncommitted one may be partial
-      sidecars = segIds.map(id =>
+      // committed and legacy segments only: an in-flight append writes
+      // its sidecar before its manifest, so an uncommitted one may be
+      // partial (a legacy segment has no claim, so no writer owns it)
+      sidecars = (segIds ++ legacyIds).map(id =>
         id -> readSchemaSidecar(fs, s"$root/seg_$id")).toMap,
       legacyIds = legacyIds,
       dels = dels,
@@ -818,19 +905,13 @@ object Store {
     * back from to the plain directory read — with the applicable
     * tombstones anti-joined, SCOPED by the id order: a tombstone
     * deletes only from segments that precede it, so a re-appended key
-    * survives. Segments between consecutive tombstones share one
-    * applicable set, so the plan is (#tombstones+1) scan branches,
-    * not #segments — and compact returns the store to a single clean
+    * survives. Segments of one read era share one applicable set, so
+    * the plan is one scan branch per era ([[UnitSnapshot.eras]]), not
+    * per segment — and compact returns the store to a single clean
     * branch.
     */
   private def dataAsOf(spark: SparkSession, snap: UnitSnapshot): DataFrame = {
-    import snap.{dir, dels, rens, schema}
-    // a tombstone's recorded key column is the name CURRENT when it
-    // was written — renames that postdate it must map it forward or
-    // the anti-join misses the (now renamed) data column
-    val delsMapped = dels.map { case (id, kc) =>
-      (id, currentName(kc, rens.filter(_._1 > id)))
-    }
+    import snap.{dir, rens, schema}
     if (snap.segIds.isEmpty || snap.legacyIds.nonEmpty) {
       // legacy (pre-manifest) layout — delete() refuses such stores,
       // so no tombstones can exist here — or a MIXED store, whose
@@ -840,13 +921,8 @@ object Store {
       spark.read.option("recursiveFileLookup", "true")
         .parquet(s"$dir/data")
     } else {
-      // segments group by which tombstones AND which renames apply to
-      // them (both applicable sets are id-suffixes, so the key is a
-      // pair of counts); with no renames this is exactly the r11
-      // grouping and the single clean-branch plan shape is unchanged
-      val parts = snap.segIds
-        .groupBy(s => (dels.count(_._1 > s), rens.count(_._1 > s))).toSeq
-        .flatMap { case ((nDel, nRen), ids) =>
+      val parts = snap.eras(snap.segIds)
+        .flatMap { case Era(ids, eraDels, groupRens) =>
           val files = ids.flatMap(snap.manifests)
             .distinct.map(n => s"$dir/data/$n")
           if (files.isEmpty) None
@@ -859,7 +935,6 @@ object Store {
                 // would read as missing), types widened to the
                 // global union's (the reader promotes), then alias
                 // physical -> current and align to the union
-                val groupRens = rens.takeRight(nRen)
                 val sides = ids.map(snap.sidecars)
                 val raw =
                   if (sides.exists(_.isEmpty)) spark.read.parquet(files: _*)
@@ -888,8 +963,8 @@ object Store {
                   case None => renamed
                 }
               }
-            Some(applyTombstones(spark, snap, df0,
-              delsMapped.takeRight(nDel)))
+            Some(snap.withoutDeleted(spark, df0, eraDels.map {
+              case (id, kc) => (id, snap.keyColAt(id, kc)) }))
           }
         }
       val out =
@@ -900,11 +975,8 @@ object Store {
               org.apache.spark.sql.Row], u)
           case None => spark.read.parquet(s"$dir/data")
         }
-      // dropped columns are renamed into the hidden namespace —
-      // filter them out of the served frame (compact folds them away
-      // physically; legacy/mixed stores cannot carry renames)
-      val hidden = out.columns.filter(_.startsWith(DroppedPrefix))
-      if (hidden.isEmpty) out else out.drop(hidden.toSeq: _*)
+      // legacy/mixed stores cannot carry renames, hence no drops
+      snap.visibleColumns(out)
     }
   }
 
@@ -1008,7 +1080,7 @@ object Store {
     val root = snap.root
     val (fs, _) = fsFor(spark, dir)
     val inCol = keys.columns.head
-    // no distinct: key sets are set-semantic (see applyTombstones)
+    // no distinct: key sets are set-semantic (see keyJoin)
     val k = keys.select(col(inCol).cast(kt).as("key"))
     // commit protocol: keys + ixdelta + keycol first, marker LAST —
     // a crash leaves an uncommitted unit no reader ever applies
@@ -1022,17 +1094,6 @@ object Store {
     id
   }
 
-  /** the tombstone's (re-runnable) victim index scan: list the
-    * committed segments and tombstones BELOW `id`, scan exactly those
-    * segments' then-live rows for the persisted key set, Overwrite
-    * `ixdelta`, and record coverage tokens — `_scope_<seg>` for each
-    * segment the scan provably covered (the plan is PINNED to the
-    * listed set, never a relisting) and `_delseen_<t>` for each
-    * earlier tombstone whose victims the then-live rule excluded.
-    * A full rescan also retires any incremental `ixrepair_*` dirs:
-    * the fresh ixdelta re-covers their segments, so keeping them
-    * would double-negate.
-    */
   /** the scan body shared by [[scanVictimIndex]] (pre-commit, writes
     * the unit's main `ixdelta`) and [[rescanTombstoneIndex]]
     * (post-commit, writes a fresh VERSIONED delta published
@@ -1056,14 +1117,12 @@ object Store {
     val snap = resolveSnapshot(spark, dir, Some(id - 1))
     val scanned = snap.segIds
     val delsSeen = snap.dels.map(_._1)
-    val live = dataAsOf(spark, snap)
-    val persisted = readKeys(spark, s"$root/del_$id/keys")
-      .select(col("key").as("__graft_del_key"))
     // index the victims read back from the PERSISTED key set (the
     // write()/append() read-back discipline: a nondeterministic keys
-    // plan must not net a different row set than the one recorded)
-    val victims = live.join(persisted,
-      col(keyCol) === col("__graft_del_key"), "left_semi")
+    // plan must not net a different row set than the one recorded);
+    // the then-live rule is the scoping dataAsOf already applies
+    val victims = keyJoin(dataAsOf(spark, snap), keyCol,
+      Seq(readKeys(spark, s"$root/del_$id/keys")), "left_semi")
     IndexedFrame(victims, spec).entries
       .select(col("field"), col("value"), (-col("f")).as("f"))
       .write.mode(SaveMode.Overwrite)
@@ -1071,6 +1130,17 @@ object Store {
     (scanned, delsSeen)
   }
 
+  /** the tombstone's (re-runnable) victim index scan: list the
+    * committed segments and tombstones BELOW `id`, scan exactly those
+    * segments' then-live rows for the persisted key set, Overwrite
+    * `ixdelta`, and record coverage tokens — `_scope_<seg>` for each
+    * segment the scan provably covered (the plan is PINNED to the
+    * listed set, never a relisting) and `_delseen_<t>` for each
+    * earlier tombstone whose victims the then-live rule excluded.
+    * A full rescan also retires any incremental `ixrepair_*` dirs:
+    * the fresh ixdelta re-covers their segments, so keeping them
+    * would double-negate.
+    */
   private def scanVictimIndex(spark: SparkSession, dir: String,
                               root: String, spec: IndexSpec,
                               keyCol: String, id: Int): Unit = {
@@ -1331,7 +1401,7 @@ object Store {
     // names current at the tombstone's id so the repair entries match
     // the ixdelta's vocabulary (renames after `id` then apply to both
     // uniformly at read)
-    val rensBetween = snap.rens.filter(r => r._1 > segId && r._1 <= id)
+    val rensBetween = snap.rensBetween(segId, id)
     val seg =
       if (rensBetween.isEmpty) raw
       else raw.select(raw.columns.map(c =>
@@ -1339,22 +1409,8 @@ object Store {
     if (!seg.columns.contains(keyCol)) { // no victims possible
       atomicCreate(fs, token); return true
     }
-    // then-live: exclude rows an intermediate tombstone (segId < t' <
-    // id) already killed, or their entries would be negated twice
-    val earlier = snap.dels.filter { case (t, _) => t > segId && t < id }
-    val base = earlier.foldLeft(seg) { case (acc, (t, kcT)) =>
-      val kcAtId = currentName(kcT,
-        snap.rens.filter(r => r._1 > t && r._1 <= id))
-      if (!acc.columns.contains(kcAtId)) acc
-      else {
-        val k2 = snap.keys(spark, t).select(col("key").as("__graft_del_key"))
-        acc.join(k2, acc(kcAtId) === col("__graft_del_key"), "left_anti")
-      }
-    }
-    val keys = readKeys(spark, s"$root/del_$id/keys")
-      .select(col("key").as("__graft_del_key"))
-    val victims = base.join(keys,
-      base(keyCol) === col("__graft_del_key"), "left_semi")
+    val victims = snap.thenLiveVictims(spark, seg, segId, id, keyCol,
+      readKeys(spark, s"$root/del_$id/keys"))
     if (victims.isEmpty) { // token alone records the coverage
       atomicCreate(fs, token); return true
     }
@@ -1703,30 +1759,27 @@ object Store {
     // fPoint/rowsOfPoint answer over the same committed units as the
     // plan faces — a unit committed between open() and the first
     // lookup must not make the faces of one handle disagree
-    import snap.{root, dels, rens}
+    import snap.root
     val segIds = (snap.segIds ++ snap.legacyIds).distinct.sorted
     // freq units: index segments AND tombstone ix units, each at its
     // own id's rename era
-    val freqUnits: Seq[(Int, Seq[String])] =
-      segIds.map(id => (id, Seq(s"$root/seg_$id"))) ++
-        dels.map { case (id, _) => (id, snap.delIxDirs(id)) }
-    val freqGroupsNow: Seq[PointRead.FreqGroup] = freqUnits
-      .groupBy { case (id, _) => rens.count(_._1 > id) }.toSeq.sortBy(_._1)
-      .map { case (nRen, us) =>
-        (us.flatMap(_._2).map(new org.apache.hadoop.fs.Path(_)),
-          rens.takeRight(nRen))
-      }
+    val freqGroupsNow: Seq[PointRead.FreqGroup] =
+      snap.eras(segIds ++ snap.dels.map(_._1), byDels = false)
+        .sortBy(_.rens.size)
+        .map { e =>
+          (e.ids.flatMap(id =>
+            snap.delIxDirs.getOrElse(id, Seq(s"$root/seg_$id")))
+            .map(new org.apache.hadoop.fs.Path(_)), e.rens)
+        }
     // committed segments only, mirroring refsAsOf's scoping
-    val rowsGroupsNow: Seq[PointRead.RowsGroup] = snap.refsIds
-      .groupBy(s => (dels.count(_._1 > s), rens.count(_._1 > s)))
-      .toSeq.sortBy(_._1)
-      .map { case ((nDel, nRen), ids) =>
-        (ids.sorted.map(id =>
+    val rowsGroupsNow: Seq[PointRead.RowsGroup] = snap.eras(snap.refsIds)
+      .sortBy(e => (e.dels.size, e.rens.size))
+      .map { e =>
+        (e.ids.sorted.map(id =>
           new org.apache.hadoop.fs.Path(s"$root/rows_$id")),
-          rens.takeRight(nRen),
-          dels.takeRight(nDel).map(_._1))
+          e.rens, e.dels.map(_._1))
       }
-    val keyDirsNow = dels.map { case (id, _) =>
+    val keyDirsNow = snap.dels.map { case (id, _) =>
       id -> new org.apache.hadoop.fs.Path(s"$root/del_$id/keys")
     }.toMap
     new PointRead.StorePoint(spark.sparkContext.hadoopConfiguration,
@@ -1760,44 +1813,15 @@ object Store {
     */
   def openAt(spark: SparkSession, dir: String, spec: IndexSpec,
              upToSeg: Int): StoredFrame = {
-    import org.apache.spark.sql.functions._
     repairUncoveredPairs(spark, resolveSnapshot(spark, dir), spec)
+    // the snapshot holds only the segments, tombstones and renames
+    // committed at or before upToSeg, so every face below — data,
+    // merged index and refs — serves the AS-OF rows and schema
     val snap = resolveSnapshot(spark, dir, Some(upToSeg)).checked
-    import snap.{root, segIds, rens}
-    require(segIds.nonEmpty,
+    require(snap.segIds.nonEmpty,
       s"no snapshot <= $upToSeg in $dir (available: ${snapshots(spark, dir)})")
-    // snapshot-scoped data: files of manifests 0..upToSeg, tombstones
-    // committed at or before upToSeg applied with their segment
-    // scoping — columns/rows/deletes after upToSeg are all invisible
-    val data = dataAsOf(spark, snap)
-    // renames committed at or before the snapshot apply — openAt
-    // serves the AS-OF schema, in the index as in the data
-    def mapped(df: DataFrame, unitId: Int): DataFrame = {
-      val applicable = rens.filter(_._1 > unitId)
-      if (applicable.isEmpty) df
-      else df.select(mappedFieldExpr(applicable).as("field"),
-        col("value"), col("f"))
-    }
-    val segFrames = segIds.map(id =>
-      mapped(readIx(spark, Seq(s"$root/seg_$id")), id))
-    val delFrames = snap.dels.map { case (id, _) =>
-      mapped(readIx(spark, snap.delIxDirs(id)), id) }
-    val index0 =
-      if (segFrames.size == 1 && delFrames.isEmpty) segFrames.head
-      else {
-        val summed = (segFrames ++ delFrames).reduce(_ unionByName _)
-          .groupBy("field", "value").agg(sum("f").as("f"))
-        // a fully-deleted entry nets to zero and must disappear, as
-        // if its rows never existed
-        if (delFrames.isEmpty) summed else summed.where(col("f") =!= 0L)
-      }
-    // drops committed AT OR BEFORE the snapshot hide their entries;
-    // a later drop is invisible to this as-of read
-    val index =
-      if (rens.exists(_._3.startsWith(DroppedPrefix)))
-        index0.where(!col("field").startsWith(DroppedPrefix))
-      else index0
-    new StoredFrame(IndexedFrame(data, spec), index, refsAsOf(spark, snap))
+    new StoredFrame(IndexedFrame(dataAsOf(spark, snap), spec),
+      mergedIndex(spark, snap), refsAsOf(spark, snap))
   }
 
   /** write-if-absent then open (haveIndexedDf). "Present" means BOTH
@@ -2276,7 +2300,7 @@ object Store {
       // column like any older unit's
       val d = readIx(spark, snap.delIxDirs(id))
       if (rens.isEmpty) d
-      else d.select(mappedFieldExpr(rens.filter(_._1 > id)).as("field"),
+      else d.select(mappedFieldExpr(snap.rensAfter(id)).as("field"),
         col("value"), col("f"))
     }
     if (segs.isEmpty) readIx(spark, Seq(root))
@@ -2288,28 +2312,22 @@ object Store {
       // data read); with no renames this is one glob read, as in r11
       val segFrames =
         if (rens.isEmpty) Seq(readIx(spark, segPaths))
-        else {
-          val ids = (committed ++ legacy).sorted
-          ids.groupBy(s => rens.count(_._1 > s)).toSeq.map {
-            case (nRen, gids) =>
-              readIx(spark, gids.map(id => s"$root/seg_$id"))
-                .select(mappedFieldExpr(rens.takeRight(nRen)).as("field"),
-                  col("value"), col("f"))
+        else snap.eras((committed ++ legacy).sorted, byDels = false)
+          .map { e =>
+            readIx(spark, e.ids.map(id => s"$root/seg_$id"))
+              .select(mappedFieldExpr(e.rens).as("field"),
+                col("value"), col("f"))
           }
-        }
       // tombstone ixdeltas ride the same sum: the negated victim
       // counts net the deleted rows out with no data rescan, and a
       // fully-deleted entry (f = 0) disappears
       val summed = (segFrames ++ delFrames)
         .reduce(_ unionByName _)
         .groupBy("field", "value").agg(sum("f").as("f"))
-      val netted =
-        if (delFrames.isEmpty) summed else summed.where(col("f") =!= 0L)
       // entries of DROPPED fields map into the hidden namespace —
       // filter them like the data read drops the hidden columns
-      if (rens.exists(_._3.startsWith(DroppedPrefix)))
-        netted.where(!col("field").startsWith(DroppedPrefix))
-      else netted
+      snap.visibleEntries(
+        if (delFrames.isEmpty) summed else summed.where(col("f") =!= 0L))
     }
   }
 
@@ -2321,41 +2339,24 @@ object Store {
     * (field,value) parquet stats still prune point reads. Tombstones
     * apply with the same segment scoping as the data (delete()
     * requires the delete key to BE the refs key column, so the
-    * anti-join is on row_key). The live delete-free path stays the
-    * single glob read with no per-segment planning.
+    * anti-join is on row_key). A store without tombstones or
+    * renames is one era: a single glob read.
     */
   private def refsAsOf(spark: SparkSession,
                        snap: UnitSnapshot): Option[DataFrame] = {
-    import snap.{root, dels, rens}
-    val present = snap.rowsIds
+    import snap.root
     val segIds = snap.refsIds
     if (segIds.isEmpty) None
-    else {
-      if (dels.isEmpty && rens.isEmpty && snap.upTo.isEmpty &&
-          segIds == present)
-        Some(readRefs(spark, segIds.map(id => s"$root/rows_$id")))
-      else Some(segIds
-        .groupBy(s => (dels.count(_._1 > s), rens.count(_._1 > s))).toSeq
-        .map { case ((nDel, nRen), ids) =>
-          val raw = readRefs(spark, ids.map(id => s"$root/rows_$id"))
-          // refs written before a rename carry the OLD field name
-          val refs0 =
-            if (nRen == 0) raw
-            else raw.select(
-              mappedFieldExpr(rens.takeRight(nRen)).as("field"),
-              col("value"), col("row_key"))
-          val refs =
-            if (rens.exists(_._3.startsWith(DroppedPrefix)))
-              refs0.where(!col("field").startsWith(DroppedPrefix))
-            else refs0
-          dels.takeRight(nDel).foldLeft(refs) { case (acc, (id, _)) =>
-            val keys = snap.keys(spark, id)
-              .select(col("key").as("__graft_del_key"))
-            acc.join(keys, acc("row_key") === col("__graft_del_key"),
-              "left_anti")
-          }
-        }.reduce(_ unionByName _))
-    }
+    else Some(snap.eras(segIds).map { e =>
+      val raw = readRefs(spark, e.ids.map(id => s"$root/rows_$id"))
+      // refs written before a rename carry the OLD field name
+      val refs0 =
+        if (e.rens.isEmpty) raw
+        else raw.select(mappedFieldExpr(e.rens).as("field"),
+          col("value"), col("row_key"))
+      snap.withoutDeleted(spark, snap.visibleEntries(refs0),
+        e.dels.map { case (id, _) => (id, "row_key") })
+    }.reduce(_ unionByName _))
   }
 
   /** fold all index segments into one — run when a stream has
@@ -2397,15 +2398,12 @@ object Store {
     // format log compaction): the folded seg_0's manifest is the
     // union of the old generation's manifests, so "latest" stays
     // time-travel-readable while intermediate snapshots retire with
-    // their generation. Every seg_ dir counts, committed or not; the
-    // snapshot holds the committed ones' sidecars, and an uncommitted
-    // one's is read here (compact is exclusive: no writer is mid-write)
-    val oldSegIds = snap.segDirs.map(n => scala.util.Try(n.drop(4).toInt).toOption)
-    val oldManifests = oldSegIds.map(_.flatMap(snap.manifests.get))
-    val oldSchemas = snap.segDirs.zip(oldSegIds).map { case (n, id) =>
-      id.flatMap(snap.sidecars.get)
-        .getOrElse(readSchemaSidecar(fs, s"${snap.root}/$n"))
-    }
+    // their generation. The fold covers the segments every reader
+    // serves: the committed ones, or a pure-legacy store's legacy ones
+    // (a mixed store rewrites its data below). A claimed segment that
+    // never committed — a crashed append — stays out, as it stays out
+    // of every read; vacuum reclaims its files.
+    val foldIds = if (snap.segIds.nonEmpty) snap.segIds else snap.legacyIds
     // the folded segment KEEPS the max retired unit id — ids never
     // rewind across a compact. This is what makes compaction safe
     // under appendBatch's exactly-once protocol: a crash between an
@@ -2443,13 +2441,13 @@ object Store {
     def foldData(): (Option[Seq[String]],
                      Option[org.apache.spark.sql.types.StructType]) =
       if (dels.isEmpty && !mixed && rens.isEmpty) {
-        // only when EVERY old segment carried a manifest is the union
-        // a faithful snapshot description (a pure-legacy store stays
-        // legacy — its plain recursive directory read is already
-        // correct and rewriting 100 TB for protocol hygiene is the
-        // caller's call via write(), not compact's)
-        if (oldManifests.nonEmpty && oldManifests.forall(_.isDefined))
-          (Some(oldManifests.flatMap(_.get).distinct), None)
+        // only a manifest store's union is a faithful snapshot
+        // description (a pure-legacy store stays legacy — its plain
+        // recursive directory read is already correct and rewriting
+        // 100 TB for protocol hygiene is the caller's call via
+        // write(), not compact's)
+        if (snap.segIds.nonEmpty)
+          (Some(snap.segIds.flatMap(snap.manifests).distinct), None)
         else (None, None)
       } else {
         // nothing else writes under <dir>/data while compact runs (it
@@ -2505,6 +2503,7 @@ object Store {
     // rewrote (tombstones/renames/mixed — current names, widened
     // types), else the union of the retired segments' sidecars (same
     // all-or-nothing rule as the served schema, see resolveSnapshot)
+    val oldSchemas = foldIds.map(snap.sidecars)
     rewrittenSchema match {
       case Some(sc) => writeSchemaSidecar(fs, s"$newRoot/seg_$foldId", sc)
       case None if oldSchemas.nonEmpty && oldSchemas.forall(_.isDefined) =>
@@ -2814,13 +2813,7 @@ final class StoredFrame(frameOf: => IndexedFrame,
     */
   def rowsOfAndPoint(f1: String, v1: String,
                      f2: String, v2: String): Seq[Any] =
-    point.flatMap(_.andRows(f1, v1, f2, v2)).getOrElse {
-      // plan fallback: index-only refs join — never the base table
-      import org.apache.spark.sql.functions.col
-      rowsOf(f1, v1).distinct().join(rowsOf(f2, v2).distinct(),
-          Seq("row_key"))
-        .orderBy(col("row_key")).collect().toSeq.map(_.get(0))
-    }
+    rowsOfAllPoint(Seq((f1, v1), (f2, v2)))
 
   /** per-side frequency bound for the driver-side pair ops: above
     * this the two-pointer merge is no longer interactive-latency work
@@ -2835,7 +2828,7 @@ final class StoredFrame(frameOf: => IndexedFrame,
     * exact number `index_fand`'s plan spelling computes for the same
     * pair. Served as a STREAMING two-pointer merge of the two
     * entries' sorted row-key runs (O(1) memory — neither side is
-    * materialized; see [[PointRead.StorePoint.andStats]]), f-gated
+    * materialized; see [[PointRead.StorePoint.andCount]]), f-gated
     * at [[pairPointMaxF]] per side with transparent plan fallback.
     */
   def fAndPoint(f1: String, v1: String, f2: String, v2: String,
@@ -2856,7 +2849,8 @@ final class StoredFrame(frameOf: => IndexedFrame,
   def boolCountsPoint(f1: String, v1: String, f2: String, v2: String,
                       maxF: Long = pairPointMaxF): (Long, Long, Long, Long) = {
     val (fa, fb, and) =
-      point.flatMap(_.andStats(f1, v1, f2, v2, maxF)).getOrElse {
+      point.flatMap(_.multiStats(Seq((f1, v1), (f2, v2)), maxF))
+        .map { case (fs, and, _) => (fs(0), fs(1), and) }.getOrElse {
         val a = fPoint(f1, v1)
         val b = fPoint(f2, v2)
         (a, b, rowsOf(f1, v1).distinct()
@@ -3005,8 +2999,8 @@ final class StoredFrame(frameOf: => IndexedFrame,
     * whole op is the SAME two point reads [[fAndPoint]] pays — n
     * rides f1's field scan ([[nPoint]], cached after the first
     * call; exact for an identity-indexed never-null field) and
-    * fA/fB/fAB come from one [[PointRead.StorePoint.andStats]]
-    * streaming merge. Transparent plan fallback (ineligible store,
+    * fA/fB/fAB come from one [[PointRead.StorePoint.multiStats]]
+    * streaming walk. Transparent plan fallback (ineligible store,
     * gated hot entry) computes the identical counts with one
     * aggregation pass.
     */
@@ -3014,9 +3008,9 @@ final class StoredFrame(frameOf: => IndexedFrame,
                    maxF: Long = pairPointMaxF): CoStats = {
     val fast = for {
       p <- point
-      s <- p.andStats(f1, v1, f2, v2, maxF)
+      s <- p.multiStats(Seq((f1, v1), (f2, v2)), maxF)
       n <- nPoint(f1)
-    } yield CoStats(n, s._1, s._2, s._3)
+    } yield CoStats(n, s._1(0), s._1(1), s._2)
     fast.getOrElse(
       frame.coStats(frame.predicate(f1, v1), frame.predicate(f2, v2)))
   }

@@ -778,36 +778,27 @@ object Dedup {
                  k: Int = 32, bands: Int = 8,
                  minEstJaccard: Double = 0.5,
                  maxBucket: Long = 10000L): DataFrame = {
-    // MAP-ONLY signature build (minhashSigCol): one projection, no
-    // explode and no groupBy — the grouped build shuffled the whole
-    // shingle stream (~10× the text bytes at scale) just to take k
-    // mins. Spec-checked signature-equal to minhashSignatures, so
-    // pairs are identical. Null-text docs yield a null signature and
-    // are dropped here (the exploded build dropped them implicitly;
-    // without the filter they'd all collide in one xxhash64(null)
-    // bucket per band). The repartition is a MATERIALIZATION BARRIER,
-    // not a distribution need: without it CollapseProject inlines the
-    // signature expression into the null filter, each band hash and
-    // the carried column (~9× recompute — benign now that MinHashSig
-    // is a cheap codegen'd kernel, but still measurably slower); the
-    // exchange computes it once and ships (doc_id, k longs) rows,
-    // still ≪ the shingle-stream shuffle this build replaced.
-    val sig = df.select(id.as("doc_id"), minhashSigCol(text, k = k).as("sig"))
-      .where(col("sig").isNotNull)
-      .repartition(col("doc_id"))
-    // the SHARED banding expression (bandBucketHashes) — one
-    // definition for every LSH consumer, so self-pairing, cross-corpus
-    // and streaming signatures can never drift
-    val bandHashes = bandBucketHashes(k, bands)
+    // the banded table is [[bandedSignatures]] (map-only signature
+    // build, the SHARED banding expression) — one definition for
+    // every LSH consumer, so self-pairing, cross-corpus and streaming
+    // signatures can never drift
+    lshSelfPairs(bandedSignatures(df, text, id, k, bands), k,
+      minEstJaccard, maxBucket)
+  }
+
+  /** the banded self-join tail shared by [[minhashLsh]] and
+    * [[minhashLshPortable]]: candidate pairs from shared
+    * (band, bucket) keys of `banded`, verified by the matching
+    * signature fraction ≥ `minEstJaccard`
+    */
+  private def lshSelfPairs(banded: DataFrame, k: Int, minEstJaccard: Double,
+                           maxBucket: Long): DataFrame = {
     // bucket skew cap via [[Skew.dropHotKeys]] (exchange default /
     // grouped / window — see Skew's tradeoff note): the banded
     // stream shuffles once on (band,bucket) and that exchange feeds
     // both the over-cap count and the self-join probe.
-    val banded = Skew.dropHotKeys(
-      sig.select(col("doc_id"), col("sig"),
-        posexplode(bandHashes).as(Seq("band", "bucket"))),
-      Seq("band", "bucket"), maxBucket)
-    val cand = banded.as("x").join(banded.as("y"),
+    val capped = Skew.dropHotKeys(banded, Seq("band", "bucket"), maxBucket)
+    val cand = capped.as("x").join(capped.as("y"),
         col("x.band") === col("y.band") &&
         col("x.bucket") === col("y.bucket") &&
         col("x.doc_id") < col("y.doc_id"))
@@ -824,30 +815,6 @@ object Dedup {
       .orderBy("a", "b")
   }
 
-  /** MinHash + LSH banding with an ENGINE-PORTABLE hash family
-    * (§2c.25e): the token hash is the top 60 bits of `md5(shingle)`
-    * reduced mod p = 2³¹−1, run through the SAME (aᵢ·x+bᵢ) mod p
-    * permutation family as the native kernel ([[graft.functions.MinHash]]
-    * constants — ONE definition, interpolated into the DuckDB oracle).
-    * Identical pipeline shape to [[minhashLsh]] (band the signature,
-    * bucket-join, verify matching-position fraction = the unbiased
-    * Broder estimator), but the base hash is md5 instead of xxhash64,
-    * so every stage — signature build, band bucketing, candidate
-    * generation, verification — is expressible in plain SQL and the
-    * WHOLE near-dup pipeline hash-checks end-to-end against an
-    * independent engine (the DuckDB oracle), not only against its own
-    * spec. This is the cross-engine-reproducibility variant a
-    * pipeline uses when signatures must be recomputable outside
-    * Spark.
-    *
-    * Scale shape: md5 computed ONCE per shingle in the projection
-    * (the k permutations are long multiply-mods, not k hash calls),
-    * then one exchange for the signature build (k min() aggregates
-    * over (doc_id, x) long rows, map-side combined), then the
-    * standard banded bucket join with the [[Skew.dropHotKeys]] cap
-    * and the codegen'd [[graft.functions.MinHash.sigMatchCount]]
-    * verify.
-    */
   /** the portable family's (doc_id, sig) signature table: md5-top-60
     * token hash through the shared (a·x+b) mod p permutations — the
     * piece every portable MinHash consumer (self-pairs, cross-corpus)
@@ -875,20 +842,6 @@ object Dedup {
         array((0 until k).map(i => col(s"h$i")): _*).as("sig"))
   }
 
-  /** md5 per-band bucket hashes — the portable analog of
-    * [[bandBucketHashes]] (same width validation, md5 instead of
-    * xxhash64 so DuckDB reproduces the bucket keys).
-    */
-  private def portableBandHashes(k: Int, bands: Int): Column = {
-    require(bands > 0 && k >= bands && k % bands == 0,
-      s"bands ($bands) must divide the signature length k ($k)")
-    val r = k / bands
-    array((0 until bands).map { b =>
-      md5(array_join(
-        transform(slice(col("sig"), b * r + 1, r), _.cast("string")), ","))
-    }: _*)
-  }
-
   /** [[bandedSignatures]] over the portable md5 family — the banded
     * signature table an incremental pipeline persists when its corpus
     * signatures must be recomputable outside Spark.
@@ -897,28 +850,38 @@ object Dedup {
                                k: Int = 32, bands: Int = 8): DataFrame =
     portableSigTable(df, text, id, k)
       .select(col("doc_id"), col("sig"),
-        posexplode(portableBandHashes(k, bands)).as(Seq("band", "bucket")))
+        posexplode(bandBucketHashes(k, bands, md5)).as(Seq("band", "bucket")))
 
+  /** MinHash + LSH banding with an ENGINE-PORTABLE hash family
+    * (§2c.25e): the token hash is the top 60 bits of `md5(shingle)`
+    * reduced mod p = 2³¹−1, run through the SAME (aᵢ·x+bᵢ) mod p
+    * permutation family as the native kernel ([[graft.functions.MinHash]]
+    * constants — ONE definition, interpolated into the DuckDB oracle).
+    * Identical pipeline shape to [[minhashLsh]] (band the signature,
+    * bucket-join, verify matching-position fraction = the unbiased
+    * Broder estimator), but the base hash is md5 instead of xxhash64,
+    * so every stage — signature build, band bucketing, candidate
+    * generation, verification — is expressible in plain SQL and the
+    * WHOLE near-dup pipeline hash-checks end-to-end against an
+    * independent engine (the DuckDB oracle), not only against its own
+    * spec. This is the cross-engine-reproducibility variant a
+    * pipeline uses when signatures must be recomputable outside
+    * Spark.
+    *
+    * Scale shape: md5 computed ONCE per shingle in the projection
+    * (the k permutations are long multiply-mods, not k hash calls),
+    * then one exchange for the signature build (k min() aggregates
+    * over (doc_id, x) long rows, map-side combined), then the
+    * standard banded bucket join with the [[Skew.dropHotKeys]] cap
+    * and the codegen'd [[graft.functions.MinHash.sigMatchCount]]
+    * verify.
+    */
   def minhashLshPortable(df: DataFrame, text: Column, id: Column,
                          k: Int = 32, bands: Int = 8,
                          minEstJaccard: Double = 0.5,
-                         maxBucket: Long = 10000L): DataFrame = {
-    val banded = Skew.dropHotKeys(
-      bandedSignaturesPortable(df, text, id, k, bands),
-      Seq("band", "bucket"), maxBucket)
-    val cand = banded.as("x").join(banded.as("y"),
-        col("x.band") === col("y.band") &&
-        col("x.bucket") === col("y.bucket") &&
-        col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"),
-        col("x.sig").as("siga"), col("y.sig").as("sigb"))
-      .dropDuplicates("a", "b")
-    cand.select(col("a"), col("b"),
-        round(graft.functions.MinHash.sigMatchCount(col("siga"), col("sigb"))
-          .cast("double") / k, 6).as("est_jaccard"))
-      .where(col("est_jaccard") >= minEstJaccard)
-      .orderBy("a", "b")
-  }
+                         maxBucket: Long = 10000L): DataFrame =
+    lshSelfPairs(bandedSignaturesPortable(df, text, id, k, bands), k,
+      minEstJaccard, maxBucket)
 
   /** MinHash ESTIMATOR-QUALITY evaluation (§2c.25g) — the
     * [[graft.ops.Similarity.recallEval]] posture applied to the dedup
@@ -965,6 +928,54 @@ object Dedup {
       .orderBy("a", "b")
   }
 
+  /** per-band bucket hashes of a `sig` column — shared by every LSH
+    * banding consumer so batch and streaming faces cannot drift.
+    * `hash` is xxhash64 for the native family, md5 for the portable
+    * one (so DuckDB reproduces the bucket keys). Validated like
+    * [[Similarity]]'s bandWidth: a non-divisor would silently discard
+    * the top k % bands signature positions from every bucket key.
+    */
+  private[graft] def bandBucketHashes(k: Int, bands: Int,
+                                      hash: Column => Column =
+                                        xxhash64(_)): Column = {
+    require(bands > 0 && k >= bands && k % bands == 0,
+      s"bands ($bands) must divide the signature length k ($k)")
+    val r = k / bands
+    array((0 until bands).map { b =>
+      hash(array_join(
+        transform(slice(col("sig"), b * r + 1, r), _.cast("string")), ","))
+    }: _*)
+  }
+
+  /** (doc_id, sig, band, bucket) banded MinHash signature table — the
+    * artifact an incremental pipeline PERSISTS for its corpus (e.g.
+    * via [[graft.core.Store]] / plain parquet) so each ingest batch
+    * joins against it without recomputing corpus signatures. Consumed
+    * by [[minhashLshCross]] (both sides) and the streaming face
+    * ([[graft.streaming.EventPipeline.crossDedupStream]], static side).
+    */
+  def bandedSignatures(df: DataFrame, text: Column, id: Column,
+                       k: Int = 32, bands: Int = 8): DataFrame =
+    // MAP-ONLY signature build (minhashSigCol): one projection, no
+    // explode and no groupBy — the grouped build shuffled the whole
+    // shingle stream (~10× the text bytes at scale) just to take k
+    // mins. Spec-checked signature-equal to minhashSignatures, so
+    // pairs are identical. Null-text docs yield a null signature and
+    // are dropped here (the exploded build dropped them implicitly;
+    // without the filter they'd all collide in one xxhash64(null)
+    // bucket per band). The repartition is a MATERIALIZATION BARRIER,
+    // not a distribution need: without it CollapseProject inlines the
+    // signature expression into the null filter, each band hash and
+    // the carried column (~9× recompute — benign now that MinHashSig
+    // is a cheap codegen'd kernel, but still measurably slower); the
+    // exchange computes it once and ships (doc_id, k longs) rows,
+    // still ≪ the shingle-stream shuffle this build replaced.
+    df.select(id.as("doc_id"), minhashSigCol(text, k = k).as("sig"))
+      .where(col("sig").isNotNull)
+      .repartition(col("doc_id"))
+      .select(col("doc_id"), col("sig"),
+        posexplode(bandBucketHashes(k, bands)).as(Seq("band", "bucket")))
+
   /** Incremental cross-corpus near-dup detection (§2c.25d): pairs
     * between a NEW batch and an EXISTING corpus — the daily-ingest
     * shape, where re-pairing the corpus against itself (what
@@ -984,40 +995,6 @@ object Dedup {
     * (band,bucket) partitioning the join needs — one exchange,
     * ReusedExchange), since mass-boilerplate buckets live there.
     */
-  /** per-band bucket hashes of a `sig` column — shared by every LSH
-    * banding consumer so batch and streaming faces cannot drift.
-    * Validated like [[Similarity]]'s bandWidth: a non-divisor would
-    * silently discard the top k % bands signature positions from
-    * every bucket key.
-    */
-  private[graft] def bandBucketHashes(k: Int, bands: Int): Column = {
-    require(bands > 0 && k >= bands && k % bands == 0,
-      s"bands ($bands) must divide the signature length k ($k)")
-    val r = k / bands
-    array((0 until bands).map { b =>
-      xxhash64(array_join(
-        transform(slice(col("sig"), b * r + 1, r), _.cast("string")), ","))
-    }: _*)
-  }
-
-  /** (doc_id, sig, band, bucket) banded MinHash signature table — the
-    * artifact an incremental pipeline PERSISTS for its corpus (e.g.
-    * via [[graft.core.Store]] / plain parquet) so each ingest batch
-    * joins against it without recomputing corpus signatures. Consumed
-    * by [[minhashLshCross]] (both sides) and the streaming face
-    * ([[graft.streaming.EventPipeline.crossDedupStream]], static side).
-    */
-  def bandedSignatures(df: DataFrame, text: Column, id: Column,
-                       k: Int = 32, bands: Int = 8): DataFrame =
-    // same materialization barrier as minhashLsh: without the
-    // repartition, CollapseProject inlines the signature build into
-    // every band hash
-    df.select(id.as("doc_id"), minhashSigCol(text, k = k).as("sig"))
-      .where(col("sig").isNotNull)
-      .repartition(col("doc_id"))
-      .select(col("doc_id"), col("sig"),
-        posexplode(bandBucketHashes(k, bands)).as(Seq("band", "bucket")))
-
   def minhashLshCross(newDocs: DataFrame, corpus: DataFrame,
                       text: Column, id: Column,
                       k: Int = 32, bands: Int = 8,

@@ -334,6 +334,64 @@ class StoreSpec extends SparkSpec {
     // a snapshot read is planned over ONLY the manifest files — the
     // later append's rows are invisible even though they share data/
     assert(!ids(Store.openAt(spark, dir, spec, 1)).contains(4L))
+
+    // a store with a tombstone, a rename and a drop: at the latest id
+    // openAt serves exactly open()'s index, rows and row refs
+    val rspec = IndexSpec(Seq("cat", "tag")).withRowRefs("id")
+    val dirEv = java.nio.file.Files.createTempDirectory("ttev").toString
+    val tagged = data.withColumn("tag",
+      concat(lit("t"), ($"id" % 2).cast("string")))
+    Store.append(tagged.where($"id" <= 2), dirEv, rspec)
+    Store.append(tagged.where($"id" > 2), dirEv, rspec)
+    Store.delete(spark, dirEv, rspec, "id", Seq(2L).toDF("id"))
+    Store.renameColumn(spark, dirEv, "cat", "kind")
+    val latest = Store.dropColumn(spark, dirEv, "tag")
+    assert(Store.snapshots(spark, dirEv).last === latest)
+    val live = Store.open(spark, dirEv, rspec)
+    val asOf = Store.openAt(spark, dirEv, rspec, latest)
+    def rows(st: graft.core.StoredFrame) =
+      st.frame.df.collect().map(_.toSeq).toSeq.sortBy(_.head.toString)
+    def refs(st: graft.core.StoredFrame) = st.rowRefs.get.collect()
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
+    assert(ix(live).keySet.map(_._1) === Set("kind"))
+    assert(ix(asOf) === ix(live))
+    assert(asOf.frame.df.columns.toSeq === live.frame.df.columns.toSeq)
+    assert(rows(asOf) === rows(live))
+    assert(rows(live).map(_.head) === Seq(1L, 3L, 4L))
+    assert(refs(asOf) === refs(live))
+  }
+
+  test("compact folds only committed segments: a crashed append stays invisible") {
+    val rspec = IndexSpec(Seq("cat")).withRowRefs("id")
+    val dir = java.nio.file.Files.createTempDirectory("cmpcrash").toString
+    Store.append(data.where($"id" <= 2), dir, rspec)
+    Store.append(data.where($"id" > 2), dir, rspec)
+    // the state a crash between the second append's index writes and
+    // its manifest leaves: data, entries, refs and sidecar written,
+    // the `_claim_` file kept, no `_MANIFEST`
+    assert(new java.io.File(s"$dir/index/seg_1/_MANIFEST").delete())
+    assert(new java.io.File(s"$dir/index/_claim_1").exists())
+    val crashed = new java.io.File(s"$dir/data/seg_1").listFiles()
+      .filter(_.getName.endsWith(".parquet")).toSeq
+    assert(crashed.nonEmpty)
+    def ix(st: graft.core.StoredFrame) = st.persistedIndex.collect()
+      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+    val before = Store.open(spark, dir, rspec)
+    assert(before.frame.df.count() === 2)
+    val ixBefore = ix(before)
+    Store.compact(spark, dir)
+    val after = Store.open(spark, dir, rspec)
+    assert(after.frame.df.count() === 2)
+    assert(ix(after) === ixBefore)
+    assert(after.rowRefs.get.select("row_key").collect()
+      .map(_.getLong(0)).toSet === Set(1L, 2L))
+    assert(Store.history(spark, dir).nonEmpty)
+    Store.delete(spark, dir, rspec, "id", Seq(1L).toDF("id"))
+    assert(Store.open(spark, dir, rspec).frame.df.select("id").collect()
+      .map(_.getLong(0)).toSeq === Seq(2L))
+    Store.vacuum(spark, dir)
+    assert(crashed.forall(!_.exists()))
+    assert(Store.open(spark, dir, rspec).frame.df.count() === 1)
   }
 
   test("compact collapses snapshot history to the manifest union") {
