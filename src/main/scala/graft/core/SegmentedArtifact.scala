@@ -137,7 +137,7 @@ object SegmentedArtifact {
     val fam = famRoot(dir, family)
     val segs = snap.segIds
     require(segs.nonEmpty, s"no committed segments in $dir")
-    val parts = snap.eras(segs, byRens = false).map { e =>
+    val parts = snap.eras(segs).map { e =>
       val segDirs = e.ids.map(id => s"$fam/seg_$id")
       // explicit schema from the first partial's sidecar: skips
       // the per-call schema-inference job (r15; falls back for

@@ -694,12 +694,12 @@ object Store {
   //
   // The snapshot also owns the SCOPING rule, so no reader spells it
   // out: a tombstone or rename applies to the units with smaller ids
-  // (units sharing the applicable sets form a read ERA), tombstones
-  // remove rows by one anti-join over their union of key sets, a
-  // tombstone nets only the victims still live when it was written,
-  // and dropped columns stay hidden. Every face, the victim scans and
-  // repairs, and [[SegmentedArtifact]]/[[SegmentedAgg]] read through
-  // its helpers. A tombstone being committed is not in its own
+  // (units sharing the applicable sets form a read ERA, served newest
+  // first), tombstones remove rows by one anti-join over their union
+  // of key sets, a tombstone nets only the victims still live when it
+  // was written, and dropped fields stay out of the entry faces. Every
+  // face, the victim scans and repairs, and
+  // [[SegmentedArtifact]]/[[SegmentedAgg]] read through its helpers. A tombstone being committed is not in its own
   // snapshot, so its key set is read by path ([[readKeys]]).
 
   /** the units of one generation, as resolved from its metadata: the
@@ -797,22 +797,24 @@ object Store {
       currentName(kc, rensBetween(t, hi))
 
     /** `ids` grouped into read ERAS: the units the same tombstones
-      * and the same renames apply to (those with larger ids, so each
-      * applicable set is an id-suffix, keyed by its count). A reader
-      * plans one branch per era, not per unit. Readers that apply only
-      * renames (index entries) or only tombstones (artifacts) turn the
-      * other side off, and the key is then that one count: branches
-      * come in the key map's order, which AQE's exchange reuse follows.
+      * and the same renames apply to (those with larger ids). A reader
+      * plans one branch per era, not per unit. Eras come newest first
+      * (fewest applicable tombstones, then renames), a fixed order: a
+      * plan's union order, and the exchange reuse AQE finds along it,
+      * must not hang on hash order.
       */
-    def eras(ids: Seq[Int], byDels: Boolean = true,
-             byRens: Boolean = true): Seq[Era] =
-      ids.groupBy { s =>
-        val (nDel, nRen) = (dels.count(_._1 > s), rens.count(_._1 > s))
-        if (!byRens) nDel else if (!byDels) nRen else (nDel, nRen)
-      }.toSeq.map { case (_, g) =>
-        Era(g, if (byDels) dels.filter(_._1 > g.head) else Nil,
-          if (byRens) rensAfter(g.head) else Nil)
-      }
+    def eras(ids: Seq[Int]): Seq[Era] =
+      ids.groupBy(s => (dels.filter(_._1 > s), rensAfter(s))).toSeq
+        .map { case ((ds, rs), g) => Era(g, ds, rs) }
+        .sortBy(e => (e.dels.size, e.rens.size))
+
+    /** `ids` grouped by the renames that apply to them alone, newest
+      * first: the eras of index entries, which tombstones net through
+      * their own ixdelta units, not through an anti-join */
+    def renameEras(ids: Seq[Int]): Seq[Era] =
+      ids.groupBy(rensAfter).toSeq
+        .map { case (rs, g) => Era(g, Nil, rs) }
+        .sortBy(_.rens.size)
 
     /** `df` without the rows tombstones `ds` delete, each given as
       * (id, its key column in `df`'s names): tombstones sharing a key
@@ -839,13 +841,6 @@ object Store {
       }.filter { case (_, kc) => seg.columns.contains(kc) }
       keyJoin(withoutDeleted(spark, seg, killed), keyCol, Seq(keys),
         "left_semi")
-    }
-
-    /** a data frame without the hidden columns dropColumn renamed
-      * away (compact folds them away physically) */
-    def visibleColumns(df: DataFrame): DataFrame = {
-      val hidden = df.columns.filter(_.startsWith(DroppedPrefix))
-      if (hidden.isEmpty) df else df.drop(hidden.toSeq: _*)
     }
 
     /** a `field`-keyed entry frame (index or refs) without the entries
@@ -975,8 +970,11 @@ object Store {
               org.apache.spark.sql.Row], u)
           case None => spark.read.parquet(s"$dir/data")
         }
-      // legacy/mixed stores cannot carry renames, hence no drops
-      snap.visibleColumns(out)
+      // dropped columns are renamed into the hidden namespace —
+      // filter them out of the served frame (compact folds them away
+      // physically; legacy/mixed stores cannot carry renames)
+      val hidden = out.columns.filter(_.startsWith(DroppedPrefix))
+      if (hidden.isEmpty) out else out.drop(hidden.toSeq: _*)
     }
   }
 
@@ -1598,28 +1596,15 @@ object Store {
     * life of a generation.
     */
   private def nextUnitId(fs: org.apache.hadoop.fs.FileSystem,
-                         root: String): Int = {
-    val rp = new org.apache.hadoop.fs.Path(root)
-    if (!fs.exists(rp)) 0
-    else fs.listStatus(rp).map(_.getPath.getName)
-      .collect {
-        case s if s.startsWith("seg_")    => s.drop(4)
-        case s if s.startsWith("del_")    => s.drop(4)
-        case s if s.startsWith("ren_")    => s.drop(4)
-        case s if s.startsWith("_claim_") => s.drop(7)
-      }
-      .flatMap(s => scala.util.Try(s.toInt).toOption)
-      .foldLeft(-1)(math.max) + 1
-  }
+                         root: String): Int =
+    maxClaimedId(rootNames(fs, root)) + 1
 
-  /** max id among COMMITTED-OR-PRESENT unit DIRS (claims excluded):
-    * what compact's fold id must preserve — a crashed writer's bare
-    * claim must NOT raise the fold id / high-water mark, or a
-    * legitimate redelivery of that never-committed batch would be
-    * silently no-op'd.
+  /** the largest id a unit dir or claim of a root listing holds (-1
+    * when none): every later claim stays above it, so ids stay
+    * monotone past crashed writers
     */
-  private def maxUnitDirId(snap: UnitSnapshot): Int =
-    Seq("seg_", "del_", "ren_").flatMap(unitIds(snap.names, _))
+  private def maxClaimedId(names: Seq[String]): Int =
+    Seq("seg_", "del_", "ren_", "_claim_").flatMap(unitIds(names, _))
       .foldLeft(-1)(math.max)
 
   /** write rows + index as segment 0 (reference writeIndexedDf).
@@ -1763,17 +1748,15 @@ object Store {
     val segIds = (snap.segIds ++ snap.legacyIds).distinct.sorted
     // freq units: index segments AND tombstone ix units, each at its
     // own id's rename era
+    val unitDirs =
+      segIds.map(id => id -> Seq(s"$root/seg_$id")).toMap ++ snap.delIxDirs
     val freqGroupsNow: Seq[PointRead.FreqGroup] =
-      snap.eras(segIds ++ snap.dels.map(_._1), byDels = false)
-        .sortBy(_.rens.size)
-        .map { e =>
-          (e.ids.flatMap(id =>
-            snap.delIxDirs.getOrElse(id, Seq(s"$root/seg_$id")))
-            .map(new org.apache.hadoop.fs.Path(_)), e.rens)
-        }
+      snap.renameEras(segIds ++ snap.dels.map(_._1)).map { e =>
+        (e.ids.flatMap(unitDirs).map(new org.apache.hadoop.fs.Path(_)),
+          e.rens)
+      }
     // committed segments only, mirroring refsAsOf's scoping
     val rowsGroupsNow: Seq[PointRead.RowsGroup] = snap.eras(snap.refsIds)
-      .sortBy(e => (e.dels.size, e.rens.size))
       .map { e =>
         (e.ids.sorted.map(id =>
           new org.apache.hadoop.fs.Path(s"$root/rows_$id")),
@@ -2312,7 +2295,7 @@ object Store {
       // data read); with no renames this is one glob read, as in r11
       val segFrames =
         if (rens.isEmpty) Seq(readIx(spark, segPaths))
-        else snap.eras((committed ++ legacy).sorted, byDels = false)
+        else snap.renameEras((committed ++ legacy).sorted)
           .map { e =>
             readIx(spark, e.ids.map(id => s"$root/seg_$id"))
               .select(mappedFieldExpr(e.rens).as("field"),
@@ -2411,12 +2394,13 @@ object Store {
     // the just-folded batchId, and the idempotence gate must still
     // find a committed segment at that id (a seg_0 rename would read
     // as "not yet appended" and duplicate the batch).
-    // ... but via maxUnitDirId, NOT nextUnitId: a crashed writer's
-    // bare CLAIM above the max committed unit must not raise the fold
-    // id (and with it the high-water mark below), or a legitimate
-    // redelivery of that never-committed batch would be silently
-    // swallowed by the idempotence gate.
-    val foldId = math.max(0, maxUnitDirId(snap))
+    // ... but the max COMMITTED unit id: a crashed writer's claim or
+    // unit dir above it must not raise the fold id (and with it the
+    // high-water mark below), or a legitimate redelivery of that
+    // never-committed batch would be silently swallowed by the
+    // idempotence gate.
+    val foldId = (snap.segIds ++ snap.legacyIds ++ dels.map(_._1) ++
+      snap.rens.map(_._1)).foldLeft(0)(math.max)
     // PHYSICAL DELETE: with live tombstones, compact folds them into
     // the data — the surviving rows are rewritten as fresh files and
     // the folded segment's manifest names ONLY those, so the new
@@ -2519,6 +2503,11 @@ object Store {
     val hw = fs.create(
       new org.apache.hadoop.fs.Path(s"$newRoot/_HIGHWATER"), true)
     try hw.write(foldId.toString.getBytes("UTF-8")) finally hw.close()
+    // a crashed writer's id above the fold carries over as a claim:
+    // no later claim reuses it, and a redelivered batch still lands
+    // on it (appendBatch re-creates its own claim as a no-op)
+    val claimed = maxClaimedId(snap.names)
+    if (claimed > foldId) atomicCreate(fs, claimPath(newRoot, claimed))
     fs.create(new org.apache.hadoop.fs.Path(s"$newRoot/_COMMITTED")).close()
     // reclaim generations at least two compacts old (never `gen`
     // itself — in-flight readers may still be planned against it)

@@ -167,19 +167,27 @@ class StoreConcurrencySpec extends SparkSpec {
   }
 
   test("high-water never swallows a batch that only CLAIMED before the compact") {
-    val dir = java.nio.file.Files.createTempDirectory("hwclaim").toString
     def batch(b: Int) = (0 until 5)
       .map(i => ((b * 5 + i).toLong, s"c${i % 2}", i.toDouble))
       .toDF("id", "cat", "v")
-    assert(Store.appendBatch(batch(0), dir, spec, 0L))
-    assert(Store.appendBatch(batch(1), dir, spec, 1L))
-    // batch 5's first attempt died right after claiming
-    touch(s"$dir/index/_claim_5")
-    Store.compact(spark, dir)
-    // the fold id (and high-water) must NOT have been raised to the
-    // crashed claim — batch 5's redelivery is legitimate new data
-    assert(Store.appendBatch(batch(5), dir, spec, 5L))
-    assert(Store.open(spark, dir, spec).frame.df.count() === 15)
+    // batch 5's first attempt died right after claiming, or after its
+    // data and index units but before its _MANIFEST
+    Seq[String => Unit](
+      dir => touch(s"$dir/index/_claim_5"),
+      dir => {
+        assert(Store.appendBatch(batch(5), dir, spec, 5L))
+        assert(new java.io.File(s"$dir/index/seg_5/_MANIFEST").delete())
+      }).foreach { crash =>
+      val dir = java.nio.file.Files.createTempDirectory("hwclaim").toString
+      assert(Store.appendBatch(batch(0), dir, spec, 0L))
+      assert(Store.appendBatch(batch(1), dir, spec, 1L))
+      crash(dir)
+      Store.compact(spark, dir)
+      // the fold id (and high-water) must NOT have been raised to the
+      // crashed batch — batch 5's redelivery is legitimate new data
+      assert(Store.appendBatch(batch(5), dir, spec, 5L))
+      assert(Store.open(spark, dir, spec).frame.df.count() === 15)
+    }
   }
 
   test("mixed legacy+manifest store: all-or-nothing serving, vacuum keeps, compact modernizes") {

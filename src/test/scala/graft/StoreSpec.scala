@@ -386,7 +386,8 @@ class StoreSpec extends SparkSpec {
     assert(after.rowRefs.get.select("row_key").collect()
       .map(_.getLong(0)).toSet === Set(1L, 2L))
     assert(Store.history(spark, dir).nonEmpty)
-    Store.delete(spark, dir, rspec, "id", Seq(1L).toDF("id"))
+    // the crashed id stays claimed: the next unit takes the one above
+    assert(Store.delete(spark, dir, rspec, "id", Seq(1L).toDF("id")) === 2)
     assert(Store.open(spark, dir, rspec).frame.df.select("id").collect()
       .map(_.getLong(0)).toSeq === Seq(2L))
     Store.vacuum(spark, dir)
