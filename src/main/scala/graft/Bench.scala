@@ -31,11 +31,13 @@ import org.apache.spark.sql.SparkSession
   *    cannot. `canary_ok` (≤ 1.5×) gates artifact qualification;
   *  - the printed line reports the best QUALIFYING artifact (lowest
   *    clean total among this run and bench_history entries with the
-  *    same query-set fingerprint + SF), so one contended driver-side
-  *    execution cannot become the round's official record when a
-  *    clean same-code measurement exists. `selection` says which
-  *    artifact was chosen and what THIS run measured — nothing is
-  *    hidden, the official total is just no longer last-write-wins;
+  *    same query-set fingerprint, SF and CODE stamp — a hash of the
+  *    compiled classes, [[codeHash]]), so one contended execution
+  *    cannot become the round's official record when a
+  *    clean same-code measurement exists, and slower code can never
+  *    hide behind an older, faster build's record. `selection` says
+  *    which artifact was chosen and what THIS run measured — nothing
+  *    is hidden, the official total is just no longer last-write-wins;
   *  - `best_known_total` = Σ per-query min across all clean same-SF
   *    artifacts including this run — the floor the official total
   *    should sit near (within ~15%) on an uncontended host;
@@ -120,62 +122,20 @@ object Bench {
         .map("%02x".format(_)).mkString.take(12)
     }
 
+    // code identity: only artifacts of this exact build may stand in
+    // for this run in selection
+    val code = codeHash()
+
     // ---- parse prior artifacts ONCE, up front (the canary needs the
     // all-time q1_agg best before the suite runs) ----
-    final case class Artifact(file: String, total: Double,
-        queries: Map[String, Double], qualifies: Boolean, fp: String)
     val artifacts: Seq[Artifact] = {
       val files = (Option(new java.io.File(".").listFiles()).getOrElse(Array())
         .filter(_.getName.matches("BENCH_r\\d+\\.json")) ++
         Option(new java.io.File("bench_history").listFiles()).getOrElse(Array())
           .filter(_.getName.endsWith(".json")))
       files.toSeq.flatMap { f =>
-        val txt = scala.io.Source.fromFile(f).mkString.replace("\\\"", "\"")
-        // same-SF artifacts only: a full-suite run against another
-        // dataset (e.g. the 3× scaling study) records times that are
-        // meaningless as baselines for this one. Artifacts that
-        // predate the sf field pass (they were all sf0.1 driver runs).
-        val sfOk = !txt.contains("\"sf\":") || txt.contains("\"sf\":\"" + sfDir + "\"")
-        // CLEAN artifacts only: runMeasured records a failed rep's
-        // (fast) elapsed time into `times`, so any artifact with a
-        // non-empty errors map may carry anomalously small per-query
-        // entries that would ratchet the min-baseline down into
-        // unfixable false regressions — skip the whole artifact
-        val errOk = txt.contains("\"errors\":{}")
-        // SAME-CPUS artifacts only (r15 verdict #1: the driver's
-        // cpus=8 run parsed the best *historical* cpus=32 record, so
-        // its whole scaling block read 1.0). Artifacts now stamp
-        // `cpus`; artifacts that predate the field count as cpus=32
-        // records (every builder/driver record run used 32 — the one
-        // known exception, the r15 driver c8 run, wrote a 129 s total
-        // that can never outrank the 124.5 s record it sits beside).
-        val artCpus = """"cpus"\s*:\s*"?(\d+)"?""".r
-          .findFirstMatchIn(txt).map(_.group(1))
-        val cpusOk = artCpus match {
-          case Some(c) => c == cpus
-          case None    => cpus == "32"
-        }
-        if (!errOk || !sfOk || !cpusOk) Nil else {
-          val qs = """"queries":\{([^}]*)\}""".r.findFirstMatchIn(txt).toSeq.flatMap {
-            _.group(1).split(",").flatMap { kv =>
-              kv.split(":") match {
-                case Array(k, v) => scala.util.Try(
-                  k.replace("\"", "").trim -> v.toDouble).toOption
-                case _ => None
-              }
-            }
-          }.toMap
-          if (qs.isEmpty) Nil else {
-            // artifacts predating the canary protocol never qualify
-            // for selection (their cleanliness is unknowable — r7's
-            // bad artifact was exactly a sentinel-passing one); their
-            // per-query mins still feed the regression baseline
-            val q = txt.contains("\"qualifies\":true")
-            val fp = """"fingerprint":"([0-9a-f]+)"""".r
-              .findFirstMatchIn(txt).map(_.group(1)).getOrElse("")
-            Seq(Artifact(f.getName, qs.values.sum, qs, q, fp))
-          }
-        }
+        val src = scala.io.Source.fromFile(f)
+        try parseArtifact(f.getName, src.mkString, sfDir, cpus) finally src.close()
       }
     }
     // per-query best-known baseline: MIN across prior clean artifacts
@@ -268,9 +228,8 @@ object Bench {
     // investigated).
     val recentQ1 = artifacts
       .filter(_.qualifies)
-      .flatMap(a => """bench_(\d+)\.json""".r.findFirstMatchIn(a.file)
-        .flatMap(m => a.queries.get("q1_agg")
-          .map(q => (m.group(1).toLong, q))))
+      .flatMap(a => a.file.stripPrefix("bench_").stripSuffix(".json")
+        .toLongOption.flatMap(ts => a.queries.get("q1_agg").map(q => (ts, q))))
       .sortBy(-_._1).take(7).map(_._2)
     val recentMedianQ1 =
       if (recentQ1.size >= 3) Some(recentQ1.sorted.apply(recentQ1.size / 2))
@@ -324,7 +283,7 @@ object Bench {
         steady + "}"
     }.mkString("{", ",", "}")
     val protocolFields =
-      s""""reps":$reps,"cpus":$cpus,"sentinel_start_sec":$sentStart,"sentinel_end_sec":$sentEnd,"sentinel_ratio":${r2(sentRatio)},"canary_samples":$canaryJson,"canary_ref_sec":${r2(canaryRef)},"canary_clamp_engaged":$canaryClampEngaged,"canary_ratio":${r2(canaryRatio)},"canary_ok":$canaryOk,"qualifies":$qualifies,"fingerprint":"$fingerprint","store_incr":$storeIncrJson,"best_known_total":$bestKnownTotal,"sf":"$sfDir""""
+      s""""reps":$reps,"cpus":$cpus,"sentinel_start_sec":$sentStart,"sentinel_end_sec":$sentEnd,"sentinel_ratio":${r2(sentRatio)},"canary_samples":$canaryJson,"canary_ref_sec":${r2(canaryRef)},"canary_clamp_engaged":$canaryClampEngaged,"canary_ratio":${r2(canaryRatio)},"canary_ok":$canaryOk,"qualifies":$qualifies,"fingerprint":"$fingerprint","code":"$code","store_incr":$storeIncrJson,"best_known_total":$bestKnownTotal,"sf":"$sfDir""""
 
     // this run's own record — always written to bench_history verbatim.
     // canary_ratio/qualifies describe THIS run by construction here;
@@ -339,22 +298,13 @@ object Bench {
       try out.println(thisRunJson) finally out.close()
     }
 
-    // official line: the best qualifying same-fingerprint artifact
-    // (this run included). `selection` keeps the record honest: it
-    // names the chosen artifact and what this very run measured.
-    // When $SPARK_GRAFT_CPUS differs from the record default the
-    // parseable output must reflect THIS run (r15 verdict #1: the
-    // driver re-runs the bench at a lower core count to measure how
-    // each query scales — serving it a historical record makes that
-    // measurement blind), so historical artifacts — already filtered
-    // to same-cpus above — are additionally excluded from selection.
-    val candidates =
-      (if (qualifies && only.isEmpty) Seq(Artifact("this_run", total, resMap, true, fingerprint)) else Nil) ++
-      (if (cpus == recordDefaultCpus)
-         artifacts.filter(a => a.qualifies && a.fp == fingerprint)
-       else Nil)
-    val official = candidates.sortBy(_.total).headOption
-      .getOrElse(Artifact("this_run_unqualified", total, resMap, false, fingerprint))
+    // official line: the best qualifying same-fingerprint, same-code
+    // artifact (this run included) — see [[select]]. `selection`
+    // keeps the record honest: it names the chosen artifact and what
+    // this very run measured.
+    val (official, candidates) = select(
+      Artifact("this_run", total, resMap, qualifies, fingerprint, code),
+      only.isEmpty, artifacts, cpus == recordDefaultCpus)
     val selJson = s""""selection":{"from":"${official.file}","this_run_total":$total,"this_run_qualifies":$qualifies,"candidates":${candidates.size}}"""
     val officialQs = names.map(n => n -> official.queries.getOrElse(n, resMap(n)))
     // SELF-CONSISTENCY (r9 verdict): the official line's regressions
@@ -368,7 +318,7 @@ object Bench {
     // original names.
     val officialRegressions = regressionsOf(officialQs)
     val officialProtocolFields =
-      s""""reps":$reps,"cpus":$cpus,"this_run_sentinel_start_sec":$sentStart,"this_run_sentinel_end_sec":$sentEnd,"this_run_sentinel_ratio":${r2(sentRatio)},"this_run_canary_samples":$canaryJson,"canary_ref_sec":${r2(canaryRef)},"canary_clamp_engaged":$canaryClampEngaged,"this_run_canary_ratio":${r2(canaryRatio)},"this_run_canary_ok":$canaryOk,"this_run_qualifies":$qualifies,"fingerprint":"$fingerprint","best_known_total":$bestKnownTotal,"sf":"$sfDir""""
+      s""""reps":$reps,"cpus":$cpus,"this_run_sentinel_start_sec":$sentStart,"this_run_sentinel_end_sec":$sentEnd,"this_run_sentinel_ratio":${r2(sentRatio)},"this_run_canary_samples":$canaryJson,"canary_ref_sec":${r2(canaryRef)},"canary_clamp_engaged":$canaryClampEngaged,"this_run_canary_ratio":${r2(canaryRatio)},"this_run_canary_ok":$canaryOk,"this_run_qualifies":$qualifies,"fingerprint":"$fingerprint","code":"$code","best_known_total":$bestKnownTotal,"sf":"$sfDir""""
     val fullLine = s"""{"metric":"total","value":${officialQs.map(_._2).sum},"unit":"sec","queries":${qJson(officialQs)},"errors":$errJson,"regressions":$officialRegressions,$selJson,$officialProtocolFields}"""
     println(fullLine)
     // The driver records only the LAST ~2000 chars of output; at 135
@@ -398,8 +348,139 @@ object Bench {
       if (used + c <= budget) { kept += (k -> r3(v)); used += c }
     }
     val compact =
-      s"""{"metric":"total","value":${r2(officialQs.map(_._2).sum)},"unit":"sec","queries":${qJson(kept.toSeq)},"queries_n":${officialQs.size},"queries_omitted":${officialQs.size - kept.size},"full_record":"bench_official.json","n_errors":${errors.size},"this_run_total":${r2(total)},"qualifies":$qualifies,"canary_ratio":${r2(canaryRatio)},"cpus":$cpus,"best_known_total":${r2(bestKnownTotal)},"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${r2(officialQs.map(_._2).sum)},"unit":"sec","queries":${qJson(kept.toSeq)},"queries_n":${officialQs.size},"queries_omitted":${officialQs.size - kept.size},"full_record":"bench_official.json","n_errors":${errors.size},"this_run_total":${r2(total)},"qualifies":$qualifies,"canary_ratio":${r2(canaryRatio)},"cpus":$cpus,"code":"$code","best_known_total":${r2(bestKnownTotal)},"sf":"$sfDir"}"""
     println(compact)
     spark.stop()
+  }
+
+  /** one prior bench record as selection and the baselines read it.
+    * `fp` is the query-set fingerprint, `code` the [[codeHash]] of the
+    * build that measured it ("" for records that predate the stamp).
+    */
+  final case class Artifact(file: String, total: Double,
+      queries: Map[String, Double], qualifies: Boolean, fp: String,
+      code: String)
+
+  /** the official artifact and the candidates it was chosen from: the
+    * lowest-total candidate, where the candidates are `thisRun` when
+    * it qualifies and `thisRunEligible` (a full-suite run), plus — only
+    * when `useHistory` (the record core count) — every qualifying
+    * prior artifact with this run's fingerprint AND code stamp. A run
+    * at another core count measures how each query scales, so its line
+    * must be this run (r15 verdict #1). With no candidate the
+    * official artifact is this run, unqualified. Historical artifacts
+    * of other code still feed the regression baseline; they can never
+    * be the record.
+    */
+  def select(thisRun: Artifact, thisRunEligible: Boolean,
+             prior: Seq[Artifact], useHistory: Boolean)
+      : (Artifact, Seq[Artifact]) = {
+    val candidates =
+      (if (thisRun.qualifies && thisRunEligible) Seq(thisRun) else Nil) ++
+      (if (useHistory)
+         prior.filter(a => a.qualifies && a.fp == thisRun.fp &&
+           a.code == thisRun.code)
+       else Nil)
+    val official = candidates.sortBy(_.total).headOption
+      .getOrElse(thisRun.copy(file = "this_run_unqualified", qualifies = false))
+    (official, candidates)
+  }
+
+  private lazy val json = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** the records of one artifact file that count as baselines for a
+    * run against `sfDir` at `cpus` cores. A bench_history file holds
+    * one record; a BENCH_r*.json file wraps a run's stdout tail as a
+    * string, whose complete JSON lines are its
+    * records (a truncated first line is skipped). A record counts
+    * when:
+    *  - it ran against the same SF: a run against another dataset
+    *    (e.g. the 3× scaling study) is no baseline for this one.
+    *    Records that predate the `sf` field pass (they were all sf0.1
+    *    record runs);
+    *  - it is CLEAN: an empty `errors` map, or `n_errors` 0 on the
+    *    compact line. runMeasured records a failed rep's (fast)
+    *    elapsed time, so an artifact with errors would ratchet the
+    *    min-baseline down into unfixable false regressions;
+    *  - it ran at the same core count (r15 verdict #1). Records that
+    *    predate the `cpus` field take the wrapper's, else count as
+    *    cpus=32 records (every record run used 32);
+    *  - it has a non-empty `queries` map.
+    * Only records stamped `qualifies: true` may be selected; records
+    * that predate the canary protocol never qualify (their
+    * cleanliness is unknowable — r7's bad artifact was exactly a
+    * sentinel-passing one) but their per-query mins still feed the
+    * regression baseline. A record's total is its `value` (the compact
+    * line prunes its `queries` map), else the sum of its queries.
+    */
+  def parseArtifact(file: String, text: String, sfDir: String,
+                    cpus: String): Seq[Artifact] = {
+    import com.fasterxml.jackson.databind.JsonNode
+    import scala.jdk.CollectionConverters._
+    def parse(s: String): Option[JsonNode] =
+      scala.util.Try(json.readTree(s)).toOption.filter(_.isObject)
+    parse(text).toSeq.flatMap { root =>
+      val records =
+        if (root.has("tail"))
+          root.get("tail").asText.linesIterator
+            .map(_.stripPrefix("[info] ").trim).filter(_.startsWith("{"))
+            .flatMap(parse).toSeq
+        else Seq(root)
+      val outerCpus = Option(root.get("cpus")).map(_.asText)
+      records.flatMap { r =>
+        val sfOk = !r.has("sf") || r.get("sf").asText == sfDir
+        val clean = (r.has("errors") && r.get("errors").isObject &&
+            r.get("errors").size == 0) ||
+          (r.has("n_errors") && r.get("n_errors").asInt(-1) == 0)
+        val cpusOk = Option(r.get("cpus")).map(_.asText).orElse(outerCpus)
+          .getOrElse("32") == cpus
+        val queries = Option(r.get("queries")).filter(_.isObject).toSeq
+          .flatMap(_.properties.asScala)
+          .collect { case e if e.getValue.isNumber =>
+            e.getKey -> e.getValue.asDouble }
+          .toMap
+        if (!sfOk || !clean || !cpusOk || queries.isEmpty) Nil
+        else Seq(Artifact(file,
+          Option(r.get("value")).filter(_.isNumber).map(_.asDouble)
+            .getOrElse(queries.values.sum),
+          queries, r.path("qualifies").asBoolean(false),
+          r.path("fingerprint").asText(""), r.path("code").asText("")))
+      }
+    }
+  }
+
+  /** code identity of this build: SHA-1 over the name and bytes of
+    * every class file in the code source `Bench` was loaded from (the
+    * classes directory, or the jar). Two runs share the stamp only
+    * when they ran the same compiled program; a source change that
+    * changes any class — a line moved shifts its line table — changes
+    * it.
+    */
+  def codeHash(): String = {
+    import java.nio.file.Files
+    import scala.jdk.CollectionConverters._
+    val md = java.security.MessageDigest.getInstance("SHA-1")
+    def add(name: String, bytes: Array[Byte]): Unit = {
+      md.update(name.getBytes("UTF-8")); md.update(bytes)
+    }
+    val src = new java.io.File(
+      getClass.getProtectionDomain.getCodeSource.getLocation.toURI)
+    if (src.isDirectory) {
+      val root = src.toPath
+      val walk = Files.walk(root)
+      try walk.iterator.asScala.map(root.relativize(_).toString)
+        .filter(_.endsWith(".class")).toSeq.sorted
+        .foreach(rel => add(rel, Files.readAllBytes(root.resolve(rel))))
+      finally walk.close()
+    } else {
+      val jar = new java.util.jar.JarFile(src)
+      try jar.entries.asScala.filter(_.getName.endsWith(".class")).toSeq
+        .sortBy(_.getName).foreach { e =>
+          val in = jar.getInputStream(e)
+          try add(e.getName, in.readAllBytes()) finally in.close()
+        }
+      finally jar.close()
+    }
+    md.digest().map("%02x".format(_)).mkString.take(12)
   }
 }

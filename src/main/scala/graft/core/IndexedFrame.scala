@@ -2,6 +2,7 @@ package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.TokenOps
 
 /** How to index one column: produce an array of index tokens from it.
   *
@@ -17,14 +18,20 @@ object Analyzers {
   val identity: Column => Column = c => array(c.cast("string"))
   /** whitespace tokenizer (DfTest.scala:70 splits on " ") */
   val whitespace: Column => Column = c => split(c.cast("string"), " ")
-  /** lowercased whitespace tokenizer */
-  val lowerWhitespace: Column => Column = c => split(lower(c.cast("string")), " ")
+  /** lowercased whitespace tokenizer. Lowercases with
+    * [[graft.functions.TokenOps.lower]], which equals Spark's `lower`
+    * but never loads ICU for ASCII text: Spark's `lower` builds ICU's
+    * case table on its first call in a JVM (1.4–1.6 s, other tasks
+    * blocked meanwhile). A non-ASCII value still goes through Spark's
+    * ICU path.
+    */
+  val lowerWhitespace: Column => Column = c => split(TokenOps.lower(c.cast("string")), " ")
 
   /** character n-grams of each whitespace token (edge-padded by the
     * token itself when shorter) — substring-searchable index entries.
     */
   def charNgrams(n: Int): Column => Column = c =>
-    flatten(transform(split(lower(c.cast("string")), " "), tok =>
+    flatten(transform(split(TokenOps.lower(c.cast("string")), " "), tok =>
       when(length(tok) <= n, array(tok)).otherwise(
         transform(sequence(lit(1), length(tok) - (n - 1)),
           i => tok.substr(i, lit(n))))))
@@ -34,7 +41,7 @@ object Analyzers {
     * stemmer the same way.
     */
   val stemmed: Column => Column = c =>
-    transform(split(lower(c.cast("string")), " "), tok =>
+    transform(split(TokenOps.lower(c.cast("string")), " "), tok =>
       when(tok.endsWith("ing") && length(tok) > 5, expr_strip(tok, 3))
         .when(tok.endsWith("ed") && length(tok) > 4, expr_strip(tok, 2))
         .when(tok.endsWith("es") && length(tok) > 4, expr_strip(tok, 2))

@@ -1,33 +1,38 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftShims}
+import org.apache.spark.sql.{Column, GraftShims, functions}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** k-permutation MinHash signature (Broder 1997) of a shingle array
-  * as ONE native codegen'd expression: per shingle, xxhash64 (same
-  * XXH64/seed-42 as Spark's `xxhash64()` builtin) folded to
+  * as ONE native codegen'd expression: per shingle, a 64-bit token
+  * hash ([[TokenHash]]: xxhash64, or the top 60 bits of md5) folded to
   * x = h mod p (p = 2³¹−1), then min over (aᵢ·x + bᵢ) mod p per
   * permutation — all in a single pass over the array.
   *
   * Why native: the declarative spellings are either (a) explode +
   * groupBy with k min() aggregates — a full shuffle of the shingle
-  * stream (~10× the text bytes at 100 TB), or (b) k higher-order
-  * `transform`/`array_min` calls — which are CodegenFallback in
-  * Spark: interpreted per row with k intermediate boxed arrays
-  * (measured 12× slower than the grouped build at sf0.1). This
-  * expression is MAP-ONLY, allocation-light, stays inside whole-stage
-  * codegen, and is stateless — usable in streaming projections.
+  * stream (~10× the text bytes at 100 TB), and a k-aggregate hash
+  * aggregate whose first compile stalls every task of the stage, or
+  * (b) k higher-order `transform`/`array_min` calls — which are
+  * CodegenFallback in Spark: interpreted per row with k intermediate
+  * boxed arrays (measured 12× slower than the grouped build at
+  * sf0.1). This expression is MAP-ONLY, allocation-light, stays
+  * inside whole-stage codegen, and is stateless — usable in streaming
+  * projections.
   *
-  * Signature values are bit-identical to both declarative spellings
-  * (same hash, same permutation family — spec-checked); an empty
-  * shingle array yields an array of k nulls, mirroring
+  * Signature values are bit-identical to the grouped spelling of each
+  * family (same hash, same permutation family — spec-checked); an
+  * empty shingle array yields an array of k nulls, mirroring
   * `array_min(empty) = null`; null elements are skipped (they cannot
   * occur in arrays built by `array_join`).
   */
-case class MinHashSig(child: Expression, k: Int) extends UnaryExpression {
+case class MinHashSig(child: Expression, k: Int,
+                      hash: TokenHash = TokenHash.XxHash64)
+    extends UnaryExpression {
 
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
     child.dataType match {
@@ -48,7 +53,7 @@ case class MinHashSig(child: Expression, k: Int) extends UnaryExpression {
 
   override def nullSafeEval(input: Any): Any = {
     val arr = input.asInstanceOf[ArrayData]
-    val out = MinHash.signature(arr, as, bs)
+    val out = MinHash.signature(arr, as, bs, hash == TokenHash.Md5Top60)
     new GenericArrayData(out.asInstanceOf[Array[Any]])
   }
 
@@ -58,7 +63,8 @@ case class MinHashSig(child: Expression, k: Int) extends UnaryExpression {
     nullSafeCodeGen(ctx, ev, v => {
       val out = ctx.freshName("out")
       s"""
-         |Object[] $out = graft.functions.MinHash.signature($v, $aRef, $bRef);
+         |Object[] $out = graft.functions.MinHash.signature($v, $aRef, $bRef,
+         |  ${hash == TokenHash.Md5Top60});
          |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
        """.stripMargin
     })
@@ -66,6 +72,32 @@ case class MinHashSig(child: Expression, k: Int) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): MinHashSig =
     copy(child = newChild)
+}
+
+/** the token hash family of a MinHash signature: which hash of a
+  * shingle's UTF-8 bytes is reduced mod p before the permutations,
+  * and which hash keys each band's bucket. Signatures, and the
+  * buckets banded from them, only meet within one family.
+  */
+sealed trait TokenHash {
+  /** the bucket key of one band: this family's hash of the band's
+    * comma-joined signature values
+    */
+  def bandHash(band: Column): Column
+}
+
+object TokenHash {
+  /** Spark's `xxhash64` (seed 42): the native family */
+  case object XxHash64 extends TokenHash {
+    def bandHash(band: Column): Column = functions.xxhash64(band)
+  }
+  /** the first 60 bits of `md5` (`conv(substring(md5(s), 1, 15), 16,
+    * 10)`) and md5 band keys: every step has a plain-SQL spelling, so
+    * another engine (the DuckDB oracle) recomputes the signatures
+    */
+  case object Md5Top60 extends TokenHash {
+    def bandHash(band: Column): Column = functions.md5(band)
+  }
 }
 
 /** count of positions where two equal-length long arrays agree — the
@@ -124,11 +156,35 @@ object MinHash {
     (0 until k).map(_ => (next() % (MersenneP - 1) + 1, next() % MersenneP))
   }
 
-  /** shared interpreted/codegen kernel: one pass over the shingles,
-    * k running mins. All operands are non-negative, so plain % is
-    * exactly Spark's pmod here.
+  private val md5s = ThreadLocal.withInitial[java.security.MessageDigest](
+    () => java.security.MessageDigest.getInstance("MD5"))
+
+  /** token hash of one shingle reduced mod p: xxhash64 (seed 42) when
+    * `md` is null, else the first 8 md5 digest bytes read big-endian
+    * and shifted right by 4 — the 60-bit value of the digest's first
+    * 15 hex digits
     */
-  def signature(arr: ArrayData, as: Array[Long], bs: Array[Long]): Array[Object] = {
+  private def tokenX(s: UTF8String, md: java.security.MessageDigest): Long =
+    if (md == null) {
+      val h = org.apache.spark.sql.catalyst.expressions.XXH64.hashUTF8String(s, 42L)
+      ((h % MersenneP) + MersenneP) % MersenneP
+    } else {
+      md.update(s.getByteBuffer)
+      val d = md.digest()
+      var top = 0L
+      var i = 0
+      while (i < 8) { top = (top << 8) | (d(i) & 0xffL); i += 1 }
+      (top >>> 4) % MersenneP
+    }
+
+  /** shared interpreted/codegen kernel: one pass over the shingles,
+    * k running mins; `md5` picks [[TokenHash.Md5Top60]] over
+    * xxhash64. All operands are non-negative, so plain % is exactly
+    * Spark's pmod here.
+    */
+  def signature(arr: ArrayData, as: Array[Long], bs: Array[Long],
+                md5: Boolean): Array[Object] = {
+    val md = if (md5) md5s.get() else null
     val k = as.length
     val mins = new Array[Long](k)
     java.util.Arrays.fill(mins, Long.MaxValue)
@@ -136,9 +192,7 @@ object MinHash {
     var i = 0
     while (i < n) {
       if (!arr.isNullAt(i)) {
-        val h = org.apache.spark.sql.catalyst.expressions.XXH64
-          .hashUTF8String(arr.getUTF8String(i), 42L)
-        val x = ((h % MersenneP) + MersenneP) % MersenneP
+        val x = tokenX(arr.getUTF8String(i), md)
         var j = 0
         while (j < k) {
           val hx = ((x * as(j)) % MersenneP + bs(j)) % MersenneP
@@ -170,8 +224,9 @@ object MinHash {
   }
 
   /** codegen'd k-permutation MinHash signature of an array<string> */
-  def minhashSig(shingles: Column, k: Int): Column =
-    GraftShims.column(MinHashSig(GraftShims.expression(shingles), k))
+  def minhashSig(shingles: Column, k: Int,
+                 hash: TokenHash = TokenHash.XxHash64): Column =
+    GraftShims.column(MinHashSig(GraftShims.expression(shingles), k, hash))
 
   /** codegen'd per-pair signature agreement count */
   def sigMatchCount(a: Column, b: Column): Column =

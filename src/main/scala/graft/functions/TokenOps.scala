@@ -2,18 +2,21 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, GraftShims}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.expressions.{Expression, String2StringExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.util.{ArrayData, CollationFactory, CollationSupport, GenericArrayData}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native token-array kernels for the text/dedup hot paths. Both
-  * exist for the same reason as [[MinHashSig]]: the declarative
-  * spellings use HigherOrderFunctions (`transform`, `filter`), which
-  * are CodegenFallback in Spark — interpreted per row with boxed
-  * intermediate arrays. These run inside whole-stage codegen.
-  * Each is spec-checked value-identical to the spelling it replaced
-  * (the DuckDB hash oracles enforce it end-to-end as well).
+/** Native token kernels for the text/dedup hot paths. The two
+  * token-array kernels exist for the same reason as [[MinHashSig]]:
+  * the declarative spellings use HigherOrderFunctions (`transform`,
+  * `filter`), which are CodegenFallback in Spark — interpreted per row
+  * with boxed intermediate arrays. These run inside whole-stage
+  * codegen. [[lower]] is the tokenizer's lowercasing step without
+  * Spark's one-time ICU table build ([[LowerCase]]). Each is
+  * spec-checked value-identical to the spelling it replaced (the
+  * DuckDB hash oracles enforce it end-to-end as well).
   */
 object TokenOps {
 
@@ -61,6 +64,20 @@ object TokenOps {
     }
     c
   }
+
+  /** `lower(s)` for a string of collation `collationId`, equal to
+    * Spark's `lower` on every input: an all-ASCII UTF8_BINARY string
+    * is lowercased byte by byte; every other input goes through
+    * Spark's own `CollationSupport.Lower`.
+    */
+  def lower(s: UTF8String, collationId: Int, useICU: Boolean): UTF8String =
+    if (collationId == CollationFactory.UTF8_BINARY_COLLATION_ID && s.isFullAscii)
+      s.toLowerCaseAscii
+    else CollationSupport.Lower.exec(s, collationId, useICU)
+
+  /** codegen'd `lower` (see [[LowerCase]]) */
+  def lower(text: Column): Column =
+    GraftShims.column(LowerCase(GraftShims.expression(text)))
 
   /** codegen'd w-token shingle array (see [[shingles]]) */
   def wordShingles(tokens: Column, w: Int, distinct: Boolean): Column =
@@ -128,5 +145,40 @@ case class CountInSet(child: Expression, words: Seq[String])
   }
 
   override protected def withNewChildInternal(newChild: Expression): CountInSet =
+    copy(child = newChild)
+}
+
+/** `lower(child)` with the same result as Catalyst's `Lower` on every
+  * input and collation, but an all-ASCII UTF8_BINARY string never
+  * reaches ICU. Under the default `spark.sql.icu.caseMappings.enabled`
+  * Spark's `lower` calls `CollationAwareUTF8String`, whose class
+  * initializer title-cases every Unicode code point once per JVM
+  * (1.4–1.6 s, while every other task thread waits on the class-init
+  * lock), even when each string it then sees is ASCII. Non-ASCII
+  * strings, other collations and `useICU` off still take Spark's path,
+  * so a non-ASCII row still loads ICU. `useICU` is read from `SQLConf`
+  * as `Lower` reads it.
+  */
+case class LowerCase(child: Expression)
+    extends UnaryExpression with String2StringExpression {
+
+  @transient private lazy val collationId: Int =
+    child.dataType.asInstanceOf[StringType].collationId
+  @transient private lazy val useICU: Boolean =
+    SQLConf.get.getConf(SQLConf.ICU_CASE_MAPPINGS_ENABLED)
+
+  override def nullIntolerant: Boolean = true
+  // Spark's name: an unaliased column and its SQL text read as they did
+  // under functions.lower
+  override def prettyName: String = "lower"
+
+  override def convert(v: UTF8String): UTF8String =
+    TokenOps.lower(v, collationId, useICU)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c =>
+      s"graft.functions.TokenOps.lower($c, $collationId, $useICU)")
+
+  override protected def withNewChildInternal(newChild: Expression): LowerCase =
     copy(child = newChild)
 }

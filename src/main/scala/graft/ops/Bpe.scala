@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.TokenOps
 
 /** BPE tokenizer TRAINING (Sennrich et al. 2016) — the iterative
   * merge-learning loop that [[TextAnalysis]]'s `text_bpe_pairs` (one
@@ -57,7 +58,7 @@ object Bpe {
     val preexisting = spark.sparkContext.getPersistentRDDs.keySet
     // the single corpus pass: distinct words with frequencies
     val words = df.where(text.isNotNull)
-      .select(explode(split(lower(text), " ")).as("w"))
+      .select(explode(split(TokenOps.lower(text), " ")).as("w"))
       .where(length(col("w")) > 0)
       .groupBy("w").agg(count(lit(1)).as("wc"))
     // initial symbolization: one char per symbol

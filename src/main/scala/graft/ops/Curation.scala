@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.TokenOps
 
 /** Training-data curation operators (SURVEY §2c.36-39): benchmark
   * decontamination, deterministic stratified / mixture sampling, and
@@ -24,7 +25,7 @@ object Curation {
     * let any multi-line variant of a benchmark item slip the check.
     */
   def normTokens(text: Column): Column =
-    split(trim(regexp_replace(lower(text), "[^a-z0-9]+", " ")), " ")
+    split(trim(regexp_replace(TokenOps.lower(text), "[^a-z0-9]+", " ")), " ")
 
   /** normalized distinct k-shingles of a STATIC eval/benchmark corpus
     * — the static side of the streaming face
@@ -523,7 +524,7 @@ object Curation {
     */
   private def dsirBuckets(df: DataFrame, text: Column, id: Column,
                           isTarget: Column, nBuckets: Int): DataFrame = {
-    val toks = split(lower(text), " ")
+    val toks = split(TokenOps.lower(text), " ")
     df.select(id.as("doc_id"), isTarget.as("is_t"),
         explode(graft.functions.TokenOps.wordShingles(toks, 2,
           distinct = false)).as("bg"))

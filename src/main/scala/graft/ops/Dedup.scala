@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.{TokenHash, TokenOps}
 
 /** Deduplication operators for large-scale corpus pipelines
   * (SURVEY §2c.23-27). Design target is 100 TB: nothing here ever
@@ -31,7 +32,7 @@ object Dedup {
     * CodegenFallback — interpreted per row).
     */
   def shingles(df: DataFrame, text: Column, id: Column, w: Int = 3): DataFrame = {
-    val toks = split(lower(text), " ")
+    val toks = split(TokenOps.lower(text), " ")
     df.select(id.as("doc_id"),
       explode(graft.functions.TokenOps.wordShingles(toks, w, distinct = true))
         .as("shingle"))
@@ -62,7 +63,7 @@ object Dedup {
   private def shinglePairCounts(df: DataFrame, text: Column, id: Column,
                                 w: Int, maxShingleFreq: Long)
       : (DataFrame, DataFrame) = {
-    val toks = split(lower(text), " ")
+    val toks = split(TokenOps.lower(text), " ")
     val shArr = graft.functions.TokenOps.wordShingles(toks, w, distinct = true)
     val sizes = df.select(id.as("doc_id"), size(shArr).cast("long").as("sz"))
     val capped = Skew.dropHotKeys(
@@ -745,22 +746,26 @@ object Dedup {
       .select(col("doc_id"), array((0 until k).map(i => col(s"h$i")): _*).as("sig"))
   }
 
-  /** map-only MinHash signature as ONE column expression — no
-    * explode, no groupBy, no shuffle: per row, token hashes are a
-    * transient array and each permutation takes `array_min`. Same
-    * permutation family and shingling as [[minhashSignatures]]
-    * (spec-checked equal), so signatures are interchangeable. This is
-    * the streaming-safe form: a stateless projection composes with
-    * watermarks/dropDuplicates where an aggregation could not.
+  /** map-only MinHash signature of one text column as ONE column
+    * expression — no explode, no groupBy, no shuffle: lowercased
+    * whitespace tokens, distinct w-word shingles, then the
+    * [[graft.functions.MinHashSig]] kernel over `hash`'s token hashes.
+    * Same permutation family and shingling as the grouped builds —
+    * [[minhashSignatures]] for xxhash64, KernelEquivSpec's reference
+    * for [[graft.functions.TokenHash.Md5Top60]] — and spec-checked
+    * equal to them, so signatures are interchangeable within a family.
+    * This is the streaming-safe form: a stateless projection composes
+    * with watermarks/dropDuplicates where an aggregation could not.
     */
-  def minhashSigCol(text: Column, w: Int = 3, k: Int = 16): Column = {
-    val toks = split(lower(text), " ")
+  def minhashSigCol(text: Column, w: Int = 3, k: Int = 16,
+                    hash: TokenHash = TokenHash.XxHash64): Column = {
+    val toks = split(TokenOps.lower(text), " ")
     // both stages are native codegen'd kernels — the former
     // transform/array_min spellings were CodegenFallback (interpreted,
     // boxed intermediate arrays per row; the k-permutation loop alone
     // measured 12× slower than even the grouped shuffle build)
     graft.functions.MinHash.minhashSig(
-      graft.functions.TokenOps.wordShingles(toks, w, distinct = true), k)
+      TokenOps.wordShingles(toks, w, distinct = true), k, hash)
   }
 
   /** MinHash + LSH banding near-dup pairs (§2c.25): band the
@@ -815,42 +820,15 @@ object Dedup {
       .orderBy("a", "b")
   }
 
-  /** the portable family's (doc_id, sig) signature table: md5-top-60
-    * token hash through the shared (a·x+b) mod p permutations — the
-    * piece every portable MinHash consumer (self-pairs, cross-corpus)
-    * builds from, one definition so their signatures are
-    * interchangeable exactly like the xxhash64 family's are.
-    */
-  private def portableSigTable(df: DataFrame, text: Column, id: Column,
-                               k: Int): DataFrame = {
-    // top 60 bits of md5 (15 hex chars → fits a long) mod p: DuckDB
-    // mirrors it as ('0x' || substr(md5(s),1,15))::BIGINT % p
-    val x = pmod(
-      conv(substring(md5(col("shingle")), 1, 15), 16, 10).cast("long"),
-      lit(MersenneP))
-    val aggs = permParams(k).zipWithIndex.map { case ((a, b), i) =>
-      min(pmod(pmod(col("x") * a, lit(MersenneP)) + b, lit(MersenneP)))
-        .as(s"h$i")
-    }
-    // gated parallelism barrier ([[Skew.spread]]): without it the
-    // map-side partial aggregation of the md5'd shingle stream runs
-    // inside however few splits a small corpus file scans as
-    shingles(Skew.spread(df, id), text, id)
-      .select(col("doc_id"), x.as("x"))
-      .groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
-      .select(col("doc_id"),
-        array((0 until k).map(i => col(s"h$i")): _*).as("sig"))
-  }
-
   /** [[bandedSignatures]] over the portable md5 family — the banded
     * signature table an incremental pipeline persists when its corpus
-    * signatures must be recomputable outside Spark.
+    * signatures must be recomputable outside Spark. The same map-only
+    * build as the xxhash64 family; only the token and band hashes
+    * differ ([[graft.functions.TokenHash.Md5Top60]]).
     */
   def bandedSignaturesPortable(df: DataFrame, text: Column, id: Column,
                                k: Int = 32, bands: Int = 8): DataFrame =
-    portableSigTable(df, text, id, k)
-      .select(col("doc_id"), col("sig"),
-        posexplode(bandBucketHashes(k, bands, md5)).as(Seq("band", "bucket")))
+    bandedSignatures(df, text, id, k, bands, TokenHash.Md5Top60)
 
   /** MinHash + LSH banding with an ENGINE-PORTABLE hash family
     * (§2c.25e): the token hash is the top 60 bits of `md5(shingle)`
@@ -868,13 +846,14 @@ object Dedup {
     * pipeline uses when signatures must be recomputable outside
     * Spark.
     *
-    * Scale shape: md5 computed ONCE per shingle in the projection
-    * (the k permutations are long multiply-mods, not k hash calls),
-    * then one exchange for the signature build (k min() aggregates
-    * over (doc_id, x) long rows, map-side combined), then the
-    * standard banded bucket join with the [[Skew.dropHotKeys]] cap
-    * and the codegen'd [[graft.functions.MinHash.sigMatchCount]]
-    * verify.
+    * Scale shape: the same map-only signature build as
+    * [[minhashLsh]] ([[bandedSignatures]]): md5 computed ONCE per
+    * shingle inside the [[graft.functions.MinHashSig]] kernel (the k
+    * permutations are long multiply-mods, not k hash calls), no
+    * explode and no grouped build; one exchange ships (doc_id, k
+    * longs) rows. Then the standard banded bucket join with the
+    * [[Skew.dropHotKeys]] cap and the codegen'd
+    * [[graft.functions.MinHash.sigMatchCount]] verify.
     */
   def minhashLshPortable(df: DataFrame, text: Column, id: Column,
                          k: Int = 32, bands: Int = 8,
@@ -913,7 +892,7 @@ object Dedup {
       .dropDuplicates("a", "b")
     val sets = df.select(id.as("doc_id"),
       graft.functions.TokenOps.wordShingles(
-        split(lower(text), " "), 3, distinct = true).as("sh"))
+        split(TokenOps.lower(text), " "), 3, distinct = true).as("sh"))
     cand
       .join(sets.select(col("doc_id").as("a"), col("sh").as("sha")), "a")
       .join(sets.select(col("doc_id").as("b"), col("sh").as("shb")), "b")
@@ -930,19 +909,21 @@ object Dedup {
 
   /** per-band bucket hashes of a `sig` column — shared by every LSH
     * banding consumer so batch and streaming faces cannot drift.
-    * `hash` is xxhash64 for the native family, md5 for the portable
-    * one (so DuckDB reproduces the bucket keys). Validated like
-    * [[Similarity]]'s bandWidth: a non-divisor would silently discard
-    * the top k % bands signature positions from every bucket key.
+    * `hash` is the signatures' family, whose band hash keys the
+    * buckets: xxhash64 for the native family, md5 for the portable one
+    * (so DuckDB reproduces the bucket keys).
+    * Validated like [[Similarity]]'s bandWidth: a non-divisor would
+    * silently discard the top k % bands signature positions from
+    * every bucket key.
     */
   private[graft] def bandBucketHashes(k: Int, bands: Int,
-                                      hash: Column => Column =
-                                        xxhash64(_)): Column = {
+                                      hash: TokenHash = TokenHash.XxHash64)
+      : Column = {
     require(bands > 0 && k >= bands && k % bands == 0,
       s"bands ($bands) must divide the signature length k ($k)")
     val r = k / bands
     array((0 until bands).map { b =>
-      hash(array_join(
+      hash.bandHash(array_join(
         transform(slice(col("sig"), b * r + 1, r), _.cast("string")), ","))
     }: _*)
   }
@@ -953,9 +934,13 @@ object Dedup {
     * joins against it without recomputing corpus signatures. Consumed
     * by [[minhashLshCross]] (both sides) and the streaming face
     * ([[graft.streaming.EventPipeline.crossDedupStream]], static side).
+    * `hash` is the token/band hash family; signatures only meet
+    * within one family. Each input row yields its own rows: a doc_id
+    * that repeats keeps one signature per row (no grouping by id).
     */
   def bandedSignatures(df: DataFrame, text: Column, id: Column,
-                       k: Int = 32, bands: Int = 8): DataFrame =
+                       k: Int = 32, bands: Int = 8,
+                       hash: TokenHash = TokenHash.XxHash64): DataFrame =
     // MAP-ONLY signature build (minhashSigCol): one projection, no
     // explode and no groupBy — the grouped build shuffled the whole
     // shingle stream (~10× the text bytes at scale) just to take k
@@ -970,11 +955,11 @@ object Dedup {
     // is a cheap codegen'd kernel, but still measurably slower); the
     // exchange computes it once and ships (doc_id, k longs) rows,
     // still ≪ the shingle-stream shuffle this build replaced.
-    df.select(id.as("doc_id"), minhashSigCol(text, k = k).as("sig"))
+    df.select(id.as("doc_id"), minhashSigCol(text, k = k, hash = hash).as("sig"))
       .where(col("sig").isNotNull)
       .repartition(col("doc_id"))
       .select(col("doc_id"), col("sig"),
-        posexplode(bandBucketHashes(k, bands)).as(Seq("band", "bucket")))
+        posexplode(bandBucketHashes(k, bands, hash)).as(Seq("band", "bucket")))
 
   /** Incremental cross-corpus near-dup detection (§2c.25d): pairs
     * between a NEW batch and an EXISTING corpus — the daily-ingest
@@ -1070,7 +1055,7 @@ object Dedup {
   def simhash(df: DataFrame, text: Column, id: Column): DataFrame =
     df.select(id.as("doc_id"),
         graft.functions.SimHash.simhash64(
-          array_distinct(split(lower(text), " "))).as("simhash"))
+          array_distinct(split(TokenOps.lower(text), " "))).as("simhash"))
       .where(col("simhash").isNotNull)
 
   /** Connected components over near-dup pairs → cluster assignment
@@ -1218,7 +1203,7 @@ object Dedup {
   def simhashPortablePairs(df: DataFrame, text: Column, id: Column,
                            maxHamming: Int = 3,
                            maxBucket: Long = 10000L): DataFrame = {
-    val toks = array_distinct(split(lower(text), " "))
+    val toks = array_distinct(split(TokenOps.lower(text), " "))
     val x = conv(substring(md5(col("tok")), 1, 15), 16, 10).cast("long")
     val votes = (0 until 60).map { j =>
       sum(shiftrightunsigned(col("x"), j).bitwiseAND(1) * 2 - 1).as(s"v$j")

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.TokenOps
 
 /** Text retrieval over the tokenized corpus — the query side of the
   * reference's inverted token index (IndexedDf.scala:15-34 builds the
@@ -92,7 +93,7 @@ object Search {
   def bm25TopK(docs: DataFrame, text: Column, id: Column,
                terms: Seq[String], k: Int = 10): DataFrame = {
     require(terms.nonEmpty && terms.size <= 8, "1-8 query terms")
-    val toks = split(lower(text), " ")
+    val toks = split(TokenOps.lower(text), " ")
     val tok = docs.where(text.isNotNull)
       .select(id.as("doc_id"), explode(toks).as("tok"))
     val tfAggs = terms.zipWithIndex.map { case (t, i) =>
@@ -125,7 +126,7 @@ object Search {
     * rejoins a doc-stats table.
     */
   def bm25Postings(docs: DataFrame, text: Column, id: Column): DataFrame = {
-    val toks = split(lower(text), " ")
+    val toks = split(TokenOps.lower(text), " ")
     docs.where(text.isNotNull)
       .select(id.as("doc_id"), size(toks).cast("long").as("dl"),
         explode(toks).as("tok"))
@@ -138,7 +139,7 @@ object Search {
     * S (token occurrences) — the only global state BM25 needs.
     */
   def bm25Totals(docs: DataFrame, text: Column, id: Column): DataFrame = {
-    val toks = split(lower(text), " ")
+    val toks = split(TokenOps.lower(text), " ")
     docs.where(text.isNotNull)
       .agg(count(lit(1)).as("n"), sum(size(toks).cast("long")).as("s"))
   }
@@ -208,7 +209,7 @@ object Search {
                    phrase: String): DataFrame = {
     val words = phrase.toLowerCase.split(" ").toSeq
     require(words.size >= 2, "phrase needs >= 2 words")
-    val toks = split(lower(text), " ")
+    val toks = split(TokenOps.lower(text), " ")
     val pos = docs.where(text.isNotNull)
       .select(id.as("doc_id"), posexplode(toks).as(Seq("pos", "tok")))
     val first = pos.where(col("tok") === words.head)

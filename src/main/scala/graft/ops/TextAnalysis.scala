@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.TokenOps
 
 /** Text-analysis operators for large-scale corpus pipelines
   * (SURVEY §2c.30-33). All pure column expressions — codegen'd, no
@@ -20,7 +21,7 @@ object TextAnalysis {
     "es" -> Seq("el", "la", "y", "de", "un", "una", "es", "que"),
     "de" -> Seq("der", "die", "und", "das", "ein", "ist", "zu", "den"))
 
-  private def tokensOf(text: Column): Column = split(lower(text), " ")
+  private def tokensOf(text: Column): Column = split(TokenOps.lower(text), " ")
 
   /** count of tokens that are in `words` — native codegen'd
     * [[graft.functions.CountInSet]] (the filter+isInCollection
@@ -621,7 +622,7 @@ object TextAnalysis {
     * wide stage is the final presentational ORDER BY.
     */
   def gopherRules(df: DataFrame, text: Column, id: Column): DataFrame = {
-    val t = lower(text)
+    val t = TokenOps.lower(text)
     val words = split(t, "[ \\n]")
     val lines = split(t, "\n")
     val nW = size(words).cast("long")
@@ -757,7 +758,7 @@ object TextAnalysis {
     * codegen'd; the only wide stage is the presentational ORDER BY.
     */
   def c4Rules(df: DataFrame, text: Column, id: Column): DataFrame = {
-    val t = lower(text)
+    val t = TokenOps.lower(text)
     val lines = split(t, "\n")
     def endsPunct(l: Column): Column =
       l.endsWith(".") || l.endsWith("!") || l.endsWith("?") || l.endsWith("\"")
@@ -1060,7 +1061,7 @@ object TextAnalysis {
     import graft.functions.UnicodeNormalize
     val nfc = UnicodeNormalize(text, "NFC")
     val folded = regexp_replace(
-      UnicodeNormalize(lower(nfc), "NFD"), "\\p{Mn}", "")
+      UnicodeNormalize(TokenOps.lower(nfc), "NFD"), "\\p{Mn}", "")
     trim(regexp_replace(folded, "\\s+", " "))
   }
 

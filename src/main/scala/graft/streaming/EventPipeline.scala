@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.TokenOps
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Structured-streaming form of the events analytics (SURVEY §2b.21):
@@ -87,7 +88,7 @@ object EventPipeline {
                          tsCol: String): DataFrame =
     docs
       .withColumn("fp", graft.functions.SimHash.simhash64(
-        array_distinct(split(lower(col(textCol)), " "))))
+        array_distinct(split(TokenOps.lower(col(textCol)), " "))))
       .withWatermark(tsCol, "1 hour")
       .dropDuplicatesWithinWatermark("fp")
 

@@ -4,14 +4,16 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.functions.{MlKernels, VecMicroLong}
+import graft.functions.{MinHash, MlKernels, TokenHash, VecMicroLong}
 import graft.ops.{Dedup, KMeans, TextAnalysis}
 
 /** r16 optimization round: the ml_kmeans / ml_naive_bayes / scrub
   * per-row kernels moved from interpreted HOF spellings
   * (CodegenFallback) to native codegen'd loop expressions
-  * (functions/MlKernels). The operators' arithmetic is exact-integer,
-  * so each kernel must agree BIT FOR BIT with the HOF spelling it
+  * (functions/MlKernels); the portable md5 MinHash family moved from a
+  * grouped explode + 32-`min()` build to the map-only MinHashSig
+  * kernel. The operators' arithmetic is exact-integer,
+  * so each kernel must agree BIT FOR BIT with the spelling it
   * replaced. Those spellings live on here as reference expressions,
   * and every kernel is compared with its twin row for row, on the
   * kernel's own input columns as the operator builds them: live data
@@ -223,5 +225,82 @@ class KernelEquivSpec extends SparkSpec {
         StructField("toks", ArrayType(StringType)),
         StructField("covp", ArrayType(LongType)))))
     assertScrubSame(edges)
+  }
+
+  // ------------------------------------------------- md5 minhash
+
+  /** the replaced grouped build of the portable family's signatures:
+    * explode the distinct shingles, md5-top-60 each mod p, one
+    * `min()` aggregate per permutation, grouped by doc_id
+    */
+  private def portableSigTableRef(df: DataFrame, k: Int): DataFrame = {
+    val p = lit(MinHash.MersenneP)
+    val x = pmod(
+      conv(substring(md5(col("shingle")), 1, 15), 16, 10).cast("long"), p)
+    val aggs = MinHash.permParams(k).zipWithIndex.map { case ((a, b), i) =>
+      min(pmod(pmod(col("x") * a, p) + b, p)).as(s"h$i")
+    }
+    Dedup.shingles(df, col("text"), col("doc_id"))
+      .select(col("doc_id"), x.as("x"))
+      .groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
+      .select(col("doc_id"),
+        array((0 until k).map(i => col(s"h$i")): _*).as("sig"))
+  }
+
+  private def sigsOf(df: DataFrame): Map[Long, Seq[Long]] =
+    df.select("doc_id", "sig").collect()
+      .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+
+  /** the map-only md5 build (the signatures `bandedSignaturesPortable`
+    * bands) equals the grouped reference doc for doc, and both drop the
+    * same docs (null text)
+    */
+  private def assertMd5SigSame(df: DataFrame, k: Int = 32): Unit = {
+    val ref = sigsOf(portableSigTableRef(df, k))
+    val banded = Dedup.bandedSignaturesPortable(df, col("text"),
+      col("doc_id"), k)
+    assert(sigsOf(banded) == ref)
+    assert(banded.count() == ref.size * 8L)
+  }
+
+  private def docSchema = StructType(Seq(
+    StructField("doc_id", LongType),
+    StructField("text", StringType)))
+
+  test("md5 minhash: map-only signatures equal the grouped build on sf0.001") {
+    assertMd5SigSame(graft.core.Tables.documents(spark, sfDir))
+  }
+
+  test("md5 minhash: equality on null, empty, one-word, repeated and non-ASCII docs") {
+    val rows = Seq(
+      Row(1L, null),                                  // dropped by both
+      Row(2L, ""),                                    // one "" shingle
+      Row(3L, "word"),                                // one partial shingle
+      Row(4L, "Word"),                                // same after lower
+      Row(5L, "a b c a b c a b c a b c"),             // repeated shingles
+      Row(6L, "İSTANBUL ΟΔΟΣ Straße ǅ 😀 naïve café"), // non-ASCII
+      Row(7L, "the quick brown fox jumps over the lazy dog"),
+      Row(8L, "  leading and  doubled spaces "))
+    val df = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, 2), docSchema)
+    assertMd5SigSame(df)
+    val sigs = sigsOf(portableSigTableRef(df, 32))
+    assert(!sigs.contains(1L) && sigs(3L) == sigs(4L))
+  }
+
+  test("md5 minhash: a repeated doc_id keeps one signature per input row") {
+    // the grouped build merged both rows' shingles into one signature;
+    // the map-only build, like bandedSignatures for xxhash64, keeps a
+    // signature (and its bands) per row
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+      Row(1L, "alpha beta gamma delta"), Row(1L, "one two three four")), 1),
+      docSchema)
+    assert(portableSigTableRef(df, 32).count() == 1)
+    val banded = Dedup.bandedSignaturesPortable(df, col("text"), col("doc_id"))
+    assert(banded.count() == 2 * 8L)
+    assert(banded.select("sig").distinct().count() == 2)
+    val xx = Dedup.bandedSignatures(df, col("text"), col("doc_id"),
+      hash = TokenHash.XxHash64)
+    assert(xx.count() == 2 * 8L)
   }
 }

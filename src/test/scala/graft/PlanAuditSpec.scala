@@ -11,6 +11,12 @@ class PlanAuditSpec extends SparkSpec {
     SparkEntry.queries(name)(spark, sfDir)
       .queryExecution.executedPlan.toString
 
+  /** every query's optimized plan, by name — built once for the
+    * standing whole-suite audits below
+    */
+  private lazy val optimizedPlans = SparkEntry.queries.toSeq.sortBy(_._1)
+    .map { case (name, q) => name -> q(spark, sfDir).queryExecution.optimizedPlan }
+
   test("point_lookup pushes both predicates into the parquet scan") {
     val p = plan("point_lookup")
     assert(p.contains("PushedFilters"))
@@ -218,9 +224,8 @@ class PlanAuditSpec extends SparkSpec {
            !plumbing(e.getClass.getSimpleName))
          Seq(e.getClass.getSimpleName)
        else Nil) ++ e.children.flatMap(bad)
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1)
-      .flatMap { case (name, q) =>
-        val plan = q(spark, sfDir).queryExecution.optimizedPlan
+    val offenders = optimizedPlans
+      .flatMap { case (name, plan) =>
         val hits = plan.collect {
           case p: LProject => p.projectList.flatMap(bad)
           case f: LFilter  => bad(f.condition)
@@ -232,6 +237,21 @@ class PlanAuditSpec extends SparkSpec {
     assert(offenders.isEmpty,
       "UNDOCUMENTED interpreted row-hot expressions:\n" +
         offenders.mkString("\n"))
+  }
+
+  test("no query lowercases through Catalyst's Lower (standing audit)") {
+    // under the default spark.sql.icu.caseMappings.enabled, Lower's
+    // first call in a JVM builds ICU's case table (1.4-1.6 s, every
+    // other task thread waiting on the class-init lock) even for ASCII
+    // text; TokenOps.lower gives the same result without it
+    import org.apache.spark.sql.catalyst.expressions.Lower
+    val offenders = optimizedPlans.collect {
+      case (name, plan) if plan.collectWithSubqueries {
+          case n => n.expressions.exists(_.exists(_.isInstanceOf[Lower]))
+        }.contains(true) => name
+    }
+    assert(offenders.isEmpty, "queries using Catalyst's Lower: " +
+      offenders.mkString(", "))
   }
 
   test("sample_domain_cap prunes per-stratum before the exchange (WindowGroupLimit)") {
@@ -265,10 +285,15 @@ class PlanAuditSpec extends SparkSpec {
     // (doc_id, sig) rows — one per self-join side in the STATIC plan
     // (AQE's stage cache reuses the common subplan at runtime). No
     // Generate may run over the token/shingle stream.
-    val p = plan("dedup_minhash")
-    assert(p.contains("minhash_sig"), p)
-    val generates = p.linesIterator.filter(_.contains("Generate")).toSeq
-    assert(generates.nonEmpty, p)
-    assert(generates.forall(_.contains("posexplode(array(xxhash64")), p)
+    // dedup_minhash_banded is the portable md5 family: the same
+    // map-only build, md5 band keys
+    for ((name, bandHash) <- Seq("dedup_minhash" -> "xxhash64",
+                                 "dedup_minhash_banded" -> "md5")) {
+      val p = plan(name)
+      assert(p.contains("minhash_sig"), p)
+      val generates = p.linesIterator.filter(_.contains("Generate")).toSeq
+      assert(generates.nonEmpty, p)
+      assert(generates.forall(_.contains(s"posexplode(array($bandHash")), p)
+    }
   }
 }

@@ -13,6 +13,13 @@ import java.nio.file.Files
   * the loader must make them indistinguishable. (Spark cannot author
   * TIMESTAMP(NANOS) parquet, so raw int64 nanos stands in for the
   * nanosAsLong read shape — the loader's LongType branch is the same.)
+  *
+  * The same guard for the Bench record: its artifacts have shipped as
+  * one-record bench_history files and as BENCH_r*.json wrappers around
+  * a stdout tail, with fields added over time (`cpus`, `sf`, `qualifies`,
+  * `code`). `Bench.parseArtifact` must read every shape, and
+  * `Bench.select` must never let a record of other code stand in for
+  * this run.
   */
 class SchemaDriftSpec extends SparkSpec {
 
@@ -110,5 +117,68 @@ class SchemaDriftSpec extends SparkSpec {
     val n = df.filter(col("ts").isNotNull)
       .groupBy(window(col("ts"), "1 hour")).count().count()
     assert(n > 0)
+  }
+
+  // ---------------------------------------------------- bench records
+
+  private val sf = "data/sf0.1"
+  private def record(total: Double, fields: String): String =
+    s"""{"metric":"total","value":$total,"unit":"sec",""" +
+      s""""queries":{"q1_agg":${total / 2},"dedup_minhash":${total / 2}},$fields}"""
+
+  test("Bench.parseArtifact reads history records and wrapped stdout tails") {
+    val stamped = record(10.0, s""""errors":{},"cpus":32,"qualifies":true,""" +
+      s""""fingerprint":"fp1","code":"c1","sf":"$sf"""")
+    assert(Bench.parseArtifact("bench_1.json", stamped, sf, "32") ==
+      Seq(Bench.Artifact("bench_1.json", 10.0,
+        Map("q1_agg" -> 5.0, "dedup_minhash" -> 5.0), true, "fp1", "c1")))
+    // dropped: failed reps, another SF, another core count
+    for (bad <- Seq(""""errors":{"q1_agg":"boom"},"cpus":32""",
+                    s""""errors":{},"cpus":32,"sf":"/other"""",
+                    """"errors":{},"cpus":8"""))
+      assert(Bench.parseArtifact("b.json", record(9.0, bad), sf, "32").isEmpty, bad)
+    // a record that predates cpus/sf/code counts as an unstamped
+    // cpus=32 sf0.1 record; one that predates qualifies never qualifies
+    val old = Bench.parseArtifact("b.json", record(8.0, """"errors":{}"""), sf, "32")
+    assert(old.map(a => (a.total, a.qualifies, a.code)) == Seq((8.0, false, "")))
+    assert(Bench.parseArtifact("b.json", record(8.0, """"errors":{}"""), sf, "8").isEmpty)
+    // a wrapped stdout tail: a truncated first line, then the compact line,
+    // whose pruned queries map does not sum to its value
+    val compact = """{"metric":"total","value":30.0,"unit":"sec",""" +
+      """"queries":{"q1_agg":1.5},"n_errors":0,"qualifies":true,"cpus":32,""" +
+      s""""code":"c2","sf":"$sf"}"""
+    val wrapper = new com.fasterxml.jackson.databind.ObjectMapper()
+      .createObjectNode().put("n", 16).put("cpus", 32).put("sf", 0.1)
+      .put("tail", "8,\"this_run_canary_samples\":[1.0]}\n[info] " + compact)
+      .toString
+    assert(Bench.parseArtifact("BENCH_r16.json", wrapper, sf, "32") ==
+      Seq(Bench.Artifact("BENCH_r16.json", 30.0, Map("q1_agg" -> 1.5), true, "", "c2")))
+    assert(Bench.parseArtifact("b.json", "not json", sf, "32").isEmpty)
+  }
+
+  test("Bench.select takes a prior record only with this run's fingerprint and code") {
+    val qs = Map("q1_agg" -> 1.0)
+    val run = Bench.Artifact("this_run", 12.0, qs, true, "fp1", "c1")
+    val sameCode = Bench.Artifact("bench_1.json", 10.0, qs, true, "fp1", "c1")
+    // a one-line source change gives a new code stamp: its faster
+    // record is no longer a candidate, so this run is the record
+    val otherCode = sameCode.copy(file = "bench_2.json", total = 5.0, code = "c0")
+    val otherFp = sameCode.copy(file = "bench_3.json", total = 5.0, fp = "fp0")
+    val unstamped = sameCode.copy(file = "BENCH_r16.json", total = 5.0, code = "")
+    val unqualified = sameCode.copy(file = "bench_4.json", total = 5.0, qualifies = false)
+    val prior = Seq(otherCode, otherFp, unstamped, unqualified)
+    assert(Bench.select(run, true, prior, useHistory = true) == (run, Seq(run)))
+    assert(Bench.select(run, true, prior :+ sameCode, useHistory = true) ==
+      (sameCode, Seq(run, sameCode)))
+    // another core count measures this run only
+    assert(Bench.select(run, true, prior :+ sameCode, useHistory = false)._1 == run)
+    // an unqualified or partial run is reported as such
+    for ((r, eligible) <- Seq(run.copy(qualifies = false) -> true, run -> false)) {
+      val (official, candidates) = Bench.select(r, eligible, prior, useHistory = true)
+      assert(official.file == "this_run_unqualified" && !official.qualifies)
+      assert(candidates.isEmpty)
+    }
+    assert(Bench.codeHash().matches("[0-9a-f]{12}"))
+    assert(Bench.codeHash() == Bench.codeHash())
   }
 }
