@@ -158,10 +158,14 @@ final case class IndexedFrame(df: DataFrame, spec: IndexSpec) {
     * array cells: a mega-hot entry (a stopword token matching every
     * row) becomes a long RUN of rows that parquet RLE/dictionary
     * encoding compresses like a bitmap would — never a single
-    * multi-GB array cell or one straggler task. Range-clustered on
-    * (field, value, row_key) so a point read prunes to the files
+    * multi-GB array cell or one straggler task. Totally ordered on
+    * (field, value, row_key), so a point read prunes to the files
     * whose min/max straddle the entry — the Spark analog of opening
-    * exactly one bitmap.
+    * exactly one bitmap. The sort plans at the input's parallelism:
+    * a multi-partition input is range-partitioned (row_key included,
+    * so a hot entry's run splits across tasks and files instead of
+    * pinning one), while a one-partition input — a one-file segment —
+    * is sorted in place with no exchange.
     */
   def rowRefs: DataFrame = {
     val key = spec.rowRefs.getOrElse(throw new IllegalArgumentException(
@@ -176,10 +180,7 @@ final case class IndexedFrame(df: DataFrame, spec: IndexSpec) {
     df.select(col(key).as("row_key"), explode(array(pairs: _*)).as("fv"))
       .select(col("fv.field").as("field"), explode(col("fv.ts")).as("value"),
         col("row_key"))
-      // row_key participates in the range partitioning so a hot
-      // entry's run splits across tasks/files instead of pinning one
-      .repartitionByRange(col("field"), col("value"), col("row_key"))
-      .sortWithinPartitions("field", "value", "row_key")
+      .orderBy("field", "value", "row_key")
   }
 
   /** row keys matching one (field, value) from the LIVE data — the

@@ -28,8 +28,11 @@ import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
   * warm). Batched lookups amortize Spark's floor away — this path
   * exists for the genuinely interactive single-op case.
   *
-  * HOW: the index (`seg_*`) and row-refs (`rows_*`) parquet are
-  * written sorted/range-clustered on (field, value), so footer
+  * HOW: the index (`seg_*`) and row-refs (`rows_*`) parquet of each
+  * unit are written totally ordered on (field, value[, row_key]): a
+  * one-file unit as one sorted file, a multi-file unit (a multi-file
+  * batch, a compact fold) range-clustered across its files. Either
+  * way the part files read in name order are sorted, so footer
   * statistics prune a point key to the file(s) straddling it.
   * Footers are read ONCE per store handle, on its first lookup, and
   * cached; every file is opened with read options built from the
@@ -311,9 +314,10 @@ object PointRead {
     }
 
     /** per-DIR lazy payload streams for one (field,value): each input
-      * dir is one range-clustered segment sorted on (field, value,
-      * payload-order), so walking its candidate files (name order =
-      * range order under repartitionByRange), blocks, and rows in
+      * dir is one segment totally ordered on (field, value,
+      * payload-order) — one sorted file, or range-clustered files whose
+      * name order is range order — so walking its candidate files,
+      * blocks, and rows in
       * sequence yields that dir's payloads in WRITE-SORT order. The
       * caller gets one iterator per dir — k sorted runs it can
       * merge-intersect in O(1) memory instead of materializing a Set
@@ -579,8 +583,8 @@ object PointRead {
   }
 
   /** row-key order for driver-side merges: matches the refs WRITE
-    * sort (Spark's repartitionByRange + sortWithinPartitions on
-    * row_key) — numeric for integral keys (widened across eras —
+    * sort (Spark's ascending sort on row_key within an entry) —
+    * numeric for integral keys (widened across eras —
     * evolution may have widened int→long), unsigned UTF-8 byte order
     * for strings (UTF8String's binary order, NOT Java String's
     * UTF-16 order — they disagree above the BMP). Nulls first,
@@ -842,7 +846,7 @@ object PointRead {
 
     /** the same row keys as [[rows]] but as LAZY SORTED RUNS: one
       * ascending iterator per (era, segment dir) — each refs segment
-      * is range-clustered and sorted on (field, value, row_key), so
+      * is totally ordered on (field, value, row_key), so
       * within one (field,value) its keys stream in ascending key
       * order, victims filtered on the fly. Keys are unique across
       * segments, so the runs merge into one strictly-ascending

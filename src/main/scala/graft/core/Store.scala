@@ -95,6 +95,17 @@ object Store {
   // snapshot read just plans over fewer files. File NAMES are stored
   // relative to <dir>/data so the store directory can be relocated.
 
+  /** the data files a write left in `dataDir`, by name (markers and
+    * hidden files skipped); empty when the dir does not exist
+    */
+  private def dataFileNames(fs: org.apache.hadoop.fs.FileSystem,
+                            dataDir: String): Seq[String] = {
+    val p = new org.apache.hadoop.fs.Path(dataDir)
+    if (!fs.exists(p)) Nil
+    else fs.listStatus(p).map(_.getPath.getName)
+      .filterNot(n => n.startsWith("_") || n.startsWith(".")).toSeq.sorted
+  }
+
   private def writeManifest(fs: org.apache.hadoop.fs.FileSystem,
                             segDir: String, files: Seq[String]): Unit = {
     // the manifest IS the segment's commit marker, and with concurrent
@@ -985,7 +996,10 @@ object Store {
     * segment). Indexing the victims scans every committed segment
     * below the tombstone's id, semi-joined to the persisted key set
     * (only the matching rows reach the index build), but never
-    * rewrites the corpus; every open/openAt/rowsOf read serves the
+    * rewrites the corpus. `keys` must be driver-small (the delete
+    * contract; the overlap check reads two key sets on the driver),
+    * so the victims, bounded by it, are indexed in one task after the
+    * parallel scan. Every open/openAt/rowsOf read serves the
     * post-delete state, and [[compact]] later folds the tombstones
     * into the data physically. Returns the tombstone's snapshot id.
     *
@@ -1096,7 +1110,8 @@ object Store {
     * the unit's main `ixdelta`) and [[rescanTombstoneIndex]]
     * (post-commit, writes a fresh VERSIONED delta published
     * atomically): list, pin the plan to the listing, index the
-    * then-live victims, write the negated entries to `outDir`.
+    * then-live victims in one task (their count is bounded by the
+    * driver-small key set), write the negated entries to `outDir`.
     * Returns (segments scanned, tombstones seen) for the caller's
     * coverage records.
     */
@@ -1119,9 +1134,13 @@ object Store {
     // write()/append() read-back discipline: a nondeterministic keys
     // plan must not net a different row set than the one recorded);
     // the then-live rule is the scoping dataAsOf already applies
+    // The store scan stays parallel; the victims it keeps are bounded
+    // by the key set, which the delete contract keeps driver-small, so
+    // they are indexed in one task: one shuffle to one partition, then
+    // the entries aggregate and sort with no further exchange.
     val victims = keyJoin(dataAsOf(spark, snap), keyCol,
       Seq(readKeys(spark, s"$root/del_$id/keys")), "left_semi")
-    IndexedFrame(victims, spec).entries
+    IndexedFrame(victims.repartition(1), spec).entries
       .select(col("field"), col("value"), (-col("f")).as("f"))
       .write.mode(SaveMode.Overwrite)
       .options(PointRead.SegWriteOptions).parquet(outDir)
@@ -1414,7 +1433,9 @@ object Store {
     }
     val tmp = new org.apache.hadoop.fs.Path(s"$root/del_$id/_ixtmp_" +
       s"${segId}_${java.util.UUID.randomUUID.toString.take(8)}")
-    IndexedFrame(victims, spec).entries
+    // victims are key-set-bounded: indexed in one task, as in
+    // scanVictimEntriesTo
+    IndexedFrame(victims.repartition(1), spec).entries
       .select(col("field"), col("value"), (-col("f")).as("f"))
       .write.mode(SaveMode.Overwrite)
       .options(PointRead.SegWriteOptions)
@@ -1638,12 +1659,12 @@ object Store {
     // this frame, so declaring df.schema skips the one-task schema-
     // inference job a schema-less read runs (r16; the write-side twin
     // of the r15 read-layer fix — one fewer job per store write).
+    // Indexed at the data write's file count, as in writeSegment.
+    val dataNames = dataFileNames(fs, s"$dir/data")
     val persisted = spark.read.schema(df.schema).parquet(s"$dir/data")
+      .coalesce(math.max(1, dataNames.size))
     writeSegmentIndex(spark, IndexedFrame(persisted, spec), s"$dir/index", 0,
       oneTask = false)
-    val dataNames = fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/data"))
-      .map(_.getPath.getName)
-      .filterNot(n => n.startsWith("_") || n.startsWith(".")).toSeq
     writeManifest(fs, s"$dir/index/seg_0", dataNames)
   }
 
@@ -1653,9 +1674,12 @@ object Store {
     * artifact (the reference's bitmap payload, Dfs.scala:330-408) at
     * `rows_<id>`. The two are independent reads of the same rows onto
     * disjoint paths, so they are written side by side; the caller
-    * publishes the manifest only after both have finished.
-    * `oneTask` writes each as one task, so an empty batch's parquet
-    * still gets a readable footer.
+    * publishes the manifest only after both have finished. Both plan
+    * at `ix.df`'s partition count: callers hand a one-partition frame
+    * for a one-file segment, whose entries aggregate and sort and whose
+    * refs sort then run in the scan's own stage. `oneTask` writes each
+    * as one task, so an empty batch's parquet still gets a readable
+    * footer.
     */
   private def writeSegmentIndex(spark: SparkSession, ix: IndexedFrame,
                                 root: String, id: Int,
@@ -1912,11 +1936,7 @@ object Store {
       // committed-segments-only serving rule (a crashed append's
       // ghost segment is invisible) applies uniformly. Both ride
       // inside the same _COMMITTED publish.
-      val dataPath0 = new org.apache.hadoop.fs.Path(s"$dir/data")
-      val legacyNames =
-        if (!fs.exists(dataPath0)) Seq.empty[String]
-        else fs.listStatus(dataPath0).map(_.getPath.getName)
-          .filterNot(n => n.startsWith("_") || n.startsWith(".")).toSeq
+      val legacyNames = dataFileNames(fs, s"$dir/data")
       writeManifest(fs, s"$dir/index_g1/seg_0", legacyNames)
       if (legacyNames.nonEmpty)
         writeSchemaSidecar(fs, s"$dir/index_g1/seg_0",
@@ -1983,9 +2003,14 @@ object Store {
     * re-executing `batch` for the index would recompute the upstream
     * (2× cost) and, for a nondeterministic batch (sample/rand/changing
     * source), index a DIFFERENT row set than the one the data write
-    * just persisted. A batch that wrote no data file commits only with
-    * `commitEmpty`, its empty index units written as one task each so
-    * their parquet still gets a readable footer.
+    * just persisted. The read-back is coalesced to the data write's
+    * file count, so the index is built at the parallelism of the data
+    * it indexes: a one-file batch — any batch the writer kept in one
+    * partition — plans each index unit as one stage with no exchange,
+    * while a multi-file batch keeps the aggregate and range exchanges.
+    * A batch that wrote no data file commits only with `commitEmpty`,
+    * its empty index units written as one task each so their parquet
+    * still gets a readable footer.
     */
   private def writeSegment(batch: DataFrame, dir: String, spec: IndexSpec,
                            root: String, segId: Int, sub: String,
@@ -1994,14 +2019,12 @@ object Store {
     val (fs, _) = fsFor(spark, dir)
     val (_, names) = inParallel(spark)(beside, {
       batch.write.mode(SaveMode.Overwrite).parquet(s"$dir/data/$sub")
-      val names = fs.listStatus(
-          new org.apache.hadoop.fs.Path(s"$dir/data/$sub"))
-        .map(_.getPath.getName)
-        .filterNot(n => n.startsWith("_") || n.startsWith(".")).toSeq.sorted
+      val names = dataFileNames(fs, s"$dir/data/$sub")
       if (names.nonEmpty || commitEmpty) {
         val persisted =
           if (names.nonEmpty)
             spark.read.schema(batch.schema).parquet(s"$dir/data/$sub")
+              .coalesce(names.size)
           else spark.createDataFrame(
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema)
         writeSegmentIndex(spark, IndexedFrame(persisted, spec), root, segId,

@@ -74,10 +74,11 @@ case class MinHashSig(child: Expression, k: Int,
     copy(child = newChild)
 }
 
-/** the token hash family of a MinHash signature: which hash of a
-  * shingle's UTF-8 bytes is reduced mod p before the permutations,
-  * and which hash keys each band's bucket. Signatures, and the
-  * buckets banded from them, only meet within one family.
+/** the token hash family of a MinHash signature or a SimHash
+  * fingerprint: which 64-bit hash of a token's UTF-8 bytes feeds the
+  * permutations (reduced mod p) or the bit votes, and which hash keys
+  * each MinHash band's bucket. Signatures, fingerprints and the
+  * buckets banded from them only meet within one family.
   */
 sealed trait TokenHash {
   /** the bucket key of one band: this family's hash of the band's
@@ -159,22 +160,28 @@ object MinHash {
   private val md5s = ThreadLocal.withInitial[java.security.MessageDigest](
     () => java.security.MessageDigest.getInstance("MD5"))
 
-  /** token hash of one shingle reduced mod p: xxhash64 (seed 42) when
-    * `md` is null, else the first 8 md5 digest bytes read big-endian
-    * and shifted right by 4 — the 60-bit value of the digest's first
-    * 15 hex digits
+  /** this thread's md5 digest when `md5` is set, else null: the `md`
+    * argument of [[tokenHash]]
     */
-  private def tokenX(s: UTF8String, md: java.security.MessageDigest): Long =
-    if (md == null) {
-      val h = org.apache.spark.sql.catalyst.expressions.XXH64.hashUTF8String(s, 42L)
-      ((h % MersenneP) + MersenneP) % MersenneP
-    } else {
+  private[functions] def digestFor(md5: Boolean): java.security.MessageDigest =
+    if (md5) md5s.get() else null
+
+  /** 64-bit token hash of one string: xxhash64 (seed 42) when `md` is
+    * null, else the first 8 md5 digest bytes read big-endian and
+    * shifted right by 4 — the 60-bit value of the digest's first 15
+    * hex digits ([[TokenHash.Md5Top60]])
+    */
+  private[functions] def tokenHash(s: UTF8String,
+                                   md: java.security.MessageDigest): Long =
+    if (md == null)
+      org.apache.spark.sql.catalyst.expressions.XXH64.hashUTF8String(s, 42L)
+    else {
       md.update(s.getByteBuffer)
       val d = md.digest()
       var top = 0L
       var i = 0
       while (i < 8) { top = (top << 8) | (d(i) & 0xffL); i += 1 }
-      (top >>> 4) % MersenneP
+      top >>> 4
     }
 
   /** shared interpreted/codegen kernel: one pass over the shingles,
@@ -184,7 +191,7 @@ object MinHash {
     */
   def signature(arr: ArrayData, as: Array[Long], bs: Array[Long],
                 md5: Boolean): Array[Object] = {
-    val md = if (md5) md5s.get() else null
+    val md = digestFor(md5)
     val k = as.length
     val mins = new Array[Long](k)
     java.util.Arrays.fill(mins, Long.MaxValue)
@@ -192,7 +199,10 @@ object MinHash {
     var i = 0
     while (i < n) {
       if (!arr.isNullAt(i)) {
-        val x = tokenX(arr.getUTF8String(i), md)
+        // the token hash reduced mod p (Spark's pmod for xxhash64;
+        // the md5 value is already non-negative)
+        val x = java.lang.Math.floorMod(tokenHash(arr.getUTF8String(i), md),
+          MersenneP)
         var j = 0
         while (j < k) {
           val hx = ((x * as(j)) % MersenneP + bs(j)) % MersenneP

@@ -18,10 +18,12 @@ import org.apache.spark.sql.types._
   * Each expression replaces ONE declarative spelling with the same
   * arithmetic in the same fold order, including the null edge cases the
   * declarative spelling defined (spec-exercised by NullRobustnessSpec):
-  * Catalyst's struct ordering is nulls-FIRST, so an argmin over
-  * struct(score, id) where some scores are null picks the FIRST
-  * null-scored entry in array order — replicated here by returning at
-  * the first null score encountered. Bit-equality is pinned by
+  * Catalyst's struct ordering is nulls-FIRST on every field, so an
+  * argmin over struct(score, id) picks a null-scored entry over every
+  * scored one, and among those the smallest id, a null id first (a
+  * null array element yields exactly that struct(null, null)) —
+  * replicated here by the same lexicographic nulls-first comparison
+  * ([[MlKernels.nullsFirstLess]]). Bit-equality is pinned by
   * KernelEquivSpec against the declarative spellings it keeps as
   * reference expressions, and the operators stay hash-oracled
   * end-to-end.
@@ -40,24 +42,12 @@ object MlKernels {
   def vecMicro(v: Column): Column =
     GraftShims.column(VecMicroLong(GraftShims.expression(v)))
 
-  /** k-means assignment argmin (see [[KmArgMin]]). PRECONDITION:
-    * no element of `cents` is a null struct — the kernel throws a
-    * NullPointerException on one, where the declarative spelling it
-    * replaces tolerated it. Holds by construction at the call site
-    * (KMeans: `collect_list(struct(...))`, whose structs are never
-    * null and which drops nulls anyway).
-    */
+  /** k-means assignment argmin (see [[KmArgMin]]) */
   def kmArgMin(v: Column, cents: Column): Column =
     GraftShims.column(
       KmArgMin(GraftShims.expression(v), GraftShims.expression(cents)))
 
-  /** naive-bayes scoring argmax (see [[NbArgMin]]). PRECONDITION:
-    * no element of `cls` is a null struct — the kernel throws a
-    * NullPointerException on one, where the declarative spelling it
-    * replaces tolerated it. Holds by construction at the call site
-    * (TextAnalysis: `collect_list(struct(...))`, whose structs are
-    * never null and which drops nulls anyway).
-    */
+  /** naive-bayes scoring argmax (see [[NbArgMin]]) */
   def nbArgMin(cls: Column, om: Column, nTokens: Column): Column =
     GraftShims.column(NbArgMin(GraftShims.expression(cls),
       GraftShims.expression(om), GraftShims.expression(nTokens)))
@@ -66,6 +56,104 @@ object MlKernels {
   def scrubKeep(toks: Column, covp: Column): Column =
     GraftShims.column(
       ScrubKeep(GraftShims.expression(toks), GraftShims.expression(covp)))
+
+  /** is (aScore, aId) below (bScore, bId) in Catalyst's struct order:
+    * lexicographic, each field ascending with nulls first; `idCmp`
+    * compares the two ids, read only when both are non-null
+    */
+  private def nullsFirstLess(aNull: Boolean, a: Long, bNull: Boolean, b: Long,
+                             aIdNull: Boolean, bIdNull: Boolean,
+                             idCmp: Int): Boolean =
+    if (aNull != bNull) aNull
+    else if (!aNull && a != b) a < b
+    else if (aIdNull != bIdNull) aIdNull
+    else !aIdNull && idCmp < 0
+
+  /** shared interpreted/codegen kernel of [[KmArgMin]] over a non-empty
+    * `cents`; `v` may be null
+    */
+  def kmArgMinOf(v: ArrayData, cents: ArrayData): InternalRow = {
+    // null v, or any null element of v, nulls EVERY dist2
+    var vNull = v == null
+    val nv = if (vNull) 0 else v.numElements()
+    var i = 0
+    while (i < nv && !vNull) { vNull = v.isNullAt(i); i += 1 }
+    var bestSet = false
+    var bestNull = false; var best = 0L
+    var bestClNull = false; var bestCl = 0L
+    var k = 0
+    while (k < cents.numElements()) {
+      // a null element is struct(null dist2, null cluster) in the
+      // declarative spelling: the least value there is
+      val st = if (cents.isNullAt(k)) null else cents.getStruct(k, 2)
+      val clNull = st == null || st.isNullAt(0)
+      val cl = if (clNull) 0L else st.getLong(0)
+      val c = if (st == null || st.isNullAt(1)) null else st.getArray(1)
+      var d2 = 0L
+      var d2Null = vNull || c == null || c.numElements() != nv
+      var d = 0
+      while (!d2Null && d < nv) {
+        if (c.isNullAt(d)) d2Null = true
+        else {
+          val diff = v.getLong(d) - c.getLong(d)
+          d2 += diff * diff
+          d += 1
+        }
+      }
+      if (!bestSet || nullsFirstLess(d2Null, d2, bestNull, best,
+          clNull, bestClNull, java.lang.Long.compare(cl, bestCl))) {
+        bestSet = true
+        bestNull = d2Null; best = d2; bestClNull = clNull; bestCl = cl
+      }
+      k += 1
+    }
+    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(Array[Any](
+      if (bestNull) null else best, if (bestClNull) null else bestCl))
+  }
+
+  /** shared interpreted/codegen kernel of [[NbArgMin]] over a non-empty
+    * `cls`; `om` may be null, and `ntNull` marks a null n_tokens
+    */
+  def nbArgMinOf(cls: ArrayData, om: MapData, ntNull: Boolean,
+                 nt: Long): org.apache.spark.unsafe.types.UTF8String = {
+    var bestSet = false
+    var bestNull = false; var best = 0L
+    var bestC: org.apache.spark.unsafe.types.UTF8String = null
+    var k = 0
+    while (k < cls.numElements()) {
+      // a null element scores null with a null class, as in the
+      // declarative spelling
+      val st = if (cls.isNullAt(k)) null else cls.getStruct(k, 3)
+      val c = if (st == null || st.isNullAt(0)) null else st.getUTF8String(0)
+      val nsNull = ntNull || st == null || st.isNullAt(1) || st.isNullAt(2)
+      var ns = 0L
+      if (!nsNull) {
+        var obs = 0L
+        if (om != null && c != null) {
+          val keys = om.keyArray()
+          val vals = om.valueArray()
+          var m = 0
+          var found = false
+          while (m < om.numElements() && !found) {
+            if (keys.getUTF8String(m).equals(c)) {
+              if (!vals.isNullAt(m)) obs = vals.getLong(m)
+              found = true
+            }
+            m += 1
+          }
+        }
+        ns = -(st.getLong(1) + obs - nt * st.getLong(2))
+      }
+      if (!bestSet || nullsFirstLess(nsNull, ns, bestNull, best,
+          c == null, bestC == null,
+          if (c == null || bestC == null) 0 else c.binaryCompare(bestC))) {
+        bestSet = true
+        bestNull = nsNull; best = ns; bestC = c
+      }
+      k += 1
+    }
+    bestC
+  }
 }
 
 /** see [[MlKernels.vecMicro]] */
@@ -176,13 +264,14 @@ case class VecMicroLong(child: Expression) extends UnaryExpression {
   *
   * which evaluates interpreted (ArrayAggregate/ZipWith/ArrayTransform
   * are CodegenFallback) per CORPUS row. Same fold: dist2 accumulated in
-  * d-ascending long arithmetic; strict < keeps the first (= smallest
-  * cluster — cents is sorted) minimum, matching the struct-min tie
-  * rule. Null edges replicated from the declarative spelling: null or
-  * null-element v, or a length-mismatched centroid, makes that dist2
-  * null, and nulls sort FIRST in Catalyst struct ordering — so the
-  * first null-dist2 entry in array order wins. Result is null iff
-  * cents is null or empty (array_min of empty → null).
+  * d-ascending long arithmetic; the pick is the struct min, ties to
+  * the smaller cluster. Null edges replicated from the declarative
+  * spelling: null or null-element v, or a length-mismatched centroid,
+  * makes that dist2 null, a null element is (null, null), and nulls
+  * sort FIRST on each field of Catalyst struct ordering — so a null
+  * dist2 beats every scored entry. Result is null iff cents is null or
+  * empty (array_min of empty → null); its cluster is null only when
+  * the winner's is.
   */
 case class KmArgMin(v: Expression, cents: Expression) extends Expression {
 
@@ -208,120 +297,31 @@ case class KmArgMin(v: Expression, cents: Expression) extends Expression {
 
   override def dataType: DataType = StructType(Seq(
     StructField("dist2", LongType, nullable = true),
-    StructField("cluster", LongType, nullable = false)))
+    StructField("cluster", LongType, nullable = cents.dataType match {
+      case ArrayType(StructType(fs), containsNull) =>
+        containsNull || fs(0).nullable
+      case _ => true
+    })))
   override def prettyName: String = "km_argmin"
 
   override def eval(input: InternalRow): Any = {
     val centsV = cents.eval(input).asInstanceOf[ArrayData]
-    if (centsV == null || centsV.numElements() == 0) return null
-    val vV = v.eval(input).asInstanceOf[ArrayData]
-    // null v, or any null element of v, nulls EVERY dist2 → the min is
-    // the first entry (nulls-first struct ordering, tie → array order)
-    var vNull = vV == null
-    val nv = if (vNull) 0 else vV.numElements()
-    if (!vNull) {
-      var i = 0
-      while (i < nv && !vNull) { vNull = vV.isNullAt(i); i += 1 }
-    }
-    if (vNull) {
-      val st = centsV.getStruct(0, 2)
-      return new org.apache.spark.sql.catalyst.expressions
-        .GenericInternalRow(Array[Any](null, st.getLong(0)))
-    }
-    val kN = centsV.numElements()
-    var best = 0L
-    var bestSet = false
-    var bestCluster = 0L
-    var k = 0
-    while (k < kN) {
-      val st = centsV.getStruct(k, 2)
-      val cluster = st.getLong(0)
-      val c = st.getArray(1)
-      var d2 = 0L
-      var d2Null = c == null || c.numElements() != nv
-      var d = 0
-      while (!d2Null && d < nv) {
-        if (c.isNullAt(d)) d2Null = true
-        else {
-          val diff = vV.getLong(d) - c.getLong(d)
-          d2 += diff * diff
-          d += 1
-        }
-      }
-      // first null dist2 beats every non-null one (nulls-first) and
-      // every later null one (cluster tiebreak, ascending array)
-      if (d2Null)
-        return new org.apache.spark.sql.catalyst.expressions
-          .GenericInternalRow(Array[Any](null, cluster))
-      if (!bestSet || d2 < best) { best = d2; bestCluster = cluster; bestSet = true }
-      k += 1
-    }
-    new org.apache.spark.sql.catalyst.expressions
-      .GenericInternalRow(Array[Any](best, bestCluster))
+    if (centsV == null || centsV.numElements() == 0) null
+    else MlKernels.kmArgMinOf(v.eval(input).asInstanceOf[ArrayData], centsV)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val vCode = v.genCode(ctx)
     val cCode = cents.genCode(ctx)
-    val kN = ctx.freshName("kN")
-    val k = ctx.freshName("k")
-    val d = ctx.freshName("d")
-    val nv = ctx.freshName("nv")
-    val vNull = ctx.freshName("vNull")
-    val st = ctx.freshName("st")
-    val cArr = ctx.freshName("cArr")
-    val d2 = ctx.freshName("d2")
-    val d2Null = ctx.freshName("d2Null")
-    val diff = ctx.freshName("diff")
-    val best = ctx.freshName("best")
-    val bestSet = ctx.freshName("bestSet")
-    val bestCluster = ctx.freshName("bestCluster")
-    val done = ctx.freshName("done")
-    val row = "org.apache.spark.sql.catalyst.expressions.GenericInternalRow"
     ev.copy(code = code"""
       ${cCode.code}
       boolean ${ev.isNull} = true;
       InternalRow ${ev.value} = null;
       if (!${cCode.isNull} && ${cCode.value}.numElements() > 0) {
         ${vCode.code}
-        boolean $vNull = ${vCode.isNull};
-        int $nv = $vNull ? 0 : ${vCode.value}.numElements();
-        for (int $d = 0; !$vNull && $d < $nv; $d++) {
-          $vNull = ${vCode.value}.isNullAt($d);
-        }
         ${ev.isNull} = false;
-        if ($vNull) {
-          ${ev.value} = new $row(new Object[]{
-            null, (Object)(Long)${cCode.value}.getStruct(0, 2).getLong(0)});
-        } else {
-          int $kN = ${cCode.value}.numElements();
-          long $best = 0L; boolean $bestSet = false; long $bestCluster = 0L;
-          boolean $done = false;
-          for (int $k = 0; $k < $kN && !$done; $k++) {
-            InternalRow $st = ${cCode.value}.getStruct($k, 2);
-            ArrayData $cArr = $st.isNullAt(1) ? null : $st.getArray(1);
-            long $d2 = 0L;
-            boolean $d2Null = $cArr == null || $cArr.numElements() != $nv;
-            for (int $d = 0; !$d2Null && $d < $nv; $d++) {
-              if ($cArr.isNullAt($d)) { $d2Null = true; }
-              else {
-                long $diff = ${vCode.value}.getLong($d) - $cArr.getLong($d);
-                $d2 += $diff * $diff;
-              }
-            }
-            if ($d2Null) {
-              ${ev.value} = new $row(new Object[]{
-                null, (Object)(Long)$st.getLong(0)});
-              $done = true;
-            } else if (!$bestSet || $d2 < $best) {
-              $best = $d2; $bestCluster = $st.getLong(0); $bestSet = true;
-            }
-          }
-          if (!$done) {
-            ${ev.value} = new $row(new Object[]{
-              (Object)(Long)$best, (Object)(Long)$bestCluster});
-          }
-        }
+        ${ev.value} = graft.functions.MlKernels.kmArgMinOf(
+          ${vCode.isNull} ? null : ${vCode.value}, ${cCode.value});
       }
     """)
   }
@@ -338,12 +338,13 @@ case class KmArgMin(v: Expression, cents: Expression) extends Expression {
   *     −(prior + coalesce(om[c], 0) − n_tokens·denom), c))).c
   *
   * (ArrayTransform: CodegenFallback, evaluated per DOC row). Same
-  * score arithmetic in long; strict < keeps the first (= smallest c —
-  * cls is sorted by c) minimum. Null edges replicated: a null n_tokens
-  * (null-text doc — spec-exercised) nulls every score, and nulls-first
-  * struct ordering makes the FIRST class in sorted order win; a null
-  * om (doc with no observed tokens) reads as obs = 0 for every class
-  * — exactly the coalesce. Result is null iff cls is null or empty, or
+  * score arithmetic in long; the pick is the struct min, ties to the
+  * smaller c. Null edges replicated: a null n_tokens (null-text doc —
+  * spec-exercised) nulls every score, a null element scores null with
+  * a null class, and nulls-first struct ordering makes the smallest
+  * class among the null scores win (a null class first); a null om
+  * (doc with no observed tokens) reads as obs = 0 for every class —
+  * exactly the coalesce. Result is null iff cls is null or empty, or
   * the winning entry's class is null.
   */
 case class NbArgMin(cls: Expression, om: Expression, nTokens: Expression)
@@ -377,67 +378,18 @@ case class NbArgMin(cls: Expression, om: Expression, nTokens: Expression)
 
   override def eval(input: InternalRow): Any = {
     val clsV = cls.eval(input).asInstanceOf[ArrayData]
-    if (clsV == null || clsV.numElements() == 0) return null
-    val omV = om.eval(input).asInstanceOf[MapData]
-    val ntAny = nTokens.eval(input)
-    val ntNull = ntAny == null
-    val nt = if (ntNull) 0L else ntAny.asInstanceOf[Long]
-    val kN = clsV.numElements()
-    var best = 0L
-    var bestSet = false
-    var bestC: org.apache.spark.unsafe.types.UTF8String = null
-    var k = 0
-    while (k < kN) {
-      val st = clsV.getStruct(k, 3)
-      val cNull = st.isNullAt(0)
-      val c = if (cNull) null else st.getUTF8String(0)
-      val scoreNull = ntNull || st.isNullAt(1) || st.isNullAt(2)
-      // first null score wins outright (nulls-first struct ordering,
-      // tie → the array's sort order, which is ascending c)
-      if (scoreNull) return c
-      var obs = 0L
-      if (omV != null && !cNull) {
-        val keys = omV.keyArray()
-        val vals = omV.valueArray()
-        val mN = omV.numElements()
-        var m = 0
-        var found = false
-        while (m < mN && !found) {
-          if (keys.getUTF8String(m).equals(c)) {
-            if (!vals.isNullAt(m)) obs = vals.getLong(m)
-            found = true
-          }
-          m += 1
-        }
-      }
-      val ns = -(st.getLong(1) + obs - nt * st.getLong(2))
-      if (!bestSet || ns < best) { best = ns; bestC = c; bestSet = true }
-      k += 1
+    if (clsV == null || clsV.numElements() == 0) null
+    else {
+      val nt = nTokens.eval(input)
+      MlKernels.nbArgMinOf(clsV, om.eval(input).asInstanceOf[MapData],
+        nt == null, if (nt == null) 0L else nt.asInstanceOf[Long])
     }
-    bestC
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val clsCode = cls.genCode(ctx)
     val omCode = om.genCode(ctx)
     val ntCode = nTokens.genCode(ctx)
-    val kN = ctx.freshName("kN")
-    val k = ctx.freshName("k")
-    val st = ctx.freshName("st")
-    val cNull = ctx.freshName("cNull")
-    val c = ctx.freshName("c")
-    val obs = ctx.freshName("obs")
-    val keys = ctx.freshName("keys")
-    val vals = ctx.freshName("vals")
-    val mN = ctx.freshName("mN")
-    val m = ctx.freshName("m")
-    val found = ctx.freshName("found")
-    val ns = ctx.freshName("ns")
-    val best = ctx.freshName("best")
-    val bestSet = ctx.freshName("bestSet")
-    val done = ctx.freshName("done")
-    val ntNull = ctx.freshName("ntNull")
-    val nt = ctx.freshName("nt")
     ev.copy(code = code"""
       ${clsCode.code}
       boolean ${ev.isNull} = true;
@@ -445,42 +397,10 @@ case class NbArgMin(cls: Expression, om: Expression, nTokens: Expression)
       if (!${clsCode.isNull} && ${clsCode.value}.numElements() > 0) {
         ${omCode.code}
         ${ntCode.code}
-        boolean $ntNull = ${ntCode.isNull};
-        long $nt = $ntNull ? 0L : ${ntCode.value};
-        int $kN = ${clsCode.value}.numElements();
-        long $best = 0L; boolean $bestSet = false;
-        boolean $done = false;
-        for (int $k = 0; $k < $kN && !$done; $k++) {
-          InternalRow $st = ${clsCode.value}.getStruct($k, 3);
-          boolean $cNull = $st.isNullAt(0);
-          UTF8String $c = $cNull ? null : $st.getUTF8String(0);
-          if ($ntNull || $st.isNullAt(1) || $st.isNullAt(2)) {
-            ${ev.isNull} = $cNull;
-            ${ev.value} = $c;
-            $done = true;
-          } else {
-            long $obs = 0L;
-            if (!${omCode.isNull} && !$cNull) {
-              ArrayData $keys = ${omCode.value}.keyArray();
-              ArrayData $vals = ${omCode.value}.valueArray();
-              int $mN = ${omCode.value}.numElements();
-              boolean $found = false;
-              for (int $m = 0; $m < $mN && !$found; $m++) {
-                if ($keys.getUTF8String($m).equals($c)) {
-                  if (!$vals.isNullAt($m)) { $obs = $vals.getLong($m); }
-                  $found = true;
-                }
-              }
-            }
-            long $ns = -($st.getLong(1) + $obs - $nt * $st.getLong(2));
-            if (!$bestSet || $ns < $best) {
-              $best = $ns;
-              ${ev.isNull} = $cNull;
-              ${ev.value} = $c;
-              $bestSet = true;
-            }
-          }
-        }
+        ${ev.value} = graft.functions.MlKernels.nbArgMinOf(${clsCode.value},
+          ${omCode.isNull} ? null : ${omCode.value}, ${ntCode.isNull},
+          ${ntCode.isNull} ? 0L : ${ntCode.value});
+        ${ev.isNull} = ${ev.value} == null;
       }
     """)
   }

@@ -7,10 +7,13 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
 /** 64-bit SimHash (Charikar 2002) of a token array as ONE native
-  * codegen'd expression: per token, xxhash64 (same XXH64/seed-42 as
-  * Spark's `xxhash64()` builtin — results are interchangeable with
-  * any SQL spelling); each fingerprint bit is the sign of the
-  * per-bit vote sum across tokens.
+  * codegen'd expression: per token, a 64-bit token hash
+  * ([[TokenHash]]: xxhash64 — same XXH64/seed-42 as Spark's
+  * `xxhash64()` builtin, so results are interchangeable with any SQL
+  * spelling — or the top 60 bits of md5, whose every step has a
+  * plain-SQL spelling); each fingerprint bit is the sign of the
+  * per-bit vote sum across tokens. An md5 fingerprint's top 4 bits
+  * are always 0 (every token votes them down).
   *
   * Why native: the declarative spelling is explode(tokens) → groupBy
   * (doc) with 64 conditional sums — a full shuffle of the exploded
@@ -20,11 +23,12 @@ import org.apache.spark.sql.types._
   * directly usable in Structured Streaming projections (stateless).
   *
   * Null array → null (UnaryExpression default); null elements are
-  * skipped. Reference analog: the per-document derived key columns of
-  * the indexed frame (iodf indexes tokens per row the same
-  * one-pass way — Dfs.scala typed index fields).
+  * skipped; an empty array → 0. Reference analog: the per-document
+  * derived key columns of the indexed frame (iodf indexes tokens per
+  * row the same one-pass way — Dfs.scala typed index fields).
   */
-case class SimHash64(child: Expression) extends UnaryExpression {
+case class SimHash64(child: Expression, hash: TokenHash = TokenHash.XxHash64)
+    extends UnaryExpression {
 
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
     child.dataType match {
@@ -38,15 +42,30 @@ case class SimHash64(child: Expression) extends UnaryExpression {
   override def dataType: DataType = LongType
   override def prettyName: String = "simhash64"
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  override def nullSafeEval(input: Any): Any =
+    SimHash.fingerprint(input.asInstanceOf[ArrayData], hash == TokenHash.Md5Top60)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, v =>
+      s"""${ev.value} = graft.functions.SimHash.fingerprint($v,
+         |  ${hash == TokenHash.Md5Top60});""".stripMargin)
+
+  override protected def withNewChildInternal(newChild: Expression): SimHash64 =
+    copy(child = newChild)
+}
+
+object SimHash {
+  /** shared interpreted/codegen kernel: one pass over the tokens, 64
+    * vote counters; `md5` picks [[TokenHash.Md5Top60]] over xxhash64
+    */
+  def fingerprint(arr: ArrayData, md5: Boolean): Long = {
+    val md = MinHash.digestFor(md5)
     val votes = new Array[Int](64)
     val n = arr.numElements()
     var i = 0
     while (i < n) {
       if (!arr.isNullAt(i)) {
-        val h = org.apache.spark.sql.catalyst.expressions.XXH64
-          .hashUTF8String(arr.getUTF8String(i), 42L)
+        val h = MinHash.tokenHash(arr.getUTF8String(i), md)
         var j = 0
         while (j < 64) {
           if (((h >>> j) & 1L) == 1L) votes(j) += 1 else votes(j) -= 1
@@ -61,40 +80,7 @@ case class SimHash64(child: Expression) extends UnaryExpression {
     fp
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => {
-      val votes = ctx.freshName("votes")
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val h = ctx.freshName("h")
-      val fp = ctx.freshName("fp")
-      s"""
-         |int[] $votes = new int[64];
-         |int $n = $v.numElements();
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$v.isNullAt($i)) {
-         |    long $h = org.apache.spark.sql.catalyst.expressions.XXH64
-         |      .hashUTF8String($v.getUTF8String($i), 42L);
-         |    for (int $j = 0; $j < 64; $j++) {
-         |      if ((($h >>> $j) & 1L) == 1L) $votes[$j]++; else $votes[$j]--;
-         |    }
-         |  }
-         |}
-         |long $fp = 0L;
-         |for (int $j = 0; $j < 64; $j++) {
-         |  if ($votes[$j] > 0) $fp |= (1L << $j);
-         |}
-         |${ev.value} = $fp;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): SimHash64 =
-    copy(child = newChild)
-}
-
-object SimHash {
   /** codegen'd 64-bit SimHash of an array<string> token column */
-  def simhash64(tokens: Column): Column =
-    GraftShims.column(SimHash64(GraftShims.expression(tokens)))
+  def simhash64(tokens: Column, hash: TokenHash = TokenHash.XxHash64): Column =
+    GraftShims.column(SimHash64(GraftShims.expression(tokens), hash))
 }

@@ -1045,17 +1045,20 @@ object Dedup {
   // -------------------------------------------------------------- simhash
 
   /** 64-bit SimHash fingerprint per doc (Charikar 2002): per-token
-    * xxhash64, each output bit = sign of the per-bit vote sum.
-    * MAP-ONLY via the native codegen'd [[graft.functions.SimHash64]]
-    * expression — the r2 spelling exploded every token and ran a
-    * 64-conditional-sum aggregation (a full shuffle of the token
-    * stream); this is one projection, no shuffle, streaming-safe.
-    * Null-text docs are dropped (as the exploded spelling did).
+    * `hash` (xxhash64 by default), each output bit = sign of the
+    * per-bit vote sum. MAP-ONLY via the native codegen'd
+    * [[graft.functions.SimHash64]] expression — the r2 spelling
+    * exploded every token and ran a 64-conditional-sum aggregation (a
+    * full shuffle of the token stream); this is one projection, no
+    * shuffle, streaming-safe. Null-text docs are dropped (as the
+    * exploded spelling did). Each input row yields its own
+    * fingerprint: a doc_id that repeats keeps one per row.
     */
-  def simhash(df: DataFrame, text: Column, id: Column): DataFrame =
+  def simhash(df: DataFrame, text: Column, id: Column,
+              hash: TokenHash = TokenHash.XxHash64): DataFrame =
     df.select(id.as("doc_id"),
         graft.functions.SimHash.simhash64(
-          array_distinct(split(TokenOps.lower(text), " "))).as("simhash"))
+          array_distinct(split(TokenOps.lower(text), " ")), hash).as("simhash"))
       .where(col("simhash").isNotNull)
 
   /** Connected components over near-dup pairs → cluster assignment
@@ -1182,47 +1185,32 @@ object Dedup {
 
   /** ENGINE-PORTABLE SimHash near-dup pairs (§2c.26b): a 60-bit
     * fingerprint whose per-token hash is the top 60 bits of
-    * `md5(token)` (mod-free — the bits ARE the votes), so the whole
-    * operator — token hashing, bit votes, fingerprint assembly,
-    * pairing — is expressible in plain SQL and hash-checks against a
-    * brute-force DuckDB mirror. Because pigeonhole banding is EXACT
-    * (any pair within hamming ≤ 3 shares one of the 4 bands by
-    * construction), the brute-force oracle also proves the banded
-    * plan end-to-end, not just the fingerprint math.
+    * `md5(token)` ([[graft.functions.TokenHash.Md5Top60]]; the bits
+    * ARE the votes), so the whole operator — token hashing, bit votes,
+    * fingerprint assembly, pairing — is expressible in plain SQL and
+    * hash-checks against a brute-force DuckDB mirror. Because
+    * pigeonhole banding is EXACT (any pair within hamming ≤ 3 shares
+    * one of the 4 bands by construction), the brute-force oracle also
+    * proves the banded plan end-to-end, not just the fingerprint math.
     *
     * The 60-bit fingerprint rides the standard 64-bit banding
     * ([[simhashPairsOf]], 4×16-bit bands — the top 4 zero bits join
     * band 3, which preserves the pigeonhole guarantee). Scale shape:
-    * one exchange (the grouped vote build over the exploded token
-    * stream, 60 small integer sums map-side combined), then the
-    * banded bucket join with the skew cap. The native xxhash64
-    * [[simhash]] kernel stays the hot-path default; this variant is
+    * the same map-only fingerprint build as [[simhash]], with only
+    * the token hash swapped, then the banded bucket join. The native
+    * xxhash64 [[simhash]] stays the hot-path default; this variant is
     * the cross-engine-reproducibility twin, exactly like
     * [[minhashLshPortable]] beside [[minhashLsh]].
     */
   def simhashPortablePairs(df: DataFrame, text: Column, id: Column,
                            maxHamming: Int = 3,
-                           maxBucket: Long = 10000L): DataFrame = {
-    val toks = array_distinct(split(TokenOps.lower(text), " "))
-    val x = conv(substring(md5(col("tok")), 1, 15), 16, 10).cast("long")
-    val votes = (0 until 60).map { j =>
-      sum(shiftrightunsigned(col("x"), j).bitwiseAND(1) * 2 - 1).as(s"v$j")
-    }
-    val fpBits = (0 until 60)
-      .map(j => when(col(s"v$j") > 0, lit(1L << j)).otherwise(lit(0L)))
-      .reduce(_ + _)
-    // gated parallelism barrier ([[Skew.spread]])
-    val fp = Skew.spread(df, id)
-      .select(id.as("doc_id"), explode(toks).as("tok"))
-      .select(col("doc_id"), x.as("x"))
-      .groupBy("doc_id").agg(votes.head, votes.tail: _*)
-      .select(col("doc_id"), fpBits.as("simhash"))
+                           maxBucket: Long = 10000L): DataFrame =
     // failOverCap: this twin's oracle is the BRUTE-FORCE hamming scan
     // (banding is pigeonhole-exact, so banded == brute must hold
     // row-for-row) — a silently capped bucket would break that
     // equality, so an over-cap bucket errors instead (Skew.failHotKeys)
-    simhashPairsOf(fp, maxHamming, maxBucket, failOverCap = true)
-  }
+    simhashPairsOf(simhash(df, text, id, TokenHash.Md5Top60),
+      maxHamming, maxBucket, failOverCap = true)
 
   /** SimHash near-dup pairs at hamming ≤ `maxHamming` (§2c.26).
     * Pigeonhole banding: split the 64-bit fingerprint into

@@ -10,9 +10,10 @@ import graft.ops.{Dedup, KMeans, TextAnalysis}
 /** r16 optimization round: the ml_kmeans / ml_naive_bayes / scrub
   * per-row kernels moved from interpreted HOF spellings
   * (CodegenFallback) to native codegen'd loop expressions
-  * (functions/MlKernels); the portable md5 MinHash family moved from a
-  * grouped explode + 32-`min()` build to the map-only MinHashSig
-  * kernel. The operators' arithmetic is exact-integer,
+  * (functions/MlKernels); the portable md5 MinHash and SimHash builds
+  * moved from grouped explode + 32-`min()` / 60-`sum()` aggregates to
+  * the map-only MinHashSig and SimHash64 kernels. The operators'
+  * arithmetic is exact-integer,
   * so each kernel must agree BIT FOR BIT with the spelling it
   * replaced. Those spellings live on here as reference expressions,
   * and every kernel is compared with its twin row for row, on the
@@ -56,6 +57,27 @@ class KernelEquivSpec extends SparkSpec {
       .collect()
     assert(rows.nonEmpty)
     rows.foreach(r => assert(r.get(1) == r.get(2), s"$key=${r.get(0)}"))
+  }
+
+  /** `kernel` over each row's `in` literals, evaluated interpreted
+    * (Expression.eval, no codegen), must equal the HOF spelling's value
+    * for that row, which the DataFrame computes
+    */
+  private def assertEvalSame(in: DataFrame, key: String, hof: Column)(
+      kernel: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
+        org.apache.spark.sql.catalyst.expressions.Expression,
+      inputs: String*): Unit = {
+    val types = inputs.map(c => in.schema(c).dataType)
+    val rows = in.select((col(key) +: inputs.map(col)) :+ hof.as("hof"): _*)
+      .collect()
+    assert(rows.nonEmpty)
+    rows.foreach { r =>
+      val lits = inputs.indices.map(i => Literal.create(r.get(i + 1), types(i)))
+      val e = kernel(lits)
+      val out = org.apache.spark.sql.catalyst.CatalystTypeConverters
+        .convertToScala(e.eval(), e.dataType)
+      assert(out == r.get(inputs.size + 1), s"$key=${r.get(0)} (eval)")
+    }
   }
 
   // ---------------------------------------------------------- kmeans
@@ -115,6 +137,38 @@ class KernelEquivSpec extends SparkSpec {
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(rows, 2), embSchema)
     assertKmSame(df, k = 3, iters = 2)
+  }
+
+  test("kmeans: equality on null centroid elements, codegen and interpreted") {
+    // a null element is struct(null, null) in the HOF spelling: the
+    // least struct there is, so it wins wherever it sits; null
+    // clusters, unsorted ties and bad centroids ride along
+    val centT = ArrayType(StructType(Seq(StructField("cluster", LongType),
+      StructField("c", ArrayType(LongType)))), containsNull = true)
+    val schema = StructType(Seq(StructField("vec_id", LongType),
+      StructField("v", ArrayType(LongType)), StructField("cents", centT)))
+    val v = Seq(3L, 4L)
+    val rows = Seq(
+      Row(1L, v, Seq(Row(0L, Seq(9L, 9L)), null, Row(2L, v))),
+      Row(2L, v, Seq(null, Row(1L, v))),
+      Row(3L, null, Seq(Row(0L, v), null)),
+      Row(4L, null, Seq(Row(1L, v), Row(0L, v))),
+      Row(5L, v, Seq(null)),
+      Row(6L, v, Seq(Row(null, v), Row(1L, v))),
+      Row(7L, v, Seq(Row(1L, v), Row(0L, v))),
+      Row(8L, v, Seq(Row(1L, null), Row(0L, Seq(3L)))),
+      Row(9L, v, Seq(Row(0L, Seq(9L, 9L)), Row(1L, Seq(3L, 5L)))),
+      Row(10L, v, Seq()),
+      Row(11L, v, null))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+    val hof = kmArgMinHof(col("v"), col("cents"))
+    assertSameRows(df, "vec_id", MlKernels.kmArgMin(col("v"), col("cents")), hof)
+    assertEvalSame(df, "vec_id", hof)(
+      es => graft.functions.KmArgMin(es(0), es(1)), "v", "cents")
+    val picked = df.select(col("vec_id"), hof.as("h")).collect()
+      .map(r => r.getLong(0) -> Option(r.getStruct(1))
+        .map(h => Option(h.get(1))).orNull).toMap
+    assert(picked(1L) == None && picked(6L) == None && picked(7L) == Some(0L))
   }
 
   test("vecMicro maps NaN to 0 and ±Inf to Long.Max/Min (non-ANSI cast)") {
@@ -177,6 +231,42 @@ class KernelEquivSpec extends SparkSpec {
           lit(9000000L).as("denom_micro")),
         struct(lit("fr").as("c"), lit(-700000L).as("prior_micro"),
           lit(9000000L).as("denom_micro"))).as("cls")))
+  }
+
+  test("naive bayes: equality on null class elements, codegen and interpreted") {
+    val clsT = ArrayType(StructType(Seq(StructField("c", StringType),
+      StructField("prior_micro", LongType),
+      StructField("denom_micro", LongType))), containsNull = true)
+    val schema = StructType(Seq(StructField("doc_id", LongType),
+      StructField("cls", clsT),
+      StructField("om", MapType(StringType, LongType)),
+      StructField("n_tokens", LongType)))
+    val en = Row("en", -700000L, 9000000L)
+    val fr = Row("fr", -600000L, 9000000L)
+    val om = Map("en" -> 5000000L)
+    val rows = Seq(
+      Row(1L, Seq(en, null, fr), om, 2L),
+      Row(2L, Seq(null, en), om, 2L),
+      Row(3L, Seq(en, null), null, null),
+      Row(4L, Seq(fr, en), om, null),
+      Row(5L, Seq(null), om, 1L),
+      Row(6L, Seq(en, fr), om, 2L),
+      Row(7L, Seq(Row(null, -700000L, 9000000L), en), om, 2L),
+      Row(8L, Seq(Row("fr", null, 9000000L), Row("en", null, 1L)), om, 2L),
+      Row(9L, Seq(fr, Row("en", -600000L, 9000000L)), null, 2L),
+      Row(10L, Seq(), om, 2L),
+      Row(11L, null, om, 2L))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+    val hof = nbArgMinHof(col("cls"), col("om"), col("n_tokens"))
+    assertSameRows(df, "doc_id",
+      MlKernels.nbArgMin(col("cls"), col("om"), col("n_tokens")), hof)
+    assertEvalSame(df, "doc_id", hof)(
+      es => graft.functions.NbArgMin(es(0), es(1), es(2)),
+      "cls", "om", "n_tokens")
+    val picked = df.select(col("doc_id"), hof.as("h")).collect()
+      .map(r => r.getLong(0) -> Option(r.getString(1))).toMap
+    assert(picked(1L).isEmpty && picked(4L) == Some("en") &&
+      picked(8L) == Some("en"))
   }
 
   // ----------------------------------------------------------- scrub
@@ -302,5 +392,83 @@ class KernelEquivSpec extends SparkSpec {
     val xx = Dedup.bandedSignatures(df, col("text"), col("doc_id"),
       hash = TokenHash.XxHash64)
     assert(xx.count() == 2 * 8L)
+  }
+
+  // --------------------------------------------------- md5 simhash
+
+  /** the grouped fingerprint build `simhashPortablePairs` replaced: one
+    * row per (doc, distinct token), the token's md5 top 60 bits, and 60
+    * vote sums per doc
+    */
+  private def portableSimhashRef(df: DataFrame): DataFrame = {
+    val toks = array_distinct(split(graft.functions.TokenOps.lower(col("text")), " "))
+    val x = conv(substring(md5(col("tok")), 1, 15), 16, 10).cast("long")
+    val votes = (0 until 60).map { j =>
+      sum(shiftrightunsigned(col("x"), j).bitwiseAND(1) * 2 - 1).as(s"v$j")
+    }
+    val fpBits = (0 until 60)
+      .map(j => when(col(s"v$j") > 0, lit(1L << j)).otherwise(lit(0L)))
+      .reduce(_ + _)
+    df.select(col("doc_id"), explode(toks).as("tok"))
+      .select(col("doc_id"), x.as("x"))
+      .groupBy("doc_id").agg(votes.head, votes.tail: _*)
+      .select(col("doc_id"), fpBits.as("simhash"))
+  }
+
+  private def fpsOf(df: DataFrame): Map[Long, Long] =
+    df.select("doc_id", "simhash").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  /** the map-only md5 fingerprints equal the grouped reference doc for
+    * doc, both drop the same docs (null text), and the interpreted
+    * kernel agrees with the generated one
+    */
+  private def assertMd5SimhashSame(df: DataFrame): Unit = {
+    val ref = fpsOf(portableSimhashRef(df))
+    val mapOnly = Dedup.simhash(df, col("text"), col("doc_id"), TokenHash.Md5Top60)
+    assert(fpsOf(mapOnly) == ref)
+    assert(mapOnly.count() == ref.size)
+    val toksT = ArrayType(StringType)
+    df.select(col("doc_id"), array_distinct(split(
+        graft.functions.TokenOps.lower(col("text")), " ")).as("toks"))
+      .collect().foreach { r =>
+        val e = graft.functions.SimHash64(
+          Literal.create(r.get(1), toksT), TokenHash.Md5Top60)
+        assert(Option(e.eval()) == ref.get(r.getLong(0)), s"doc_id=${r.getLong(0)}")
+      }
+  }
+
+  test("md5 simhash: map-only fingerprints equal the grouped build on sf0.001") {
+    assertMd5SimhashSame(graft.core.Tables.documents(spark, sfDir))
+  }
+
+  test("md5 simhash: equality on null, empty, one-token, repeated and non-ASCII docs") {
+    val rows = Seq(
+      Row(1L, null),                                  // dropped by both
+      Row(2L, ""),                                    // one "" token
+      Row(3L, "word"),                                // one token
+      Row(4L, "Word"),                                // same after lower
+      Row(5L, "a b c a b c a b c a b c"),             // repeated tokens
+      Row(6L, "İSTANBUL ΟΔΟΣ Straße ǅ 😀 naïve café"), // non-ASCII
+      Row(7L, "the quick brown fox jumps over the lazy dog"),
+      Row(8L, "  leading and  doubled spaces "))
+    val df = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, 2), docSchema)
+    assertMd5SimhashSame(df)
+    val fps = fpsOf(portableSimhashRef(df))
+    assert(!fps.contains(1L) && fps(3L) == fps(4L))
+    assert(fps.values.forall(_ >>> 60 == 0L))
+  }
+
+  test("md5 simhash: a repeated doc_id keeps one fingerprint per input row") {
+    // the grouped build summed both rows' votes into one fingerprint;
+    // the map-only build, like the xxhash64 simhash, keeps one per row
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+      Row(1L, "alpha beta gamma delta"), Row(1L, "one two three four")), 1),
+      docSchema)
+    assert(portableSimhashRef(df).count() == 1)
+    val md = Dedup.simhash(df, col("text"), col("doc_id"), TokenHash.Md5Top60)
+    assert(md.count() == 2 && md.select("simhash").distinct().count() == 2)
+    assert(Dedup.simhash(df, col("text"), col("doc_id")).count() == 2)
   }
 }

@@ -605,8 +605,120 @@ class StoreSpec extends SparkSpec {
         "upsertBatch" -> jobsOf("upsertBatch")(d => Store.upsertBatch(
           Seq((2L, "bb", 20.0), (7L, "e", 70.0)).toDF("id", "cat", "v"),
           d, rspec, "id", 1L)))
-      assert(counts === Map("append" -> 8, "delete" -> 6, "upsert" -> 12,
+      assert(counts === Map("append" -> 8, "delete" -> 4, "upsert" -> 12,
         "appendBatch" -> 8, "upsertBatch" -> 12))
     } finally rec.close()
+  }
+
+  /** an orders-like store: three indexed string fields, refs on `id` */
+  private val churnSpec =
+    IndexSpec(Seq("prio", "status", "cust")).withRowRefs("id")
+  private def churnRows(ids: Range, status: String) = ids.map(i =>
+    (i.toLong, s"p${i % 3}", status, f"c${i % 17}%02d")).toDF("id", "prio", "status", "cust")
+
+  test("one-file commits plan each index unit as one stage: append 3, delete 4, upsert 8 jobs") {
+    // each commit's index units are built at the parallelism of the
+    // data they index. A one-file batch's entries and refs sort in the
+    // scan's stage, and a delete's victims (bounded by the key set)
+    // are indexed in one task; a compaction keeps its range-partitioned
+    // plans, so its count does not move.
+    val dir = java.nio.file.Files.createTempDirectory("jobs_onefile").toString
+    Store.write(churnRows(0 until 400, "O").repartition(2), dir, churnSpec)
+    val rec = new JobRecorder(spark)
+    val sc = spark.sparkContext
+    def jobsOf(kind: String)(commit: => Unit): Int = {
+      val group = s"onefile-$kind-${java.util.UUID.randomUUID}"
+      sc.setJobGroup(group, kind)
+      try commit finally sc.clearJobGroup()
+      rec.flush()
+      rec.jobsOf(group).size
+    }
+    try {
+      val counts = Seq(
+        "append" -> jobsOf("append")(Store.append(
+          churnRows(400 until 440, "O").coalesce(1), dir, churnSpec)),
+        "delete" -> jobsOf("delete")(Store.delete(spark, dir, churnSpec, "id",
+          (0L until 40L).toDF("id").coalesce(1))),
+        "upsert" -> jobsOf("upsert")(Store.upsert(
+          churnRows(100 until 140, "F").coalesce(1), dir, churnSpec, "id")),
+        "compact" -> jobsOf("compact")(Store.compact(spark, dir)))
+      assert(counts === Seq("append" -> 3, "delete" -> 4, "upsert" -> 8,
+        "compact" -> 13))
+    } finally rec.close()
+    // the commits still serve the right rows and counts
+    val st = Store.open(spark, dir, churnSpec)
+    assert(st.frame.df.count() === 400L)
+    assert(st.fPoint("status", "F") === 40L)
+    assert(st.rowsOfPoint("status", "F").map(_.asInstanceOf[Long]).sorted ===
+      (100L until 140L))
+  }
+
+  test("a multi-file append keeps range-partitioned index units, sorted in file-name order") {
+    val dir = java.nio.file.Files.createTempDirectory("multifile").toString
+    Store.write(churnRows(0 until 200, "O").coalesce(1), dir, churnSpec)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String,
+                    qe: org.apache.spark.sql.execution.QueryExecution,
+                    ns: Long): Unit = plans.add(qe.executedPlan.treeString)
+      def onFailure(f: String,
+                    qe: org.apache.spark.sql.execution.QueryExecution,
+                    e: Exception): Unit = ()
+    }
+    val rec = new JobRecorder(spark)
+    spark.listenerManager.register(listener)
+    val batch = churnRows(200 until 600, "P").repartition(4)
+    // AQE would coalesce these tiny range partitions back into one
+    // file; keeping them makes the name-order check span files
+    val coalescing = "spark.sql.adaptive.coalescePartitions.enabled"
+    spark.conf.set(coalescing, "false")
+    try {
+      Store.append(batch, dir, churnSpec)
+      rec.flush() // the execution-end events are on the same queue
+    } finally {
+      spark.conf.unset(coalescing)
+      spark.listenerManager.unregister(listener)
+      rec.close()
+    }
+    import scala.jdk.CollectionConverters._
+    val root = new java.io.File(dir).listFiles().map(_.getName)
+      .filter(_.startsWith("index")).max
+    val segDir = new java.io.File(s"$dir/$root").listFiles().map(_.getName)
+      .filter(_.startsWith("seg_")).max
+    val id = segDir.stripPrefix("seg_")
+    // the write command names its output dir, followed by a comma
+    def written(unit: String) =
+      plans.asScala.filter(_.contains(s"/$root/$unit,")).toSeq
+    for (unit <- Seq(s"seg_$id", s"rows_$id")) {
+      val ps = written(unit)
+      assert(ps.size === 1, plans.asScala.mkString("\n----\n"))
+      assert(ps.head.contains("rangepartitioning(field"), ps.head)
+    }
+    val dataFiles = new java.io.File(s"$dir/data/seg_$id").listFiles()
+      .count(_.getName.startsWith("part-"))
+    assert(dataFiles === 4)
+    // the part files, read one by one in name order, are sorted
+    def partFiles(unit: String) =
+      new java.io.File(s"$dir/$root/$unit").listFiles().map(_.getName)
+        .filter(_.startsWith("part-")).sorted.toSeq
+    assert(partFiles(s"seg_$id").size > 1 && partFiles(s"rows_$id").size > 1)
+    def inNameOrder(unit: String, cols: String*) = partFiles(unit)
+      .flatMap(n => spark.read.parquet(s"$dir/$root/$unit/$n")
+        .select(cols.map(col): _*).collect().toSeq)
+    val entries = inNameOrder(s"seg_$id", "field", "value")
+      .map(r => (r.getString(0), r.getString(1)))
+    assert(entries.size > 1 && entries === entries.sorted)
+    val refs = inNameOrder(s"rows_$id", "field", "value", "row_key")
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+    assert(refs.size === 400 * 3 && refs === refs.sorted)
+    // the point faces agree with the plan faces on the new segment
+    val st = Store.open(spark, dir, churnSpec)
+    for ((f, v) <- Seq("status" -> "P", "status" -> "O", "cust" -> "c03",
+                       "prio" -> "p1", "cust" -> "zz")) {
+      assert(st.fPoint(f, v) ===
+        st.f(f, v).collect().headOption.map(_.getLong(0)).getOrElse(0L), (f, v))
+      assert(st.rowsOfPoint(f, v).map(_.asInstanceOf[Long]).sorted ===
+        st.rowsOf(f, v).collect().map(_.getLong(0)).toSeq.sorted, (f, v))
+    }
   }
 }

@@ -4,12 +4,23 @@
 Usage:
   sbt -batch "runMain graft.Explain /root/testdata/sf0.01" 2>/dev/null > /tmp/explain_all.txt
   python3 tools/make_plans.py /tmp/explain_all.txt > PLANS.md
+
+  python3 tools/make_plans.py --check /tmp/explain_all.txt
+      Rebuild the table in memory and diff it against the repo's
+      PLANS.md. Prints every line that differs (`-` as committed, `+`
+      as rebuilt) and exits 1 on any difference, 0 when PLANS.md is
+      byte-identical.
 """
+import argparse
+import difflib
+import os
 import re
 import sys
 
+PLANS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md")
 
-def main(path):
+
+def render(path):
     txt = open(path).read()
     # strip sbt's "[info] " prefixes if present
     txt = re.sub(r"^\[info\] ", "", txt, flags=re.M)
@@ -62,8 +73,34 @@ def main(path):
     ]
     for r in sorted(rows):
         out.append("| " + " | ".join(str(x) for x in r) + " |")
-    print("\n".join(out))
+    return "\n".join(out) + "\n"
+
+
+def check(explain, plans):
+    """print the lines where `plans` differs from the rebuilt table;
+    1 on any difference, else 0"""
+    committed = open(plans).read()
+    rebuilt = render(explain)
+    if committed == rebuilt:
+        return 0
+    for line in difflib.unified_diff(committed.splitlines(), rebuilt.splitlines(),
+                                     plans, "rebuilt", n=0, lineterm=""):
+        if not line.startswith("@@"):
+            print(line)
+    return 1
+
+
+def main(argv):
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("explain", help="graft.Explain output")
+    ap.add_argument("--check", action="store_true",
+                    help="diff the rebuilt table against PLANS.md instead of printing it")
+    args = ap.parse_args(argv)
+    if args.check:
+        return check(args.explain, PLANS)
+    sys.stdout.write(render(args.explain))
+    return 0
 
 
 if __name__ == "__main__":
-    main(sys.argv[1])
+    sys.exit(main(sys.argv[1:]))
