@@ -164,8 +164,9 @@ final case class IndexedFrame(df: DataFrame, spec: IndexSpec) {
     * exactly one bitmap. The sort plans at the input's parallelism:
     * a multi-partition input is range-partitioned (row_key included,
     * so a hot entry's run splits across tasks and files instead of
-    * pinning one), while a one-partition input — a one-file segment —
-    * is sorted in place with no exchange.
+    * pinning one), while a one-partition input — a segment whose
+    * read-back scans as one split — is sorted in place with no
+    * exchange.
     */
   def rowRefs: DataFrame = {
     val key = spec.rowRefs.getOrElse(throw new IllegalArgumentException(

@@ -30,8 +30,9 @@ import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
   *
   * HOW: the index (`seg_*`) and row-refs (`rows_*`) parquet of each
   * unit are written totally ordered on (field, value[, row_key]): a
-  * one-file unit as one sorted file, a multi-file unit (a multi-file
-  * batch, a compact fold) range-clustered across its files. Either
+  * unit built in one task as one sorted file, a wider unit (a batch
+  * read back as several splits, a compact fold) range-clustered
+  * across its files. Either
   * way the part files read in name order are sorted, so footer
   * statistics prune a point key to the file(s) straddling it.
   * Footers are read ONCE per store handle, on its first lookup, and

@@ -106,6 +106,30 @@ object Store {
       .filterNot(n => n.startsWith("_") || n.startsWith(".")).toSeq.sorted
   }
 
+  /** does `df`'s scan plan a single split? The count comes from
+    * planning the scan over its already-listed files, so no job runs.
+    * A small file is one split and a large one is cut by size, so an
+    * input handed to one task on this test is one the scan would
+    * have read in one task anyway.
+    */
+  private def oneSplit(df: DataFrame): Boolean = df.rdd.getNumPartitions == 1
+
+  /** a persisted read handed to its index build: one partition when
+    * the scan plans one split, so the entries aggregate and sort and
+    * the refs sort run in the scan's own stage; as scanned otherwise
+    */
+  private def indexShaped(persisted: DataFrame): DataFrame =
+    if (oneSplit(persisted)) persisted.coalesce(1) else persisted
+
+  /** a tombstone's victims handed to their index build: shuffled to
+    * one partition when the persisted key set bounding them reads as
+    * one split, so the entries aggregate and sort need no further
+    * exchange; as scanned otherwise (an upsert's key set is as large
+    * as its batch)
+    */
+  private def victimsShaped(victims: DataFrame, keys: DataFrame): DataFrame =
+    if (oneSplit(keys)) victims.repartition(1) else victims
+
   private def writeManifest(fs: org.apache.hadoop.fs.FileSystem,
                             segDir: String, files: Seq[String]): Unit = {
     // the manifest IS the segment's commit marker, and with concurrent
@@ -997,9 +1021,12 @@ object Store {
     * below the tombstone's id, semi-joined to the persisted key set
     * (only the matching rows reach the index build), but never
     * rewrites the corpus. `keys` must be driver-small (the delete
-    * contract; the overlap check reads two key sets on the driver),
-    * so the victims, bounded by it, are indexed in one task after the
-    * parallel scan. Every open/openAt/rowsOf read serves the
+    * contract; the overlap check reads two key sets on the driver).
+    * When the persisted key set reads as one split, the victims it
+    * bounds are indexed in one task after the parallel scan; a key
+    * set too large for one split (an upsert's is as large as its
+    * batch) keeps the parallel index build.
+    * Every open/openAt/rowsOf read serves the
     * post-delete state, and [[compact]] later folds the tombstones
     * into the data physically. Returns the tombstone's snapshot id.
     *
@@ -1110,8 +1137,8 @@ object Store {
     * the unit's main `ixdelta`) and [[rescanTombstoneIndex]]
     * (post-commit, writes a fresh VERSIONED delta published
     * atomically): list, pin the plan to the listing, index the
-    * then-live victims in one task (their count is bounded by the
-    * driver-small key set), write the negated entries to `outDir`.
+    * then-live victims (in one task when the key set bounding them
+    * reads as one split), write the negated entries to `outDir`.
     * Returns (segments scanned, tombstones seen) for the caller's
     * coverage records.
     */
@@ -1134,13 +1161,10 @@ object Store {
     // write()/append() read-back discipline: a nondeterministic keys
     // plan must not net a different row set than the one recorded);
     // the then-live rule is the scoping dataAsOf already applies
-    // The store scan stays parallel; the victims it keeps are bounded
-    // by the key set, which the delete contract keeps driver-small, so
-    // they are indexed in one task: one shuffle to one partition, then
-    // the entries aggregate and sort with no further exchange.
-    val victims = keyJoin(dataAsOf(spark, snap), keyCol,
-      Seq(readKeys(spark, s"$root/del_$id/keys")), "left_semi")
-    IndexedFrame(victims.repartition(1), spec).entries
+    val keys = readKeys(spark, s"$root/del_$id/keys")
+    IndexedFrame(victimsShaped(
+        keyJoin(dataAsOf(spark, snap), keyCol, Seq(keys), "left_semi"), keys),
+      spec).entries
       .select(col("field"), col("value"), (-col("f")).as("f"))
       .write.mode(SaveMode.Overwrite)
       .options(PointRead.SegWriteOptions).parquet(outDir)
@@ -1426,16 +1450,14 @@ object Store {
     if (!seg.columns.contains(keyCol)) { // no victims possible
       atomicCreate(fs, token); return true
     }
-    val victims = snap.thenLiveVictims(spark, seg, segId, id, keyCol,
-      readKeys(spark, s"$root/del_$id/keys"))
+    val keys = readKeys(spark, s"$root/del_$id/keys")
+    val victims = snap.thenLiveVictims(spark, seg, segId, id, keyCol, keys)
     if (victims.isEmpty) { // token alone records the coverage
       atomicCreate(fs, token); return true
     }
     val tmp = new org.apache.hadoop.fs.Path(s"$root/del_$id/_ixtmp_" +
       s"${segId}_${java.util.UUID.randomUUID.toString.take(8)}")
-    // victims are key-set-bounded: indexed in one task, as in
-    // scanVictimEntriesTo
-    IndexedFrame(victims.repartition(1), spec).entries
+    IndexedFrame(victimsShaped(victims, keys), spec).entries
       .select(col("field"), col("value"), (-col("f")).as("f"))
       .write.mode(SaveMode.Overwrite)
       .options(PointRead.SegWriteOptions)
@@ -1659,12 +1681,10 @@ object Store {
     // this frame, so declaring df.schema skips the one-task schema-
     // inference job a schema-less read runs (r16; the write-side twin
     // of the r15 read-layer fix — one fewer job per store write).
-    // Indexed at the data write's file count, as in writeSegment.
-    val dataNames = dataFileNames(fs, s"$dir/data")
     val persisted = spark.read.schema(df.schema).parquet(s"$dir/data")
-      .coalesce(math.max(1, dataNames.size))
-    writeSegmentIndex(spark, IndexedFrame(persisted, spec), s"$dir/index", 0,
-      oneTask = false)
+    writeSegmentIndex(spark, IndexedFrame(indexShaped(persisted), spec),
+      s"$dir/index", 0, oneTask = false)
+    val dataNames = dataFileNames(fs, s"$dir/data")
     writeManifest(fs, s"$dir/index/seg_0", dataNames)
   }
 
@@ -1676,8 +1696,9 @@ object Store {
     * disjoint paths, so they are written side by side; the caller
     * publishes the manifest only after both have finished. Both plan
     * at `ix.df`'s partition count: callers hand a one-partition frame
-    * for a one-file segment, whose entries aggregate and sort and whose
-    * refs sort then run in the scan's own stage. `oneTask` writes each
+    * for a read-back that scans as one split (see [[indexShaped]]),
+    * whose entries aggregate and sort and whose refs sort then run in
+    * the scan's own stage. `oneTask` writes each
     * as one task, so an empty batch's parquet still gets a readable
     * footer.
     */
@@ -2003,11 +2024,11 @@ object Store {
     * re-executing `batch` for the index would recompute the upstream
     * (2× cost) and, for a nondeterministic batch (sample/rand/changing
     * source), index a DIFFERENT row set than the one the data write
-    * just persisted. The read-back is coalesced to the data write's
-    * file count, so the index is built at the parallelism of the data
-    * it indexes: a one-file batch — any batch the writer kept in one
-    * partition — plans each index unit as one stage with no exchange,
-    * while a multi-file batch keeps the aggregate and range exchanges.
+    * just persisted. The index is built at the parallelism the
+    * read-back scans at ([[indexShaped]]): a small batch that reads
+    * back as one split plans each index unit as one stage with no
+    * exchange, while a batch that scans as several splits (large or
+    * many files) keeps the aggregate and range exchanges.
     * A batch that wrote no data file commits only with `commitEmpty`,
     * its empty index units written as one task each so their parquet
     * still gets a readable footer.
@@ -2023,8 +2044,8 @@ object Store {
       if (names.nonEmpty || commitEmpty) {
         val persisted =
           if (names.nonEmpty)
-            spark.read.schema(batch.schema).parquet(s"$dir/data/$sub")
-              .coalesce(names.size)
+            indexShaped(
+              spark.read.schema(batch.schema).parquet(s"$dir/data/$sub"))
           else spark.createDataFrame(
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema)
         writeSegmentIndex(spark, IndexedFrame(persisted, spec), root, segId,

@@ -605,7 +605,7 @@ class StoreSpec extends SparkSpec {
         "upsertBatch" -> jobsOf("upsertBatch")(d => Store.upsertBatch(
           Seq((2L, "bb", 20.0), (7L, "e", 70.0)).toDF("id", "cat", "v"),
           d, rspec, "id", 1L)))
-      assert(counts === Map("append" -> 8, "delete" -> 4, "upsert" -> 12,
+      assert(counts === Map("append" -> 8, "delete" -> 6, "upsert" -> 12,
         "appendBatch" -> 8, "upsertBatch" -> 12))
     } finally rec.close()
   }
@@ -618,9 +618,10 @@ class StoreSpec extends SparkSpec {
 
   test("one-file commits plan each index unit as one stage: append 3, delete 4, upsert 8 jobs") {
     // each commit's index units are built at the parallelism of the
-    // data they index. A one-file batch's entries and refs sort in the
-    // scan's stage, and a delete's victims (bounded by the key set)
-    // are indexed in one task; a compaction keeps its range-partitioned
+    // data they index. A one-file batch reads back as one split, so
+    // its entries and refs sort in the scan's stage, and a delete's
+    // victims (bounded by a one-split key set) are indexed in one
+    // task; a compaction keeps its range-partitioned
     // plans, so its count does not move.
     val dir = java.nio.file.Files.createTempDirectory("jobs_onefile").toString
     Store.write(churnRows(0 until 400, "O").repartition(2), dir, churnSpec)
@@ -653,7 +654,7 @@ class StoreSpec extends SparkSpec {
       (100L until 140L))
   }
 
-  test("a multi-file append keeps range-partitioned index units, sorted in file-name order") {
+  test("a multi-split append and upsert keep parallel index units, sorted in file-name order") {
     val dir = java.nio.file.Files.createTempDirectory("multifile").toString
     Store.write(churnRows(0 until 200, "O").coalesce(1), dir, churnSpec)
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
@@ -668,24 +669,32 @@ class StoreSpec extends SparkSpec {
     val rec = new JobRecorder(spark)
     spark.listenerManager.register(listener)
     val batch = churnRows(200 until 600, "P").repartition(4)
-    // AQE would coalesce these tiny range partitions back into one
-    // file; keeping them makes the name-order check span files
+    // each of the 4 small files reads back as its own split (a split
+    // is at least a file's open cost). AQE would coalesce the tiny
+    // range partitions back into one file; keeping them makes the
+    // name-order check span files
     val coalescing = "spark.sql.adaptive.coalescePartitions.enabled"
     spark.conf.set(coalescing, "false")
-    try {
+    def units(root: String, prefix: String) =
+      new java.io.File(s"$dir/$root").listFiles().map(_.getName)
+        .filter(_.startsWith(prefix)).toSet
+    val (root, id, dels) = try {
       Store.append(batch, dir, churnSpec)
+      val root = new java.io.File(dir).listFiles().map(_.getName)
+        .filter(_.startsWith("index")).max
+      val id = units(root, "seg_").max.stripPrefix("seg_")
+      // an upsert whose key set reads as 4 splits, like a large batch's
+      val delsBefore = units(root, "del_")
+      Store.upsert(churnRows(300 until 400, "Q").repartition(4), dir,
+        churnSpec, "id")
       rec.flush() // the execution-end events are on the same queue
+      (root, id, units(root, "del_") -- delsBefore)
     } finally {
       spark.conf.unset(coalescing)
       spark.listenerManager.unregister(listener)
       rec.close()
     }
     import scala.jdk.CollectionConverters._
-    val root = new java.io.File(dir).listFiles().map(_.getName)
-      .filter(_.startsWith("index")).max
-    val segDir = new java.io.File(s"$dir/$root").listFiles().map(_.getName)
-      .filter(_.startsWith("seg_")).max
-    val id = segDir.stripPrefix("seg_")
     // the write command names its output dir, followed by a comma
     def written(unit: String) =
       plans.asScala.filter(_.contains(s"/$root/$unit,")).toSeq
@@ -694,6 +703,11 @@ class StoreSpec extends SparkSpec {
       assert(ps.size === 1, plans.asScala.mkString("\n----\n"))
       assert(ps.head.contains("rangepartitioning(field"), ps.head)
     }
+    // the upsert's victims are indexed in parallel, not in one task
+    assert(dels.size === 1, dels)
+    val victimPlans = written(s"${dels.head}/ixdelta")
+    assert(victimPlans.size === 1, plans.asScala.mkString("\n----\n"))
+    assert(!victimPlans.head.contains("SinglePartition"), victimPlans.head)
     val dataFiles = new java.io.File(s"$dir/data/seg_$id").listFiles()
       .count(_.getName.startsWith("part-"))
     assert(dataFiles === 4)
@@ -713,8 +727,9 @@ class StoreSpec extends SparkSpec {
     assert(refs.size === 400 * 3 && refs === refs.sorted)
     // the point faces agree with the plan faces on the new segment
     val st = Store.open(spark, dir, churnSpec)
-    for ((f, v) <- Seq("status" -> "P", "status" -> "O", "cust" -> "c03",
-                       "prio" -> "p1", "cust" -> "zz")) {
+    assert(st.fPoint("status", "Q") === 100L)
+    for ((f, v) <- Seq("status" -> "P", "status" -> "O", "status" -> "Q",
+                       "cust" -> "c03", "prio" -> "p1", "cust" -> "zz")) {
       assert(st.fPoint(f, v) ===
         st.f(f, v).collect().headOption.map(_.getLong(0)).getOrElse(0L), (f, v))
       assert(st.rowsOfPoint(f, v).map(_.asInstanceOf[Long]).sorted ===
