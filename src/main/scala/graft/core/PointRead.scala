@@ -714,17 +714,15 @@ object PointRead {
     * handle's open-time unit snapshot (metadata open() has already
     * read), while the part-file listings, footers, open file readers
     * and victim key sets load on the first lookup that needs them
-    * and stay cached for the handle's lifetime; `None` from a lookup
-    * means "not eligible — use the plan path" (mixed/exotic layouts only —
-    * tombstones and renames are served directly, see the class notes).
+    * and stay cached for the handle's lifetime. Tombstones and renames
+    * are served directly (see the class notes); `None` comes only from
+    * the pair and k-entry walks' hot-entry gate.
     */
   final class StorePoint(conf: Configuration,
-      eligible: () => Boolean,
       freqGroups: () => Seq[FreqGroup],
       rowsGroups: () => Seq[RowsGroup],
       delKeyDirs: () => Map[Int, Path]) {
 
-    private lazy val ok = eligible()
     private lazy val fGroups = freqGroups()
     private lazy val rGroups = rowsGroups()
     private lazy val keyDirs = delKeyDirs()
@@ -755,12 +753,11 @@ object PointRead {
 
     /** total f for (field,value): per-era segment sums PLUS the
       * tombstones' negative entries — the merge-on-read netting,
-      * driver-side. None if the fast path is ineligible.
+      * driver-side
       */
-    def freq(field: String, value: String): Option[Long] =
-      if (!ok) None
-      else if (hidden(field)) Some(0L)
-      else Some(fGroups.zipWithIndex.foldLeft(0L) {
+    def freq(field: String, value: String): Long =
+      if (hidden(field)) 0L
+      else fGroups.zipWithIndex.foldLeft(0L) {
         case (acc, ((dirs, rens), i)) =>
           reverseName(field, rens) match {
             case None => acc
@@ -770,7 +767,7 @@ object PointRead {
               acc + rd.lookup(phys, value)
                 .foldLeft(0L)((a, v) => a + v.asInstanceOf[Long])
           }
-      })
+      }
 
     /** prefix NAVIGATION: every (value, net f) of one field whose
       * value starts with `prefix` — per-era range scans with the
@@ -778,11 +775,9 @@ object PointRead {
       * entries riding the same sum (merge-on-read netting, like
       * [[freq]]); zero-netted entries disappear, exactly like the
       * plan path's merged index. Empty prefix enumerates the field.
-      * None if ineligible.
       */
-    def prefix(field: String, prefix: String): Option[Seq[(String, Long)]] =
-      if (!ok) None
-      else if (hidden(field)) Some(Seq.empty)
+    def prefix(field: String, prefix: String): Seq[(String, Long)] =
+      if (hidden(field)) Seq.empty
       else {
         val acc = scala.collection.mutable.LinkedHashMap.empty[String, Long]
         fGroups.zipWithIndex.foreach { case ((dirs, rens), i) =>
@@ -794,7 +789,7 @@ object PointRead {
             }
           }
         }
-        Some(acc.toSeq.filter(_._2 != 0L).sortBy(_._1))
+        acc.toSeq.filter(_._2 != 0L).sortBy(_._1)
       }
 
     /** NUMERIC-RANGE navigation (r15 — the numeric analog of
@@ -814,9 +809,8 @@ object PointRead {
       * the plan spelling's cast-to-double (null) comparison.
       */
     def range(field: String, lo: Double,
-              hi: Double): Option[Seq[(String, Long)]] =
-      if (!ok) None
-      else if (hidden(field)) Some(Seq.empty)
+              hi: Double): Seq[(String, Long)] =
+      if (hidden(field)) Seq.empty
       else {
         val acc = scala.collection.mutable.LinkedHashMap.empty[String, Long]
         fGroups.zipWithIndex.foreach { case ((dirs, rens), i) =>
@@ -831,8 +825,8 @@ object PointRead {
             }
           }
         }
-        Some(acc.toSeq.filter(_._2 != 0L)
-          .sortBy { case (v, _) => (java.lang.Double.parseDouble(v), v) })
+        acc.toSeq.filter(_._2 != 0L)
+          .sortBy { case (v, _) => (java.lang.Double.parseDouble(v), v) }
       }
 
     /** row keys for (field,value): per-era lookups with the era's
@@ -840,10 +834,10 @@ object PointRead {
       * subtracted (a key re-appended after its delete is live — it
       * sits in a later era no tombstone applies to). Keys are unique
       * across segments by construction, so concatenation IS the
-      * union. None if ineligible.
+      * union.
       */
-    def rows(field: String, value: String): Option[Seq[Any]] =
-      rowStreams(field, value).map(_.flatten)
+    def rows(field: String, value: String): Seq[Any] =
+      rowStreams(field, value).flatten
 
     /** the same row keys as [[rows]] but as LAZY SORTED RUNS: one
       * ascending iterator per (era, segment dir) — each refs segment
@@ -853,10 +847,9 @@ object PointRead {
       * segments, so the runs merge into one strictly-ascending
       * stream ([[kMerge]]) without materializing anything.
       */
-    def rowStreams(field: String, value: String): Option[Seq[Iterator[Any]]] =
-      if (!ok) None
-      else if (hidden(field)) Some(Nil)
-      else Some(rGroups.zipWithIndex.flatMap {
+    def rowStreams(field: String, value: String): Seq[Iterator[Any]] =
+      if (hidden(field)) Nil
+      else rGroups.zipWithIndex.flatMap {
         case ((dirs, rens, delIds), i) =>
           reverseName(field, rens) match {
             case None => Nil
@@ -870,7 +863,7 @@ object PointRead {
                 runs.map(_.filterNot(vs.contains))
               }
           }
-      })
+      }
 
     /** drop consecutive equal keys from an ASCENDING stream — row
       * keys are unique across segments by construction, so this is
@@ -919,16 +912,12 @@ object PointRead {
       * lazy (undecoded pages), which matters when one entry is much
       * rarer than the other. The hot-entry gate is INLINE, as in
       * [[multiStats]]: the walk aborts once either side exceeds
-      * `maxF` consumed keys. None = ineligible or gated.
+      * `maxF` consumed keys. None = gated.
       */
     def andCount(f1: String, v1: String, f2: String, v2: String,
                  maxF: Long): Option[Long] = {
-      if (!ok) return None
-      val saOpt = rowStreams(f1, v1)
-      val sbOpt = rowStreams(f2, v2)
-      if (saOpt.isEmpty || sbOpt.isEmpty) return None
-      val x = dedupAsc(kMerge(saOpt.get)).buffered
-      val y = dedupAsc(kMerge(sbOpt.get)).buffered
+      val x = dedupAsc(kMerge(rowStreams(f1, v1))).buffered
+      val y = dedupAsc(kMerge(rowStreams(f2, v2))).buffered
       var fa = 0L
       var fb = 0L
       var and = 0L
@@ -958,16 +947,13 @@ object PointRead {
       * Every other boolean combination over k terms is a set
       * identity away for the caller (NOT via the frame row count —
       * [[graft.core.StoredFrame.boolPoint]] supplies it from its
-      * cached nPoint). None = ineligible or gated.
+      * cached nPoint). None = gated.
       */
     def multiStats(terms: Seq[(String, String)],
                    maxF: Long): Option[(Seq[Long], Long, Long)] = {
-      if (!ok) return None
       if (terms.isEmpty) return Some((Nil, 0L, 0L))
-      val streamOpts = terms.map { case (f, v) => rowStreams(f, v) }
-      if (streamOpts.exists(_.isEmpty)) return None
-      val its = streamOpts.map(s => dedupAsc(kMerge(s.get)).buffered)
-        .toIndexedSeq
+      val its = terms.map { case (f, v) =>
+        dedupAsc(kMerge(rowStreams(f, v))).buffered }.toIndexedSeq
       val k = its.length
       val fCnt = Array.fill(k)(0L)
       var and = 0L
@@ -1013,15 +999,11 @@ object PointRead {
       * ANSWER plus victim sets — no input side is held.
       */
     def multiRows(terms: Seq[(String, String)],
-                  intersect: Boolean): Option[Seq[Any]] = {
-      if (!ok) return None
-      if (terms.isEmpty) return Some(Seq.empty)
-      val streamOpts = terms.map { case (f, v) => rowStreams(f, v) }
-      if (streamOpts.exists(_.isEmpty)) return None
-      if (!intersect)
-        return Some(dedupAsc(kMerge(streamOpts.flatMap(_.get))).toSeq)
-      val its = streamOpts.map(s => dedupAsc(kMerge(s.get)).buffered)
-        .toIndexedSeq
+                  intersect: Boolean): Seq[Any] = {
+      if (terms.isEmpty) return Seq.empty
+      val streams = terms.map { case (f, v) => rowStreams(f, v) }
+      if (!intersect) return dedupAsc(kMerge(streams.flatten)).toSeq
+      val its = streams.map(s => dedupAsc(kMerge(s)).buffered).toIndexedSeq
       val k = its.length
       val out = Seq.newBuilder[Any]
       var exhausted = its.count(!_.hasNext)
@@ -1045,7 +1027,7 @@ object PointRead {
         }
         if (matched == k) out += minKey
       }
-      Some(out.result())
+      out.result()
     }
 
     /** release the warm file handles (safe to call even if no lookup

@@ -44,6 +44,17 @@ object SegmentedArtifact {
     (path.getFileSystem(spark.sparkContext.hadoopConfiguration), path)
   }
 
+  /** artifact partial dirs read with the first one's `_SCHEMA`
+    * sidecar, skipping the per-call schema-inference job (r15), or by
+    * inference for partials built before the sidecars
+    */
+  private[core] def readPartials(spark: SparkSession,
+                                 dirs: Seq[String]): DataFrame = {
+    val (fs, _) = fsFor(spark, dirs.head)
+    Store.readSchemaSidecar(fs, dirs.head)
+      .fold(spark.read)(spark.read.schema(_)).parquet(dirs: _*)
+  }
+
   /** identity of a store segment's INPUT: the hash of its manifest's
     * sorted file list (what the artifact build read)
     */
@@ -76,17 +87,14 @@ object SegmentedArtifact {
     */
   def refresh(spark: SparkSession, dir: String, family: String)
              (buildFor: DataFrame => DataFrame): Seq[Int] = {
-    val snap = Store.resolveSnapshot(spark, dir)
+    val snap = Store.resolveSnapshot(spark, dir).checked
     require(snap.rens.isEmpty,
       s"segmented artifacts on a renamed store: compact() first " +
         s"(folds the renames; the artifact rebuilds at the fold) ($dir)")
-    require(snap.legacyIds.isEmpty,
-      s"segmented artifacts need a manifest-carrying store ($dir)")
     val fam = famRoot(dir, family)
     val (fs, _) = fsFor(spark, dir)
     val segs = snap.segIds
-    require(segs.nonEmpty,
-      s"segmented artifacts need a manifest-carrying store ($dir)")
+    require(segs.nonEmpty, s"no committed segments in $dir")
     // fresh = the artifact segment exists AND was built from the
     // CURRENT manifest. The `_SRC` fingerprint guards the compact
     // fold that reuses the max retired unit id: the folded seg_<id>'s
@@ -102,9 +110,7 @@ object SegmentedArtifact {
     missing.foreach { id =>
       // read THIS segment's files with its own sidecar schema (the
       // delta read must not union-plan over other segments)
-      val delta = Store.readParquet(spark, snap.sidecars(id),
-        snap.manifests(id).map(n => s"$dir/data/$n"))
-      val out = buildFor(delta)
+      val out = buildFor(snap.segData(spark, id))
       out.write.mode(SaveMode.Overwrite).parquet(s"$fam/seg_$id")
       Store.writeSchemaSidecar(fs, s"$fam/seg_$id", out.schema)
       val src = fs.create(
@@ -132,18 +138,14 @@ object SegmentedArtifact {
     */
   def read(spark: SparkSession, dir: String, family: String,
            keyCol: String): DataFrame = {
-    val snap = Store.resolveSnapshot(spark, dir)
+    val snap = Store.resolveSnapshot(spark, dir).checked
     val (fs, _) = fsFor(spark, dir)
     val fam = famRoot(dir, family)
     val segs = snap.segIds
     require(segs.nonEmpty, s"no committed segments in $dir")
     val parts = snap.eras(segs).map { e =>
       val segDirs = e.ids.map(id => s"$fam/seg_$id")
-      // explicit schema from the first partial's sidecar: skips
-      // the per-call schema-inference job (r15; falls back for
-      // pre-r15 artifact dirs)
-      val art = Store.readParquet(spark,
-        Store.readSchemaSidecar(fs, segDirs.head), segDirs)
+      val art = readPartials(spark, segDirs)
       snap.withoutDeleted(spark, art,
         e.dels.map { case (id, _) => (id, keyCol) })
     }
@@ -228,16 +230,13 @@ object SegmentedAgg {
   def refresh(spark: SparkSession, dir: String, family: String,
               keyCol: String)
              (buildCounts: DataFrame => DataFrame): Seq[String] = {
-    val snap = Store.resolveSnapshot(spark, dir)
+    val snap = Store.resolveSnapshot(spark, dir).checked
     require(snap.rens.isEmpty,
       s"segmented aggregates on a renamed store: compact() first ($dir)")
-    require(snap.legacyIds.isEmpty,
-      s"segmented aggregates need a manifest-carrying store ($dir)")
     val fam = famRoot(dir, family)
     val (fs, _) = fsFor(spark, dir)
     val segs = snap.segIds
-    require(segs.nonEmpty,
-      s"segmented aggregates need a manifest-carrying store ($dir)")
+    require(segs.nonEmpty, s"no committed segments in $dir")
     val dels = snap.dels
     dels.foreach { case (_, dk) => require(dk == keyCol,
       s"tombstone keyed on '$dk' but the aggregate family nets on " +
@@ -253,10 +252,6 @@ object SegmentedAgg {
         scala.util.Try(Store.readSmallText(fs, s"$art/_SRC")).toOption
           .contains(fingerprint(segId))
 
-    def segData(id: Int): DataFrame =
-      Store.readParquet(spark, snap.sidecars(id),
-        snap.manifests(id).map(n => s"$dir/data/$n"))
-
     def stamp(art: String, segId: Int): Unit = {
       val src = fs.create(new org.apache.hadoop.fs.Path(s"$art/_SRC"), true)
       try src.write(fingerprint(segId).getBytes("UTF-8")) finally src.close()
@@ -266,7 +261,7 @@ object SegmentedAgg {
     segs.foreach { id =>
       val art = s"$fam/seg_$id"
       if (!fresh(art, id)) {
-        val counts = buildCounts(segData(id))
+        val counts = buildCounts(snap.segData(spark, id))
         validateCountsSchema(counts.schema, Some(keyCol), s"refresh($fam)")
         counts.write.mode(SaveMode.Overwrite).parquet(art)
         Store.writeSchemaSidecar(fs, art, counts.schema)
@@ -282,8 +277,8 @@ object SegmentedAgg {
       segs.filter(_ < t).foreach { s =>
         val art = s"$fam/del_${t}_seg_$s"
         if (!fresh(art, s)) {
-          val counts = buildCounts(snap.thenLiveVictims(spark, segData(s),
-            s, t, keyCol, snap.keys(spark, t)))
+          val counts = buildCounts(snap.thenLiveVictims(spark,
+            snap.segData(spark, s), s, t, keyCol, snap.keys(spark, t)))
           validateCountsSchema(counts.schema, Some(keyCol),
             s"refresh($fam)")
           val negated = counts.select(counts.schema.fields.map { f =>
@@ -330,15 +325,13 @@ object SegmentedAgg {
   def read(spark: SparkSession, dir: String, family: String): DataFrame = {
     import org.apache.spark.sql.functions.sum
     val fam = famRoot(dir, family)
-    val snap = Store.resolveSnapshot(spark, dir)
+    val snap = Store.resolveSnapshot(spark, dir).checked
     val segs = snap.segIds
     require(segs.nonEmpty, s"no committed segments in $dir")
     val dels = snap.dels.map(_._1)
     val dirs = segs.map(id => s"$fam/seg_$id") ++
       (for (t <- dels; s <- segs if s < t) yield s"$fam/del_${t}_seg_$s")
-    val (fs, _) = fsFor(spark, dir)
-    val all = Store.readParquet(spark, Store.readSchemaSidecar(fs, dirs.head),
-      dirs)
+    val all = SegmentedArtifact.readPartials(spark, dirs)
     validateCountsSchema(all.schema, None, s"read($fam)")
     val countCols = all.schema.fields
       .filter(_.dataType == org.apache.spark.sql.types.LongType)

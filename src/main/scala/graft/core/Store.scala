@@ -9,11 +9,18 @@ import org.apache.spark.sql.functions.col
   * writeIndexedDf / openIndexedDf / haveIndexedDf over a memory-mapped
   * dir).
   *
-  * Layout: `<dir>/data` (the rows, parquet) and `<dir>/index` (the
-  * (field,value,f) index frame, parquet, sorted by field,value so
-  * min/max stats give per-file pruning on index lookups). Parquet is
-  * the mmap analog — reopening is O(footers), columns decode on
-  * demand, and both parts scale out instead of living in one file.
+  * Layout: `<dir>/data` (the rows, parquet) and the live index
+  * generation `<dir>/index` or `<dir>/index_g<k>`, which holds one
+  * dir per committed unit: `seg_<id>` (the segment's (field,value,f)
+  * entries, parquet sorted by field,value so min/max stats prune
+  * index lookups, with its `_MANIFEST` of data files and `_SCHEMA`
+  * sidecar), `rows_<id>` (row refs), `del_<id>` (tombstones) and
+  * `ren_<id>` (renames), plus the `_claim_<id>` of every writer.
+  * Parquet is the mmap analog — reopening is O(footers), columns
+  * decode on demand, and both parts scale out instead of living in
+  * one file. This is the only layout the store serves: [[compact]]
+  * upgrades an older one once, and every other op refuses it (see
+  * the older-layouts notes below).
   */
 object Store {
 
@@ -131,34 +138,41 @@ object Store {
     if (oneSplit(keys)) victims.repartition(1) else victims
 
   private def writeManifest(fs: org.apache.hadoop.fs.FileSystem,
-                            segDir: String, files: Seq[String]): Unit = {
+                            segDir: String, files: Seq[String]): Unit =
     // the manifest IS the segment's commit marker, and with concurrent
     // writers another writer may LIST manifests (resolveSnapshot) at
-    // any moment — so it must appear atomically:
-    // write a temp file, then rename (atomic on HDFS and local FS).
-    // A plain create+write+close has a window where a reader sees an
-    // empty or partial file list and plans over missing files.
-    val tmp = new org.apache.hadoop.fs.Path(s"$segDir/._MANIFEST.tmp")
+    // any moment — so it must appear atomically
+    publishFile(fs, s"$segDir/_MANIFEST", files.sorted.mkString("\n"))
+
+  /** write a small file so that it appears atomically: a temp file,
+    * then a rename (atomic on HDFS and local FS). A plain
+    * create+write+close has a window where a reader sees an empty or
+    * partial file.
+    */
+  private def publishFile(fs: org.apache.hadoop.fs.FileSystem,
+                          p: String, text: String): Unit = {
+    val path = new org.apache.hadoop.fs.Path(p)
+    val tmp = new org.apache.hadoop.fs.Path(path.getParent, s".${path.getName}.tmp")
     val out = fs.create(tmp, true)
-    try out.write(files.sorted.mkString("\n").getBytes("UTF-8"))
+    try out.write(text.getBytes("UTF-8"))
     finally out.close()
-    fs.rename(tmp, new org.apache.hadoop.fs.Path(s"$segDir/_MANIFEST"))
+    fs.rename(tmp, path)
   }
 
   private def readManifest(fs: org.apache.hadoop.fs.FileSystem,
-                           segDir: String): Option[Seq[String]] = {
-    val p = new org.apache.hadoop.fs.Path(s"$segDir/_MANIFEST")
-    if (!fs.exists(p)) None
-    else {
-      val buf = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-      val in = fs.open(p)
-      try {
-        in.readFully(buf)
-        Some(new String(buf, "UTF-8")
-          .split("\n").toSeq.map(_.trim).filter(_.nonEmpty))
-      } finally in.close()
-    }
-  }
+                           segDir: String): Option[Seq[String]] =
+    readSmall(fs, s"$segDir/_MANIFEST")
+      .map(_.split("\n").toSeq.map(_.trim).filter(_.nonEmpty))
+
+  /** the text of a small metadata file, None when there is none: one
+    * `open`, with no existence or length probe before it
+    */
+  private def readSmall(fs: org.apache.hadoop.fs.FileSystem,
+                        p: String): Option[String] =
+    try {
+      val in = fs.open(new org.apache.hadoop.fs.Path(p))
+      try Some(new String(in.readAllBytes(), "UTF-8")) finally in.close()
+    } catch { case _: java.io.FileNotFoundException => None }
 
   // ------------------------------------------------------ schema sidecars
   // Each segment also records the PHYSICAL SCHEMA of the data files
@@ -183,20 +197,10 @@ object Store {
   }
 
   private[core] def readSchemaSidecar(fs: org.apache.hadoop.fs.FileSystem,
-                                segDir: String): Option[org.apache.spark.sql.types.StructType] = {
-    val p = new org.apache.hadoop.fs.Path(s"$segDir/_SCHEMA")
-    if (!fs.exists(p)) None
-    else {
-      val buf = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-      val in = fs.open(p)
-      try {
-        in.readFully(buf)
-        Some(org.apache.spark.sql.types.DataType
-          .fromJson(new String(buf, "UTF-8"))
-          .asInstanceOf[org.apache.spark.sql.types.StructType])
-      } finally in.close()
-    }
-  }
+                                segDir: String): Option[org.apache.spark.sql.types.StructType] =
+    readSmall(fs, s"$segDir/_SCHEMA").map(json =>
+      org.apache.spark.sql.types.DataType.fromJson(json)
+        .asInstanceOf[org.apache.spark.sql.types.StructType])
 
   /** WIDENING promotions (r12 schema evolution): the type a field may
     * grow into across segments. Integral chain byte→short→int→long
@@ -294,13 +298,8 @@ object Store {
   // and reclaimed by vacuum()).
 
   private[core] def readSmallText(fs: org.apache.hadoop.fs.FileSystem,
-                            p: String): String = {
-    val path = new org.apache.hadoop.fs.Path(p)
-    val buf = new Array[Byte](fs.getFileStatus(path).getLen.toInt)
-    val in = fs.open(path)
-    try { in.readFully(buf); new String(buf, "UTF-8").trim }
-    finally in.close()
-  }
+                            p: String): String =
+    readSmall(fs, p).getOrElse(throw new java.io.FileNotFoundException(p)).trim
 
   /** the committed tombstones among the listing `names` of `root`:
     * (id, keyCol), id ascending
@@ -437,21 +436,34 @@ object Store {
     id
   }
 
-  // ------------------------------------------------- mixed-legacy stores
-  // A seg_ dir carrying NEITHER a manifest NOR a writer claim was
-  // written by the pre-manifest protocol. If such segments COEXIST
-  // with manifest-carrying ones (a store migrated mid-protocol), the
-  // manifest-scoped read would silently drop the legacy segments'
-  // rows and vacuum would then DELETE their now-"unreferenced" data
-  // files (r11 advice, medium). The rule is all-or-nothing, mirroring
-  // the sidecar schema union: a mixed store is served by the plain recursive
-  // directory read (every data file live), its index is the union of
-  // ALL segments, vacuum never reclaims its data files, and the
-  // mutating ops that depend on manifest scoping (delete/appendBatch/
-  // openAt) refuse it — compact() folds it into a clean modern store.
-  // A crashed MODERN append (claim present, manifest absent) is not
-  // legacy: its ghost stays invisible, as before. The legacy ids are
-  // [[UnitSnapshot.legacyIds]].
+  // ------------------------------------------------------ older layouts
+  // Earlier versions of the store wrote layouts no current writer
+  // produces: loose index part files directly under the generation
+  // root (pre-segment), `seg_` dirs with NEITHER a manifest NOR a
+  // writer's claim (pre-manifest, alone or mixed with current
+  // segments), and committed segments or tombstone key sets without a
+  // `_SCHEMA` sidecar. A manifest-scoped read would silently drop the
+  // rows no manifest names, and vacuum would then delete their files,
+  // so the store refuses them, the way a table format refuses a
+  // protocol version it does not read (Delta Lake, VLDB 2020):
+  // [[resolveSnapshot]] spots them in the metadata it reads anyway
+  // ([[UnitSnapshot.older]]), [[UnitSnapshot.checked]] refuses them
+  // with one message, and [[compact]] upgrades them once. A crashed
+  // current append (claim present, manifest absent) is not an older
+  // layout: its ghost stays invisible.
+
+  /** the refusal of an older layout, which [[UnitSnapshot.older]] names */
+  private[core] def olderLayout(dir: String, which: String): Nothing =
+    throw new IllegalStateException(
+      s"$dir holds an older store layout ($which): run " +
+        s"Store.compact(spark, dir) once to upgrade it")
+
+  /** a root listing name that is none of the current layout's entries:
+    * a loose index part file of the pre-segment layout
+    */
+  private def looseIndexFile(n: String): Boolean =
+    !n.startsWith("_") && !n.startsWith(".") &&
+      !Seq("seg_", "rows_", "del_", "ren_").exists(n.startsWith)
 
   // -------------------------------------------------------- rename units
   // Column RENAME as a metadata-only unit `ren_<id>` sharing the
@@ -523,28 +535,15 @@ object Store {
   private[core] def readIx(spark: SparkSession, paths: Seq[String]): DataFrame =
     spark.read.schema(IxEntriesSchema).parquet(paths: _*)
 
-  /** parquet `paths` read with a recorded schema, or by inference
-    * when there is none (units that predate the sidecars)
+  /** store unit dirs (row refs, a tombstone's key set) read with the
+    * first dir's `_SCHEMA` sidecar — same inference-job-avoidance as
+    * [[readIx]]; a unit without one is an older layout
     */
-  private[core] def readParquet(spark: SparkSession,
-                          schema: Option[org.apache.spark.sql.types.StructType],
-                          paths: Seq[String]): DataFrame =
-    schema.fold(spark.read)(spark.read.schema(_)).parquet(paths: _*)
-
-  /** persisted row-refs dirs read with the first dir's `_SCHEMA`
-    * sidecar (fallback: inference for pre-r15 stores) */
-  private[core] def readRefs(spark: SparkSession, dirs: Seq[String]): DataFrame = {
+  private def readUnits(spark: SparkSession, dirs: String*): DataFrame = {
     val (fs, _) = fsFor(spark, dirs.head)
-    readParquet(spark, readSchemaSidecar(fs, dirs.head), dirs)
-  }
-
-  /** a tombstone's persisted key set, read with the `_SCHEMA`
-    * sidecar recorded at delete time (falls back to inference for
-    * pre-r15 stores) — same inference-job-avoidance as [[readIx]].
-    */
-  private[core] def readKeys(spark: SparkSession, keysDir: String): DataFrame = {
-    val (fs, _) = fsFor(spark, keysDir)
-    readParquet(spark, readSchemaSidecar(fs, keysDir), Seq(keysDir))
+    val schema = readSchemaSidecar(fs, dirs.head).getOrElse(
+      olderLayout(dirs.head, "a store unit without a _SCHEMA sidecar"))
+    spark.read.schema(schema).parquet(dirs: _*)
   }
 
   /** the hidden-namespace guard every data write runs (r12 advice):
@@ -582,9 +581,7 @@ object Store {
     require(!name.startsWith(DroppedPrefix),
       s"'$name' is a reserved dropped-column name")
     val snap = resolveSnapshot(spark, dir).checked
-    val cur = snap.schema.getOrElse(
-      throw new IllegalArgumentException(
-        s"drop requires schema sidecars on every segment ($dir)"))
+    val cur = snap.schema
     require(cur.fieldNames.contains(name),
       s"no column '$name' in store schema (${cur.fieldNames
         .filterNot(_.startsWith(DroppedPrefix)).mkString(",")})")
@@ -594,42 +591,28 @@ object Store {
       require(snap.keyColAt(id, kc) != name,
         s"column '$name' keys tombstone del_$id — compact() first")
     }
-    requireManifestStore(snap, "rename/drop")
     renameColumnUnchecked(spark, snap, name,
       id => s"$DroppedPrefix${id}_$name")
   }
 
   /** rename a column, metadata-only: claims a unit id and commits a
     * `ren_<id>` unit (marker-last, like every unit). `from` must
-    * exist and `to` must be free in the CURRENT schema. Requires a
-    * fully-modern (manifest+sidecar) store — the mapping is computed
-    * from sidecars, so a store without them cannot be renamed safely.
-    * Returns the rename's snapshot id.
+    * exist and `to` must be free in the CURRENT schema, the union of
+    * the segments' sidecars. Returns the rename's snapshot id.
     */
   def renameColumn(spark: SparkSession, dir: String,
                    from: String, to: String): Int = {
     require(from != to, "rename to the same name is a no-op")
     require(!from.startsWith(DroppedPrefix) && !to.startsWith(DroppedPrefix),
       s"the $DroppedPrefix* namespace is reserved for dropColumn")
-    val snap = resolveSnapshot(spark, dir)
-    requireManifestStore(snap, "rename")
-    val cur = snap.checked.schema.getOrElse(
-      throw new IllegalArgumentException(
-        s"rename requires schema sidecars on every segment ($dir)"))
+    val snap = resolveSnapshot(spark, dir).checked
+    val cur = snap.schema
     require(cur.fieldNames.contains(from),
       s"no column '$from' in store schema (${cur.fieldNames.mkString(",")})")
     require(!cur.fieldNames.contains(to),
       s"column '$to' already exists — rename would collide")
     renameColumnUnchecked(spark, snap, from, _ => to)
   }
-
-  /** the mapping a rename or drop commits is computed from manifests
-    * and sidecars, so every segment must carry them: none legacy, at
-    * least one committed. `op` names the face in the message.
-    */
-  private def requireManifestStore(snap: UnitSnapshot, op: String): Unit =
-    require(snap.segIds.nonEmpty && snap.legacyIds.isEmpty,
-      s"$op requires a manifest-carrying store (${snap.dir})")
 
   /** the shared ren_ unit commit for [[renameColumn]]/[[dropColumn]]
     * (both validate `snap` first); `toOf` sees the claimed unit id so
@@ -691,9 +674,9 @@ object Store {
 
   // ------------------------------------------------------ unit snapshots
   // [[resolveSnapshot]] is the one reader of a generation's units:
-  // every op that asks which segments, tombstones, renames or legacy
-  // segments exist reads them from a [[UnitSnapshot]], never from a
-  // listing of its own, so the answers of one question set always
+  // every op that asks which segments, tombstones, renames or older-
+  // layout units exist reads them from a [[UnitSnapshot]], never from
+  // a listing of its own, so the answers of one question set always
   // come from one generation.
   //
   // A handle is pinned to the units that were committed when it was
@@ -702,10 +685,7 @@ object Store {
   // open-time snapshot. A face built long after open() (the plan
   // faces are built on first access) still serves the open-time
   // units: segment, tombstone and refs units are immutable once
-  // committed, and compact retains the generation they live in. The
-  // exception is the data of a pre-manifest or mixed store, which no
-  // manifest describes: its plain directory read lists `data/` when
-  // the frame is first planned.
+  // committed, and compact retains the generation they live in.
   //
   // Within one op, questions with no write of the op between them
   // share a snapshot: that is the schedule in which any other writer
@@ -721,11 +701,14 @@ object Store {
   // found an uncovered pair.
   //
   // Resolving refuses nothing. The refusals the metadata decides
-  // ([[UnitSnapshot.checked]]) are raised by the faces that serve or
-  // extend the store — open, openAt, have, delete, append, rename,
-  // drop and compact — never by the ones that only inspect or repair
-  // it: history, snapshots, vacuum, the conflict passes and
-  // [[SegmentedArtifact]].
+  // ([[UnitSnapshot.checked]]: an older layout, a non-widening schema
+  // union) are raised at the entry of every op that serves, extends or
+  // reclaims the store — open, openAt, have, append, appendBatch,
+  // upsert, upsertBatch, delete, deleteWhere, rename, drop, vacuum and
+  // the [[SegmentedArtifact]]/[[SegmentedAgg]] refreshes and reads — so the
+  // snapshots resolved later inside such an op (the conflict passes)
+  // need no check of their own. [[compact]] upgrades an older layout
+  // instead; history and snapshots only inspect.
   //
   // The snapshot also owns the SCOPING rule, so no reader spells it
   // out: a tombstone or rename applies to the units with smaller ids
@@ -735,14 +718,14 @@ object Store {
   // was written, and dropped fields stay out of the entry faces. Every
   // face, the victim scans and repairs, and
   // [[SegmentedArtifact]]/[[SegmentedAgg]] read through its helpers. A tombstone being committed is not in its own
-  // snapshot, so its key set is read by path ([[readKeys]]).
+  // snapshot, so its key set is read by path ([[readUnits]]).
 
   /** the units of one generation, as resolved from its metadata: the
-    * root listing, each segment's manifest and schema sidecar (the
-    * served schema is their union), each tombstone's key column,
-    * index-delta dirs and key-set sidecar, the renames and the `rows_`
-    * ids. With `upTo`, only units with ids at or below it (time
-    * travel, a tombstone's victim scan).
+    * root listing, each committed segment's manifest and schema
+    * sidecar (the served schema is their union), each tombstone's key
+    * column, index-delta dirs and key-set sidecar, the renames, the
+    * `rows_` ids and the older layouts found. With `upTo`, only units
+    * with ids at or below it (time travel, a tombstone's victim scan).
     */
   private[core] final case class UnitSnapshot(
       dir: String,
@@ -752,67 +735,50 @@ object Store {
       names: Seq[String],
       segIds: Seq[Int],
       manifests: Map[Int, Seq[String]],
-      sidecars: Map[Int, Option[org.apache.spark.sql.types.StructType]],
-      legacyIds: Seq[Int],
+      sidecars: Map[Int, org.apache.spark.sql.types.StructType],
       dels: Seq[(Int, String)],
       delIxDirs: Map[Int, Seq[String]],
-      keySchemas: Map[Int, Option[org.apache.spark.sql.types.StructType]],
+      keySchemas: Map[Int, org.apache.spark.sql.types.StructType],
       rens: Seq[(Int, String, String)],
-      rowsIds: Seq[Int]) {
-
-    /** every `seg_` dir of the root listing, committed or not */
-    def segDirs: Seq[String] = names.filter(_.startsWith("seg_")).sorted
+      rowsIds: Seq[Int],
+      older: Seq[String]) {
 
     /** the served schema: the union of the committed segments'
       * sidecars, each mapped from its PHYSICAL names through the
       * renames that postdate it, so the union speaks the
-      * (as-of-`upTo`) names. None when any segment predates the
-      * sidecar protocol — all-or-nothing, because a sidecar-less
-      * segment may carry columns the union cannot see, and an
-      * explicit read schema would silently DROP them. Throws on a
-      * non-widening union.
+      * (as-of-`upTo`) names. Throws on a non-widening union.
       */
-    lazy val schema: Option[org.apache.spark.sql.types.StructType] =
-      if (segIds.isEmpty || segIds.exists(sidecars(_).isEmpty)) None
-      else Some(unionSchema(segIds.map { id =>
+    lazy val schema: org.apache.spark.sql.types.StructType =
+      unionSchema(segIds.map { id =>
         val applicable = rensAfter(id)
-        org.apache.spark.sql.types.StructType(sidecars(id).get.fields.map(f =>
+        org.apache.spark.sql.types.StructType(sidecars(id).fields.map(f =>
           f.copy(name = currentName(f.name, applicable))))
-      }))
+      })
 
     /** this snapshot, once the refusals its metadata decides have
-      * passed: a non-widening schema union, and time travel or
-      * tombstones on a MIXED store. A mixed store is all-or-nothing
-      * (r11 advice): the manifest union does not describe the legacy
-      * segments' rows, so its data is served by the plain recursive
-      * directory read, and the features that NEED manifest scoping
-      * are refused rather than mis-served.
+      * passed: an older layout ([[olderLayout]]), and a non-widening
+      * schema union
       */
     def checked: UnitSnapshot = {
+      if (older.nonEmpty) olderLayout(dir, older.mkString(", "))
       schema
-      if (segIds.nonEmpty && legacyIds.nonEmpty) {
-        require(upTo.isEmpty,
-          s"time travel is unavailable on a mixed (legacy+manifest) " +
-            s"store — compact() folds it into a modern one ($dir)")
-        require(dels.isEmpty,
-          s"tombstones on a mixed store cannot be scoped — compact() " +
-            s"first ($dir)")
-      }
       this
     }
 
     /** the `rows_` ids that serve row refs: committed segments' only
       * (a crashed append's refs segment, written before its manifest,
-      * must stay as invisible as its data), plus a mixed store's
-      * legacy ones (all-or-nothing); every one on a pre-manifest store
+      * must stay as invisible as its data)
       */
-    def refsIds: Seq[Int] =
-      if (segIds.isEmpty) rowsIds
-      else rowsIds.filter((segIds ++ legacyIds).toSet)
+    def refsIds: Seq[Int] = rowsIds.filter(segIds.toSet)
+
+    /** segment `id`'s data files, read with its sidecar */
+    def segData(spark: SparkSession, id: Int): DataFrame =
+      spark.read.schema(sidecars(id))
+        .parquet(manifests(id).map(n => s"$dir/data/$n"): _*)
 
     /** tombstone `id`'s persisted key set, read with its sidecar */
     def keys(spark: SparkSession, id: Int): DataFrame =
-      readParquet(spark, keySchemas(id), Seq(s"$root/del_$id/keys"))
+      spark.read.schema(keySchemas(id)).parquet(s"$root/del_$id/keys")
 
     /** the renames with ids in (`lo`, `hi`]: they map the names a unit
       * at `lo` was written with to the names current at `hi` */
@@ -899,118 +865,96 @@ object Store {
     val (fs, _) = fsFor(spark, dir)
     val names = rootNames(fs, root)
     def within(id: Int) = upTo.forall(id <= _)
-    val segDirIds = unitIds(names, "seg_")
-    val manifests = segDirIds.flatMap(id =>
+    val manifests = unitIds(names, "seg_").flatMap(id =>
       readManifest(fs, s"$root/seg_$id").map(id -> _))
-    // pre-manifest segments: neither a manifest nor a writer's claim
-    // (a crashed MODERN append keeps its claim and stays invisible)
-    val committed = manifests.map(_._1).toSet
-    val legacyIds = segDirIds.filterNot(id =>
-      committed(id) || names.contains(claimPath(root, id).getName))
     val segs = manifests.filter(m => within(m._1))
     val segIds = segs.map(_._1)
+    // committed segments only: an in-flight append writes its sidecar
+    // before its manifest, so an uncommitted one may be partial
+    val sidecars = segIds.flatMap(id =>
+      readSchemaSidecar(fs, s"$root/seg_$id").map(id -> _)).toMap
     val dels = tombstonesIn(fs, root, names).filter(d => within(d._1))
+    val keySchemas = dels.flatMap { case (id, _) =>
+      readSchemaSidecar(fs, s"$root/del_$id/keys").map(id -> _) }.toMap
+    val older = Seq(
+      "loose index files" -> names.exists(looseIndexFile),
+      // neither a manifest nor a writer's claim
+      "pre-manifest segments" -> unitIds(names, "seg_").exists(id =>
+        !manifests.exists(_._1 == id) && !names.contains(claimPath(root, id).getName)),
+      "segments without a _SCHEMA sidecar" ->
+        segIds.exists(!sidecars.contains(_)),
+      "tombstone key sets without a _SCHEMA sidecar" ->
+        dels.exists(d => !keySchemas.contains(d._1)))
     UnitSnapshot(dir, root, gen, upTo, names,
       segIds = segIds,
       manifests = segs.toMap,
-      // committed and legacy segments only: an in-flight append writes
-      // its sidecar before its manifest, so an uncommitted one may be
-      // partial (a legacy segment has no claim, so no writer owns it)
-      sidecars = (segIds ++ legacyIds).map(id =>
-        id -> readSchemaSidecar(fs, s"$root/seg_$id")).toMap,
-      legacyIds = legacyIds,
+      sidecars = sidecars,
       dels = dels,
       delIxDirs = dels.map { case (id, _) =>
         id -> tombstoneIxDirs(fs, root, id) }.toMap,
-      keySchemas = dels.map { case (id, _) =>
-        id -> readSchemaSidecar(fs, s"$root/del_$id/keys") }.toMap,
+      keySchemas = keySchemas,
       rens = renamesIn(fs, root, names).filter(r => within(r._1)),
-      rowsIds = unitIds(names, "rows_").filter(within))
+      rowsIds = unitIds(names, "rows_").filter(within),
+      older = older.collect { case (which, true) => which })
   }
 
   /** The store's data as of `snap`: planned over exactly the files
     * the committed segments' manifests name — the table-format
     * posture (orphans from crashed writes are invisible; no
-    * directory-listing race), which manifest-less LEGACY stores fall
-    * back from to the plain directory read — with the applicable
-    * tombstones anti-joined, SCOPED by the id order: a tombstone
-    * deletes only from segments that precede it, so a re-appended key
-    * survives. Segments of one read era share one applicable set, so
-    * the plan is one scan branch per era ([[UnitSnapshot.eras]]), not
-    * per segment — and compact returns the store to a single clean
+    * directory-listing race) — with the applicable tombstones
+    * anti-joined, SCOPED by the id order: a tombstone deletes only
+    * from segments that precede it, so a re-appended key survives.
+    * Segments of one read era share one applicable set, so the plan
+    * is one scan branch per era ([[UnitSnapshot.eras]]), not per
+    * segment — and compact returns the store to a single clean
     * branch.
     */
   private def dataAsOf(spark: SparkSession, snap: UnitSnapshot): DataFrame = {
     import snap.{dir, rens, schema}
-    if (snap.segIds.isEmpty || snap.legacyIds.nonEmpty) {
-      // legacy (pre-manifest) layout — delete() refuses such stores,
-      // so no tombstones can exist here — or a MIXED store, whose
-      // refusals [[resolveSnapshot]] has already applied. Recursive:
-      // a legacy store that was compacted after modern (subdir-
-      // writing) appends keeps every file live, wherever it sits.
-      spark.read.option("recursiveFileLookup", "true")
-        .parquet(s"$dir/data")
-    } else {
-      val parts = snap.eras(snap.segIds)
-        .flatMap { case Era(ids, eraDels, groupRens) =>
-          val files = ids.flatMap(snap.manifests)
-            .distinct.map(n => s"$dir/data/$n")
-          if (files.isEmpty) None
-          else {
-            val df0 =
-              if (rens.isEmpty) readParquet(spark, schema, files)
-              else {
-                // RENAME ERA read: request the era's PHYSICAL names
-                // (from the group's sidecars — the union's names
-                // would read as missing), types widened to the
-                // global union's (the reader promotes), then alias
-                // physical -> current and align to the union
-                val sides = ids.map(snap.sidecars)
-                val raw =
-                  if (sides.exists(_.isEmpty)) spark.read.parquet(files: _*)
-                  else {
-                    val phys = org.apache.spark.sql.types.StructType(
-                      unionSchema(sides.flatten).fields.map { f =>
-                        val cur = currentName(f.name, groupRens)
-                        schema.flatMap(_.fields.find(_.name == cur))
-                          .map(uf => f.copy(dataType = uf.dataType,
-                            nullable = uf.nullable))
-                          .getOrElse(f)
-                      })
-                    spark.read.schema(phys).parquet(files: _*)
-                  }
-                val renamed = raw.select(raw.columns.map(c =>
-                  col(c).as(currentName(c, groupRens))).toSeq: _*)
-                schema match {
-                  case Some(u) =>
-                    val missing = u.fields
-                      .filterNot(f => renamed.columns.contains(f.name))
-                    val withAll = missing.foldLeft(renamed)((d, f) =>
-                      d.withColumn(f.name,
-                        org.apache.spark.sql.functions.lit(null)
-                          .cast(f.dataType)))
-                    withAll.select(u.fieldNames.map(col).toSeq: _*)
-                  case None => renamed
-                }
-              }
-            Some(snap.withoutDeleted(spark, df0, eraDels.map {
-              case (id, kc) => (id, snap.keyColAt(id, kc)) }))
-          }
+    val parts = snap.eras(snap.segIds)
+      .flatMap { case Era(ids, eraDels, groupRens) =>
+        val files = ids.flatMap(snap.manifests)
+          .distinct.map(n => s"$dir/data/$n")
+        if (files.isEmpty) None
+        else {
+          val df0 =
+            if (rens.isEmpty) spark.read.schema(schema).parquet(files: _*)
+            else {
+              // RENAME ERA read: request the era's PHYSICAL names
+              // (from the group's sidecars — the union's names would
+              // read as missing), types widened to the global union's
+              // (the reader promotes), then alias physical -> current
+              // and align to the union
+              val phys = org.apache.spark.sql.types.StructType(
+                unionSchema(ids.map(snap.sidecars)).fields.map { f =>
+                  val cur = currentName(f.name, groupRens)
+                  schema.fields.find(_.name == cur)
+                    .map(uf => f.copy(dataType = uf.dataType,
+                      nullable = uf.nullable))
+                    .getOrElse(f)
+                })
+              val raw = spark.read.schema(phys).parquet(files: _*)
+              val renamed = raw.select(raw.columns.map(c =>
+                col(c).as(currentName(c, groupRens))).toSeq: _*)
+              val missing = schema.fields
+                .filterNot(f => renamed.columns.contains(f.name))
+              val withAll = missing.foldLeft(renamed)((d, f) =>
+                d.withColumn(f.name,
+                  org.apache.spark.sql.functions.lit(null).cast(f.dataType)))
+              withAll.select(schema.fieldNames.map(col).toSeq: _*)
+            }
+          Some(snap.withoutDeleted(spark, df0, eraDels.map {
+            case (id, kc) => (id, snap.keyColAt(id, kc)) }))
         }
-      val out =
-        if (parts.nonEmpty) parts.reduce(_ unionByName _)
-        else schema match {
-          case Some(u) =>
-            spark.createDataFrame(spark.sparkContext.emptyRDD[
-              org.apache.spark.sql.Row], u)
-          case None => spark.read.parquet(s"$dir/data")
-        }
-      // dropped columns are renamed into the hidden namespace —
-      // filter them out of the served frame (compact folds them away
-      // physically; legacy/mixed stores cannot carry renames)
-      val hidden = out.columns.filter(_.startsWith(DroppedPrefix))
-      if (hidden.isEmpty) out else out.drop(hidden.toSeq: _*)
-    }
+      }
+    val out =
+      if (parts.nonEmpty) parts.reduce(_ unionByName _)
+      else spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    // dropped columns are renamed into the hidden namespace — filter
+    // them out of the served frame (compact folds them away physically)
+    val hidden = out.columns.filter(_.startsWith(DroppedPrefix))
+    if (hidden.isEmpty) out else out.drop(hidden.toSeq: _*)
   }
 
   /** Row-level DELETE: remove every live row whose `keyCol` value
@@ -1049,18 +993,11 @@ object Store {
     */
   private[core] def writeTombstone(spark: SparkSession, dir: String,
                              spec: IndexSpec, keyCol: String,
-                             keys: DataFrame, commit: Boolean): Int =
-    writeTombstoneAt(spark, dir, spec, keyCol, keys, commit,
-      claimTombstoneId(spark, dir, spec, keyCol)._1)
-
-  /** validate a delete against the live store, then claim its unit id;
-    * returns (id, the generation root it was claimed under)
-    */
-  private def claimTombstoneId(spark: SparkSession, dir: String,
-                               spec: IndexSpec, keyCol: String): (Int, String) = {
+                             keys: DataFrame, commit: Boolean): Int = {
     val snap = resolveSnapshot(spark, dir)
-    validateDelete(spark, snap, spec, keyCol)
-    (claimUnitId(fsFor(spark, dir)._1, snap.root), snap.root)
+    validateDelete(snap, spec, keyCol)
+    writeTombstoneAt(spark, dir, spec, keyCol, keys, commit,
+      claimUnitId(fsFor(spark, dir)._1, snap.root))
   }
 
   /** a delete's preconditions, checked over `snap`; returns the key
@@ -1070,37 +1007,19 @@ object Store {
     * generation), and again by [[writeTombstoneAt]] at its own id for
     * its direct (deterministic-id) callers; requires are idempotent.
     */
-  private def validateDelete(spark: SparkSession, snap: UnitSnapshot,
-                             spec: IndexSpec,
+  private def validateDelete(snap: UnitSnapshot, spec: IndexSpec,
                              keyCol: String): org.apache.spark.sql.types.DataType = {
     spec.rowRefs.foreach(rk => require(rk == keyCol,
       s"store has row-refs keyed on '$rk' — delete must key on it too " +
         s"(got '$keyCol'), or the refs artifact would serve deleted rows"))
-    require(snap.segIds.nonEmpty,
-      s"delete requires a manifest-carrying store; rewrite legacy " +
-        s"stores with write() first (${snap.dir})")
-    require(snap.legacyIds.isEmpty,
-      s"delete on a mixed (legacy+manifest) store cannot be scoped — " +
-        s"compact() first (${snap.dir})")
-    val live = deleteSchema(spark, snap.checked)
+    // the columns the data read serves: the sidecars' union without
+    // the hidden dropped names, so no merge-on-read frame is planned
+    val live = org.apache.spark.sql.types.StructType(
+      snap.checked.schema.fields.filterNot(_.name.startsWith(DroppedPrefix)))
     require(live.fieldNames.contains(keyCol),
       s"no column '$keyCol' in store data (${live.fieldNames.mkString(",")})")
     live(keyCol).dataType
   }
-
-  /** the columns (and types) a delete keyed as of `snap` validates
-    * against — the ones the data read serves: the sidecars' union
-    * without the hidden dropped names, so no merge-on-read frame is
-    * planned; the planned frame's own schema only when a segment
-    * predates the sidecars
-    */
-  private def deleteSchema(spark: SparkSession,
-                           snap: UnitSnapshot): org.apache.spark.sql.types.StructType =
-    snap.schema match {
-      case Some(u) => org.apache.spark.sql.types.StructType(
-        u.fields.filterNot(_.name.startsWith(DroppedPrefix)))
-      case None => dataAsOf(spark, snap).schema
-    }
 
   /** [[writeTombstone]] at an EXPLICIT (already claimed or
     * deterministically owned) unit id — [[upsert]] claims its id
@@ -1115,7 +1034,7 @@ object Store {
                                keys: DataFrame, commit: Boolean,
                                id: Int): Int = {
     val snap = resolveSnapshot(spark, dir, Some(id))
-    val kt = validateDelete(spark, snap, spec, keyCol)
+    val kt = validateDelete(snap, spec, keyCol)
     val root = snap.root
     val (fs, _) = fsFor(spark, dir)
     val inCol = keys.columns.head
@@ -1161,7 +1080,7 @@ object Store {
     // write()/append() read-back discipline: a nondeterministic keys
     // plan must not net a different row set than the one recorded);
     // the then-live rule is the scoping dataAsOf already applies
-    val keys = readKeys(spark, s"$root/del_$id/keys")
+    val keys = readUnits(spark, s"$root/del_$id/keys")
     IndexedFrame(victimsShaped(
         keyJoin(dataAsOf(spark, snap), keyCol, Seq(keys), "left_semi"), keys),
       spec).entries
@@ -1435,9 +1354,10 @@ object Store {
       return true
     }
     val snap = resolveSnapshot(spark, dir)
-    val files = snap.manifests.getOrElse(segId, Nil).map(n => s"$dir/data/$n")
-    if (files.isEmpty) { atomicCreate(fs, token); return true }
-    val raw = readParquet(spark, snap.sidecars(segId), files)
+    if (snap.manifests.getOrElse(segId, Nil).isEmpty) {
+      atomicCreate(fs, token); return true
+    }
+    val raw = snap.segData(spark, segId)
     // the segment's files carry the names of ITS era; map them to the
     // names current at the tombstone's id so the repair entries match
     // the ixdelta's vocabulary (renames after `id` then apply to both
@@ -1450,7 +1370,7 @@ object Store {
     if (!seg.columns.contains(keyCol)) { // no victims possible
       atomicCreate(fs, token); return true
     }
-    val keys = readKeys(spark, s"$root/del_$id/keys")
+    val keys = readUnits(spark, s"$root/del_$id/keys")
     val victims = snap.thenLiveVictims(spark, seg, segId, id, keyCol, keys)
     if (victims.isEmpty) { // token alone records the coverage
       atomicCreate(fs, token); return true
@@ -1528,14 +1448,8 @@ object Store {
       if (published.isEmpty) (s"$base/ixdelta", Set.empty[Int])
       else {
         val k = published.max
-        val in = fs.open(new org.apache.hadoop.fs.Path(
-          s"$base/ixdelta_v$k/_folds"))
-        val txt = try {
-          val bos = new java.io.ByteArrayOutputStream()
-          org.apache.hadoop.io.IOUtils.copyBytes(in, bos, 4096, false)
-          new String(bos.toByteArray, "UTF-8")
-        } finally in.close()
-        val f = txt.split("\n").toSeq.filter(_.nonEmpty).map(_.toInt).toSet
+        val f = readSmallText(fs, s"$base/ixdelta_v$k/_folds")
+          .split("\n").toSeq.filter(_.nonEmpty).map(_.toInt).toSet
         (s"$base/ixdelta_v$k", f)
       }
     val repairs = names
@@ -1618,10 +1532,13 @@ object Store {
              keyCol: String): Int = {
     val spark = batch.sparkSession
     rejectReservedNames(batch.schema, spec)
-    // a tombstone needs a manifest-carrying store (checked here), so
-    // append()'s legacy-index migration cannot apply
-    val (delId, root) = claimTombstoneId(spark, dir, spec, keyCol)
-    val segId = claimUnitId(fsFor(spark, dir)._1, root)
+    // both halves validated before either id is claimed
+    val snap = checkedForAppend(batch, dir)
+    validateDelete(snap, spec, keyCol)
+    val (fs, _) = fsFor(spark, dir)
+    val root = snap.root
+    val delId = claimUnitId(fs, root)
+    val segId = claimUnitId(fs, root)
     appendSegment(batch, dir, spec, segId, root,
       beside = writeTombstoneAt(spark, dir, spec, keyCol,
         batch.select(keyCol), commit = false, delId))
@@ -1672,6 +1589,10 @@ object Store {
     stale.foreach { sub => // fresh store: clear prior segments + generations
       fs.delete(new org.apache.hadoop.fs.Path(sub), true)
     }
+    // seg_0 is claimed like every unit, so a write() that dies before
+    // its manifest leaves an invisible ghost that have() re-provides,
+    // never a segment that reads as the pre-manifest layout
+    atomicCreate(fs, claimPath(s"$dir/index", 0))
     df.write.mode(SaveMode.Overwrite).parquet(s"$dir/data")
     // index the WRITTEN data, not the input plan: re-executing `df`
     // for the index would recompute the whole upstream (2× cost) and,
@@ -1755,15 +1676,17 @@ object Store {
     * `rowRefs` — are planned from the same snapshot on their first
     * access, so a handle that only makes point reads plans no
     * DataFrame at all.
-    * Errors the metadata decides (a non-widening schema union,
-    * tombstones on a mixed store) still throw here; one that only
-    * planning meets (say, a data file gone missing) throws at the
+    * Errors the metadata decides (an older layout, a non-widening
+    * schema union, no committed segment) still throw here; one that
+    * only planning meets (say, a data file gone missing) throws at the
     * first access of the face that plans it.
     */
   def open(spark: SparkSession, dir: String, spec: IndexSpec): StoredFrame = {
-    val live = resolveSnapshot(spark, dir)
-    val snap = (if (repairUncoveredPairs(spark, live, spec))
-      resolveSnapshot(spark, dir) else live).checked
+    val live = resolveSnapshot(spark, dir).checked
+    require(live.segIds.nonEmpty, s"no committed segment in $dir")
+    val snap =
+      if (repairUncoveredPairs(spark, live, spec)) resolveSnapshot(spark, dir)
+      else live
     new StoredFrame(
       IndexedFrame(dataAsOf(spark, snap), spec),
       mergedIndex(spark, snap),
@@ -1789,8 +1712,7 @@ object Store {
     // fPoint/rowsOfPoint answer over the same committed units as the
     // plan faces — a unit committed between open() and the first
     // lookup must not make the faces of one handle disagree
-    import snap.root
-    val segIds = (snap.segIds ++ snap.legacyIds).distinct.sorted
+    import snap.{root, segIds}
     // freq units: index segments AND tombstone ix units, each at its
     // own id's rename era
     val unitDirs =
@@ -1811,7 +1733,6 @@ object Store {
       id -> new org.apache.hadoop.fs.Path(s"$root/del_$id/keys")
     }.toMap
     new PointRead.StorePoint(spark.sparkContext.hadoopConfiguration,
-      eligible = () => true,
       freqGroups = () => freqGroupsNow,
       rowsGroups = () => rowsGroupsNow,
       delKeyDirs = () => keyDirsNow)
@@ -1841,7 +1762,7 @@ object Store {
     */
   def openAt(spark: SparkSession, dir: String, spec: IndexSpec,
              upToSeg: Int): StoredFrame = {
-    repairUncoveredPairs(spark, resolveSnapshot(spark, dir), spec)
+    repairUncoveredPairs(spark, resolveSnapshot(spark, dir).checked, spec)
     // the snapshot holds only the segments, tombstones and renames
     // committed at or before upToSeg, so every face below — data,
     // merged index and refs — serves the AS-OF rows and schema
@@ -1852,22 +1773,19 @@ object Store {
       mergedIndex(spark, snap), refsAsOf(spark, snap))
   }
 
-  /** write-if-absent then open (haveIndexedDf). "Present" means BOTH
-    * halves exist — a write() that died between the data and index
-    * writes must be repaired by re-providing, not served half-broken
-    * forever.
+  /** write-if-absent then open (haveIndexedDf). "Present" means a
+    * committed segment — a write() that died before its manifest left
+    * only a claimed ghost, which is repaired by re-providing, not
+    * served half-broken forever. An older layout is refused, never
+    * overwritten.
     */
   def have(spark: SparkSession, dir: String, spec: IndexSpec)
           (provide: => DataFrame): StoredFrame = {
-    val (fs, _) = fsFor(spark, dir)
-    val dataOk = fs.exists(new org.apache.hadoop.fs.Path(s"$dir/data"))
-    val (root, _) = currentIndexRoot(spark, dir)
-    val indexOk = fs.exists(new org.apache.hadoop.fs.Path(root))
+    val snap = resolveSnapshot(spark, dir).checked
     // a spec asking for row-refs is not satisfied by a store written
     // without them — re-provide rather than serve a refs-less frame
-    def rowsOk = spec.rowRefs.isEmpty ||
-      resolveSnapshot(spark, dir).checked.refsIds.nonEmpty
-    if (!dataOk || !indexOk || !rowsOk) write(provide, dir, spec)
+    if (snap.segIds.isEmpty || (spec.rowRefs.nonEmpty && snap.refsIds.isEmpty))
+      write(provide, dir, spec)
     open(spark, dir, spec)
   }
 
@@ -1911,98 +1829,48 @@ object Store {
   def append(batch: DataFrame, dir: String, spec: IndexSpec): Unit = {
     val spark = batch.sparkSession
     rejectReservedNames(batch.schema, spec)
-    var (root, gen) = currentIndexRoot(spark, dir)
-    val (fs, _) = fsFor(spark, dir)
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    // NOTE: a committed g1 coexisting with a still-present <dir>/index
-    // is EITHER a migration that died between commit and delete OR the
-    // previous generation compact deliberately retains for in-flight
-    // readers — indistinguishable here, and eagerly deleting would
-    // break compact's one-generation retention window. Both cases are
-    // benign (readers resolve the highest COMMITTED generation, never
-    // the legacy dir) and the next compact reclaims the directory.
-    // LEGACY MIGRATION: a pre-segment store wrote its index parquet
-    // directly under <dir>/index. Appending seg_* files next to those
-    // loose part-files would flip readers into segment mode and
-    // silently DROP the whole original index from every merge — so
-    // the legacy index becomes seg_0 of a fresh generation first.
-    // CRASH-ATOMIC via the same publish protocol as compact: COPY the
-    // legacy files into the (invisible, uncommitted) new generation,
-    // publish with _COMMITTED, only then delete the legacy dir. Dying
-    // before the commit leaves the legacy index untouched and live (a
-    // retry overwrites the partial copy); dying after it leaves an
-    // orphaned legacy dir that is invisible to readers and reclaimed
-    // by the next compact (see NOTE above). A plain rename would be
-    // O(1) but destroys the old location BEFORE the new one is
-    // published — a crash in between loses the index.
-    if (gen == 0 && fs.exists(rootPath) &&
-        !fs.listStatus(rootPath).exists(_.getPath.getName.startsWith("seg_")) &&
-        // loose index part-files, not protocol files: a root holding
-        // only claim markers (a crashed first append) or other
-        // protocol units must never be "migrated" as a legacy index
-        fs.listStatus(rootPath).exists { st =>
-          val n = st.getPath.getName
-          !n.startsWith("_") && !n.startsWith(".") &&
-            !n.startsWith("rows_") && !n.startsWith("del_")
-        }) {
-      val g1seg = new org.apache.hadoop.fs.Path(s"$dir/index_g1/seg_0")
-      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/index_g1"), true)
-      org.apache.hadoop.fs.FileUtil.copy(fs, rootPath, fs, g1seg,
-        false /* keep source until committed */,
-        spark.sparkContext.hadoopConfiguration)
-      // the migrated segment gets a MANIFEST naming the legacy data
-      // files (they ARE its data) and a schema sidecar (one footer
-      // read, once) — so the migrated store is FULLY modern: every
-      // segment committed, reads manifest-scoped, and the
-      // committed-segments-only serving rule (a crashed append's
-      // ghost segment is invisible) applies uniformly. Both ride
-      // inside the same _COMMITTED publish.
-      val legacyNames = dataFileNames(fs, s"$dir/data")
-      writeManifest(fs, s"$dir/index_g1/seg_0", legacyNames)
-      if (legacyNames.nonEmpty)
-        writeSchemaSidecar(fs, s"$dir/index_g1/seg_0",
-          spark.read.parquet(s"$dir/data").schema)
-      fs.create(new org.apache.hadoop.fs.Path(s"$dir/index_g1/_COMMITTED"))
-        .close()
-      fs.delete(rootPath, true)
-      root = s"$dir/index_g1"; gen = 1
-    }
+    // validated before the claim, so a refused batch leaves no trace
+    val snap = checkedForAppend(batch, dir)
     // shared counter with tombstones: the seg/del total order is what
     // scopes deletes against later appends (a re-appended key lives).
     // CLAIMED atomically, so concurrent appenders get distinct ids.
-    val segId = claimUnitId(fs, root)
-    appendSegment(batch, dir, spec, segId, root)
+    appendSegment(batch, dir, spec, claimUnitId(fsFor(spark, dir)._1, snap.root),
+      snap.root)
   }
 
-  /** the post-claim half of [[append]] — everything that happens
-    * under an already-claimed unit id (separated so the conflict-
-    * detection interleavings are deterministically testable). The
-    * entries write runs beside the row-refs write ([[writeSegmentIndex]]);
-    * `beside` (an [[upsert]]'s tombstone) runs beside the whole
-    * segment write. The `_MANIFEST` commit marker still lands last,
-    * after every write of the pair has finished.
+  /** the live snapshot of `dir`, checked, once `batch` has passed
+    * its schema validation. VALIDATE BEFORE MUTATING: a type-changed
+    * column rejected only by unionSchema at open()/compact() time
+    * would already have persisted its data files and sidecar —
+    * leaving the store unreadable (both open and compact throw) with
+    * no in-API repair path. Checking the incoming batch against the
+    * existing segments' union here makes the contract violation fail
+    * while the store is still intact. COST: resolveSnapshot reads
+    * every segment's schema sidecar — O(segments) small reads per
+    * append. That is the deliberate price of fail-before-mutate; an
+    * append-heavy store keeps it cheap by compacting (which folds the
+    * segments back to one) — the same cadence merge-on-read
+    * amplification already demands.
+    */
+  private def checkedForAppend(batch: DataFrame, dir: String): UnitSnapshot = {
+    val snap = resolveSnapshot(batch.sparkSession, dir).checked
+    validateAppendSchema(snap.schema, batch.schema)
+    snap
+  }
+
+  /** the post-claim half of [[append]] and [[upsert]] — everything
+    * that happens under an already-claimed unit id, once the batch
+    * passed [[checkedForAppend]] (separated so the conflict-detection
+    * interleavings are deterministically testable). The entries write
+    * runs beside the row-refs write ([[writeSegmentIndex]]); `beside`
+    * (an [[upsert]]'s tombstone) runs beside the whole segment write.
+    * The `_MANIFEST` commit marker still lands last, after every write
+    * of the pair has finished.
     */
   private[core] def appendSegment(batch: DataFrame, dir: String,
                                   spec: IndexSpec, segId: Int,
                                   root: String,
                                   beside: => Unit = ()): Unit = {
-    val spark = batch.sparkSession
-    val (fs, _) = fsFor(spark, dir)
-    // VALIDATE BEFORE MUTATING: a type-changed column rejected only by
-    // unionSchema at open()/compact() time would already have
-    // persisted its data files and sidecar — leaving the store
-    // unreadable (both open and compact throw) with no in-API repair
-    // path. Checking the incoming batch against the existing segments'
-    // union here makes the contract violation fail while the store is
-    // still intact. Sidecar-less legacy stores skip the check (their
-    // physical schema is unknowable without footer sniffing).
-    // COST: resolveSnapshot reads every segment's schema sidecar —
-    // O(segments) small reads per append. That is the deliberate
-    // price of fail-before-mutate; an append-heavy store keeps it
-    // cheap by compacting (which folds the segments back to one) —
-    // the same cadence merge-on-read amplification already demands.
-    resolveSnapshot(spark, dir).checked.schema
-      .foreach(existing => validateAppendSchema(existing, batch.schema))
     // the batch's data files live under the CLAIMED unit's own subdir
     // (data/seg_<id>) — concurrent appenders write disjoint paths, so
     // no listing diff is needed to attribute files to writers (the
@@ -2108,15 +1976,9 @@ object Store {
     require(batchId >= 0 && batchId <= Int.MaxValue.toLong,
       s"batchId out of segment-id range: $batchId")
     val segId = batchId.toInt
-    val snap = resolveSnapshot(spark, dir)
+    val snap = resolveSnapshot(spark, dir).checked
     val root = snap.root
     val (fs, _) = fsFor(spark, dir)
-    require(!snap.names.exists(n =>
-        !n.startsWith("seg_") && !n.startsWith("rows_") &&
-          !n.startsWith("del_") && !n.startsWith("ren_") &&
-          !n.startsWith("_")),
-      s"appendBatch requires a segment-mode store; migrate legacy " +
-        s"layouts via append() or rewrite with write() ($dir)")
     require(!snap.dels.exists(_._1 >= segId),
       s"a tombstone at id >= $segId exists — its delete would " +
         s"wrongly scope over this later batch; compact first or " +
@@ -2125,10 +1987,6 @@ object Store {
       s"a rename at id >= $segId exists — it would wrongly remap " +
         s"this later batch's (already-current) column names; " +
         s"compact first or rename at ids below the stream's next batch")
-    require(snap.legacyIds.isEmpty,
-      s"appendBatch on a store with pre-manifest segments — its " +
-        s"batches could not be scoped against them; compact() or " +
-        s"rewrite with write() first ($dir)")
     // IDEMPOTENCE GATE, two halves: (1) a batch at or below the
     // compact HIGH-WATER mark was folded away — its own manifest no
     // longer exists, but it IS committed (r11 advice: without this, a
@@ -2137,12 +1995,11 @@ object Store {
     if (readHighWater(fs, root).exists(segId <= _)) return false
     if (snap.manifests.contains(segId)) return false
     // fail-before-mutate schema validation, as in append()
-    snap.checked.schema
-      .foreach(existing => validateAppendSchema(existing, batch.schema))
+    validateAppendSchema(snap.schema, batch.schema)
     // claim the id (idempotent: re-creating our own claim after a
-    // crashed attempt is a no-op) — the claim marks this as a MODERN
+    // crashed attempt is a no-op) — the claim marks this as a current
     // writer's unit, so a crashed attempt's bare segment dir reads as
-    // an invisible ghost, never as a pre-manifest legacy segment
+    // an invisible ghost, never as a pre-manifest segment
     atomicCreate(fs, claimPath(root, segId))
     writeSegment(batch, dir, spec, root, segId, s"batch_$segId",
       commitEmpty = true, beside)
@@ -2191,13 +2048,14 @@ object Store {
       s"batchId out of the 2*batchId segment-id range: $batchId")
     val delId = (2 * batchId).toInt
     val segId = delId + 1
-    val (root, _) = currentIndexRoot(spark, dir)
+    val snap = resolveSnapshot(spark, dir).checked
+    val root = snap.root
     val (fs, _) = fsFor(spark, dir)
     // idempotence gates FIRST (a redelivered batch must see its own
     // prior progress before any ownership require can misfire on the
     // later batches that legitimately followed it)
     if (readHighWater(fs, root).exists(segId <= _)) return false
-    val segCommitted = readManifest(fs, s"$root/seg_$segId").isDefined
+    val segCommitted = snap.manifests.contains(segId)
     // ownership proof for the committed-segment no-op (r13 advice #2):
     // this stream drops a `_STREAM` marker into its del unit dir
     // BEFORE writing anything else, so a committed segment at segId
@@ -2236,7 +2094,6 @@ object Store {
       s"a foreign committed tombstone occupies del_$delId — " +
         s"upsertBatch owns the id namespace (tombstone 2b, segment " +
         s"2b+1); keep manual deletes below the stream's ids")
-    val snap = resolveSnapshot(spark, dir)
     require(!snap.dels.exists(_._1 > delId),
       s"a foreign tombstone at id > $delId exists — upsertBatch owns " +
         s"the id namespace (tombstone 2b, segment 2b+1); compact first " +
@@ -2274,11 +2131,9 @@ object Store {
     * [[appendBatch]]'s idempotence gate.
     */
   private def readHighWater(fs: org.apache.hadoop.fs.FileSystem,
-                            root: String): Option[Int] = {
-    val p = new org.apache.hadoop.fs.Path(s"$root/_HIGHWATER")
-    if (!fs.exists(p)) None
-    else scala.util.Try(readSmallText(fs, s"$root/_HIGHWATER").toInt).toOption
-  }
+                            root: String): Option[Int] =
+    readSmall(fs, s"$root/_HIGHWATER")
+      .flatMap(t => scala.util.Try(t.trim.toInt).toOption)
 
   /** merge-on-read over all index segments: union of the per-segment
     * (field,value,f) frames re-aggregated. One shuffle over index
@@ -2301,26 +2156,11 @@ object Store {
                                 snap: UnitSnapshot): DataFrame = {
     import org.apache.spark.sql.functions._
     import snap.{root, rens}
-    // layout compat: the pre-segment layout wrote the index parquet
-    // directly under <dir>/index — serve it as-is when no seg_* dirs
-    // exist rather than failing the path glob
-    val segs = snap.segDirs
-    // COMMITTED segments only when the store is manifest-mode: a
-    // crashed append may have written its index segment but died
-    // before the manifest (the commit point) — its data files are
-    // invisible to the manifest-scoped read, so its index entries
-    // must be equally invisible or f() counts ghost rows. A fully
-    // pre-manifest (legacy-append) store serves all segments, as its
-    // data read is the plain directory scan — and a MIXED store
-    // serves committed + legacy segments (all-or-nothing, matching
-    // its plain recursive data read; only claimed-but-uncommitted
-    // modern ghosts stay invisible).
-    val committed = snap.segIds
-    val legacy = snap.legacyIds
-    val segPaths =
-      if (committed.nonEmpty)
-        (committed ++ legacy).sorted.map(id => s"$root/seg_$id")
-      else segs.map(n => s"$root/$n")
+    // COMMITTED segments only: a crashed append may have written its
+    // index segment but died before the manifest (the commit point) —
+    // its data files are invisible to the manifest-scoped read, so its
+    // index entries must be equally invisible or f() counts ghost rows
+    val segPaths = snap.segIds.map(id => s"$root/seg_$id")
     val delFrames = snap.dels.map { case (id, _) =>
       // a tombstone's ixdelta (and its conflict repairs) speak the
       // names current at its id — later renames map their field
@@ -2330,16 +2170,15 @@ object Store {
       else d.select(mappedFieldExpr(snap.rensAfter(id)).as("field"),
         col("value"), col("f"))
     }
-    if (segs.isEmpty) readIx(spark, Seq(root))
-    else if (segPaths.length == 1 && delFrames.isEmpty && rens.isEmpty)
-      readIx(spark, Seq(segPaths.head))
+    if (segPaths.length == 1 && delFrames.isEmpty && rens.isEmpty)
+      readIx(spark, segPaths)
     else {
       // index segments written before a rename carry the OLD field
       // name — map per rename era (id-suffix grouping, as in the
       // data read); with no renames this is one glob read, as in r11
       val segFrames =
         if (rens.isEmpty) Seq(readIx(spark, segPaths))
-        else snap.renameEras((committed ++ legacy).sorted)
+        else snap.renameEras(snap.segIds)
           .map { e =>
             readIx(spark, e.ids.map(id => s"$root/seg_$id"))
               .select(mappedFieldExpr(e.rens).as("field"),
@@ -2375,7 +2214,7 @@ object Store {
     val segIds = snap.refsIds
     if (segIds.isEmpty) None
     else Some(snap.eras(segIds).map { e =>
-      val raw = readRefs(spark, e.ids.map(id => s"$root/rows_$id"))
+      val raw = readUnits(spark, e.ids.map(id => s"$root/rows_$id"): _*)
       // refs written before a rename carry the OLD field name
       val refs0 =
         if (e.rens.isEmpty) raw
@@ -2402,35 +2241,41 @@ object Store {
     * contract on [[append]]; do not run compact concurrently with an
     * in-flight append on the same store.
     *
-    * OVERLAP: the data rewrite, the folded-entries write and the refs
-    * fold write disjoint paths and read only the retiring generation
-    * (unchanged until the publish), so they run side by side; the folded segment's manifest and sidecar,
-    * `_HIGHWATER` and `_COMMITTED` are written only after all three
-    * have finished, so the publish point still covers complete files.
+    * SNAPSHOT HISTORY COLLAPSES (like table-format log compaction):
+    * the folded segment's manifest is the union of the old
+    * generation's manifests, so "latest" stays time-travel-readable
+    * while intermediate snapshots retire with their generation. The
+    * fold covers the committed segments; a claimed segment that never
+    * committed — a crashed append — stays out, as it stays out of
+    * every read, and vacuum reclaims its files.
+    *
+    * UPGRADE: compact is the one op that reads an older layout (see
+    * the older-layouts notes), and one compact publishes it as a
+    * current generation. Units that lack only their `_SCHEMA` sidecar
+    * get one inferred from their parquet footers ([[backfillSidecars]])
+    * before the ordinary fold; loose index files and pre-manifest
+    * segments fold with no data rewrite ([[upgradeFold]]). A compact
+    * that dies before the `_COMMITTED` marker leaves those layouts in
+    * place, still refused, for a rerun. A store with no committed
+    * segment and no older layout has nothing to fold.
     */
   def compact(spark: SparkSession, dir: String): Unit = {
     import org.apache.spark.sql.functions.col
+    val live = resolveSnapshot(spark, dir)
+    val snap =
+      if (backfillSidecars(spark, live)) resolveSnapshot(spark, dir) else live
+    if (snap.older.nonEmpty) return upgradeFold(spark, snap)
+    if (snap.segIds.isEmpty) return
+    snap.checked
     // eager checkpoints (independent, so side by side): every read of
     // the old generation's index completes here, before any directory
     // is created or deleted
-    val snap = resolveSnapshot(spark, dir).checked
     val (merged, rows) = inParallel(spark)(
       mergedIndex(spark, snap).localCheckpoint(true),
       refsAsOf(spark, snap).map(_.localCheckpoint(true)))
-    val (fs, base) = fsFor(spark, dir)
-    val gen = snap.gen
-    val newRoot = s"$dir/index_g${gen + 1}"
+    val (fs, _) = fsFor(spark, dir)
     val dels = snap.dels
-    // snapshot history COLLAPSES at compact (documented: like table-
-    // format log compaction): the folded seg_0's manifest is the
-    // union of the old generation's manifests, so "latest" stays
-    // time-travel-readable while intermediate snapshots retire with
-    // their generation. The fold covers the segments every reader
-    // serves: the committed ones, or a pure-legacy store's legacy ones
-    // (a mixed store rewrites its data below). A claimed segment that
-    // never committed — a crashed append — stays out, as it stays out
-    // of every read; vacuum reclaims its files.
-    val foldIds = if (snap.segIds.nonEmpty) snap.segIds else snap.legacyIds
+    val rens = snap.rens
     // the folded segment KEEPS the max retired unit id — ids never
     // rewind across a compact. This is what makes compaction safe
     // under appendBatch's exactly-once protocol: a crash between an
@@ -2440,56 +2285,10 @@ object Store {
     // as "not yet appended" and duplicate the batch).
     // ... but the max COMMITTED unit id: a crashed writer's claim or
     // unit dir above it must not raise the fold id (and with it the
-    // high-water mark below), or a legitimate redelivery of that
+    // high-water mark), or a legitimate redelivery of that
     // never-committed batch would be silently swallowed by the
     // idempotence gate.
-    val foldId = (snap.segIds ++ snap.legacyIds ++ dels.map(_._1) ++
-      snap.rens.map(_._1)).foldLeft(0)(math.max)
-    // PHYSICAL DELETE: with live tombstones, compact folds them into
-    // the data — the surviving rows are rewritten as fresh files and
-    // the folded segment's manifest names ONLY those, so the new
-    // generation is tombstone-free and every read is one clean scan
-    // branch again. The superseded files are NOT touched here (the
-    // retained generation's readers still plan over them); vacuum()
-    // reclaims everything the live manifests no longer reference.
-    // The mergedIndex/refsAsOf checkpoints above already carry
-    // the tombstones netted/anti-joined, so index, refs and data fold
-    // consistently inside the same atomic publish.
-    // a MIXED store (manifest-carrying and pre-manifest segments
-    // coexisting) folds by REWRITING the data, like the tombstone
-    // path: the union of its manifests does not describe the legacy
-    // rows, so only a fresh write yields a manifest that does — this
-    // is the migration path that turns a mixed store fully modern
-    val mixed = snap.segIds.nonEmpty && snap.legacyIds.nonEmpty
-    // RENAMES fold physically too: the folded segment's id is the max
-    // retired unit id, so no rename unit can apply to it — its files
-    // must carry the CURRENT names, which only a rewrite guarantees
-    val rens = snap.rens
-    // (manifest entries, rewritten schema) of the folded segment
-    def foldData(): (Option[Seq[String]],
-                     Option[org.apache.spark.sql.types.StructType]) =
-      if (dels.isEmpty && !mixed && rens.isEmpty) {
-        // only a manifest store's union is a faithful snapshot
-        // description (a pure-legacy store stays legacy — its plain
-        // recursive directory read is already correct and rewriting
-        // 100 TB for protocol hygiene is the caller's call via
-        // write(), not compact's)
-        if (snap.segIds.nonEmpty)
-          (Some(snap.segIds.flatMap(snap.manifests).distinct), None)
-        else (None, None)
-      } else {
-        // nothing else writes under <dir>/data while compact runs (it
-        // is exclusive; the index folds below write under newRoot), so
-        // the listing diff is exactly this rewrite's files
-        val before = dataFilesRel(fs, dir)
-        val data = dataAsOf(spark, snap)
-        data.write.mode(SaveMode.Append).parquet(s"$dir/data")
-        (Some((dataFilesRel(fs, dir) -- before).toSeq.sorted),
-          Some(data.schema))
-      }
-    // sorted (field,value) clustering belongs to the WRITE, not the
-    // read ([[mergedIndex]] serves unordered): the folded segment's
-    // parquet stats must prune point reads like a write()n one's do.
+    val foldId = (snap.segIds ++ dels.map(_._1) ++ rens.map(_._1)).max
     // WHICH index folds (r14): with live tombstones AND a refs
     // artifact, the entries are REBUILT from the folded refs
     // (f ≡ refs count per entry by construction, and the refs view
@@ -2505,20 +2304,118 @@ object Store {
             org.apache.spark.sql.functions.lit(1)).as("f"))
       case _ => merged
     }
-    // the data rewrite, the folded-entries write and the refs fold
-    // read the checkpoints / old generation and write disjoint paths,
-    // so they run side by side; the manifest, sidecar, _HIGHWATER and
-    // _COMMITTED below still land after all three have finished
-    val ((manifestEntries, rewrittenSchema), _) = inParallel(spark)(
-      foldData(),
+    publishFold(spark, snap, foldId, foldedEntries, rows,
+      if (dels.isEmpty && rens.isEmpty)
+        (snap.segIds.flatMap(snap.manifests).distinct, snap.schema)
+      else {
+        // PHYSICAL DELETE: live tombstones fold into the data — the
+        // surviving rows are rewritten as fresh files and the folded
+        // segment's manifest names ONLY those, so the new generation
+        // is tombstone-free and every read is one clean scan branch
+        // again; RENAMES fold too, since no rename unit can apply to
+        // the fold id and only a rewrite gives its files the CURRENT
+        // names. The superseded files are NOT touched (the retained
+        // generation's readers still plan over them); vacuum()
+        // reclaims everything the live manifests no longer reference.
+        // The mergedIndex/refsAsOf checkpoints above already carry the
+        // tombstones netted/anti-joined, so index, refs and data fold
+        // consistently inside the same atomic publish. Nothing else
+        // writes under <dir>/data while compact runs (it is exclusive;
+        // the index folds write under the new root), so the listing
+        // diff is exactly this rewrite's files.
+        val before = dataFilesRel(fs, dir)
+        val data = dataAsOf(spark, snap)
+        data.write.mode(SaveMode.Append).parquet(s"$dir/data")
+        ((dataFilesRel(fs, dir) -- before).toSeq.sorted, data.schema)
+      })
+  }
+
+  /** write the `_SCHEMA` sidecar, inferred from the parquet footers,
+    * of every unit of `snap` that the store reads with one but which
+    * has none: committed segments (the sidecar describes their data
+    * files) and tombstone key sets, both known from the snapshot, and
+    * the refs units served, each probed once. Each sidecar appears
+    * atomically, so a crash leaves every unit with a complete sidecar
+    * or none. Returns whether any was written.
+    */
+  private def backfillSidecars(spark: SparkSession, snap: UnitSnapshot): Boolean = {
+    import snap.{dir, root}
+    val (fs, _) = fsFor(spark, dir)
+    val missing =
+      snap.segIds.filterNot(snap.sidecars.contains).map(id =>
+        s"$root/seg_$id" -> snap.manifests(id).map(n => s"$dir/data/$n")) ++
+      snap.dels.map(_._1).filterNot(snap.keySchemas.contains).map { id =>
+        val keys = s"$root/del_$id/keys"
+        keys -> Seq(keys)
+      } ++
+      snap.refsIds.map(id => s"$root/rows_$id")
+        .filterNot(rows => fs.exists(new org.apache.hadoop.fs.Path(s"$rows/_SCHEMA")))
+        .map(rows => rows -> Seq(rows))
+    missing.foreach { case (unit, files) =>
+      publishFile(fs, s"$unit/_SCHEMA", spark.read.parquet(files: _*).schema.json)
+    }
+    missing.nonEmpty
+  }
+
+  /** the fold of a store holding loose index files or pre-manifest
+    * segments, which no version of the store wrote beside tombstones
+    * or renames, so nothing is rewritten: the folded segment's
+    * manifest names every data file under `data/` (what the old
+    * layouts served, by a recursive directory read), its sidecar is
+    * the schema that read infers, and its entries and refs are the sum
+    * and union of every index and refs unit but a claimed one that
+    * never committed (a crashed current append, invisible before too)
+    */
+  private def upgradeFold(spark: SparkSession, snap: UnitSnapshot): Unit = {
+    import org.apache.spark.sql.functions.{col, sum}
+    import snap.{dir, names, root}
+    require(snap.dels.isEmpty && snap.rens.isEmpty,
+      s"$dir holds an older layout beside tombstones or renames, which " +
+        s"no version of the store wrote; rewrite it with write()")
+    val (fs, _) = fsFor(spark, dir)
+    def served(prefix: String) = unitIds(names, prefix).filterNot(id =>
+      !snap.manifests.contains(id) && names.contains(claimPath(root, id).getName))
+    val segs = served("seg_")
+    val entries = readIx(spark, names.filter(looseIndexFile).map(n => s"$root/$n") ++
+        segs.map(id => s"$root/seg_$id"))
+      .groupBy(col("field"), col("value")).agg(sum("f").as("f"))
+    val rows = Some(served("rows_").map(id => s"$root/rows_$id"))
+      .filter(_.nonEmpty).map(dirs => spark.read.parquet(dirs: _*))
+    publishFold(spark, snap, (segs :+ 0).max, entries, rows,
+      (dataFilesRel(fs, dir).toSeq.sorted,
+        spark.read.option("recursiveFileLookup", "true")
+          .parquet(s"$dir/data").schema))
+  }
+
+  /** write a fold into generation gen+1 of `snap` and publish it: the
+    * `entries` as `seg_<foldId>`, sorted by (field, value) so its
+    * parquet stats prune point reads like a write()n segment's do,
+    * and the `refs` re-clustered as `rows_<foldId>`, beside `data`,
+    * which yields the folded segment's manifest and schema. The three
+    * write disjoint paths and read only the retiring generation, so
+    * they run side by side, and all finish before the manifest,
+    * sidecar, `_HIGHWATER` and `_COMMITTED` land: the publish point
+    * covers complete files. Generations two compacts old are then
+    * reclaimed.
+    */
+  private def publishFold(spark: SparkSession, snap: UnitSnapshot, foldId: Int,
+                          entries: DataFrame, refs: Option[DataFrame],
+                          data: => (Seq[String], org.apache.spark.sql.types.StructType)): Unit = {
+    import org.apache.spark.sql.functions.col
+    val (fs, base) = fsFor(spark, snap.dir)
+    val newRoot = s"${snap.dir}/index_g${snap.gen + 1}"
+    // a compact that died before its marker left this generation
+    // uncommitted: its units must not leak into this one
+    fs.delete(new org.apache.hadoop.fs.Path(newRoot), true)
+    val ((files, schema), _) = inParallel(spark)(data,
       inParallel(spark)(
-        foldedEntries.orderBy("field", "value")
+        entries.orderBy("field", "value")
           .write.mode(SaveMode.Overwrite)
           .options(PointRead.SegWriteOptions)
           .parquet(s"$newRoot/seg_$foldId"),
         // row-refs fold to one re-clustered segment inside the same
         // atomic publish (the _COMMITTED marker below covers both)
-        rows.foreach { r =>
+        refs.foreach { r =>
           r.repartitionByRange(col("field"), col("value"), col("row_key"))
             .sortWithinPartitions("field", "value", "row_key")
             .write.mode(SaveMode.Overwrite)
@@ -2526,19 +2423,8 @@ object Store {
             .parquet(s"$newRoot/rows_$foldId")
           writeSchemaSidecar(fs, s"$newRoot/rows_$foldId", r.schema)
         }))
-    manifestEntries.foreach(writeManifest(fs, s"$newRoot/seg_$foldId", _))
-    // the folded segment's schema: the REWRITTEN data's when the fold
-    // rewrote (tombstones/renames/mixed — current names, widened
-    // types), else the union of the retired segments' sidecars (same
-    // all-or-nothing rule as the served schema, see resolveSnapshot)
-    val oldSchemas = foldIds.map(snap.sidecars)
-    rewrittenSchema match {
-      case Some(sc) => writeSchemaSidecar(fs, s"$newRoot/seg_$foldId", sc)
-      case None if oldSchemas.nonEmpty && oldSchemas.forall(_.isDefined) =>
-        writeSchemaSidecar(fs, s"$newRoot/seg_$foldId",
-          unionSchema(oldSchemas.flatten))
-      case None =>
-    }
+    writeManifest(fs, s"$newRoot/seg_$foldId", files)
+    writeSchemaSidecar(fs, s"$newRoot/seg_$foldId", schema)
     // HIGH-WATER: every unit id <= foldId is committed-and-folded —
     // appendBatch's idempotence gate consults this so a stream
     // restarted from a pre-compact checkpoint cannot re-append a
@@ -2555,7 +2441,7 @@ object Store {
     fs.create(new org.apache.hadoop.fs.Path(s"$newRoot/_COMMITTED")).close()
     // reclaim generations at least two compacts old (never `gen`
     // itself — in-flight readers may still be planned against it)
-    reclaimBelow(fs, base, dir, gen)
+    reclaimBelow(fs, base, snap.dir, snap.gen)
   }
 
   private def reclaimBelow(fs: org.apache.hadoop.fs.FileSystem,
@@ -2583,21 +2469,20 @@ object Store {
     */
   def vacuum(spark: SparkSession, dir: String): Unit = {
     val (fs, base) = fsFor(spark, dir)
-    val snap = resolveSnapshot(spark, dir)
+    // an older layout is refused before anything is reclaimed: no
+    // manifest describes its rows, so "unreferenced" files are live
+    val snap = resolveSnapshot(spark, dir).checked
     val root = snap.root
     // here gen IS the live generation (inside compact it is the one
     // being superseded), so "strictly below gen" spares exactly the
-    // live index and reclaims everything else, retained or legacy
+    // live index and reclaims everything else
     reclaimBelow(fs, base, dir, snap.gen)
     // DATA files the live generation's manifests no longer reference
     // are unreachable by any future read — crashed appends' orphans,
     // and the pre-fold copies a tombstone-folding compact left for
-    // the (just reclaimed) previous generation's readers. Legacy
-    // stores (no manifests) are served by the plain directory read,
-    // where every file is live — skip. MIXED stores too (r11 advice):
-    // their manifests do not describe the legacy segments' rows, so
-    // reclaiming "unreferenced" files would destroy live data.
-    if (snap.segIds.nonEmpty && snap.legacyIds.isEmpty) {
+    // the (just reclaimed) previous generation's readers. A dir with
+    // no committed segment has no manifest to judge its files by.
+    if (snap.segIds.nonEmpty) {
       val referenced = snap.segIds.flatMap(snap.manifests).toSet
       (dataFilesRel(fs, dir) -- referenced).foreach { rel =>
         fs.delete(new org.apache.hadoop.fs.Path(s"$dir/data/$rel"), false)
@@ -2761,9 +2646,8 @@ final case class BoolPoint(n: Long, fs: Seq[Long], and: Long, or: Long) {
   * access: [[Store.open]] hands over builders bound to its open-time
   * unit snapshot, so a handle that only makes point reads plans no
   * DataFrame, and a face first used after later commits still serves
-  * the open-time units (see the unit-snapshot notes in [[Store]] for
-  * the one exception). A face whose build throws is built again on
-  * its next access. A plain class, not a case class: there is no
+  * the open-time units (see the unit-snapshot notes in [[Store]]). A
+  * face whose build throws is built again on its next access. A plain class, not a case class: there is no
   * structural equality or `copy`, which would have to build every
   * face.
   */
@@ -2802,7 +2686,8 @@ final class StoredFrame(frameOf: => IndexedFrame,
 
   /** INTERACTIVE single-point frequency: the total f for one
     * (field,value), served by the driver-side footer-pruned parquet
-    * read when the store is eligible (see [[PointRead]]) — no Spark
+    * read when the handle has a point face (see [[PointRead]]; an
+    * [[Store.openAt]] handle has none) — no Spark
     * job, so the per-op floor is page I/O, not scheduler round-trip.
     * Falls back to the plan path (identical result, tombstones and
     * renames applied) otherwise. The BATCH spelling stays [[f]] /
@@ -2810,18 +2695,18 @@ final class StoredFrame(frameOf: => IndexedFrame,
     * of point ops far better than a driver loop would.
     */
   def fPoint(field: String, value: String): Long =
-    point.flatMap(_.freq(field, value)).getOrElse {
+    point.map(_.freq(field, value)).getOrElse {
       val rows = f(field, value).collect()
       rows.foldLeft(0L)((a, r) => a + (if (r.isNullAt(0)) 0L else r.getLong(0)))
     }
 
   /** INTERACTIVE single-point row-refs membership: all row keys of
-    * one (field,value) entry, driver-side when eligible (the analog
+    * one (field,value) entry, driver-side with a point face (the analog
     * of opening one warm bitmap and reading its set bits), plan-path
     * fallback otherwise. Requires [[IndexSpec.withRowRefs]].
     */
   def rowsOfPoint(field: String, value: String): Seq[Any] =
-    point.flatMap(_.rows(field, value)).getOrElse {
+    point.map(_.rows(field, value)).getOrElse {
       rowsOf(field, value).collect().toSeq.map(_.get(0))
     }
 
@@ -2905,7 +2790,7 @@ final class StoredFrame(frameOf: => IndexedFrame,
     * [[nPoint]] field scan (exact for an identity-indexed never-null
     * `nField`, defaulting to the first term's field — the
     * [[coStatsPoint]] convention), so `none`/`notAll` are one
-    * subtraction away. Transparent plan fallback (ineligible store,
+    * subtraction away. Transparent plan fallback (no point face,
     * gated hot entry) computes identical counts from index-only refs
     * joins — never the base table.
     */
@@ -2944,7 +2829,7 @@ final class StoredFrame(frameOf: => IndexedFrame,
     * contract as the pair ops).
     */
   def rowsOfAllPoint(terms: Seq[(String, String)]): Seq[Any] =
-    point.flatMap(_.multiRows(terms, intersect = true)).getOrElse {
+    point.map(_.multiRows(terms, intersect = true)).getOrElse {
       import org.apache.spark.sql.functions.col
       if (terms.isEmpty) Seq.empty
       else terms.map { case (f, v) => rowsOf(f, v).distinct() }
@@ -2958,7 +2843,7 @@ final class StoredFrame(frameOf: => IndexedFrame,
     * Plan fallback: the distinct union of the index-only refs reads.
     */
   def rowsOfAnyPoint(terms: Seq[(String, String)]): Seq[Any] =
-    point.flatMap(_.multiRows(terms, intersect = false)).getOrElse {
+    point.map(_.multiRows(terms, intersect = false)).getOrElse {
       import org.apache.spark.sql.functions.col
       if (terms.isEmpty) Seq.empty
       else terms.map { case (f, v) => rowsOf(f, v) }
@@ -2976,7 +2861,7 @@ final class StoredFrame(frameOf: => IndexedFrame,
     * prefixes amortize better through one plan.
     */
   def prefixPoint(field: String, prefix: String): Seq[(String, Long)] =
-    point.flatMap(_.prefix(field, prefix)).getOrElse {
+    point.map(_.prefix(field, prefix)).getOrElse {
       import org.apache.spark.sql.functions.{col => c}
       persistedIndex
         .where(c("field") === field && c("value").startsWith(prefix))
@@ -2999,7 +2884,7 @@ final class StoredFrame(frameOf: => IndexedFrame,
     */
   def rangePoint(field: String, lo: Double,
                  hi: Double): Seq[(String, Long)] =
-    point.flatMap(_.range(field, lo, hi)).getOrElse {
+    point.map(_.range(field, lo, hi)).getOrElse {
       import org.apache.spark.sql.functions.{col => c}
       persistedIndex
         .where(c("field") === field &&
@@ -3016,14 +2901,14 @@ final class StoredFrame(frameOf: => IndexedFrame,
     * exact when `field` is identity-indexed and never null, because
     * each live row then contributes exactly one entry occurrence.
     * Cached per field for the handle's lifetime (the warm-mmap
-    * model). None when the point face is ineligible — callers fall
+    * model). None when the handle has no point face — callers fall
     * back to the plan count.
     */
   private val nPointCache =
     scala.collection.mutable.HashMap.empty[String, Option[Long]]
   def nPoint(field: String): Option[Long] =
     nPointCache.getOrElseUpdate(field,
-      point.flatMap(_.prefix(field, "")).map(_.map(_._2).sum))
+      point.map(_.prefix(field, "").map(_._2).sum))
 
   /** INTERACTIVE CoStats (r14 — closes the reference's hot cofreq
     * loop, CoStats.scala:7-35 + DfTest.scala:236-253: open two
@@ -3033,7 +2918,7 @@ final class StoredFrame(frameOf: => IndexedFrame,
     * rides f1's field scan ([[nPoint]], cached after the first
     * call; exact for an identity-indexed never-null field) and
     * fA/fB/fAB come from one [[PointRead.StorePoint.multiStats]]
-    * streaming walk. Transparent plan fallback (ineligible store,
+    * streaming walk. Transparent plan fallback (no point face,
     * gated hot entry) computes the identical counts with one
     * aggregation pass.
     */
@@ -3059,8 +2944,8 @@ final class StoredFrame(frameOf: => IndexedFrame,
     * plan computes, so the top-k (ties by key) pins to the plan row.
     *
     * The accumulator is O(n) driver memory — the reference's own
-    * single-node posture — so the op self-gates: None when the point
-    * face is ineligible, when n (from [[nPoint]] on `weights`' first
+    * single-node posture — so the op self-gates: None when the handle
+    * has no point face, when n (from [[nPoint]] on `weights`' first
     * field) exceeds `maxRows`, or when some rows carry NO weighted
     * feature (their keys are unenumerable driver-side but could tie
     * into the top-k at exactly `baseline`). Callers fall back to
@@ -3085,20 +2970,13 @@ final class StoredFrame(frameOf: => IndexedFrame,
         // overflow the int ctor); HashMap grows past the cap fine
         val acc = new java.util.HashMap[Any, Double](
           math.min(n * 2, 1L << 26).toInt)
-        var ok = true
         weights.foreach { case (f, v, w1, w2) =>
-          if (ok) {
-            val inQuery = queryKVs.get(f).contains(v)
-            val delta = if (inQuery) -w2 else w1
-            p.rowStreams(f, v) match {
-              case None => ok = false
-              case Some(runs) => runs.foreach(_.foreach { key =>
-                acc.merge(key, delta, (a, b) => a + b)
-              })
-            }
-          }
+          val delta = if (queryKVs.get(f).contains(v)) -w2 else w1
+          p.rowStreams(f, v).foreach(_.foreach { key =>
+            acc.merge(key, delta, (a, b) => a + b)
+          })
         }
-        if (!ok || acc.size.toLong != n) None
+        if (acc.size.toLong != n) None
         else {
           // top-k by (round(score+baseline, 6), key) — the plan's
           // orderBy(distance, idCol) tie rule. Rounding every row

@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 
 /** r12: the concurrent-writer commit protocol (claimed unit ids) and
   * the r11-advice protocol fixes — upsert crash-atomicity, the
-  * compact high-water idempotence gate, and the all-or-nothing rule
-  * for mixed (legacy+manifest) stores.
+  * compact high-water idempotence gate, and mixed (legacy+manifest)
+  * stores, which every op but compact refuses and one compact
+  * upgrades.
   */
 class StoreConcurrencySpec extends SparkSpec {
   import spark.implicits._
@@ -190,7 +191,7 @@ class StoreConcurrencySpec extends SparkSpec {
     }
   }
 
-  test("mixed legacy+manifest store: all-or-nothing serving, vacuum keeps, compact modernizes") {
+  test("mixed legacy+manifest store: refused until compact modernizes it; vacuum keeps its rows") {
     val dir = java.nio.file.Files.createTempDirectory("mixed").toString
     Store.write(Seq((1L, "a", 1.0), (2L, "b", 2.0)).toDF("id", "cat", "v"),
       dir, spec)
@@ -209,23 +210,22 @@ class StoreConcurrencySpec extends SparkSpec {
     Seq(("cat", "c", 1L)).toDF("field", "value", "f")
       .write.parquet(s"$dir/index/seg_7")
     // r11 served the manifest-scoped read here: row 3 silently gone
-    // and vacuum then DELETED its file. r12: all-or-nothing.
+    // and vacuum then DELETED its file. Now every op but compact
+    // refuses rather than mis-serves, vacuum included
+    def refused(op: => Any) = assert(intercept[IllegalStateException](op)
+      .getMessage.contains("older store layout (pre-manifest segments)"))
+    refused(Store.open(spark, dir, spec))
+    refused(Store.vacuum(spark, dir))
+    refused(Store.delete(spark, dir, spec, "id", Seq(1L).toDF("id")))
+    refused(Store.appendBatch(Seq((9L, "z", 9.0)).toDF("id", "cat", "v"),
+      dir, spec, 9L))
+    // compact folds the mixed store into a fully-modern one
+    Store.compact(spark, dir)
     assert(Store.open(spark, dir, spec).frame.df.count() === 3)
     assert(Store.open(spark, dir, spec).f("cat", "c").head().getLong(0) === 1L)
     Store.vacuum(spark, dir)
     assert(Store.open(spark, dir, spec).frame.df.count() === 3,
-      "vacuum must never reclaim a mixed store's data files")
-    // manifest-scoped features refuse rather than mis-serve
-    intercept[IllegalArgumentException] {
-      Store.delete(spark, dir, spec, "id", Seq(1L).toDF("id"))
-    }
-    intercept[IllegalArgumentException] {
-      Store.appendBatch(Seq((9L, "z", 9.0)).toDF("id", "cat", "v"),
-        dir, spec, 9L)
-    }
-    // compact folds the mixed store into a fully-modern one
-    Store.compact(spark, dir)
-    assert(Store.open(spark, dir, spec).frame.df.count() === 3)
+      "vacuum must never reclaim the legacy segment's data files")
     Store.delete(spark, dir, spec, "id", Seq(3L).toDF("id"))
     assert(Store.open(spark, dir, spec).frame.df.count() === 2)
   }

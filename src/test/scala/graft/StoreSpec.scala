@@ -32,6 +32,19 @@ class StoreSpec extends SparkSpec {
     assert(calls === 1)
   }
 
+  test("have() re-provides after a write() that died before its manifest") {
+    val dir = java.nio.file.Files.createTempDirectory("store3").toString
+    Store.write(data, dir, spec)
+    // the state a write() leaves when it dies after its index write:
+    // seg_0 claimed and indexed, no manifest
+    assert(new java.io.File(s"$dir/index/seg_0/_MANIFEST").delete())
+    var calls = 0
+    val fresh = data.where($"id" <= 2)
+    val st = Store.have(spark, dir, spec) { calls += 1; fresh }
+    assert(calls === 1)
+    assert(st.frame.df.select("id").as[Long].collect().sorted.toSeq === Seq(1L, 2L))
+  }
+
   test("incremental appends equal a one-shot write of the union") {
     val dirA = java.nio.file.Files.createTempDirectory("inc").toString
     val dirB = java.nio.file.Files.createTempDirectory("oneshot").toString
@@ -128,20 +141,25 @@ class StoreSpec extends SparkSpec {
     assert(ix2 === Map(("cat", "a") -> 4L, ("cat", "b") -> 2L, ("cat", "c") -> 2L))
   }
 
-  test("append to a legacy (pre-segment) store keeps the original index") {
+  test("a loose-index store is refused until compact upgrades it; append then keeps the original index") {
     val dir = java.nio.file.Files.createTempDirectory("leg").toString
     // fabricate the legacy layout: index parquet directly under
     // <dir>/index, no seg_* dirs
     data.write.parquet(s"$dir/data")
     graft.core.IndexedFrame(data, spec).entries
       .write.parquet(s"$dir/index")
-    // sanity: legacy store reads fine as-is
+    // appending seg_* beside the loose files would silently drop the
+    // whole original index from merges: every op but compact refuses
+    val e = intercept[IllegalStateException] {
+      Store.append(data.select($"id" + 10, $"cat", $"v").toDF("id", "cat", "v"),
+        dir, spec)
+    }
+    assert(e.getMessage.contains("older store layout (loose index files)"))
+    // compact upgrades it once; the upgraded store serves its index
+    Store.compact(spark, dir)
     val legacyIx = Store.open(spark, dir, spec).persistedIndex.collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     assert(legacyIx === Map(("cat", "a") -> 2L, ("cat", "b") -> 1L, ("cat", "c") -> 1L))
-    // append must MIGRATE the legacy index (to seg_0 of a fresh
-    // generation), not write seg_* beside it — the un-migrated layout
-    // silently dropped the entire original index from merges
     Store.append(data.select($"id" + 10, $"cat", $"v").toDF("id", "cat", "v"),
       dir, spec)
     val ix = Store.open(spark, dir, spec).persistedIndex.collect()
@@ -150,24 +168,26 @@ class StoreSpec extends SparkSpec {
   }
 
   test("crashed-migration orphan is invisible to reads and reclaimed by compact") {
-    // simulate dying AFTER the migration's _COMMITTED publish but
-    // BEFORE the legacy delete: committed g1 + still-present legacy.
-    // append must NOT eagerly delete the legacy dir (it cannot tell
-    // this orphan from the previous generation compact retains for
-    // in-flight readers) — but reads must resolve g1, append must land
-    // in g1 (no re-migration), and the next compact reclaims the dir.
+    // an earlier version's migration that died AFTER its _COMMITTED
+    // publish but BEFORE the legacy delete: committed g1 + a
+    // still-present loose <dir>/index. That dir is only the generation
+    // below the live one: reads must resolve g1, append must land in
+    // g1, and the next compact reclaims the dir.
     val dir = java.nio.file.Files.createTempDirectory("legorphan").toString
     data.write.parquet(s"$dir/data")
     graft.core.IndexedFrame(data, spec).entries
       .write.parquet(s"$dir/index")                  // legacy (orphan)
     graft.core.IndexedFrame(data, spec).entries
       .write.parquet(s"$dir/index_g1/seg_0")         // migrated copy
-    // the current migration publishes a manifest (the legacy data
-    // files) inside the same commit — fabricate what it writes
+    // the migration published a manifest (the legacy data files)
+    // inside the same commit — fabricate what it wrote
     val names = new java.io.File(s"$dir/data").listFiles()
       .map(_.getName).filterNot(n => n.startsWith("_") || n.startsWith("."))
     val mw = new java.io.PrintWriter(s"$dir/index_g1/seg_0/_MANIFEST")
     try mw.print(names.sorted.mkString("\n")) finally mw.close()
+    // ... and the schema sidecar (one footer read, once)
+    val sw = new java.io.PrintWriter(s"$dir/index_g1/seg_0/_SCHEMA")
+    try sw.print(spark.read.parquet(s"$dir/data").schema.json) finally sw.close()
     new java.io.File(s"$dir/index_g1/_COMMITTED").createNewFile()
     Store.append(data.select($"id" + 10, $"cat", $"v").toDF("id", "cat", "v"),
       dir, spec)
