@@ -637,22 +637,8 @@ object PointRead {
     * path broadcast-joins the same data). Nulls come back as null.
     */
   private[core] def readColumn(conf: Configuration, dir: Path,
-                               column: String): Seq[Any] =
-    readColumnCapped(conf, dir, column, Long.MaxValue).get
-
-  /** [[readColumn]] with a DRIVER-MEMORY CAP: None once more than
-    * `max` values would be materialized — callers treat "too big to
-    * hold" as their conservative branch instead of paying unbounded
-    * driver memory on contract-violating inputs (r14 advice #3:
-    * the delete-race overlap check read both tombstones' full key
-    * columns with nothing enforcing the 'key sets are small'
-    * contract).
-    */
-  private[core] def readColumnCapped(conf: Configuration, dir: Path,
-                                     column: String,
-                                     max: Long): Option[Seq[Any]] = {
+                               column: String): Seq[Any] = {
     val out = Seq.newBuilder[Any]
-    var read = 0L
     partFiles(conf, dir).foreach { file =>
       val rd = openFile(conf, file)
       try {
@@ -673,8 +659,6 @@ object PointRead {
           var i = 0L
           val n = pages.getRowCount
           while (i < n) {
-            read += 1
-            if (read > max) return None
             if (cr.getCurrentDefinitionLevel == maxDef)
               out += (tpe match {
                 case INT64   => cr.getLong
@@ -694,7 +678,7 @@ object PointRead {
         }
       } finally rd.close()
     }
-    Some(out.result())
+    out.result()
   }
 
   /** one freq-side unit group: (field,value,f)-shaped dirs (index

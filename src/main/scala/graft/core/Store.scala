@@ -358,45 +358,39 @@ object Store {
   //  - append ∥ delete on DISJOINT keys: safe — the tombstone scopes
   //    over smaller ids only, so a concurrently-appended segment with
   //    a larger id is untouched.
-  //  - delete of keys a concurrent append is WRITING: safe (r13) via
-  //    COMMIT-TIME CONFLICT DETECTION — the Iceberg validate-at-commit
-  //    idiom adapted to this unit-commit protocol. The DATA read is
-  //    race-free by construction (the anti-join uses the tombstone's
-  //    complete key set, scoped by id); only the INDEX netting is
-  //    scan-derived (ixdelta covers the segments the victim scan saw).
-  //    So each tombstone records per-segment coverage TOKENS
-  //    (`_scope_<segId>`, create-if-absent — at most one coverer per
-  //    (tombstone, segment) pair), and:
-  //      1. the victim scan is snapshot-scoped to ids < the
-  //         tombstone's own (a concurrent append at a HIGHER id must
-  //         not be negated — the tombstone does not delete its rows);
-  //      2. at commit, a validate loop covers any segment < id that
-  //         committed after the scan (win the token, scan just that
-  //         segment, write its negative entries as `ixrepair_<segId>`)
-  //         before the marker is created;
-  //      3. after the marker, ONE post-commit re-check; and every
-  //         APPENDER runs the symmetric post-commit check (cover
-  //         committed tombstones with a larger id that missed its
-  //         segment). Publish-then-check on both sides means whichever
-  //         side publishes second sees the other's unit — at least one
-  //         detects, and the token makes the repair exclusive.
-  //    Residual window: a crash between winning a token and writing
-  //    the repair entries leaves that (tombstone, segment) pair's
-  //    index netting incomplete until compact (which rebuilds from the
-  //    keys-based data read and is always right). Data reads are
-  //    correct throughout.
-  //    TRANSIENT window (r13 advice #4 — same mechanism, no crash
-  //    needed): between one side's publish (tombstone marker or
-  //    segment manifest) and the OTHER side's coverSegment repair
-  //    completing, a reader opening the store sees both units
-  //    committed but no ixrepair yet, so the merged index briefly
-  //    over-counts the racing segment's victim entries. This is the
-  //    unavoidable cost of publish-then-check without a global
-  //    commit lock: the index converges as soon as the repair lands
-  //    (ms-scale), DATA reads are exact throughout (keys-based
-  //    anti-join, never scan-derived), and compact always heals.
-  //    Readers needing index-vs-data exactness under active racing
-  //    writers should re-open after writers quiesce.
+  //  - delete ∥ an append WRITING the deleted keys, and delete ∥
+  //    delete: safe, settled at ONE point after each publish (the
+  //    Delta Lake idiom, VLDB 2020: conflicts resolve after a commit
+  //    lands, not inside it). The DATA read is race-free by
+  //    construction (the anti-join uses each tombstone's complete key
+  //    set, scoped by id); only the INDEX netting is scan-derived: a
+  //    tombstone's `ixdelta` negates the then-live victims of the
+  //    segments its scan saw (rows an earlier tombstone already
+  //    deleted are not negated twice). Each scan records what it saw
+  //    as tokens in the tombstone's dir — `_scope_<seg>` per segment,
+  //    `_delseen_<t>` per earlier tombstone — and the snapshot lists
+  //    them, so two pure questions name what a scan missed:
+  //    [[UnitSnapshot.uncovered]] (a committed segment below the
+  //    tombstone with neither token nor published repair) and
+  //    [[UnitSnapshot.unseen]] (an earlier committed tombstone the
+  //    scan never saw). [[heal]] answers each with one rule: a
+  //    segment the scan missed gets an `ixrepair_<seg>` scan of just
+  //    that segment ([[coverSegment]]); a tombstone that missed an
+  //    earlier one gets one versioned rescan ([[rescanTombstoneIndex]]).
+  //    Every commit heals over a fresh snapshot right AFTER its own
+  //    last publish (a tombstone's `_COMMITTED`, a segment's
+  //    `_MANIFEST`, an upsert's tombstone marker), so whichever of two
+  //    racing writers publishes second sees the other's unit: at least
+  //    one side heals, and the two heals of one pair compute the same
+  //    entries (the first publish wins). A repair's token lands after
+  //    the repair, so a token never stands for missing entries.
+  //    CRASH window: a writer that dies between its publish and its
+  //    heal leaves the pair unhealed. open, openAt and have heal before
+  //    they serve, so no handle serves the un-netted index; compact,
+  //    which has no IndexSpec to heal with, refuses a refs-less store
+  //    holding such a pair until one open has healed it (a store with
+  //    row refs rebuilds exact entries from them). DATA reads are exact
+  //    throughout.
   //  - compact/vacuum: exclusive — they rewrite/reclaim shared state
   //    and may not run concurrently with any other writer.
 
@@ -639,8 +633,8 @@ object Store {
   /** `df` joined on `keyCol` against the UNION of tombstone key sets
     * `keySets`: `how` is "left_anti" (the rows they delete removed) or
     * "left_semi" (only those rows kept). Key sets are SET-SEMANTIC:
-    * every consumer — these joins, [[tombstoneKeysOverlap]] and
-    * PointRead's driver-side victim sets — gives the same answer for
+    * every consumer — these joins and PointRead's driver-side victim
+    * sets — gives the same answer for
     * a key listed twice, so neither the persisted sets nor their union
     * is de-duplicated (a `distinct` would only add a shuffle stage to
     * every scan branch).
@@ -689,16 +683,14 @@ object Store {
   //
   // Within one op, questions with no write of the op between them
   // share a snapshot: that is the schedule in which any other writer
-  // committed a moment later, which the protocol already allows. Each
-  // publish-then-check point of the conflict protocol takes a fresh
-  // snapshot AFTER its own publish, because its check must see every
-  // unit another writer published before it (the later publisher sees
-  // the earlier one): [[commitTombstone]] once per validate-loop
-  // iteration, again after its `_COMMITTED` marker, and again after
-  // each post-commit check that wrote a repair; [[repairTombstonesFor]]
-  // after the segment's manifest lands; [[coverSegment]] once per
-  // uncovered pair it repairs; open() again only when its repair pass
-  // found an uncovered pair.
+  // committed a moment later, which the protocol already allows. So a
+  // commit resolves twice: once before its claim (its validation, and
+  // a tombstone's victim scan over the ids below it,
+  // [[UnitSnapshot.upTo]]), and once after its last publish, for
+  // [[heal]], which must see every unit another writer published
+  // before it (the later publisher sees the earlier one). A unit that
+  // commits between the two is what that heal catches. A rescan
+  // resolves afresh; open() resolves again only when its heal wrote.
   //
   // Resolving refuses nothing. The refusals the metadata decides
   // ([[UnitSnapshot.checked]]: an older layout, a non-widening schema
@@ -706,7 +698,7 @@ object Store {
   // reclaims the store — open, openAt, have, append, appendBatch,
   // upsert, upsertBatch, delete, deleteWhere, rename, drop, vacuum and
   // the [[SegmentedArtifact]]/[[SegmentedAgg]] refreshes and reads — so the
-  // snapshots resolved later inside such an op (the conflict passes)
+  // snapshots resolved later inside such an op (the heal passes)
   // need no check of their own. [[compact]] upgrades an older layout
   // instead; history and snapshots only inspect.
   //
@@ -723,20 +715,20 @@ object Store {
   /** the units of one generation, as resolved from its metadata: the
     * root listing, each committed segment's manifest and schema
     * sidecar (the served schema is their union), each tombstone's key
-    * column, index-delta dirs and key-set sidecar, the renames, the
-    * `rows_` ids and the older layouts found. With `upTo`, only units
-    * with ids at or below it (time travel, a tombstone's victim scan).
+    * column, dir listing (its coverage tokens), index-delta dirs and
+    * key-set sidecar, the renames, the `rows_` ids and the older
+    * layouts found.
     */
   private[core] final case class UnitSnapshot(
       dir: String,
       root: String,
       gen: Int,
-      upTo: Option[Int],
       names: Seq[String],
       segIds: Seq[Int],
       manifests: Map[Int, Seq[String]],
       sidecars: Map[Int, org.apache.spark.sql.types.StructType],
       dels: Seq[(Int, String)],
+      delNames: Map[Int, Seq[String]],
       delIxDirs: Map[Int, Seq[String]],
       keySchemas: Map[Int, org.apache.spark.sql.types.StructType],
       rens: Seq[(Int, String, String)],
@@ -745,8 +737,8 @@ object Store {
 
     /** the served schema: the union of the committed segments'
       * sidecars, each mapped from its PHYSICAL names through the
-      * renames that postdate it, so the union speaks the
-      * (as-of-`upTo`) names. Throws on a non-widening union.
+      * renames that postdate it, so the union speaks the (as-of-
+      * [[upTo]]) names. Throws on a non-widening union.
       */
     lazy val schema: org.apache.spark.sql.types.StructType =
       unionSchema(segIds.map { id =>
@@ -763,6 +755,48 @@ object Store {
       if (older.nonEmpty) olderLayout(dir, older.mkString(", "))
       schema
       this
+    }
+
+    /** this snapshot as of unit `id`: only the units with ids at or
+      * below it (time travel, a tombstone's victim scan)
+      */
+    def upTo(id: Int): UnitSnapshot = {
+      def within[V](m: Map[Int, V]) = m.filter(_._1 <= id)
+      copy(segIds = segIds.filter(_ <= id), manifests = within(manifests),
+        sidecars = within(sidecars), dels = dels.filter(_._1 <= id),
+        delNames = within(delNames), delIxDirs = within(delIxDirs),
+        keySchemas = within(keySchemas), rens = rens.filter(_._1 <= id),
+        rowsIds = rowsIds.filter(_ <= id))
+    }
+
+    /** the ids named by tombstone `t`'s coverage tokens `prefix<id>` */
+    private def tokens(t: Int, prefix: String): Set[Int] =
+      unitIds(delNames(t), prefix).toSet
+
+    /** (tombstone t, segment s < t) pairs without t's `_scope_s`
+      * token: no scan of t saw s, though t may serve a repair of it
+      */
+    def unscoped: Seq[(Int, Int)] = dels.flatMap { case (t, _) =>
+      val scoped = tokens(t, "_scope_")
+      segIds.filter(s => s < t && !scoped(s)).map(t -> _)
+    }
+
+    /** does tombstone `t` serve a published repair of segment `s`? */
+    def repaired(t: Int, s: Int): Boolean =
+      delIxDirs(t).contains(s"$root/del_$t/ixrepair_$s")
+
+    /** the [[unscoped]] pairs whose victims t's index netting misses:
+      * no published repair either */
+    def uncovered: Seq[(Int, Int)] =
+      unscoped.filterNot { case (t, s) => repaired(t, s) }
+
+    /** (tombstone t, tombstone t' < t) pairs without t's
+      * `_delseen_t'` token: t's scan ran before t' committed, so its
+      * netting may negate rows t' already deleted
+      */
+    def unseen: Seq[(Int, Int)] = dels.flatMap { case (t, _) =>
+      val seen = tokens(t, "_delseen_")
+      dels.collect { case (u, _) if u < t && !seen(u) => t -> u }
     }
 
     /** the `rows_` ids that serve row refs: committed segments' only
@@ -859,42 +893,43 @@ object Store {
   /** resolve the [[UnitSnapshot]] of the live generation of `dir` —
     * metadata reads only, no Spark job and no parquet footer
     */
-  private[core] def resolveSnapshot(spark: SparkSession, dir: String,
-                                    upTo: Option[Int] = None): UnitSnapshot = {
+  private[core] def resolveSnapshot(spark: SparkSession, dir: String): UnitSnapshot = {
     val (root, gen) = currentIndexRoot(spark, dir)
     val (fs, _) = fsFor(spark, dir)
     val names = rootNames(fs, root)
-    def within(id: Int) = upTo.forall(id <= _)
     val manifests = unitIds(names, "seg_").flatMap(id =>
       readManifest(fs, s"$root/seg_$id").map(id -> _))
-    val segs = manifests.filter(m => within(m._1))
-    val segIds = segs.map(_._1)
+    val segIds = manifests.map(_._1)
     // committed segments only: an in-flight append writes its sidecar
     // before its manifest, so an uncommitted one may be partial
     val sidecars = segIds.flatMap(id =>
       readSchemaSidecar(fs, s"$root/seg_$id").map(id -> _)).toMap
-    val dels = tombstonesIn(fs, root, names).filter(d => within(d._1))
+    val dels = tombstonesIn(fs, root, names)
     val keySchemas = dels.flatMap { case (id, _) =>
       readSchemaSidecar(fs, s"$root/del_$id/keys").map(id -> _) }.toMap
+    val delNames = dels.map { case (id, _) =>
+      id -> fs.listStatus(new org.apache.hadoop.fs.Path(s"$root/del_$id"))
+        .map(_.getPath.getName).toSeq }.toMap
     val older = Seq(
       "loose index files" -> names.exists(looseIndexFile),
       // neither a manifest nor a writer's claim
       "pre-manifest segments" -> unitIds(names, "seg_").exists(id =>
-        !manifests.exists(_._1 == id) && !names.contains(claimPath(root, id).getName)),
+        !segIds.contains(id) && !names.contains(claimPath(root, id).getName)),
       "segments without a _SCHEMA sidecar" ->
         segIds.exists(!sidecars.contains(_)),
       "tombstone key sets without a _SCHEMA sidecar" ->
         dels.exists(d => !keySchemas.contains(d._1)))
-    UnitSnapshot(dir, root, gen, upTo, names,
+    UnitSnapshot(dir, root, gen, names,
       segIds = segIds,
-      manifests = segs.toMap,
+      manifests = manifests.toMap,
       sidecars = sidecars,
       dels = dels,
-      delIxDirs = dels.map { case (id, _) =>
-        id -> tombstoneIxDirs(fs, root, id) }.toMap,
+      delNames = delNames,
+      delIxDirs = delNames.map { case (id, ns) =>
+        id -> tombstoneIxDirs(fs, root, id, ns) },
       keySchemas = keySchemas,
-      rens = renamesIn(fs, root, names).filter(r => within(r._1)),
-      rowsIds = unitIds(names, "rows_").filter(within),
+      rens = renamesIn(fs, root, names),
+      rowsIds = unitIds(names, "rows_"),
       older = older.collect { case (which, true) => which })
   }
 
@@ -964,8 +999,8 @@ object Store {
     * segment). Indexing the victims scans every committed segment
     * below the tombstone's id, semi-joined to the persisted key set
     * (only the matching rows reach the index build), but never
-    * rewrites the corpus. `keys` must be driver-small (the delete
-    * contract; the overlap check reads two key sets on the driver).
+    * rewrites the corpus. `keys` should be driver-small: the point
+    * reads hold each tombstone's key set on the driver.
     * When the persisted key set reads as one split, the victims it
     * bounds are indexed in one task after the parallel scan; a key
     * set too large for one split (an upsert's is as large as its
@@ -980,32 +1015,40 @@ object Store {
     * column — deleting by any other column would leave the refs
     * artifact serving deleted rows (checked against `spec`). Safe to
     * run concurrently with appends — even appends WRITING the victim
-    * keys — via commit-time conflict detection (r13; see the
-    * concurrency-contract notes above). compact/vacuum stay exclusive.
+    * keys — and with other deletes: the post-publish [[heal]] nets
+    * whatever the victim scan missed (see the concurrency-contract
+    * notes above). compact/vacuum stay exclusive.
     */
   def delete(spark: SparkSession, dir: String, spec: IndexSpec,
              keyCol: String, keys: DataFrame): Int =
     writeTombstone(spark, dir, spec, keyCol, keys, commit = true)
 
-  /** [[delete]]'s tombstone write (claim, then [[writeTombstoneAt]]);
+  /** [[delete]]'s tombstone write over a snapshot resolved now */
+  private[core] def writeTombstone(spark: SparkSession, dir: String,
+                                   spec: IndexSpec, keyCol: String,
+                                   keys: DataFrame, commit: Boolean): Int =
+    writeTombstone(spark, resolveSnapshot(spark, dir), spec, keyCol, keys,
+      commit)
+
+  /** validate over `snap`, claim, then [[writeTombstoneAt]];
     * `commit = false` defers the `_COMMITTED` marker to a later
     * [[commitTombstone]], as [[upsert]] does (crash-atomicity).
     */
-  private[core] def writeTombstone(spark: SparkSession, dir: String,
+  private def writeTombstone(spark: SparkSession, snap: UnitSnapshot,
                              spec: IndexSpec, keyCol: String,
                              keys: DataFrame, commit: Boolean): Int = {
-    val snap = resolveSnapshot(spark, dir)
-    validateDelete(snap, spec, keyCol)
-    writeTombstoneAt(spark, dir, spec, keyCol, keys, commit,
-      claimUnitId(fsFor(spark, dir)._1, snap.root))
+    val kt = validateDelete(snap, spec, keyCol)
+    val id = claimUnitId(fsFor(spark, snap.root)._1, snap.root)
+    writeTombstoneAt(spark, snap, spec, keyCol, kt, keys, id)
+    if (commit) commitTombstone(spark, snap.dir, snap.root, spec, id)
+    id
   }
 
   /** a delete's preconditions, checked over `snap`; returns the key
     * column's type. Run BEFORE the unit id is claimed (r13 advice #5 —
     * the r13 claim-first ordering permanently leaked a _claim_<id>
     * file on any failed require, skipping that id for the rest of the
-    * generation), and again by [[writeTombstoneAt]] at its own id for
-    * its direct (deterministic-id) callers; requires are idempotent.
+    * generation).
     */
   private def validateDelete(snap: UnitSnapshot, spec: IndexSpec,
                              keyCol: String): org.apache.spark.sql.types.DataType = {
@@ -1021,22 +1064,22 @@ object Store {
     live(keyCol).dataType
   }
 
-  /** [[writeTombstone]] at an EXPLICIT (already claimed or
-    * deterministically owned) unit id — [[upsert]] claims its id
-    * before the segment's, and the [[upsertBatch]] face needs
-    * batch-keyed ids for redelivery idempotence. `_KEYCOL` is the
+  /** the tombstone unit at an EXPLICIT (already claimed or
+    * deterministically owned) unit id, validated over `snap` (key
+    * type `kt`) — [[upsert]] claims its id before the segment's, and
+    * the [[upsertBatch]] face needs batch-keyed ids for redelivery
+    * idempotence. The victim scan runs over `snap`'s units below `id`
+    * and records what it saw as coverage tokens. `_KEYCOL` is the
     * unit's last write before the marker: its presence means the
     * tombstone is fully written (upsert publishes its segment only
     * after this returns; upsertBatch's redelivery gate relies on it).
     */
-  private def writeTombstoneAt(spark: SparkSession, dir: String,
+  private def writeTombstoneAt(spark: SparkSession, snap: UnitSnapshot,
                                spec: IndexSpec, keyCol: String,
-                               keys: DataFrame, commit: Boolean,
-                               id: Int): Int = {
-    val snap = resolveSnapshot(spark, dir, Some(id))
-    val kt = validateDelete(snap, spec, keyCol)
+                               kt: org.apache.spark.sql.types.DataType,
+                               keys: DataFrame, id: Int): Unit = {
     val root = snap.root
-    val (fs, _) = fsFor(spark, dir)
+    val (fs, _) = fsFor(spark, root)
     val inCol = keys.columns.head
     // no distinct: key sets are set-semantic (see keyJoin)
     val k = keys.select(col(inCol).cast(kt).as("key"))
@@ -1044,185 +1087,99 @@ object Store {
     // a crash leaves an uncommitted unit no reader ever applies
     k.write.mode(SaveMode.Overwrite).parquet(s"$root/del_$id/keys")
     writeSchemaSidecar(fs, s"$root/del_$id/keys", k.schema)
-    scanVictimIndex(spark, dir, root, spec, keyCol, id)
+    val scan = snap.upTo(id - 1)
+    scanVictimEntriesTo(spark, scan, spec, keyCol, id, s"$root/del_$id/ixdelta")
+    writeTokens(fs, scan, id)
     val kc = fs.create(
       new org.apache.hadoop.fs.Path(s"$root/del_$id/_KEYCOL"), true)
     try kc.write(keyCol.getBytes("UTF-8")) finally kc.close()
-    if (commit) commitTombstone(spark, dir, spec, keyCol, id)
-    id
   }
 
-  /** the scan body shared by [[scanVictimIndex]] (pre-commit, writes
-    * the unit's main `ixdelta`) and [[rescanTombstoneIndex]]
-    * (post-commit, writes a fresh VERSIONED delta published
-    * atomically): list, pin the plan to the listing, index the
-    * then-live victims (in one task when the key set bounding them
-    * reads as one split), write the negated entries to `outDir`.
-    * Returns (segments scanned, tombstones seen) for the caller's
-    * coverage records.
+  /** the victim scan of tombstone `id` over `scan`, a snapshot of the
+    * units below it — shared by the first scan ([[writeTombstoneAt]],
+    * the unit's main `ixdelta`) and [[rescanTombstoneIndex]] (a fresh
+    * VERSIONED delta): index the then-live victims (in one task when
+    * the key set bounding them reads as one split) and write the
+    * negated entries to `outDir`. SCOPED to ids below the tombstone's
+    * own: it does not delete rows of HIGHER-id segments, so indexing
+    * them as victims would over-negate; nor is its own key set
+    * applied (a rescan of a committed tombstone would otherwise net
+    * its victims to the empty set). The plan is built from `scan`
+    * alone, so the coverage tokens the caller records from it equal
+    * what the scan saw exactly.
     */
-  private def scanVictimEntriesTo(spark: SparkSession, dir: String,
-                                  root: String, spec: IndexSpec,
-                                  keyCol: String, id: Int,
-                                  outDir: String): (Seq[Int], Seq[Int]) = {
-    // SNAPSHOT-SCOPED to ids < this tombstone's own: the tombstone
-    // does not delete rows of concurrently-committed HIGHER-id
-    // segments, so indexing them as victims would over-negate (the
-    // data read keeps them — index nets wrong); nor is its own key
-    // set applied (a rescan of a committed tombstone would otherwise
-    // net its victims to the empty set). The plan is built from this
-    // one snapshot, so the coverage records equal what it saw exactly
-    // — a relisting could include a segment that committed since.
-    val snap = resolveSnapshot(spark, dir, Some(id - 1))
-    val scanned = snap.segIds
-    val delsSeen = snap.dels.map(_._1)
+  private def scanVictimEntriesTo(spark: SparkSession, scan: UnitSnapshot,
+                                  spec: IndexSpec, keyCol: String, id: Int,
+                                  outDir: String): Unit = {
     // index the victims read back from the PERSISTED key set (the
     // write()/append() read-back discipline: a nondeterministic keys
     // plan must not net a different row set than the one recorded);
     // the then-live rule is the scoping dataAsOf already applies
-    val keys = readUnits(spark, s"$root/del_$id/keys")
+    val keys = readUnits(spark, s"${scan.root}/del_$id/keys")
     IndexedFrame(victimsShaped(
-        keyJoin(dataAsOf(spark, snap), keyCol, Seq(keys), "left_semi"), keys),
+        keyJoin(dataAsOf(spark, scan), keyCol, Seq(keys), "left_semi"), keys),
       spec).entries
       .select(col("field"), col("value"), (-col("f")).as("f"))
       .write.mode(SaveMode.Overwrite)
       .options(PointRead.SegWriteOptions).parquet(outDir)
-    (scanned, delsSeen)
   }
 
-  /** the tombstone's (re-runnable) victim index scan: list the
-    * committed segments and tombstones BELOW `id`, scan exactly those
-    * segments' then-live rows for the persisted key set, Overwrite
-    * `ixdelta`, and record coverage tokens — `_scope_<seg>` for each
-    * segment the scan provably covered (the plan is PINNED to the
-    * listed set, never a relisting) and `_delseen_<t>` for each
-    * earlier tombstone whose victims the then-live rule excluded.
-    * A full rescan also retires any incremental `ixrepair_*` dirs:
-    * the fresh ixdelta re-covers their segments, so keeping them
-    * would double-negate.
+  /** tombstone `id`'s coverage tokens for a victim scan over `scan`:
+    * `_scope_<seg>` for each segment it covered and `_delseen_<t>` for
+    * each earlier tombstone whose victims the then-live rule excluded
     */
-  private def scanVictimIndex(spark: SparkSession, dir: String,
-                              root: String, spec: IndexSpec,
-                              keyCol: String, id: Int): Unit = {
-    val (fs, _) = fsFor(spark, dir)
-    val (scanned, delsSeen) = scanVictimEntriesTo(spark, dir, root,
-      spec, keyCol, id, s"$root/del_$id/ixdelta")
-    val base = new org.apache.hadoop.fs.Path(s"$root/del_$id")
-    fs.listStatus(base).map(_.getPath).filter(p =>
-      p.getName.startsWith("ixrepair_") ||
-        p.getName.startsWith("_ixtmp_")).foreach(fs.delete(_, true))
-    scanned.foreach(s => atomicCreate(fs,
-      new org.apache.hadoop.fs.Path(s"$root/del_$id/_scope_$s")))
-    delsSeen.foreach(t => atomicCreate(fs,
-      new org.apache.hadoop.fs.Path(s"$root/del_$id/_delseen_$t")))
+  private def writeTokens(fs: org.apache.hadoop.fs.FileSystem,
+                          scan: UnitSnapshot, id: Int): Unit = {
+    def token(name: String) = atomicCreate(fs,
+      new org.apache.hadoop.fs.Path(s"${scan.root}/del_$id/$name"))
+    scan.segIds.foreach(s => token(s"_scope_$s"))
+    scan.dels.foreach { case (t, _) => token(s"_delseen_$t") }
   }
 
-  /** COMMIT-TIME CONFLICT DETECTION for a tombstone (r12 verdict #1 —
-    * the Iceberg validate-at-commit idiom): before the `_COMMITTED`
-    * marker, a validate loop covers every committed segment < `id`
-    * the victim scan missed (a concurrent append that committed in
-    * between); after the marker, one re-check closes the remaining
-    * listing window (see the publish-then-check argument in the
-    * concurrency notes — the appender's own post-commit check is the
-    * other half).
+  /** publish tombstone `id` by its `_COMMITTED` marker, then [[heal]]
+    * over a snapshot resolved after it (publish-then-check: see the
+    * concurrency contract)
     */
   private[core] def commitTombstone(spark: SparkSession, dir: String,
-                                    spec: IndexSpec, keyCol: String,
+                                    root: String, spec: IndexSpec,
                                     id: Int): Unit = {
-    val (fs, _) = fsFor(spark, dir)
-    def has(p: String) = fs.exists(new org.apache.hadoop.fs.Path(p))
-    var snap = resolveSnapshot(spark, dir)
-    val root = snap.root
-    // committed tombstones below us that no scan of ours has seen
-    def unseenBelow(s: UnitSnapshot) = s.dels.map(_._1).filter(_ < id)
-      .filterNot(t => has(s"$root/del_$id/_delseen_$t"))
-    var attempts = 0
-    var stable = false
-    while (!stable) {
-      attempts += 1
-      require(attempts <= 10000,
-        s"tombstone del_$id could not stabilize against concurrent " +
-          s"writers under $root")
-      // a RACING EARLIER-ID TOMBSTONE that committed after our scan
-      // invalidates the then-live rule wholesale (rows it killed are
-      // still negated in our ixdelta — they would net twice): full
-      // rescan, which re-lists and re-records everything. Checked
-      // FIRST because it resets the segment coverage too.
-      if (unseenBelow(snap).nonEmpty) {
-        scanVictimIndex(spark, dir, root, spec, keyCol, id)
-      } else {
-        val unseen = snap.segIds.filter(_ < id)
-          .filterNot(s => has(s"$root/del_$id/_scope_$s"))
-        if (unseen.isEmpty) stable = true
-        else unseen.foreach(s =>
-          coverSegment(spark, dir, root, spec, keyCol, id, s))
-      }
-      if (!stable) snap = resolveSnapshot(spark, dir)
-    }
-    fs.create(
+    fsFor(spark, root)._1.create(
       new org.apache.hadoop.fs.Path(s"$root/del_$id/_COMMITTED")).close()
-    // post-commit re-check: an append whose manifest landed between
-    // the loop's last snapshot and the marker is seen HERE (its own
-    // post-commit check may also see us — the token dedups).
-    snap = resolveSnapshot(spark, dir)
-    if (snap.segIds.filter(_ < id).map(s =>
-        coverSegment(spark, dir, root, spec, keyCol, id, s)).contains(true))
-      snap = resolveSnapshot(spark, dir)
-    // tombstone-vs-tombstone post-marker check (r14 — closing the r13
-    // residual, which left two overlapping-key DELETES whose markers
-    // land inside each other's final listing gap UNDETECTABLE): both
-    // sides re-list committed tombstones after publishing, so the
-    // later publisher ALWAYS sees the earlier one — publish-then-check
-    // now applies to delete ∥ delete too. Resolution (r15 — AUTO-HEAL,
-    // closing the r14 missing #3 which detected but made the caller
-    // heal manually): a DISJOINT key pair is provably unaffected by
-    // the then-live rule (no shared victims), so the missing
-    // `_delseen_` coverage token is written and the pair is cleared;
-    // an OVERLAPPING pair's later-id ixdelta may over-negate the
-    // shared rows, so the detecting side RESCANS the stale unit
-    // itself via the versioned reader-safe [[rescanTombstoneIndex]]
-    // (write-new + atomic publish — no in-place overwrite, so no
-    // reader quiesce needed). Data reads were exact throughout
-    // (keys-based); the heal restores the index netting.
-    // (a) tombstones BELOW us whose markers landed in OUR gap: our
-    //     own ixdelta is the potentially stale one. ONE rescan of our
-    //     unit covers every such tombstone at once (it re-lists), so
-    //     detect-any first, heal once, then record the tokens (the
-    //     rescan writes them too; atomicCreate is idempotent).
-    val below = unseenBelow(snap)
-    if (below.exists(t => tombstoneKeysOverlap(spark, root, t, id)))
-      rescanTombstoneIndex(spark, dir, spec, keyCol, id)
-    below.foreach(t => atomicCreate(fs,
-      new org.apache.hadoop.fs.Path(s"$root/del_$id/_delseen_$t")))
-    if (below.nonEmpty) snap = resolveSnapshot(spark, dir)
-    // (b) committed tombstones ABOVE us that missed OUR marker: their
-    //     ixdelta is the potentially stale one — rescan each with ITS
-    //     recorded key column (valid at its id: dataAsOf maps renames
-    //     up to the unit's own id, the name era the keys were
-    //     recorded in). The other side may heal itself concurrently;
-    //     version slots keep the two rescans apart and either
-    //     published result is post-conflict-correct.
-    snap.dels.filter(_._1 > id)
-      .filterNot { case (t, _) => has(s"$root/del_$t/_delseen_$id") }
-      .foreach { case (t, kcT) =>
-        if (tombstoneKeysOverlap(spark, root, id, t))
-          rescanTombstoneIndex(spark, dir, spec, kcT, t)
-        atomicCreate(fs, new org.apache.hadoop.fs.Path(
-          s"$root/del_$t/_delseen_$id"))
-      }
+    heal(spark, resolveSnapshot(spark, dir), spec)
   }
 
-  /** READER-SAFE index-netting repair for one committed tombstone
-    * (r14, made concurrent in r15): re-run its victim scan against
-    * everything committed NOW — the rescan lists all segments and
-    * earlier tombstones, so the then-live rule lands correctly even
-    * when the original scan raced an overlapping-key delete.
-    * O(victims), never a corpus pass.
+  /** the one healer of tombstone index netting (see the concurrency
+    * contract). Each tombstone of `snap` with an
+    * [[UnitSnapshot.unseen]] earlier tombstone gets one versioned
+    * [[rescanTombstoneIndex]], which re-covers its segments too; each
+    * other [[UnitSnapshot.unscoped]] pair gets [[coverSegment]]. A
+    * fully tokened snapshot — every commit of a lone writer — costs
+    * no I/O and no job. Returns whether it wrote, so a caller that
+    * serves `snap` resolves again.
+    */
+  private def heal(spark: SparkSession, snap: UnitSnapshot,
+                   spec: IndexSpec): Boolean = {
+    val stale = snap.unseen.map(_._1).distinct
+    stale.foreach(rescanTombstoneIndex(spark, snap.dir, spec, _))
+    val pairs = snap.unscoped.filterNot(p => stale.contains(p._1))
+    pairs.foreach { case (t, s) => coverSegment(spark, snap, spec, t, s) }
+    stale.nonEmpty || pairs.nonEmpty
+  }
+
+  /** `live`, healed ([[heal]]): resolved again when the heal wrote */
+  private def healed(spark: SparkSession, live: UnitSnapshot,
+                     spec: IndexSpec): UnitSnapshot =
+    if (heal(spark, live, spec)) resolveSnapshot(spark, live.dir) else live
+
+  /** READER-SAFE index-netting repair for one committed tombstone,
+    * run by [[heal]]: re-run its victim scan against everything
+    * committed NOW — the rescan resolves afresh, so the then-live
+    * rule lands correctly even when the original scan raced an
+    * earlier delete (for disjoint key sets it rewrites the same
+    * entries). O(victims), never a corpus pass.
     *
-    * SAFE UNDER CONCURRENT READERS (r15 — the r14 spelling
-    * Overwrote the live `ixdelta` in place and had to demand
-    * exclusivity): the fresh delta is written to a brand-new
-    * `ixdelta_v<k>` directory (version slot claimed by
+    * SAFE UNDER CONCURRENT READERS: the fresh delta is written to a
+    * brand-new `ixdelta_v<k>` directory (version slot claimed by
     * `_ixvclaim_<k>`, create-if-absent) and published by an atomic
     * `_IXPUBLISHED` marker — a concurrent [[mergedIndex]] /
     * [[openAt]] / point read either still sees the previous delta
@@ -1233,17 +1190,16 @@ object Store {
     * skips it); [[tombstoneIxDirs]] serves the highest published
     * version plus only the UNfolded repairs. Superseded versions
     * are reclaimed when the generation retires (compact/vacuum).
-    * This is what lets [[commitTombstone]] AUTO-HEAL a detected
-    * delete ∥ delete conflict instead of failing loudly.
     */
-  def rescanTombstoneIndex(spark: SparkSession, dir: String,
-                           spec: IndexSpec, keyCol: String,
-                           id: Int): Unit = {
-    val (root, _) = currentIndexRoot(spark, dir)
+  private[core] def rescanTombstoneIndex(spark: SparkSession, dir: String,
+                                         spec: IndexSpec, id: Int): Unit = {
+    val live = resolveSnapshot(spark, dir)
+    val root = live.root
+    // the key column it recorded, named as of its id — the names its
+    // scan reads the data in
+    val keyCol = live.dels.toMap.getOrElse(id, throw new IllegalArgumentException(
+      s"del_$id is not a committed tombstone under $root"))
     val (fs, _) = fsFor(spark, dir)
-    require(fs.exists(new org.apache.hadoop.fs.Path(
-        s"$root/del_$id/_COMMITTED")),
-      s"del_$id is not a committed tombstone under $root")
     // claim a fresh version slot — two concurrent healers (both
     // sides of a race may try) land on distinct slots; both rescans
     // are post-conflict and self-consistent, so either winning the
@@ -1252,193 +1208,92 @@ object Store {
     while (!atomicCreate(fs, new org.apache.hadoop.fs.Path(
       s"$root/del_$id/_ixvclaim_$k"))) k += 1
     val out = s"$root/del_$id/ixdelta_v$k"
-    val (scanned, delsSeen) = scanVictimEntriesTo(spark, dir, root,
-      spec, keyCol, id, out)
+    val scan = live.upTo(id - 1)
+    scanVictimEntriesTo(spark, scan, spec, keyCol, id, out)
     // record the repairs this version folds: its scan covered every
     // segment it listed, so those segments' ixrepair units (complete
-    // OR in flight — a racer that claimed its token before our
-    // listing publishes into a segment we cover) must not be summed
-    // on top of it
+    // OR in flight — a racer that resolved before our listing
+    // publishes into a segment we cover) must not be summed on top
     val folds = fs.create(
       new org.apache.hadoop.fs.Path(s"$out/_folds"), true)
-    try folds.write(scanned.mkString("\n").getBytes("UTF-8"))
+    try folds.write(scan.segIds.mkString("\n").getBytes("UTF-8"))
     finally folds.close()
     // publish LAST — the marker flips readers to this version
     atomicCreate(fs, new org.apache.hadoop.fs.Path(s"$out/_IXPUBLISHED"))
-    scanned.foreach(s => atomicCreate(fs,
-      new org.apache.hadoop.fs.Path(s"$root/del_$id/_scope_$s")))
-    delsSeen.foreach(t => atomicCreate(fs,
-      new org.apache.hadoop.fs.Path(s"$root/del_$id/_delseen_$t")))
+    writeTokens(fs, scan, id)
   }
 
-  /** driver-memory bound for the delete-race overlap check: above
-    * this many keys per tombstone the driver-side Set is no longer
-    * "small by the delete contract" and the check answers
-    * conservatively instead of materializing (r14 advice #3)
-    */
-  private val overlapCheckMaxKeys: Long = 4L * 1000 * 1000
-
-  /** do two committed tombstones' key sets intersect? Driver-side
-    * read of both key parquets (key sets are small by the delete
-    * contract) — the cheap disambiguator between a harmless
-    * interleaved delete pair (disjoint keys: the then-live rule is
-    * vacuous between them) and a genuinely conflicting one.
-    * BOUNDED (r14 advice #3): a contract-violating giant key set
-    * aborts the driver read at [[overlapCheckMaxKeys]] and the check
-    * answers TRUE — conservative, because the overlap branch's
-    * remedy (a versioned index rescan) is correct for disjoint pairs
-    * too; only the skip-the-rescan fast path needs certainty.
-    */
-  private def tombstoneKeysOverlap(spark: SparkSession, root: String,
-                                   a: Int, b: Int): Boolean = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    PointRead.readColumnCapped(conf,
-        new org.apache.hadoop.fs.Path(s"$root/del_$a/keys"), "key",
-        overlapCheckMaxKeys) match {
-      case None => true
-      case Some(keysA) =>
-        val ka = keysA.toSet
-        PointRead.readColumnCapped(conf,
-            new org.apache.hadoop.fs.Path(s"$root/del_$b/keys"), "key",
-            overlapCheckMaxKeys) match {
-          case None        => true
-          case Some(keysB) => keysB.exists(ka.contains)
-        }
-    }
-  }
-
-  /** idempotent repair of one (tombstone, segment) pair: scan JUST
-    * that segment for the tombstone's victims under the then-live
-    * rule (rows an intermediate tombstone already killed are
-    * excluded) and publish their negated index entries as
+  /** idempotent repair of one (tombstone, segment) pair of `snap`:
+    * scan JUST that segment for the tombstone's victims under the
+    * then-live rule (rows an intermediate tombstone already killed
+    * are excluded) and publish their negated index entries as
     * `del_<id>/ixrepair_<segId>` (read by every index merge
     * alongside the main ixdelta). O(segment), never a corpus pass.
-    * Shared by the delete-side validate loop, the appender-side
-    * post-commit check, and repair-on-open. A pair without a token
-    * resolves its own snapshot (the segment's manifest and sidecar,
-    * the renames and tombstones between the two ids), so it repairs
-    * against what is committed when it runs. Returns false, having
-    * written nothing, when the pair already carries its token.
+    * A pair whose repair is already published (its coverer died
+    * before the token), whose segment is empty, or whose segment has
+    * no key column gets the token alone.
     *
-    * CRASH-SAFE ORDERING (r15 — closing the r14 "crash between token
-    * and repair" residual): the entries are written to a `_ixtmp_*`
-    * staging dir, atomically RENAMED to `ixrepair_<segId>`, and the
-    * `_scope_<segId>` coverage token is claimed LAST — so a token
-    * can never exist without the repair it stands for. The r14
-    * spelling claimed the token first; a writer crashing after the
-    * claim left a coverage token with no entries, a netting hole
-    * indistinguishable from legitimate token-only coverage. Every
-    * crash state is now self-healing: tmp orphans are never read
-    * (and are reclaimed by vacuum / the full rescan); a published
-    * repair missing its token is re-tokenized by the next caller
-    * (first check below). A lost rename race deletes its own tmp —
-    * both racers computed identical content, so either publication
-    * is correct. The loser-returns-immediately property is kept via
-    * the token fast-path; the rare double-compute in the claim
-    * window is wasted work, never wrong data.
+    * CRASH-SAFE ORDERING: the entries are written to a
+    * `_ixtmp_*` staging dir, atomically RENAMED to
+    * `ixrepair_<segId>`, and the `_scope_<segId>` coverage token is
+    * claimed LAST — so a token can never exist without the repair it
+    * stands for. Tmp orphans are never read (and are reclaimed by
+    * vacuum); a published repair missing its token is re-tokenized by
+    * the next heal. Two healers of one pair compute identical
+    * entries, so either publication is correct. The loser of the
+    * rename race deletes its tmp, or, where a rename onto an existing
+    * dir moves the source INTO it (HDFS, local), leaves it under the
+    * published repair, where its `_` prefix keeps every reader off it.
     */
-  private[core] def coverSegment(spark: SparkSession, dir: String,
-                                 root: String, spec: IndexSpec,
-                                 keyCol: String, id: Int,
-                                 segId: Int): Boolean = {
-    val (fs, _) = fsFor(spark, dir)
-    val token = new org.apache.hadoop.fs.Path(
-      s"$root/del_$id/_scope_$segId")
-    if (fs.exists(token)) return false
-    val repaired = new org.apache.hadoop.fs.Path(
-      s"$root/del_$id/ixrepair_$segId")
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$repaired/_SUCCESS"))) {
-      // a crashed (or racing) coverer published the repair but not
-      // the token — finish its job
-      atomicCreate(fs, token)
-      return true
-    }
-    val snap = resolveSnapshot(spark, dir)
-    if (snap.manifests.getOrElse(segId, Nil).isEmpty) {
-      atomicCreate(fs, token); return true
-    }
-    val raw = snap.segData(spark, segId)
+  private def coverSegment(spark: SparkSession, snap: UnitSnapshot,
+                           spec: IndexSpec, id: Int, segId: Int): Unit = {
+    import snap.root
+    val (fs, _) = fsFor(spark, root)
+    val keyCol = snap.dels.toMap.apply(id)
     // the segment's files carry the names of ITS era; map them to the
     // names current at the tombstone's id so the repair entries match
     // the ixdelta's vocabulary (renames after `id` then apply to both
     // uniformly at read)
-    val rensBetween = snap.rensBetween(segId, id)
-    val seg =
-      if (rensBetween.isEmpty) raw
+    lazy val seg = {
+      val raw = snap.segData(spark, segId)
+      val rens = snap.rensBetween(segId, id)
+      if (rens.isEmpty) raw
       else raw.select(raw.columns.map(c =>
-        col(c).as(currentName(c, rensBetween))).toSeq: _*)
-    if (!seg.columns.contains(keyCol)) { // no victims possible
-      atomicCreate(fs, token); return true
+        col(c).as(currentName(c, rens))).toSeq: _*)
     }
-    val keys = readUnits(spark, s"$root/del_$id/keys")
-    val victims = snap.thenLiveVictims(spark, seg, segId, id, keyCol, keys)
-    if (victims.isEmpty) { // token alone records the coverage
-      atomicCreate(fs, token); return true
+    if (!snap.repaired(id, segId) && snap.manifests(segId).nonEmpty &&
+        seg.columns.contains(keyCol)) {
+      val keys = readUnits(spark, s"$root/del_$id/keys")
+      val victims = snap.thenLiveVictims(spark, seg, segId, id, keyCol, keys)
+      if (!victims.isEmpty) { // else the token alone records the coverage
+        val repaired = new org.apache.hadoop.fs.Path(
+          s"$root/del_$id/ixrepair_$segId")
+        val tmp = new org.apache.hadoop.fs.Path(s"$root/del_$id/_ixtmp_" +
+          s"${segId}_${java.util.UUID.randomUUID.toString.take(8)}")
+        IndexedFrame(victimsShaped(victims, keys), spec).entries
+          .select(col("field"), col("value"), (-col("f")).as("f"))
+          .write.mode(SaveMode.Overwrite)
+          .options(PointRead.SegWriteOptions)
+          .parquet(tmp.toString)
+        if (!fs.rename(tmp, repaired)) fs.delete(tmp, true)
+      }
     }
-    val tmp = new org.apache.hadoop.fs.Path(s"$root/del_$id/_ixtmp_" +
-      s"${segId}_${java.util.UUID.randomUUID.toString.take(8)}")
-    IndexedFrame(victimsShaped(victims, keys), spec).entries
-      .select(col("field"), col("value"), (-col("f")).as("f"))
-      .write.mode(SaveMode.Overwrite)
-      .options(PointRead.SegWriteOptions)
-      .parquet(tmp.toString)
-    // publish atomically; a lost race (dest exists) discards its own
-    // staging copy — identical content either way
-    if (!fs.rename(tmp, repaired)) fs.delete(tmp, true)
-    atomicCreate(fs, token)
-    true
+    atomicCreate(fs,
+      new org.apache.hadoop.fs.Path(s"$root/del_$id/_scope_$segId"))
   }
 
-  /** the appender half of conflict detection: after a segment's
-    * manifest commits, cover every committed tombstone with a LARGER
-    * id that has no coverage token for this segment (it scanned
-    * before this segment committed). Steady state — no racing delete
-    * — this is one listing and zero tokens.
-    */
-  private def repairTombstonesFor(spark: SparkSession, dir: String,
-                                  spec: IndexSpec, segId: Int): Unit = {
-    val snap = resolveSnapshot(spark, dir)
-    snap.dels.foreach { case (t, kcT) =>
-      // the tombstone's keyCol name as of ITS id is what its keys
-      // apply to — map forward is a no-op here (kcT recorded at t)
-      if (t > segId) coverSegment(spark, dir, snap.root, spec, kcT, t, segId)
-    }
-  }
-
-  /** REPAIR-ON-OPEN (r15 — closing the transient netting window that
-    * was documented-only in r14): a reader that opens the store
-    * between an append's manifest commit and the completion of its
-    * post-commit [[repairTombstonesFor]] pass would briefly serve a
-    * merged index missing the tombstone's negations for that segment.
-    * Before serving, scan `snap`'s committed (tombstone, segment<id)
-    * pairs for ones with NO `_scope_` coverage token and run the
-    * idempotent O(segment) [[coverSegment]] pass on each — the token
-    * create-if-absent keeps this exactly-once against the crashed (or
-    * still-running) writer and against other concurrently-opening
-    * readers. Steady state (every pair covered) this is pure
-    * driver-side metadata probes: #tombstones × #segments existence
-    * checks, zero Spark jobs. Returns whether any pair was uncovered
-    * (the pass then wrote, and `snap` may lack the repairs).
-    */
-  private def repairUncoveredPairs(spark: SparkSession, snap: UnitSnapshot,
-                                   spec: IndexSpec): Boolean =
-    snap.dels.flatMap { case (t, kcT) =>
-      snap.segIds.filter(_ < t).map(s =>
-        coverSegment(spark, snap.dir, snap.root, spec, kcT, t, s))
-    }.contains(true)
-
-  /** the index-delta directories of one committed tombstone: first
-    * the live main delta — the highest PUBLISHED `ixdelta_v<k>` rescan
-    * version if any ([[rescanTombstoneIndex]]), else the original
-    * `ixdelta` — plus any completed conflict repairs
-    * (`ixrepair_<seg>`, published by their `_SUCCESS`) the live
-    * version has not folded (its `_folds` sidecar)
+  /** the index-delta directories of committed tombstone `id`, from its
+    * dir listing `names`: first the live main delta — the highest
+    * PUBLISHED `ixdelta_v<k>` rescan version if any
+    * ([[rescanTombstoneIndex]]), else the original `ixdelta` — plus
+    * any completed conflict repairs (`ixrepair_<seg>`, published by
+    * their `_SUCCESS`) the live version has not folded (its `_folds`
+    * sidecar)
     */
   private def tombstoneIxDirs(fs: org.apache.hadoop.fs.FileSystem,
-                              root: String, id: Int): Seq[String] = {
+                              root: String, id: Int,
+                              names: Seq[String]): Seq[String] = {
     val base = s"$root/del_$id"
-    val names = fs.listStatus(new org.apache.hadoop.fs.Path(base))
-      .map(_.getPath.getName).toSeq
     val published = names.filter(_.startsWith("ixdelta_v"))
       .flatMap(n => scala.util.Try(
         n.stripPrefix("ixdelta_v").toInt).toOption)
@@ -1487,10 +1342,11 @@ object Store {
     * protocol applies unchanged. Returns the tombstone's snapshot id.
     */
   def deleteWhere(spark: SparkSession, dir: String, spec: IndexSpec,
-                  keyCol: String, condition: Column): Int =
-    delete(spark, dir, spec, keyCol,
-      dataAsOf(spark, resolveSnapshot(spark, dir).checked).where(condition)
-        .select(keyCol))
+                  keyCol: String, condition: Column): Int = {
+    val snap = resolveSnapshot(spark, dir).checked
+    writeTombstone(spark, snap, spec, keyCol,
+      dataAsOf(spark, snap).where(condition).select(keyCol), commit = true)
+  }
 
   /** UPSERT (merge-by-key) — the CDC / re-curation path ("replace
     * these docs with their rescrubbed versions, add the new ones"):
@@ -1534,18 +1390,19 @@ object Store {
     rejectReservedNames(batch.schema, spec)
     // both halves validated before either id is claimed
     val snap = checkedForAppend(batch, dir)
-    validateDelete(snap, spec, keyCol)
+    val kt = validateDelete(snap, spec, keyCol)
     val (fs, _) = fsFor(spark, dir)
     val root = snap.root
     val delId = claimUnitId(fs, root)
     val segId = claimUnitId(fs, root)
-    appendSegment(batch, dir, spec, segId, root,
-      beside = writeTombstoneAt(spark, dir, spec, keyCol,
-        batch.select(keyCol), commit = false, delId))
-    // the deferred marker goes through the same validate-at-commit as
-    // delete's (the upsert's own replacement segment has a larger id
-    // and is correctly out of scope)
-    commitTombstone(spark, dir, spec, keyCol, delId)
+    writeSegment(batch, dir, spec, root, segId, s"seg_$segId",
+      commitEmpty = false,
+      beside = writeTombstoneAt(spark, snap, spec, keyCol, kt,
+        batch.select(keyCol), delId))
+    // the marker's heal is the segment's post-publish check too (the
+    // upsert's own replacement segment has a larger id and is
+    // correctly out of the tombstone's scope)
+    commitTombstone(spark, dir, root, spec, delId)
     segId
   }
 
@@ -1662,16 +1519,15 @@ object Store {
 
   /** reopen a written frame + its persisted index (openIndexedDf);
     * the served index is the merge-on-read union of all segments.
-    * Runs [[repairUncoveredPairs]] first (r15): an uncovered
-    * (tombstone, segment) pair left by a crashed or still-racing
-    * writer is repaired before the merged index is served, so the
-    * first reader already sees exact netting.
+    * Runs [[heal]] first: netting a crashed or still-racing writer
+    * left unhealed is healed before the merged index is served, so
+    * the first reader already sees exact netting.
     *
     * COST: metadata only, like the reference's O(footers) reopen.
     * open() resolves the committed units once ([[resolveSnapshot]]:
-    * listings, manifests and sidecars), runs the repair pass over
-    * them — resolving again only when it found an uncovered pair —
-    * and builds the point face from them; the plan faces — `frame`
+    * listings, manifests and sidecars), heals over them — resolving
+    * again only when the heal wrote — and builds the point face from
+    * them; the plan faces — `frame`
     * (the data with its tombstone anti-joins), `persistedIndex` and
     * `rowRefs` — are planned from the same snapshot on their first
     * access, so a handle that only makes point reads plans no
@@ -1681,12 +1537,14 @@ object Store {
     * only planning meets (say, a data file gone missing) throws at the
     * first access of the face that plans it.
     */
-  def open(spark: SparkSession, dir: String, spec: IndexSpec): StoredFrame = {
-    val live = resolveSnapshot(spark, dir).checked
-    require(live.segIds.nonEmpty, s"no committed segment in $dir")
-    val snap =
-      if (repairUncoveredPairs(spark, live, spec)) resolveSnapshot(spark, dir)
-      else live
+  def open(spark: SparkSession, dir: String, spec: IndexSpec): StoredFrame =
+    openOn(spark, resolveSnapshot(spark, dir).checked, spec)
+
+  /** [[open]] over `live`, a checked snapshot */
+  private def openOn(spark: SparkSession, live: UnitSnapshot,
+                     spec: IndexSpec): StoredFrame = {
+    require(live.segIds.nonEmpty, s"no committed segment in ${live.dir}")
+    val snap = healed(spark, live, spec)
     new StoredFrame(
       IndexedFrame(dataAsOf(spark, snap), spec),
       mergedIndex(spark, snap),
@@ -1762,11 +1620,11 @@ object Store {
     */
   def openAt(spark: SparkSession, dir: String, spec: IndexSpec,
              upToSeg: Int): StoredFrame = {
-    repairUncoveredPairs(spark, resolveSnapshot(spark, dir).checked, spec)
+    val live = healed(spark, resolveSnapshot(spark, dir).checked, spec)
     // the snapshot holds only the segments, tombstones and renames
     // committed at or before upToSeg, so every face below — data,
     // merged index and refs — serves the AS-OF rows and schema
-    val snap = resolveSnapshot(spark, dir, Some(upToSeg)).checked
+    val snap = live.upTo(upToSeg)
     require(snap.segIds.nonEmpty,
       s"no snapshot <= $upToSeg in $dir (available: ${snapshots(spark, dir)})")
     new StoredFrame(IndexedFrame(dataAsOf(spark, snap), spec),
@@ -1784,9 +1642,10 @@ object Store {
     val snap = resolveSnapshot(spark, dir).checked
     // a spec asking for row-refs is not satisfied by a store written
     // without them — re-provide rather than serve a refs-less frame
-    if (snap.segIds.isEmpty || (spec.rowRefs.nonEmpty && snap.refsIds.isEmpty))
+    if (snap.segIds.isEmpty || (spec.rowRefs.nonEmpty && snap.refsIds.isEmpty)) {
       write(provide, dir, spec)
-    open(spark, dir, spec)
+      open(spark, dir, spec)
+    } else openOn(spark, snap, spec)
   }
 
   /** incremental SEGMENTED append — the reference's merge-sorted
@@ -1807,8 +1666,8 @@ object Store {
     * protocol notes above) and writes only under its claimed paths,
     * so two pipelines appending to one store commit independent
     * segments with distinct ids, and a concurrent [[delete]] — even
-    * of keys this append is writing — nets correctly via commit-time
-    * conflict detection (r13; see the concurrency contract above).
+    * of keys this append is writing — nets correctly via the
+    * post-publish [[heal]] (see the concurrency contract above).
     * What remains EXCLUSIVE: [[compact]] and [[vacuum]] (they
     * supersede/reclaim shared state — a compact racing an in-flight
     * append would strand its segment in the retired generation).
@@ -1858,19 +1717,17 @@ object Store {
     snap
   }
 
-  /** the post-claim half of [[append]] and [[upsert]] — everything
-    * that happens under an already-claimed unit id, once the batch
-    * passed [[checkedForAppend]] (separated so the conflict-detection
-    * interleavings are deterministically testable). The entries write
-    * runs beside the row-refs write ([[writeSegmentIndex]]); `beside`
-    * (an [[upsert]]'s tombstone) runs beside the whole segment write.
-    * The `_MANIFEST` commit marker still lands last, after every write
-    * of the pair has finished.
+  /** the post-claim half of [[append]] — everything that happens
+    * under an already-claimed unit id, once the batch passed
+    * [[checkedForAppend]] (separated so the conflict interleavings are
+    * deterministically testable): the segment write, then, once its
+    * `_MANIFEST` has landed, the post-publish [[heal]] over a fresh
+    * snapshot — a tombstone with a larger id may have scanned before
+    * this segment committed (no racing delete: nothing to heal).
     */
   private[core] def appendSegment(batch: DataFrame, dir: String,
                                   spec: IndexSpec, segId: Int,
-                                  root: String,
-                                  beside: => Unit = ()): Unit = {
+                                  root: String): Unit = {
     // the batch's data files live under the CLAIMED unit's own subdir
     // (data/seg_<id>) — concurrent appenders write disjoint paths, so
     // no listing diff is needed to attribute files to writers (the
@@ -1878,16 +1735,17 @@ object Store {
     // concurrent writer could pollute), and a crashed attempt leaves
     // an orphan subdir that is invisible (no manifest) and reclaimed
     // by vacuum. An empty batch commits nothing.
-    writeSegment(batch, dir, spec, root, segId, s"seg_$segId",
-      commitEmpty = false, beside)
+    if (writeSegment(batch, dir, spec, root, segId, s"seg_$segId",
+        commitEmpty = false, ()))
+      heal(batch.sparkSession, resolveSnapshot(batch.sparkSession, dir), spec)
   }
 
   /** the segment write shared by [[appendSegment]] and [[appendBatch]]:
     * `batch` is written to `data/<sub>` beside `beside`, the segment's
     * index units ([[writeSegmentIndex]]) are built from a READ-BACK of
     * the written files, and the `_MANIFEST` commit marker lands last,
-    * after every write of the pair has finished, followed by the
-    * appender half of conflict detection. The read-back declares the
+    * after every write of the pair has finished; the caller runs the
+    * post-publish [[heal]]. The read-back declares the
     * batch's own schema, which skips the inference job (see write()):
     * re-executing `batch` for the index would recompute the upstream
     * (2× cost) and, for a nondeterministic batch (sample/rand/changing
@@ -1899,11 +1757,12 @@ object Store {
     * many files) keeps the aggregate and range exchanges.
     * A batch that wrote no data file commits only with `commitEmpty`,
     * its empty index units written as one task each so their parquet
-    * still gets a readable footer.
+    * still gets a readable footer. Returns whether the segment
+    * committed.
     */
   private def writeSegment(batch: DataFrame, dir: String, spec: IndexSpec,
                            root: String, segId: Int, sub: String,
-                           commitEmpty: Boolean, beside: => Unit): Unit = {
+                           commitEmpty: Boolean, beside: => Unit): Boolean = {
     val spark = batch.sparkSession
     val (fs, _) = fsFor(spark, dir)
     val (_, names) = inParallel(spark)(beside, {
@@ -1921,15 +1780,10 @@ object Store {
       }
       names
     })
-    if (names.nonEmpty || commitEmpty) {
+    val commit = names.nonEmpty || commitEmpty
+    if (commit)
       writeManifest(fs, s"$root/seg_$segId", names.map(n => s"$sub/$n"))
-      // appender half of delete∥append conflict detection: a
-      // concurrently-committing tombstone with a larger id may have
-      // scanned before this manifest landed — cover it now (see the
-      // concurrency-contract notes; no racing delete ⇒ one snapshot,
-      // zero work)
-      repairTombstonesFor(spark, dir, spec, segId)
-    }
+    commit
   }
 
   /** IDEMPOTENT batchId-keyed append — the exactly-once face of
@@ -1961,23 +1815,29 @@ object Store {
     * batchId fails loudly. Single writer, as for append/compact.
     */
   def appendBatch(batch: DataFrame, dir: String, spec: IndexSpec,
-                  batchId: Long): Boolean =
-    appendBatchBeside(batch, dir, spec, batchId, ())
+                  batchId: Long): Boolean = {
+    val spark = batch.sparkSession
+    val committed = appendBatchBeside(batch,
+      resolveSnapshot(spark, dir).checked, spec, batchId, ())
+    // the post-publish check, as in append
+    if (committed) heal(spark, resolveSnapshot(spark, dir), spec)
+    committed
+  }
 
-  /** [[appendBatch]] with `beside` ([[upsertBatch]]'s tombstone)
-    * written beside the segment's data and index units, past every
-    * gate and validation; the `_MANIFEST` still lands last, after both
+  /** [[appendBatch]] over `snap` (checked), with `beside`
+    * ([[upsertBatch]]'s tombstone) written beside the segment's data
+    * and index units, past every gate and validation; the `_MANIFEST`
+    * still lands last, after both. The caller heals.
     */
-  private def appendBatchBeside(batch: DataFrame, dir: String,
+  private def appendBatchBeside(batch: DataFrame, snap: UnitSnapshot,
                                 spec: IndexSpec, batchId: Long,
                                 beside: => Unit): Boolean = {
+    import snap.{dir, root}
     val spark = batch.sparkSession
     rejectReservedNames(batch.schema, spec)
     require(batchId >= 0 && batchId <= Int.MaxValue.toLong,
       s"batchId out of segment-id range: $batchId")
     val segId = batchId.toInt
-    val snap = resolveSnapshot(spark, dir).checked
-    val root = snap.root
     val (fs, _) = fsFor(spark, dir)
     require(!snap.dels.exists(_._1 >= segId),
       s"a tombstone at id >= $segId exists — its delete would " +
@@ -2027,9 +1887,8 @@ object Store {
     * The interleaved id layout preserves the scoping invariant a
     * CDC stream needs: batch N+1's tombstone (2N+2) postdates batch
     * N's segment (2N+1), so a key re-upserted every batch always
-    * nets to exactly its latest copy. The tombstone's marker goes
-    * through [[commitTombstone]]'s validate-at-commit like every
-    * delete.
+    * nets to exactly its latest copy. The tombstone's marker is
+    * followed by the post-publish [[heal]], like every delete's.
     *
     * Usable directly as the sink:
     * `.foreachBatch((b, id) => Store.upsertBatch(b, dir, spec, "k", id))`
@@ -2080,7 +1939,7 @@ object Store {
     if (segCommitted && delStarted && !delCommitted) {
       // the upsert duplicate window: the replacement segment landed
       // but the tombstone's marker did not — finish the commit
-      commitTombstone(spark, dir, spec, keyCol, delId)
+      commitTombstone(spark, dir, root, spec, delId)
       return true
     }
     // ownership: no FOREIGN committed unit at or above this batch's
@@ -2105,6 +1964,8 @@ object Store {
     // empty store has nothing to replace — and writeTombstone's
     // victim scan requires a manifest-carrying store)
     val hasPrior = snap.segIds.exists(_ < delId)
+    // validated before any id is claimed, as in upsert
+    val kt = if (hasPrior) Some(validateDelete(snap, spec, keyCol)) else None
     // claim both ids (idempotent re-creates after a crash) and stamp
     // stream ownership FIRST — everything later (tombstone subdirs,
     // segment manifest) postdates the marker, so committed-without-
@@ -2117,11 +1978,12 @@ object Store {
     // tombstone written beside it: the segment's manifest lands only
     // after the tombstone's _KEYCOL, which keeps the redelivery gate's
     // "_KEYCOL exists => tombstone fully written" true (as in upsert)
-    appendBatchBeside(batch, dir, spec, segId.toLong,
-      if (hasPrior)
-        writeTombstoneAt(spark, dir, spec, keyCol, batch.select(keyCol),
-          commit = false, id = delId))
-    if (hasPrior) commitTombstone(spark, dir, spec, keyCol, delId)
+    appendBatchBeside(batch, snap, spec, segId.toLong,
+      kt.foreach(writeTombstoneAt(spark, snap, spec, keyCol, _,
+        batch.select(keyCol), delId)))
+    // one post-publish heal, after the last publish
+    if (hasPrior) commitTombstone(spark, dir, root, spec, delId)
+    else heal(spark, resolveSnapshot(spark, dir), spec)
     true
   }
 
@@ -2258,6 +2120,12 @@ object Store {
     * that dies before the `_COMMITTED` marker leaves those layouts in
     * place, still refused, for a rerun. A store with no committed
     * segment and no older layout has nothing to fold.
+    *
+    * REFUSES a store without row refs whose tombstone netting a
+    * crashed writer left unhealed ([[UnitSnapshot.uncovered]],
+    * [[UnitSnapshot.unseen]]): compact has no IndexSpec to heal with,
+    * and its fold would keep the wrong counts for good. One open with
+    * the store's IndexSpec heals it.
     */
   def compact(spark: SparkSession, dir: String): Unit = {
     import org.apache.spark.sql.functions.col
@@ -2267,6 +2135,13 @@ object Store {
     if (snap.older.nonEmpty) return upgradeFold(spark, snap)
     if (snap.segIds.isEmpty) return
     snap.checked
+    // with no IndexSpec there is no heal here, and a refs-less fold
+    // would keep the un-netted counts for good (see WHICH index folds)
+    if (snap.refsIds.isEmpty && (snap.uncovered.nonEmpty || snap.unseen.nonEmpty))
+      throw new IllegalStateException(
+        s"$dir holds tombstone index netting no open has healed yet " +
+          s"(a writer died before its post-publish heal): open it once " +
+          s"with its IndexSpec, then compact")
     // eager checkpoints (independent, so side by side): every read of
     // the old generation's index completes here, before any directory
     // is created or deleted
@@ -2292,11 +2167,10 @@ object Store {
     // WHICH index folds (r14): with live tombstones AND a refs
     // artifact, the entries are REBUILT from the folded refs
     // (f ≡ refs count per entry by construction, and the refs view
-    // is keys-based/anti-joined — exact even when a conflict left a
-    // tombstone's scan-derived ixdelta stale), so compact genuinely
-    // heals index netting damage on refs-carrying stores. Without
-    // refs the merged (netted) index folds as-is — an unrepaired
-    // conflict persists; [[rescanTombstoneIndex]] is the heal there.
+    // is keys-based/anti-joined — exact even where a tombstone's
+    // scan-derived netting is unhealed). Without refs the merged
+    // (netted) index folds as-is, which is why a refs-less store
+    // with unhealed netting was refused above.
     val foldedEntries = (dels, rows) match {
       case (ds, Some(r)) if ds.nonEmpty =>
         r.groupBy(col("field"), col("value"))
@@ -2511,8 +2385,7 @@ object Store {
       // files).
       snap.dels.foreach { case (id, _) =>
         val base = s"$root/del_$id"
-        val names = fs.listStatus(new org.apache.hadoop.fs.Path(base))
-          .map(_.getPath.getName).toSeq
+        val names = snap.delNames(id)
         // crashed coverSegment staging dirs are never read — reclaim
         names.filter(_.startsWith("_ixtmp_")).foreach(n =>
           fs.delete(new org.apache.hadoop.fs.Path(s"$base/$n"), true))

@@ -55,9 +55,10 @@ object CountingFileSystem {
 }
 
 /** pins the Hadoop metadata calls of a fresh open and of each commit
-  * kind on a 3-segment row-refs store. The ceilings are the counts of
-  * the code before the Store served one layout only; an op that makes
-  * more calls of any kind fails here.
+  * kind on a 3-segment row-refs store, and of an open and a delete
+  * once the store holds tombstones. The ceilings are the counts of the
+  * code before tombstone netting had one healer, measured in this
+  * sequence; an op that makes more calls of any kind fails here.
   */
 class StoreMetadataCallsSpec extends SparkSpec {
   import spark.implicits._
@@ -84,18 +85,27 @@ class StoreMetadataCallsSpec extends SparkSpec {
         Store.delete(spark, dir, spec, "id", Seq(5L, 25L).toDF("id"))),
       "upsert" -> CountingFileSystem.during(
         Store.upsert(batch(70 until 90), dir, spec, "id")),
+      "open, 2 tombstones" -> CountingFileSystem.during(
+        Store.open(spark, dir, spec)),
+      "delete, 2 tombstones" -> CountingFileSystem.during(
+        Store.delete(spark, dir, spec, "id", Seq(45L, 85L).toDF("id"))),
+      "open, 3 tombstones" -> CountingFileSystem.during(
+        Store.open(spark, dir, spec)),
       "compact" -> CountingFileSystem.during(Store.compact(spark, dir)))
     calls.foreach { case (op, c) => info(s"$op: $c") }
     // the served store is intact after the measured ops
-    assert(Store.open(spark, dir, spec).frame.df.count() === 88)
+    assert(Store.open(spark, dir, spec).frame.df.count() === 86)
     // listStatus, exists, getFileStatus, open
     def kinds(n: Long*) = CountingFileSystem.Kinds.zip(n).toMap
     val ceilings = Map(
-      "open" -> kinds(2, 8, 6, 6),
-      "append" -> kinds(8, 22, 14, 14),
-      "delete" -> kinds(13, 64, 43, 43),
-      "upsert" -> kinds(26, 109, 79, 79),
-      "compact" -> kinds(15, 20, 16, 16))
+      "open" -> kinds(2, 2, 0, 6),
+      "append" -> kinds(6, 6, 0, 14),
+      "delete" -> kinds(13, 22, 0, 43),
+      "upsert" -> kinds(23, 35, 0, 69),
+      "open, 2 tombstones" -> kinds(4, 12, 0, 14),
+      "delete, 2 tombstones" -> kinds(23, 38, 0, 73),
+      "open, 3 tombstones" -> kinds(5, 18, 0, 16),
+      "compact" -> kinds(16, 12, 0, 18))
     calls.foreach { case (op, c) =>
       CountingFileSystem.Kinds.foreach { k =>
         assert(c(k) <= ceilings(op)(k), s"$op makes ${c(k)} $k calls")

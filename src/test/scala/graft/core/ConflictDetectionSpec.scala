@@ -2,17 +2,18 @@ package graft.core
 
 import org.apache.spark.sql.functions._
 
-/** r13: commit-time conflict detection for key-overlapping
-  * delete ∥ append (the r12 verdict's #1 — the documented
-  * single-writer hole, closed with the Iceberg validate-at-commit
-  * idiom adapted to the unit-commit protocol).
+/** conflict handling for key-overlapping delete ∥ append and
+  * delete ∥ delete: every commit heals the tombstone index netting
+  * over a fresh snapshot right after its own publish (publish-then-
+  * check, so the later publisher sees the earlier one), and open
+  * heals what a crashed writer left before it serves.
   *
   * The specs drive the EXACT interleavings through the private[core]
   * seams (claim / appendSegment / writeTombstone / commitTombstone),
-  * then a true thread race checks the invariant end-to-end. The
-  * invariant everywhere: the merged index equals a from-scratch index
-  * of the live data, and the live data equals the expected survivor
-  * set.
+  * freeze crash states by hand, then true thread races check the
+  * invariant end-to-end. The invariant everywhere: the merged index
+  * equals a from-scratch index of the live data, and the live data
+  * equals the expected survivor set.
   */
 class ConflictDetectionSpec extends graft.SparkSpec {
   import spark.implicits._
@@ -53,8 +54,8 @@ class ConflictDetectionSpec extends graft.SparkSpec {
     assert(delId === 2)
     // the appender's segment (WRITING victim keys) commits in between
     Store.appendSegment(mkDf(40 until 80), dir, spec, apId, root)
-    // ... and the delete's commit detects + repairs it
-    Store.commitTombstone(spark, dir, spec, "id", delId)
+    // ... and the heal after the delete's marker repairs it
+    Store.commitTombstone(spark, dir, s"$dir/index", spec, delId)
     assert(fs.exists(new org.apache.hadoop.fs.Path(
       s"$root/del_$delId/_scope_$apId")))
     assert(fs.exists(new org.apache.hadoop.fs.Path(
@@ -76,7 +77,7 @@ class ConflictDetectionSpec extends graft.SparkSpec {
     val delId = Store.writeTombstone(spark, dir, spec, "id",
       (0 until 100 by 4).map(_.toLong).toDF("id"), commit = false)
     // the tombstone commits first — seg_1 still invisible to it
-    Store.commitTombstone(spark, dir, spec, "id", delId)
+    Store.commitTombstone(spark, dir, s"$dir/index", spec, delId)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(
       s"$root/del_$delId/_scope_$apId")))
     // the appender commits second; its post-commit check must find
@@ -99,7 +100,7 @@ class ConflictDetectionSpec extends graft.SparkSpec {
     val delId = Store.writeTombstone(spark, dir, spec, "id",
       (0 until 40 by 4).map(_.toLong).toDF("id"), commit = false)
     Store.appendSegment(mkDf(1000 until 1040), dir, spec, apId, root)
-    Store.commitTombstone(spark, dir, spec, "id", delId)
+    Store.commitTombstone(spark, dir, s"$dir/index", spec, delId)
     assert(fs.exists(new org.apache.hadoop.fs.Path(
       s"$root/del_$delId/_scope_$apId")))
     assert(!fs.exists(new org.apache.hadoop.fs.Path(
@@ -119,11 +120,11 @@ class ConflictDetectionSpec extends graft.SparkSpec {
     // tombstone A (id 2) deletes %3 keys — scans seg 0 only
     val delA = Store.writeTombstone(spark, dir, spec, "id",
       (0 until 80 by 3).map(_.toLong).toDF("id"), commit = false)
-    Store.commitTombstone(spark, dir, spec, "id", delA)
+    Store.commitTombstone(spark, dir, s"$dir/index", spec, delA)
     // tombstone B (id 3) deletes %2 keys — also scans seg 0 only
     val delB = Store.writeTombstone(spark, dir, spec, "id",
       (0 until 80 by 2).map(_.toLong).toDF("id"), commit = false)
-    Store.commitTombstone(spark, dir, spec, "id", delB)
+    Store.commitTombstone(spark, dir, s"$dir/index", spec, delB)
     // the appender commits LAST: its post-commit check must repair
     // BOTH tombstones, and B's repair must exclude rows A killed
     // (ids divisible by 6 would otherwise be negated twice)
@@ -138,14 +139,14 @@ class ConflictDetectionSpec extends graft.SparkSpec {
     Store.write(mkDf(0 until 60), dir, spec) // seg 0
     // tombstone A claims 1, tombstone B claims 2; B scans while A is
     // uncommitted (B's victim set still contains rows A will kill),
-    // then A commits, then B commits — B's validate loop must detect
-    // the unseen tombstone and rescan, or the %6 rows net twice
+    // then A commits, then B commits — the heal after B's marker must
+    // find the unseen tombstone and rescan B, or the %6 rows net twice
     val delA = Store.writeTombstone(spark, dir, spec, "id",
       (0 until 60 by 3).map(_.toLong).toDF("id"), commit = false)
     val delB = Store.writeTombstone(spark, dir, spec, "id",
       (0 until 60 by 2).map(_.toLong).toDF("id"), commit = false)
-    Store.commitTombstone(spark, dir, spec, "id", delA)
-    Store.commitTombstone(spark, dir, spec, "id", delB)
+    Store.commitTombstone(spark, dir, s"$dir/index", spec, delA)
+    Store.commitTombstone(spark, dir, s"$dir/index", spec, delB)
     check(dir)
     val live = Store.open(spark, dir, spec).frame.df
     assert(live.count() === (0 until 60).count(i => i % 3 != 0 && i % 2 != 0))
@@ -156,8 +157,8 @@ class ConflictDetectionSpec extends graft.SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("cds").toString
     Store.write(mkDf(0 until 60), dir, spec) // seg 0
     // A claims 1, B claims 2; BOTH scan while the other is
-    // uncommitted. B commits first — A is invisible to B's validate
-    // loop (uncommitted), so B's ixdelta counts the shared %6 rows.
+    // uncommitted. B commits first — A is invisible to the heal after
+    // B's marker (uncommitted), so B's ixdelta counts the shared %6 rows.
     // Then A's marker lands inside what used to be the undetectable
     // window: pre-r14 both committed silently and the merged index
     // over-negated the %6 rows until compact; r14 threw; r15 heals.
@@ -165,13 +166,12 @@ class ConflictDetectionSpec extends graft.SparkSpec {
       (0 until 60 by 3).map(_.toLong).toDF("id"), commit = false)
     val delB = Store.writeTombstone(spark, dir, spec, "id",
       (0 until 60 by 2).map(_.toLong).toDF("id"), commit = false)
-    Store.commitTombstone(spark, dir, spec, "id", delB)
-    // the later publisher ALWAYS sees the earlier one: A's
-    // post-marker tombstone check finds del_2 missing _delseen_1,
-    // sees the key overlap, and RESCANS the stale unit (del_B)
-    // itself — versioned write + atomic publish, no throw, no
-    // manual intervention (r14 missing #3)
-    Store.commitTombstone(spark, dir, spec, "id", delA)
+    Store.commitTombstone(spark, dir, s"$dir/index", spec, delB)
+    // the later publisher ALWAYS sees the earlier one: the heal after
+    // A's marker finds del_2 missing _delseen_1 and RESCANS the stale
+    // unit (del_B) itself — versioned write + atomic publish, no
+    // throw, no manual intervention
+    Store.commitTombstone(spark, dir, s"$dir/index", spec, delA)
     val fs = fsOf(dir)
     assert(fs.exists(new org.apache.hadoop.fs.Path(
       s"$dir/index/del_$delB/ixdelta_v1/_IXPUBLISHED")),
@@ -204,8 +204,8 @@ class ConflictDetectionSpec extends graft.SparkSpec {
       (0 until 60 by 3).map(_.toLong).toDF("id"), commit = false)
     val delB = Store.writeTombstone(spark, dir, rspec, "id",
       (0 until 60 by 2).map(_.toLong).toDF("id"), commit = false)
-    Store.commitTombstone(spark, dir, rspec, "id", delB)
-    Store.commitTombstone(spark, dir, rspec, "id", delA) // r15: auto-heals
+    Store.commitTombstone(spark, dir, s"$dir/index", rspec, delB)
+    Store.commitTombstone(spark, dir, s"$dir/index", rspec, delA) // r15: auto-heals
     Store.compact(spark, dir)
     val st = Store.open(spark, dir, rspec)
     val fresh = indexAsMap(IndexedFrame(st.frame.df, rspec).entries)
@@ -222,10 +222,10 @@ class ConflictDetectionSpec extends graft.SparkSpec {
       (0 until 60 by 3).map(_.toLong).toDF("id"), commit = false)
     val delB = Store.writeTombstone(spark, dir, spec, "id",
       (0 until 60 by 2).map(_.toLong).toDF("id"), commit = false)
-    Store.commitTombstone(spark, dir, spec, "id", delB)
-    Store.commitTombstone(spark, dir, spec, "id", delA) // heals B → v1
+    Store.commitTombstone(spark, dir, s"$dir/index", spec, delB)
+    Store.commitTombstone(spark, dir, s"$dir/index", spec, delA) // heals B → v1
     // a second (manual) heal supersedes v1 with v2
-    Store.rescanTombstoneIndex(spark, dir, spec, "id", delB)
+    Store.rescanTombstoneIndex(spark, dir, spec, delB)
     val fs = fsOf(dir)
     val base = s"$dir/index/del_$delB"
     def ex(p: String) = fs.exists(new org.apache.hadoop.fs.Path(p))
@@ -248,14 +248,14 @@ class ConflictDetectionSpec extends graft.SparkSpec {
     val fs = fsOf(dir)
     val root = s"$dir/index"
     // the r14-documented transient window, frozen by a crash: the
-    // appender committed its manifest but died before its post-commit
-    // repairTombstonesFor pass — simulate by letting the repair run,
+    // appender committed its manifest but died before its post-publish
+    // heal — simulate by letting the repair run,
     // then deleting its artifacts (token + ixrepair), exactly the
     // on-disk state a crash right after the manifest commit leaves
     val apId = Store.claimUnitId(fs, root)
     val delId = Store.writeTombstone(spark, dir, spec, "id",
       (0 until 100 by 4).map(_.toLong).toDF("id"), commit = false)
-    Store.commitTombstone(spark, dir, spec, "id", delId)
+    Store.commitTombstone(spark, dir, s"$dir/index", spec, delId)
     Store.appendSegment(mkDf(40 until 80), dir, spec, apId, root)
     fs.delete(new org.apache.hadoop.fs.Path(
       s"$root/del_$delId/_scope_$apId"), false)
@@ -281,7 +281,7 @@ class ConflictDetectionSpec extends graft.SparkSpec {
     val apId = Store.claimUnitId(fs, root)
     val delId = Store.writeTombstone(spark, dir, spec, "id",
       (0 until 100 by 4).map(_.toLong).toDF("id"), commit = false)
-    Store.commitTombstone(spark, dir, spec, "id", delId)
+    Store.commitTombstone(spark, dir, s"$dir/index", spec, delId)
     Store.appendSegment(mkDf(40 until 80), dir, spec, apId, root)
     // crash state A (the ONLY mid-crash state the r15 ordering can
     // leave): repair published, token not yet claimed
@@ -317,16 +317,68 @@ class ConflictDetectionSpec extends graft.SparkSpec {
       (0 until 10).map(_.toLong).toDF("id"), commit = false)
     val delB = Store.writeTombstone(spark, dir, spec, "id",
       (30 until 40).map(_.toLong).toDF("id"), commit = false)
-    Store.commitTombstone(spark, dir, spec, "id", delB)
-    // disjoint pair: the then-live rule is vacuous between them — A's
-    // post-marker check writes the missing token instead of throwing
-    Store.commitTombstone(spark, dir, spec, "id", delA)
+    Store.commitTombstone(spark, dir, s"$dir/index", spec, delB)
+    // disjoint pair: the then-live rule is vacuous between them; the
+    // heal after A's marker rescans B anyway (correct for disjoint
+    // keys too) and writes the missing token instead of throwing
+    Store.commitTombstone(spark, dir, s"$dir/index", spec, delA)
     val fs = fsOf(dir)
     assert(fs.exists(new org.apache.hadoop.fs.Path(
       s"$dir/index/del_$delB/_delseen_$delA")))
     check(dir)
     val live = Store.open(spark, dir, spec).frame.df
     assert(live.count() === 40)
+  }
+
+  test("crash after an append's manifest, before its repair: compact " +
+      "refuses until an open heals the pair") {
+    val dir = java.nio.file.Files.createTempDirectory("cds").toString
+    Store.write(mkDf(0 until 40), dir, spec)
+    val fs = fsOf(dir)
+    val root = s"$dir/index"
+    val apId = Store.claimUnitId(fs, root)
+    val delId = Store.delete(spark, dir, spec, "id",
+      (0 until 100 by 4).map(_.toLong).toDF("id"))
+    assert(delId === 2)
+    Store.appendSegment(mkDf(40 until 80), dir, spec, apId, root)
+    // the on-disk state of an appender that died right after its
+    // manifest: the pair (del_2, seg_1) has neither repair nor token
+    fs.delete(new org.apache.hadoop.fs.Path(
+      s"$root/del_$delId/ixrepair_$apId"), true)
+    fs.delete(new org.apache.hadoop.fs.Path(
+      s"$root/del_$delId/_scope_$apId"), false)
+    // compact has no IndexSpec to heal with: it must not fold the
+    // un-netted counts in for good
+    val e = intercept[IllegalStateException](Store.compact(spark, dir))
+    assert(e.getMessage.contains("open it once with its IndexSpec"))
+    check(dir) // the open heals the pair
+    Store.compact(spark, dir)
+    check(dir)
+    assert(Store.open(spark, dir, spec).frame.df.count() ===
+      (0 until 80).count(_ % 4 != 0))
+  }
+
+  test("crash after a tombstone's marker, before its check: an earlier " +
+      "tombstone it never saw is healed by open") {
+    val dir = java.nio.file.Files.createTempDirectory("cds").toString
+    Store.write(mkDf(0 until 40), dir, spec)
+    // B scans while A is uncommitted, so B's victims hold the %8 rows
+    // A kills; A commits, then B's marker lands and B dies before its
+    // post-marker check
+    val delA = Store.writeTombstone(spark, dir, spec, "id",
+      (0 until 40 by 4).map(_.toLong).toDF("id"), commit = false)
+    val delB = Store.writeTombstone(spark, dir, spec, "id",
+      (0 until 40 by 8).map(_.toLong).toDF("id"), commit = false)
+    Store.commitTombstone(spark, dir, s"$dir/index", spec, delA)
+    fsOf(dir).create(new org.apache.hadoop.fs.Path(
+      s"$dir/index/del_$delB/_COMMITTED")).close()
+    val e = intercept[IllegalStateException](Store.compact(spark, dir))
+    assert(e.getMessage.contains("open it once with its IndexSpec"))
+    check(dir) // the open rescans B
+    Store.compact(spark, dir)
+    check(dir)
+    assert(Store.open(spark, dir, spec).frame.df.count() ===
+      (0 until 40).count(_ % 4 != 0))
   }
 
   test("true race: concurrent delete and append of overlapping keys " +
@@ -352,6 +404,41 @@ class ConflictDetectionSpec extends graft.SparkSpec {
       val ids = live.select("id").collect().map(_.getLong(0)).toSet
       assert((0 until 50).filter(_ % 4 != 0).forall(i => ids(i.toLong)),
         s"round $round: non-victim seg-0 rows must survive")
+    }
+  }
+
+  test("true race: two overlapping-key deletes and an append writing " +
+      "their victim keys, all at once, net correctly") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val steps = Seq(2, 3)
+    (0 until 3).foreach { round =>
+      val dir = java.nio.file.Files.createTempDirectory("cdr3").toString
+      Store.write(mkDf(0 until 50), dir, spec)
+      val dels = steps.map(step => Future {
+        Store.delete(spark, dir, spec, "id",
+          (0 until 100 by step).map(_.toLong).toDF("id"))
+      })
+      val app = Future(Store.append(mkDf(50 until 100), dir, spec))
+      val delIds = Await.result(Future.sequence(dels), 300.seconds)
+      Await.result(app, 300.seconds)
+      // a tombstone deletes its keys from the segments below its id
+      // only, so the survivors follow the ids the race handed out
+      val appId = Store.history(spark, dir)
+        .collect { case (id, "append", _) if id > 0 => id }.head
+      def segOf(i: Int) = if (i < 50) 0 else appId
+      val expected = (0 until 100).filterNot(i => delIds.zip(steps).exists {
+        case (t, step) => t > segOf(i) && i % step == 0
+      }).map(_.toLong).toSet
+      // every writer healed after its own publish: open finds nothing
+      val snap = Store.resolveSnapshot(spark, dir)
+      assert(snap.uncovered.isEmpty && snap.unseen.isEmpty,
+        s"round $round: netting left unhealed by the writers")
+      val live = Store.open(spark, dir, spec).frame.df
+      assert(live.select("id").collect().map(_.getLong(0)).toSet === expected,
+        s"round $round: data must equal the expected survivors")
+      check(dir)
     }
   }
 }
