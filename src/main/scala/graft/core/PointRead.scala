@@ -703,13 +703,10 @@ object PointRead {
     * the pair and k-entry walks' hot-entry gate.
     */
   final class StorePoint(conf: Configuration,
-      freqGroups: () => Seq[FreqGroup],
-      rowsGroups: () => Seq[RowsGroup],
-      delKeyDirs: () => Map[Int, Path]) {
+      fGroups: Seq[FreqGroup],
+      rGroups: Seq[RowsGroup],
+      keyDirs: Map[Int, Path]) {
 
-    private lazy val fGroups = freqGroups()
-    private lazy val rGroups = rowsGroups()
-    private lazy val keyDirs = delKeyDirs()
     private val freqReaders =
       scala.collection.mutable.HashMap.empty[Int, Reader]
     private val rowsReaders =

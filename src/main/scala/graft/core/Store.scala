@@ -377,9 +377,9 @@ object Store {
   //    segment the scan missed gets an `ixrepair_<seg>` scan of just
   //    that segment ([[coverSegment]]); a tombstone that missed an
   //    earlier one gets one versioned rescan ([[rescanTombstoneIndex]]).
-  //    Every commit heals over a fresh snapshot right AFTER its own
-  //    last publish (a tombstone's `_COMMITTED`, a segment's
-  //    `_MANIFEST`, an upsert's tombstone marker), so whichever of two
+  //    Every commit heals over a fresh snapshot right AFTER its
+  //    publish (the heal step of [[commit]], after a segment's
+  //    `_MANIFEST` and a tombstone's `_COMMITTED`), so whichever of two
   //    racing writers publishes second sees the other's unit: at least
   //    one side heals, and the two heals of one pair compute the same
   //    entries (the first publish wins). A repair's token lands after
@@ -685,12 +685,14 @@ object Store {
   // share a snapshot: that is the schedule in which any other writer
   // committed a moment later, which the protocol already allows. So a
   // commit resolves twice: once before its claim (its validation, and
-  // a tombstone's victim scan over the ids below it,
-  // [[UnitSnapshot.upTo]]), and once after its last publish, for
-  // [[heal]], which must see every unit another writer published
-  // before it (the later publisher sees the earlier one). A unit that
-  // commits between the two is what that heal catches. A rescan
-  // resolves afresh; open() resolves again only when its heal wrote.
+  // the [[Commit]] its write step runs over: a tombstone's victim scan
+  // covers the ids below it, [[UnitSnapshot.upTo]]), and once in its
+  // heal step, after its publish, which must see every unit another
+  // writer published before it (the later publisher sees the earlier
+  // one). A unit that commits between the two is what that heal
+  // catches. write() resolves nothing: it commits over
+  // [[UnitSnapshot.empty]]. A rescan resolves afresh; open() resolves
+  // again only when its heal wrote.
   //
   // Resolving refuses nothing. The refusals the metadata decides
   // ([[UnitSnapshot.checked]]: an older layout, a non-widening schema
@@ -886,6 +888,14 @@ object Store {
       else df
   }
 
+  private[core] object UnitSnapshot {
+    /** the snapshot of a store with no unit yet, which write() commits
+      * over */
+    def empty(dir: String): UnitSnapshot = UnitSnapshot(dir, s"$dir/index", 0,
+      Nil, Nil, Map.empty, Map.empty, Nil, Map.empty, Map.empty, Map.empty,
+      Nil, Nil, Nil)
+  }
+
   /** a read era: unit ids and the tombstones and renames that apply */
   private[core] final case class Era(ids: Seq[Int], dels: Seq[(Int, String)],
                                      rens: Seq[(Int, String, String)])
@@ -992,10 +1002,158 @@ object Store {
     if (hidden.isEmpty) out else out.drop(hidden.toSeq: _*)
   }
 
+  // ------------------------------------------------------------ commits
+  // Every write of the store commits through ONE step list: the single
+  // commit protocol of a table format (Delta Lake, VLDB 2020), spelled
+  // with marker files. A [[Commit]] names the units one op adds (a
+  // segment, a tombstone, or both for an upsert) at ids the op already
+  // owns, and three steps, each callable alone, commit them:
+  //  1. [[writeUnits]]: the segment's data under `data/<sub>` and its
+  //     index units, built from a read-back of that data, side by side
+  //     with the tombstone's key set, victim `ixdelta`, coverage tokens
+  //     and, last, `_KEYCOL`. No reader sees any of it yet.
+  //  2. [[publish]]: the segment's `_MANIFEST`, which lands only after
+  //     the tombstone's `_KEYCOL` (step 1 waits for both sides), then
+  //     the tombstone's `_COMMITTED`.
+  //  3. [[heal]], once, over a snapshot resolved after the publish (see
+  //     the concurrency contract).
+  // [[commit]] runs the three; [[finish]] runs steps 2 and 3 over units
+  // already on disk. Each op keeps only its own part: its validation
+  // on one snapshot, how it gets its ids (a claim or a batch id) and
+  // its idempotence gates. write() runs steps 1 and 2 for `seg_0`, with
+  // its data directly under `data/`; compact publishes its own fold
+  // ([[publishFold]]); rename and drop commit a metadata-only `ren_`
+  // unit.
+  //
+  // CRASH STATES, by the last step that finished: within step 1 no
+  // unit has a marker, so the commit is invisible and vacuum reclaims
+  // its files; between an upsert's manifest and its tombstone's marker
+  // both copies of a replaced row are visible (see [[upsert]]); after
+  // step 2 the commit is whole, and open heals what step 3 did not.
+
+  /** a segment to commit: `batch` at unit id `id`, its data files under
+    * `data/<sub>`, or directly under `data/` when `sub` is empty. A
+    * batch that writes no data file commits only with `commitEmpty`.
+    */
+  private[core] final case class SegUnit(id: Int, batch: DataFrame, sub: String,
+                                         commitEmpty: Boolean)
+
+  /** a tombstone to commit at unit id `id`: the rows whose `keyCol` is
+    * in `keys`, a one-column frame, are deleted from the segments below
+    * it
+    */
+  private[core] final case class DelUnit(id: Int, keyCol: String, keys: DataFrame)
+
+  /** the units one op commits, over `snap`, the snapshot it validated:
+    * a tombstone's key set is cast to its key column's type in `snap`,
+    * and its victim scan covers `snap`'s units below its id
+    */
+  private[core] final case class Commit(snap: UnitSnapshot, spec: IndexSpec,
+                                        seg: Option[SegUnit] = None,
+                                        del: Option[DelUnit] = None)
+
+  /** commit `c`: write its units, publish them, heal */
+  private[core] def commit(spark: SparkSession, c: Commit): Boolean =
+    finish(spark, c, writeUnits(spark, c))
+
+  /** steps 2 and 3 of `c`, whose units are written: publish, then heal
+    * once over a snapshot resolved after the publish. `manifest` is
+    * what step 1 returned, or None for a segment that is already
+    * published (an upsertBatch redelivery finishing its tombstone).
+    * Returns whether a unit was published.
+    */
+  private[core] def finish(spark: SparkSession, c: Commit,
+                           manifest: Option[Seq[String]]): Boolean = {
+    val published = publish(spark, c, manifest)
+    if (published) heal(spark, resolveSnapshot(spark, c.snap.dir), c.spec)
+    published
+  }
+
+  /** step 1 of `c`: every file of its units but their markers, the
+    * tombstone's on the calling thread and the segment's beside it.
+    * Returns the segment's manifest (its data files, named relative to
+    * `data/`) when the segment commits.
+    */
+  private[core] def writeUnits(spark: SparkSession, c: Commit): Option[Seq[String]] =
+    inParallel(spark)(c.del.foreach(writeTombstoneUnits(spark, c, _)),
+      c.seg.flatMap(writeSegmentUnits(spark, c, _)))._2
+
+  /** step 2 of `c`: the segment's `_MANIFEST` when step 1 returned one,
+    * then the tombstone's `_COMMITTED`. Each marker lands after the
+    * files it covers. Returns whether a unit was published.
+    */
+  private[core] def publish(spark: SparkSession, c: Commit,
+                            manifest: Option[Seq[String]]): Boolean = {
+    val root = c.snap.root
+    val (fs, _) = fsFor(spark, root)
+    for (s <- c.seg; files <- manifest) writeManifest(fs, s"$root/seg_${s.id}", files)
+    c.del.foreach(d => fs.create(
+      new org.apache.hadoop.fs.Path(s"$root/del_${d.id}/_COMMITTED")).close())
+    manifest.nonEmpty || c.del.nonEmpty
+  }
+
+  /** a segment's files: `s.batch` written under its data dir, then its
+    * index units ([[writeSegmentIndex]]) built from a READ-BACK of the
+    * written files, declared with the batch's own schema, which skips
+    * the schema-inference job a schema-less read runs. Re-executing
+    * the batch for the index would recompute its upstream (2× cost)
+    * and, for a nondeterministic batch (sample/rand/changing source),
+    * index a DIFFERENT row set than the one just persisted. The index
+    * is built at the parallelism the read-back scans at
+    * ([[indexShaped]]): a small batch that reads back as one split
+    * plans each index unit as one stage with no exchange, while one
+    * that scans as several splits keeps the aggregate and range
+    * exchanges. A batch that wrote no data file commits only with
+    * `commitEmpty`, its empty index units written as one task each so
+    * their parquet still gets a readable footer. Returns the manifest
+    * when the segment commits.
+    */
+  private def writeSegmentUnits(spark: SparkSession, c: Commit,
+                                s: SegUnit): Option[Seq[String]] = {
+    val (fs, _) = fsFor(spark, c.snap.dir)
+    val rel = if (s.sub.isEmpty) "" else s"${s.sub}/"
+    val data = s"${c.snap.dir}/data" + (if (s.sub.isEmpty) "" else s"/${s.sub}")
+    s.batch.write.mode(SaveMode.Overwrite).parquet(data)
+    val names = dataFileNames(fs, data)
+    if (names.isEmpty && !s.commitEmpty) None
+    else {
+      val persisted =
+        if (names.nonEmpty)
+          indexShaped(spark.read.schema(s.batch.schema).parquet(data))
+        else spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s.batch.schema)
+      writeSegmentIndex(spark, IndexedFrame(persisted, c.spec), c.snap.root,
+        s.id, oneTask = names.isEmpty)
+      Some(names.map(rel + _))
+    }
+  }
+
+  /** a tombstone's files: its key set, cast to the key column's type;
+    * the negated entries of its then-live victims among the units below
+    * it; the coverage tokens of that scan; and, last, `_KEYCOL`, whose
+    * presence means the unit is fully written (upsertBatch's redelivery
+    * gate relies on it)
+    */
+  private def writeTombstoneUnits(spark: SparkSession, c: Commit,
+                                  d: DelUnit): Unit = {
+    val base = s"${c.snap.root}/del_${d.id}"
+    val (fs, _) = fsFor(spark, base)
+    // no distinct: key sets are set-semantic (see keyJoin)
+    val k = d.keys.select(col(d.keys.columns.head)
+      .cast(c.snap.schema(d.keyCol).dataType).as("key"))
+    k.write.mode(SaveMode.Overwrite).parquet(s"$base/keys")
+    writeSchemaSidecar(fs, s"$base/keys", k.schema)
+    val scan = c.snap.upTo(d.id - 1)
+    scanVictimEntriesTo(spark, scan, c.spec, d.keyCol, d.id, s"$base/ixdelta")
+    writeTokens(fs, scan, d.id)
+    val kc = fs.create(new org.apache.hadoop.fs.Path(s"$base/_KEYCOL"), true)
+    try kc.write(d.keyCol.getBytes("UTF-8")) finally kc.close()
+  }
+
   /** Row-level DELETE: remove every live row whose `keyCol` value
     * appears in `keys` (any single-column frame; values cast to the
     * data column's type). Merge-on-read: nothing is rewritten — the
-    * call writes one tombstone unit (key set + negative index
+    * call commits one tombstone unit (key set + negative index
     * segment). Indexing the victims scans every committed segment
     * below the tombstone's id, semi-joined to the persisted key set
     * (only the matching rows reach the index build), but never
@@ -1021,82 +1179,44 @@ object Store {
     */
   def delete(spark: SparkSession, dir: String, spec: IndexSpec,
              keyCol: String, keys: DataFrame): Int =
-    writeTombstone(spark, dir, spec, keyCol, keys, commit = true)
+    deleteOn(spark, resolveSnapshot(spark, dir), spec, keyCol, keys)
 
-  /** [[delete]]'s tombstone write over a snapshot resolved now */
-  private[core] def writeTombstone(spark: SparkSession, dir: String,
-                                   spec: IndexSpec, keyCol: String,
-                                   keys: DataFrame, commit: Boolean): Int =
-    writeTombstone(spark, resolveSnapshot(spark, dir), spec, keyCol, keys,
-      commit)
-
-  /** validate over `snap`, claim, then [[writeTombstoneAt]];
-    * `commit = false` defers the `_COMMITTED` marker to a later
-    * [[commitTombstone]], as [[upsert]] does (crash-atomicity).
-    */
-  private def writeTombstone(spark: SparkSession, snap: UnitSnapshot,
-                             spec: IndexSpec, keyCol: String,
-                             keys: DataFrame, commit: Boolean): Int = {
-    val kt = validateDelete(snap, spec, keyCol)
-    val id = claimUnitId(fsFor(spark, snap.root)._1, snap.root)
-    writeTombstoneAt(spark, snap, spec, keyCol, kt, keys, id)
-    if (commit) commitTombstone(spark, snap.dir, snap.root, spec, id)
-    id
+  /** commit a delete of `keys` over `snap` ([[deleteCommit]]) */
+  private def deleteOn(spark: SparkSession, snap: UnitSnapshot, spec: IndexSpec,
+                       keyCol: String, keys: DataFrame): Int = {
+    val c = deleteCommit(spark, snap, spec, keyCol, keys)
+    commit(spark, c)
+    c.del.get.id
   }
 
-  /** a delete's preconditions, checked over `snap`; returns the key
-    * column's type. Run BEFORE the unit id is claimed (r13 advice #5 —
-    * the r13 claim-first ordering permanently leaked a _claim_<id>
-    * file on any failed require, skipping that id for the rest of the
-    * generation).
+  /** a delete's own part: validated over `snap`, then a claimed id */
+  private[core] def deleteCommit(spark: SparkSession, snap: UnitSnapshot,
+                                 spec: IndexSpec, keyCol: String,
+                                 keys: DataFrame): Commit = {
+    validateDelete(snap, spec, keyCol)
+    val id = claimUnitId(fsFor(spark, snap.root)._1, snap.root)
+    Commit(snap, spec, del = Some(DelUnit(id, keyCol, keys)))
+  }
+
+  /** a delete's preconditions, checked over `snap`. Run BEFORE the
+    * unit id is claimed (r13 advice #5 — the r13 claim-first ordering
+    * permanently leaked a _claim_<id> file on any failed require,
+    * skipping that id for the rest of the generation).
     */
   private def validateDelete(snap: UnitSnapshot, spec: IndexSpec,
-                             keyCol: String): org.apache.spark.sql.types.DataType = {
+                             keyCol: String): Unit = {
     spec.rowRefs.foreach(rk => require(rk == keyCol,
       s"store has row-refs keyed on '$rk' — delete must key on it too " +
         s"(got '$keyCol'), or the refs artifact would serve deleted rows"))
     // the columns the data read serves: the sidecars' union without
     // the hidden dropped names, so no merge-on-read frame is planned
-    val live = org.apache.spark.sql.types.StructType(
-      snap.checked.schema.fields.filterNot(_.name.startsWith(DroppedPrefix)))
-    require(live.fieldNames.contains(keyCol),
-      s"no column '$keyCol' in store data (${live.fieldNames.mkString(",")})")
-    live(keyCol).dataType
-  }
-
-  /** the tombstone unit at an EXPLICIT (already claimed or
-    * deterministically owned) unit id, validated over `snap` (key
-    * type `kt`) — [[upsert]] claims its id before the segment's, and
-    * the [[upsertBatch]] face needs batch-keyed ids for redelivery
-    * idempotence. The victim scan runs over `snap`'s units below `id`
-    * and records what it saw as coverage tokens. `_KEYCOL` is the
-    * unit's last write before the marker: its presence means the
-    * tombstone is fully written (upsert publishes its segment only
-    * after this returns; upsertBatch's redelivery gate relies on it).
-    */
-  private def writeTombstoneAt(spark: SparkSession, snap: UnitSnapshot,
-                               spec: IndexSpec, keyCol: String,
-                               kt: org.apache.spark.sql.types.DataType,
-                               keys: DataFrame, id: Int): Unit = {
-    val root = snap.root
-    val (fs, _) = fsFor(spark, root)
-    val inCol = keys.columns.head
-    // no distinct: key sets are set-semantic (see keyJoin)
-    val k = keys.select(col(inCol).cast(kt).as("key"))
-    // commit protocol: keys + ixdelta + keycol first, marker LAST —
-    // a crash leaves an uncommitted unit no reader ever applies
-    k.write.mode(SaveMode.Overwrite).parquet(s"$root/del_$id/keys")
-    writeSchemaSidecar(fs, s"$root/del_$id/keys", k.schema)
-    val scan = snap.upTo(id - 1)
-    scanVictimEntriesTo(spark, scan, spec, keyCol, id, s"$root/del_$id/ixdelta")
-    writeTokens(fs, scan, id)
-    val kc = fs.create(
-      new org.apache.hadoop.fs.Path(s"$root/del_$id/_KEYCOL"), true)
-    try kc.write(keyCol.getBytes("UTF-8")) finally kc.close()
+    val live = snap.checked.schema.fieldNames.filterNot(_.startsWith(DroppedPrefix))
+    require(live.contains(keyCol),
+      s"no column '$keyCol' in store data (${live.mkString(",")})")
   }
 
   /** the victim scan of tombstone `id` over `scan`, a snapshot of the
-    * units below it — shared by the first scan ([[writeTombstoneAt]],
+    * units below it — shared by the first scan ([[writeTombstoneUnits]],
     * the unit's main `ixdelta`) and [[rescanTombstoneIndex]] (a fresh
     * VERSIONED delta): index the then-live victims (in one task when
     * the key set bounding them reads as one split) and write the
@@ -1134,18 +1254,6 @@ object Store {
       new org.apache.hadoop.fs.Path(s"${scan.root}/del_$id/$name"))
     scan.segIds.foreach(s => token(s"_scope_$s"))
     scan.dels.foreach { case (t, _) => token(s"_delseen_$t") }
-  }
-
-  /** publish tombstone `id` by its `_COMMITTED` marker, then [[heal]]
-    * over a snapshot resolved after it (publish-then-check: see the
-    * concurrency contract)
-    */
-  private[core] def commitTombstone(spark: SparkSession, dir: String,
-                                    root: String, spec: IndexSpec,
-                                    id: Int): Unit = {
-    fsFor(spark, root)._1.create(
-      new org.apache.hadoop.fs.Path(s"$root/del_$id/_COMMITTED")).close()
-    heal(spark, resolveSnapshot(spark, dir), spec)
   }
 
   /** the one healer of tombstone index netting (see the concurrency
@@ -1344,8 +1452,8 @@ object Store {
   def deleteWhere(spark: SparkSession, dir: String, spec: IndexSpec,
                   keyCol: String, condition: Column): Int = {
     val snap = resolveSnapshot(spark, dir).checked
-    writeTombstone(spark, snap, spec, keyCol,
-      dataAsOf(spark, snap).where(condition).select(keyCol), commit = true)
+    deleteOn(spark, snap, spec, keyCol,
+      dataAsOf(spark, snap).where(condition).select(keyCol))
   }
 
   /** UPSERT (merge-by-key) — the CDC / re-curation path ("replace
@@ -1364,22 +1472,18 @@ object Store {
     *
     * CRASH-ATOMIC (r11 advice). The tombstone claims its id first,
     * then the segment claims a larger one, so the tombstone scopes
-    * over exactly the pre-existing segments. The two units' files
-    * are then written side by side — the tombstone (keys, victim
-    * `ixdelta`, `_KEYCOL`; no marker) beside the segment's data,
-    * entries and refs — and published in a fixed order: the
-    * segment's `_MANIFEST` only after the tombstone unit is fully
-    * written (its `_KEYCOL` exists), then the tombstone's
-    * `_COMMITTED` marker through [[commitTombstone]]. Each marker
-    * lands after the files it covers, so there are two crash states
-    * (unchanged by the overlap). A crash anywhere before the
-    * manifest leaves the store byte-for-byte UNCHANGED for readers
-    * (both units uncommitted and invisible; vacuum reclaims them),
-    * never the matched-keys-deleted-with-no-replacement state an
-    * eager commit allowed. A crash between the manifest and the
-    * tombstone's marker leaves BOTH copies visible (duplicates, no
-    * data loss); re-running the same upsert repairs it, because the
-    * new tombstone postdates and covers both copies.
+    * over exactly the pre-existing segments. Both units then go
+    * through one [[commit]]: step 1 writes the tombstone (keys, victim
+    * `ixdelta`, `_KEYCOL`) beside the segment's data, entries and
+    * refs; step 2 publishes the segment's `_MANIFEST`, then the
+    * tombstone's `_COMMITTED`. So there are two crash states. A crash
+    * anywhere before the manifest leaves the store byte-for-byte
+    * UNCHANGED for readers (both units unpublished and invisible;
+    * vacuum reclaims them), never the matched-keys-deleted-with-no-
+    * replacement state an eager commit allowed. A crash between the
+    * manifest and the tombstone's marker leaves BOTH copies visible
+    * (duplicates, no data loss); re-running the same upsert repairs
+    * it, because the new tombstone postdates and covers both copies.
     *
     * Like every write here: single writer; when the store carries
     * row-refs, `keyCol` must be the refs key column (delegated check).
@@ -1390,19 +1494,16 @@ object Store {
     rejectReservedNames(batch.schema, spec)
     // both halves validated before either id is claimed
     val snap = checkedForAppend(batch, dir)
-    val kt = validateDelete(snap, spec, keyCol)
+    validateDelete(snap, spec, keyCol)
     val (fs, _) = fsFor(spark, dir)
-    val root = snap.root
-    val delId = claimUnitId(fs, root)
-    val segId = claimUnitId(fs, root)
-    writeSegment(batch, dir, spec, root, segId, s"seg_$segId",
-      commitEmpty = false,
-      beside = writeTombstoneAt(spark, snap, spec, keyCol, kt,
-        batch.select(keyCol), delId))
-    // the marker's heal is the segment's post-publish check too (the
+    val delId = claimUnitId(fs, snap.root)
+    val segId = claimUnitId(fs, snap.root)
+    // the one heal is the segment's post-publish check too (the
     // upsert's own replacement segment has a larger id and is
     // correctly out of the tombstone's scope)
-    commitTombstone(spark, dir, root, spec, delId)
+    commit(spark, Commit(snap, spec,
+      Some(SegUnit(segId, batch, s"seg_$segId", commitEmpty = false)),
+      Some(DelUnit(delId, keyCol, batch.select(keyCol)))))
     segId
   }
 
@@ -1424,10 +1525,12 @@ object Store {
     Seq("seg_", "del_", "ren_", "_claim_").flatMap(unitIds(names, _))
       .foldLeft(-1)(math.max)
 
-  /** write rows + index as segment 0 (reference writeIndexedDf).
-    * Only the store-owned `data/` and index subdirs are cleared —
-    * never the whole target dir, which may be a path the caller also
-    * keeps unrelated files under (a recursive root delete here would
+  /** write rows + index as segment 0 (reference writeIndexedDf):
+    * steps 1 and 2 of a [[commit]] over an empty store, with the data
+    * directly under `data/`; a fresh store has nothing to heal. Only
+    * the store-owned `data/` and index subdirs are cleared — never the
+    * whole target dir, which may be a path the caller also keeps
+    * unrelated files under (a recursive root delete here would
     * silently destroy them).
     */
   def write(df: DataFrame, dir: String, spec: IndexSpec): Unit = {
@@ -1450,20 +1553,9 @@ object Store {
     // its manifest leaves an invisible ghost that have() re-provides,
     // never a segment that reads as the pre-manifest layout
     atomicCreate(fs, claimPath(s"$dir/index", 0))
-    df.write.mode(SaveMode.Overwrite).parquet(s"$dir/data")
-    // index the WRITTEN data, not the input plan: re-executing `df`
-    // for the index would recompute the whole upstream (2× cost) and,
-    // for a nondeterministic input (sample/rand/changing source),
-    // index a DIFFERENT row set than the one persisted. Read back
-    // with the writer's own schema: the files were just written FROM
-    // this frame, so declaring df.schema skips the one-task schema-
-    // inference job a schema-less read runs (r16; the write-side twin
-    // of the r15 read-layer fix — one fewer job per store write).
-    val persisted = spark.read.schema(df.schema).parquet(s"$dir/data")
-    writeSegmentIndex(spark, IndexedFrame(indexShaped(persisted), spec),
-      s"$dir/index", 0, oneTask = false)
-    val dataNames = dataFileNames(fs, s"$dir/data")
-    writeManifest(fs, s"$dir/index/seg_0", dataNames)
+    val c = Commit(UnitSnapshot.empty(dir), spec,
+      seg = Some(SegUnit(0, df, "", commitEmpty = true)))
+    publish(spark, c, writeUnits(spark, c))
   }
 
   /** a segment's index units, built from its persisted rows: the
@@ -1549,7 +1641,7 @@ object Store {
       IndexedFrame(dataAsOf(spark, snap), spec),
       mergedIndex(spark, snap),
       refsAsOf(spark, snap),
-      Some(pointReader(spark, snap)))
+      pointReader(spark, snap))
   }
 
   /** the driver-side point-read face for [[StoredFrame.fPoint]] /
@@ -1575,25 +1667,23 @@ object Store {
     // own id's rename era
     val unitDirs =
       segIds.map(id => id -> Seq(s"$root/seg_$id")).toMap ++ snap.delIxDirs
-    val freqGroupsNow: Seq[PointRead.FreqGroup] =
+    val freqGroups: Seq[PointRead.FreqGroup] =
       snap.renameEras(segIds ++ snap.dels.map(_._1)).map { e =>
         (e.ids.flatMap(unitDirs).map(new org.apache.hadoop.fs.Path(_)),
           e.rens)
       }
     // committed segments only, mirroring refsAsOf's scoping
-    val rowsGroupsNow: Seq[PointRead.RowsGroup] = snap.eras(snap.refsIds)
+    val rowsGroups: Seq[PointRead.RowsGroup] = snap.eras(snap.refsIds)
       .map { e =>
         (e.ids.sorted.map(id =>
           new org.apache.hadoop.fs.Path(s"$root/rows_$id")),
           e.rens, e.dels.map(_._1))
       }
-    val keyDirsNow = snap.dels.map { case (id, _) =>
+    val keyDirs = snap.dels.map { case (id, _) =>
       id -> new org.apache.hadoop.fs.Path(s"$root/del_$id/keys")
     }.toMap
     new PointRead.StorePoint(spark.sparkContext.hadoopConfiguration,
-      freqGroups = () => freqGroupsNow,
-      rowsGroups = () => rowsGroupsNow,
-      delKeyDirs = () => keyDirsNow)
+      freqGroups, rowsGroups, keyDirs)
   }
 
   /** Available snapshot ids of the live generation, ascending: each
@@ -1628,7 +1718,7 @@ object Store {
     require(snap.segIds.nonEmpty,
       s"no snapshot <= $upToSeg in $dir (available: ${snapshots(spark, dir)})")
     new StoredFrame(IndexedFrame(dataAsOf(spark, snap), spec),
-      mergedIndex(spark, snap), refsAsOf(spark, snap))
+      mergedIndex(spark, snap), refsAsOf(spark, snap), pointReader(spark, snap))
   }
 
   /** write-if-absent then open (haveIndexedDf). "Present" means a
@@ -1675,15 +1765,15 @@ object Store {
     * between batches (e.g. inside the same foreachBatch, every N
     * batches).
     *
-    * DELIVERY: at-least-once — the data append and the index-segment
-    * write are two separate commits. A crash between them leaves the
-    * crashed batch's data files ORPHANED but INVISIBLE (the
-    * manifest-scoped read plans only over committed segments' files;
-    * vacuum reclaims orphans), so redelivery re-appends the rows
-    * exactly once into a fresh segment — but a redelivery of a batch
-    * whose first attempt DID commit appends it twice. For true
-    * exactly-once under redelivery use [[appendBatch]], whose
-    * batchId-keyed segments make the re-append a no-op.
+    * DELIVERY: at-least-once — the segment is published by its
+    * `_MANIFEST` (step 2 of [[commit]]). A crash before it leaves the
+    * files step 1 wrote ORPHANED but INVISIBLE (the manifest-scoped
+    * read plans only over committed segments' files; vacuum reclaims
+    * orphans), so redelivery appends the rows exactly once into a
+    * fresh segment — but a redelivery of a batch whose first attempt
+    * DID publish appends it twice. For true exactly-once under
+    * redelivery use [[appendBatch]], whose batchId-keyed segments make
+    * the re-append a no-op.
     */
   def append(batch: DataFrame, dir: String, spec: IndexSpec): Unit = {
     val spark = batch.sparkSession
@@ -1692,9 +1782,16 @@ object Store {
     val snap = checkedForAppend(batch, dir)
     // shared counter with tombstones: the seg/del total order is what
     // scopes deletes against later appends (a re-appended key lives).
-    // CLAIMED atomically, so concurrent appenders get distinct ids.
-    appendSegment(batch, dir, spec, claimUnitId(fsFor(spark, dir)._1, snap.root),
-      snap.root)
+    // CLAIMED atomically, so concurrent appenders get distinct ids, and
+    // the batch's data files live under the claimed unit's own subdir
+    // (data/seg_<id>): concurrent appenders write disjoint paths, and
+    // a crashed attempt leaves an invisible orphan subdir. The heal
+    // after the manifest covers a tombstone with a larger id that
+    // scanned before this segment committed. An empty batch commits
+    // nothing.
+    val id = claimUnitId(fsFor(spark, dir)._1, snap.root)
+    commit(spark, Commit(snap, spec,
+      seg = Some(SegUnit(id, batch, s"seg_$id", commitEmpty = false))))
   }
 
   /** the live snapshot of `dir`, checked, once `batch` has passed
@@ -1717,75 +1814,6 @@ object Store {
     snap
   }
 
-  /** the post-claim half of [[append]] — everything that happens
-    * under an already-claimed unit id, once the batch passed
-    * [[checkedForAppend]] (separated so the conflict interleavings are
-    * deterministically testable): the segment write, then, once its
-    * `_MANIFEST` has landed, the post-publish [[heal]] over a fresh
-    * snapshot — a tombstone with a larger id may have scanned before
-    * this segment committed (no racing delete: nothing to heal).
-    */
-  private[core] def appendSegment(batch: DataFrame, dir: String,
-                                  spec: IndexSpec, segId: Int,
-                                  root: String): Unit = {
-    // the batch's data files live under the CLAIMED unit's own subdir
-    // (data/seg_<id>) — concurrent appenders write disjoint paths, so
-    // no listing diff is needed to attribute files to writers (the
-    // r11 diff read whatever appeared between two listings, which a
-    // concurrent writer could pollute), and a crashed attempt leaves
-    // an orphan subdir that is invisible (no manifest) and reclaimed
-    // by vacuum. An empty batch commits nothing.
-    if (writeSegment(batch, dir, spec, root, segId, s"seg_$segId",
-        commitEmpty = false, ()))
-      heal(batch.sparkSession, resolveSnapshot(batch.sparkSession, dir), spec)
-  }
-
-  /** the segment write shared by [[appendSegment]] and [[appendBatch]]:
-    * `batch` is written to `data/<sub>` beside `beside`, the segment's
-    * index units ([[writeSegmentIndex]]) are built from a READ-BACK of
-    * the written files, and the `_MANIFEST` commit marker lands last,
-    * after every write of the pair has finished; the caller runs the
-    * post-publish [[heal]]. The read-back declares the
-    * batch's own schema, which skips the inference job (see write()):
-    * re-executing `batch` for the index would recompute the upstream
-    * (2× cost) and, for a nondeterministic batch (sample/rand/changing
-    * source), index a DIFFERENT row set than the one the data write
-    * just persisted. The index is built at the parallelism the
-    * read-back scans at ([[indexShaped]]): a small batch that reads
-    * back as one split plans each index unit as one stage with no
-    * exchange, while a batch that scans as several splits (large or
-    * many files) keeps the aggregate and range exchanges.
-    * A batch that wrote no data file commits only with `commitEmpty`,
-    * its empty index units written as one task each so their parquet
-    * still gets a readable footer. Returns whether the segment
-    * committed.
-    */
-  private def writeSegment(batch: DataFrame, dir: String, spec: IndexSpec,
-                           root: String, segId: Int, sub: String,
-                           commitEmpty: Boolean, beside: => Unit): Boolean = {
-    val spark = batch.sparkSession
-    val (fs, _) = fsFor(spark, dir)
-    val (_, names) = inParallel(spark)(beside, {
-      batch.write.mode(SaveMode.Overwrite).parquet(s"$dir/data/$sub")
-      val names = dataFileNames(fs, s"$dir/data/$sub")
-      if (names.nonEmpty || commitEmpty) {
-        val persisted =
-          if (names.nonEmpty)
-            indexShaped(
-              spark.read.schema(batch.schema).parquet(s"$dir/data/$sub"))
-          else spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema)
-        writeSegmentIndex(spark, IndexedFrame(persisted, spec), root, segId,
-          oneTask = names.isEmpty)
-      }
-      names
-    })
-    val commit = names.nonEmpty || commitEmpty
-    if (commit)
-      writeManifest(fs, s"$root/seg_$segId", names.map(n => s"$sub/$n"))
-    commit
-  }
-
   /** IDEMPOTENT batchId-keyed append — the exactly-once face of
     * [[append]] for streaming ingest (the gap append's DELIVERY note
     * names): the batch's data files live under their OWN subdir
@@ -1793,13 +1821,12 @@ object Store {
     * leaves nothing a retry cannot cleanly replace) and the segment
     * id IS the batchId, so redelivery of a batch the store already
     * committed is a NO-OP — the store is untouched, byte for byte.
-    * The commit point is the segment's `_MANIFEST`, written LAST:
-    * until it exists the batch is invisible to every reader (the
-    * manifest-scoped read), so the crash windows are
-    *   - before/during the data write: retry Overwrites the subdir;
-    *   - between data and index: no manifest, data invisible; retry
-    *     rewrites both;
-    *   - after the manifest: retry is the no-op.
+    * The commit point is the segment's `_MANIFEST`, published by step
+    * 2 of [[commit]]: until it exists the batch is invisible to every
+    * reader (the manifest-scoped read), so the crash windows are
+    *   - within step 1 (data, then index units): no manifest, data
+    *     invisible; the retry Overwrites both;
+    *   - after the manifest: the retry is the no-op.
     * Net: at-least-once redelivery × this layout = exactly-once
     * visibility. Returns true iff this call committed the batch.
     *
@@ -1817,23 +1844,8 @@ object Store {
   def appendBatch(batch: DataFrame, dir: String, spec: IndexSpec,
                   batchId: Long): Boolean = {
     val spark = batch.sparkSession
-    val committed = appendBatchBeside(batch,
-      resolveSnapshot(spark, dir).checked, spec, batchId, ())
-    // the post-publish check, as in append
-    if (committed) heal(spark, resolveSnapshot(spark, dir), spec)
-    committed
-  }
-
-  /** [[appendBatch]] over `snap` (checked), with `beside`
-    * ([[upsertBatch]]'s tombstone) written beside the segment's data
-    * and index units, past every gate and validation; the `_MANIFEST`
-    * still lands last, after both. The caller heals.
-    */
-  private def appendBatchBeside(batch: DataFrame, snap: UnitSnapshot,
-                                spec: IndexSpec, batchId: Long,
-                                beside: => Unit): Boolean = {
-    import snap.{dir, root}
-    val spark = batch.sparkSession
+    val snap = resolveSnapshot(spark, dir).checked
+    import snap.root
     rejectReservedNames(batch.schema, spec)
     require(batchId >= 0 && batchId <= Int.MaxValue.toLong,
       s"batchId out of segment-id range: $batchId")
@@ -1861,9 +1873,8 @@ object Store {
     // writer's unit, so a crashed attempt's bare segment dir reads as
     // an invisible ghost, never as a pre-manifest segment
     atomicCreate(fs, claimPath(root, segId))
-    writeSegment(batch, dir, spec, root, segId, s"batch_$segId",
-      commitEmpty = true, beside)
-    true
+    commit(spark, Commit(snap, spec,
+      seg = Some(SegUnit(segId, batch, s"batch_$segId", commitEmpty = true))))
   }
 
   /** STREAMING UPSERT — the exactly-once CDC face (r13, the r12
@@ -1873,22 +1884,22 @@ object Store {
     * unit ids key on the batchId — tombstone at `2*batchId`, segment
     * at `2*batchId + 1` — so at-least-once redelivery composes to
     * exactly-once visibility, the [[appendBatch]] contract extended
-    * to the two-unit commit:
+    * to the two-unit [[commit]]:
     *   - before anything persisted: redelivery re-runs in full;
-    *   - before the segment's manifest (the tombstone and the segment
-    *     are written side by side, the manifest only after the
-    *     tombstone's `_KEYCOL`): redelivery Overwrites the same unit
-    *     dirs — byte-idempotent;
+    *   - within step 1 (the tombstone and the segment written side by
+    *     side, before the segment's manifest): redelivery Overwrites
+    *     the same unit dirs — byte-idempotent;
     *   - after the segment's manifest, before the tombstone's marker
     *     (the [[upsert]] duplicate window): redelivery FINISHES the
-    *     tombstone commit instead of re-appending — the one window
-    *     manual upsert retries cannot repair without re-running;
+    *     commit ([[finish]]: the tombstone's marker, then the heal)
+    *     instead of re-appending — the one window manual upsert
+    *     retries cannot repair without re-running;
     *   - fully committed (or folded below `_HIGHWATER`): no-op.
     * The interleaved id layout preserves the scoping invariant a
     * CDC stream needs: batch N+1's tombstone (2N+2) postdates batch
     * N's segment (2N+1), so a key re-upserted every batch always
-    * nets to exactly its latest copy. The tombstone's marker is
-    * followed by the post-publish [[heal]], like every delete's.
+    * nets to exactly its latest copy. The commit's one heal follows
+    * its last publish, as for every commit.
     *
     * Usable directly as the sink:
     * `.foreachBatch((b, id) => Store.upsertBatch(b, dir, spec, "k", id))`
@@ -1936,12 +1947,16 @@ object Store {
     val delCommitted = fs.exists(new org.apache.hadoop.fs.Path(
       s"$root/del_$delId/_COMMITTED"))
     if (segCommitted && (delCommitted || !delStarted)) return false
-    if (segCommitted && delStarted && !delCommitted) {
-      // the upsert duplicate window: the replacement segment landed
-      // but the tombstone's marker did not — finish the commit
-      commitTombstone(spark, dir, root, spec, delId)
-      return true
-    }
+    // a tombstone only when prior segments exist (the first batch on an
+    // empty store has nothing to replace)
+    val hasPrior = snap.segIds.exists(_ < delId)
+    val c = Commit(snap, spec,
+      Some(SegUnit(segId, batch, s"batch_$segId", commitEmpty = true)),
+      if (hasPrior) Some(DelUnit(delId, keyCol, batch.select(keyCol))) else None)
+    // the upsert duplicate window: the replacement segment landed but
+    // the tombstone's marker did not — finish the commit (a started
+    // tombstone means a prior segment existed)
+    if (segCommitted) return finish(spark, c, manifest = None)
     // ownership: no FOREIGN committed unit at or above this batch's
     // ids (later batches of this stream sit strictly above segId and
     // are handled by the gates; an append()'s max+1 unit or a manual
@@ -1960,12 +1975,9 @@ object Store {
     require(!snap.rens.exists(_._1 >= delId),
       s"a rename at id >= $delId exists — it would wrongly remap this " +
         s"later batch's columns; compact first")
-    // tombstone only when prior segments exist (the first batch on an
-    // empty store has nothing to replace — and writeTombstone's
-    // victim scan requires a manifest-carrying store)
-    val hasPrior = snap.segIds.exists(_ < delId)
-    // validated before any id is claimed, as in upsert
-    val kt = if (hasPrior) Some(validateDelete(snap, spec, keyCol)) else None
+    // both halves validated before any id is claimed, as in upsert
+    validateAppendSchema(snap.schema, batch.schema)
+    if (hasPrior) validateDelete(snap, spec, keyCol)
     // claim both ids (idempotent re-creates after a crash) and stamp
     // stream ownership FIRST — everything later (tombstone subdirs,
     // segment manifest) postdates the marker, so committed-without-
@@ -1973,18 +1985,7 @@ object Store {
     atomicCreate(fs, new org.apache.hadoop.fs.Path(s"$root/del_$delId/_STREAM"))
     atomicCreate(fs, claimPath(root, delId))
     atomicCreate(fs, claimPath(root, segId))
-    // the replacement segment rides appendBatch's own idempotent
-    // commit protocol at the batch-keyed segment id, with the
-    // tombstone written beside it: the segment's manifest lands only
-    // after the tombstone's _KEYCOL, which keeps the redelivery gate's
-    // "_KEYCOL exists => tombstone fully written" true (as in upsert)
-    appendBatchBeside(batch, snap, spec, segId.toLong,
-      kt.foreach(writeTombstoneAt(spark, snap, spec, keyCol, _,
-        batch.select(keyCol), delId)))
-    // one post-publish heal, after the last publish
-    if (hasPrior) commitTombstone(spark, dir, root, spec, delId)
-    else heal(spark, resolveSnapshot(spark, dir), spec)
-    true
+    commit(spark, c)
   }
 
   /** the generation's committed-batch HIGH-WATER mark: every unit id
@@ -2516,8 +2517,9 @@ final case class BoolPoint(n: Long, fs: Seq[Long], and: Long, or: Long) {
   * the store has them, and the driver-side point face.
   *
   * The three plan faces are passed BY NAME and built on their first
-  * access: [[Store.open]] hands over builders bound to its open-time
-  * unit snapshot, so a handle that only makes point reads plans no
+  * access: [[Store.open]] and [[Store.openAt]] hand over builders bound
+  * to the handle's unit snapshot, which the point face reads too, so a
+  * handle that only makes point reads plans no
   * DataFrame, and a face first used after later commits still serves
   * the open-time units (see the unit-snapshot notes in [[Store]]). A
   * face whose build throws is built again on its next access. A plain class, not a case class: there is no
@@ -2526,8 +2528,8 @@ final case class BoolPoint(n: Long, fs: Seq[Long], and: Long, or: Long) {
   */
 final class StoredFrame(frameOf: => IndexedFrame,
                         persistedIndexOf: => DataFrame,
-                        rowRefsOf: => Option[DataFrame] = None,
-                        val point: Option[PointRead.StorePoint] = None) {
+                        rowRefsOf: => Option[DataFrame],
+                        val point: PointRead.StorePoint) {
   lazy val frame: IndexedFrame = frameOf
   lazy val persistedIndex: DataFrame = persistedIndexOf
   lazy val rowRefs: Option[DataFrame] = rowRefsOf
@@ -2559,29 +2561,21 @@ final class StoredFrame(frameOf: => IndexedFrame,
 
   /** INTERACTIVE single-point frequency: the total f for one
     * (field,value), served by the driver-side footer-pruned parquet
-    * read when the handle has a point face (see [[PointRead]]; an
-    * [[Store.openAt]] handle has none) — no Spark
-    * job, so the per-op floor is page I/O, not scheduler round-trip.
-    * Falls back to the plan path (identical result, tombstones and
-    * renames applied) otherwise. The BATCH spelling stays [[f]] /
-    * a semi-join on the persisted index — Spark amortizes hundreds
-    * of point ops far better than a driver loop would.
+    * read (see [[PointRead]]; tombstones and renames applied, as [[f]]
+    * applies them) — no Spark job, so the per-op floor is page I/O,
+    * not scheduler round-trip. The BATCH spelling stays [[f]] / a
+    * semi-join on the persisted index — Spark amortizes hundreds of
+    * point ops far better than a driver loop would.
     */
-  def fPoint(field: String, value: String): Long =
-    point.map(_.freq(field, value)).getOrElse {
-      val rows = f(field, value).collect()
-      rows.foldLeft(0L)((a, r) => a + (if (r.isNullAt(0)) 0L else r.getLong(0)))
-    }
+  def fPoint(field: String, value: String): Long = point.freq(field, value)
 
   /** INTERACTIVE single-point row-refs membership: all row keys of
-    * one (field,value) entry, driver-side with a point face (the analog
-    * of opening one warm bitmap and reading its set bits), plan-path
-    * fallback otherwise. Requires [[IndexSpec.withRowRefs]].
+    * one (field,value) entry, driver-side (the analog of opening one
+    * warm bitmap and reading its set bits). Requires
+    * [[IndexSpec.withRowRefs]].
     */
   def rowsOfPoint(field: String, value: String): Seq[Any] =
-    point.map(_.rows(field, value)).getOrElse {
-      rowsOf(field, value).collect().toSeq.map(_.get(0))
-    }
+    point.rows(field, value)
 
   /** INTERACTIVE point CO-OCCURRENCE rows (r13 — the reference's
     * second-most-used interactive op, `LBits.fAnd` over two opened
@@ -2624,7 +2618,7 @@ final class StoredFrame(frameOf: => IndexedFrame,
     */
   def fAndPoint(f1: String, v1: String, f2: String, v2: String,
                 maxF: Long = pairPointMaxF): Long =
-    point.flatMap(_.andCount(f1, v1, f2, v2, maxF))
+    point.andCount(f1, v1, f2, v2, maxF)
       .getOrElse(rowsOf(f1, v1).distinct()
         .join(rowsOf(f2, v2).distinct(), Seq("row_key")).count())
 
@@ -2640,7 +2634,7 @@ final class StoredFrame(frameOf: => IndexedFrame,
   def boolCountsPoint(f1: String, v1: String, f2: String, v2: String,
                       maxF: Long = pairPointMaxF): (Long, Long, Long, Long) = {
     val (fa, fb, and) =
-      point.flatMap(_.multiStats(Seq((f1, v1), (f2, v2)), maxF))
+      point.multiStats(Seq((f1, v1), (f2, v2)), maxF)
         .map { case (fs, and, _) => (fs(0), fs(1), and) }.getOrElse {
         val a = fPoint(f1, v1)
         val b = fPoint(f2, v2)
@@ -2663,8 +2657,8 @@ final class StoredFrame(frameOf: => IndexedFrame,
     * [[nPoint]] field scan (exact for an identity-indexed never-null
     * `nField`, defaulting to the first term's field — the
     * [[coStatsPoint]] convention), so `none`/`notAll` are one
-    * subtraction away. Transparent plan fallback (no point face,
-    * gated hot entry) computes identical counts from index-only refs
+    * subtraction away. Transparent plan fallback (a gated hot entry,
+    * or no term) computes identical counts from index-only refs
     * joins — never the base table.
     */
   def boolPoint(terms: Seq[(String, String)],
@@ -2672,9 +2666,8 @@ final class StoredFrame(frameOf: => IndexedFrame,
                 nField: Option[String] = None): BoolPoint = {
     val nf = nField.orElse(terms.headOption.map(_._1))
     val fast = for {
-      p <- point
-      s <- p.multiStats(terms, maxF)
-      n <- nf.flatMap(nPoint)
+      s <- point.multiStats(terms, maxF)
+      n <- nf.map(nPoint)
     } yield BoolPoint(n, s._1, s._2, s._3)
     fast.getOrElse {
       // plan fallback: per-term f from the merged index, AND from
@@ -2687,7 +2680,7 @@ final class StoredFrame(frameOf: => IndexedFrame,
       val or =
         if (sides.isEmpty) 0L
         else sides.reduce(_.unionByName(_)).distinct().count()
-      val n = nf.flatMap(nPoint).getOrElse(frame.df.count())
+      val n = nf.map(nPoint).getOrElse(frame.df.count())
       BoolPoint(n, fs, and, or)
     }
   }
@@ -2697,50 +2690,29 @@ final class StoredFrame(frameOf: => IndexedFrame,
     * the reference READS the set bits): the row keys matching ALL
     * `terms`, globally key-ascending, from one simultaneous k-stream
     * walk ([[PointRead.StorePoint.multiRows]] — memory is the answer
-    * plus victim sets, like [[rowsOfAndPoint]]). Plan fallback: the
-    * k-way index-only refs join, deduped per side (same degradation
-    * contract as the pair ops).
+    * plus victim sets, like [[rowsOfAndPoint]]).
     */
   def rowsOfAllPoint(terms: Seq[(String, String)]): Seq[Any] =
-    point.map(_.multiRows(terms, intersect = true)).getOrElse {
-      import org.apache.spark.sql.functions.col
-      if (terms.isEmpty) Seq.empty
-      else terms.map { case (f, v) => rowsOf(f, v).distinct() }
-        .reduce(_.join(_, Seq("row_key")))
-        .orderBy(col("row_key")).collect().toSeq.map(_.get(0))
-    }
+    point.multiRows(terms, intersect = true)
 
   /** K-ENTRY row ENUMERATION, OR: the row keys matching ANY term —
     * the union of k sorted-run sets is itself one de-duplicated
-    * k·m-run merge, so the fast path never holds a side either.
-    * Plan fallback: the distinct union of the index-only refs reads.
+    * k·m-run merge, so it never holds a side either.
     */
   def rowsOfAnyPoint(terms: Seq[(String, String)]): Seq[Any] =
-    point.map(_.multiRows(terms, intersect = false)).getOrElse {
-      import org.apache.spark.sql.functions.col
-      if (terms.isEmpty) Seq.empty
-      else terms.map { case (f, v) => rowsOf(f, v) }
-        .reduce(_.unionByName(_)).distinct()
-        .orderBy(col("row_key")).collect().toSeq.map(_.get(0))
-    }
+    point.multiRows(terms, intersect = false)
 
   /** INTERACTIVE prefix NAVIGATION (r13 — the reference's index-nav
     * loop: enumerate a field's values under a prefix with their
     * frequencies, `index_prefix`'s single-op face): served by one
     * driver-side byte-range scan per era (no Spark job), tombstone
-    * netting and rename mapping applied like [[fPoint]]; plan-path
-    * fallback otherwise. Empty prefix lists the whole field. The
-    * BULK spelling stays the `persistedIndex` filter — hundreds of
-    * prefixes amortize better through one plan.
+    * netting and rename mapping applied like [[fPoint]]. Empty
+    * prefix lists the whole field. The BULK spelling stays the
+    * `persistedIndex` filter — hundreds of prefixes amortize better
+    * through one plan.
     */
   def prefixPoint(field: String, prefix: String): Seq[(String, Long)] =
-    point.map(_.prefix(field, prefix)).getOrElse {
-      import org.apache.spark.sql.functions.{col => c}
-      persistedIndex
-        .where(c("field") === field && c("value").startsWith(prefix))
-        .select("value", "f").collect()
-        .map(r => r.getString(0) -> r.getLong(1)).sortBy(_._1).toSeq
-    }
+    point.prefix(field, prefix)
 
   /** INTERACTIVE numeric-range NAVIGATION (r15 — the numeric sibling
     * of [[prefixPoint]], closing the reference's sorted typed entry
@@ -2749,24 +2721,13 @@ final class StoredFrame(frameOf: => IndexedFrame,
     * whose value parses into [lo, hi], ordered by NATIVE numeric
     * value. Served by the same per-era byte-range field scan as
     * [[prefixPoint]] (bounded by entry cardinality — no Spark job),
-    * tombstone netting and rename mapping riding the same sum;
-    * transparent plan fallback computes the identical rows from the
-    * merged index with a cast-to-double filter. The BULK spelling
-    * stays the `persistedIndex` filter — hundreds of ranges amortize
-    * better through one plan.
+    * tombstone netting and rename mapping riding the same sum. The
+    * BULK spelling stays the `persistedIndex` filter — hundreds of
+    * ranges amortize better through one plan.
     */
   def rangePoint(field: String, lo: Double,
                  hi: Double): Seq[(String, Long)] =
-    point.map(_.range(field, lo, hi)).getOrElse {
-      import org.apache.spark.sql.functions.{col => c}
-      persistedIndex
-        .where(c("field") === field &&
-          c("value").cast("double").between(lo, hi))
-        .select("value", "f").collect()
-        .map(r => r.getString(0) -> r.getLong(1))
-        .sortBy { case (v, _) => (java.lang.Double.parseDouble(v), v) }
-        .toSeq
-    }
+    point.range(field, lo, hi)
 
   /** net frame ROW COUNT served driver-side from the freq index:
     * Σ net f over one field's entries (one [[prefixPoint]]-style
@@ -2774,14 +2735,11 @@ final class StoredFrame(frameOf: => IndexedFrame,
     * exact when `field` is identity-indexed and never null, because
     * each live row then contributes exactly one entry occurrence.
     * Cached per field for the handle's lifetime (the warm-mmap
-    * model). None when the handle has no point face — callers fall
-    * back to the plan count.
+    * model).
     */
-  private val nPointCache =
-    scala.collection.mutable.HashMap.empty[String, Option[Long]]
-  def nPoint(field: String): Option[Long] =
-    nPointCache.getOrElseUpdate(field,
-      point.map(_.prefix(field, "").map(_._2).sum))
+  private val nPointCache = scala.collection.mutable.HashMap.empty[String, Long]
+  def nPoint(field: String): Long =
+    nPointCache.getOrElseUpdate(field, point.prefix(field, "").map(_._2).sum)
 
   /** INTERACTIVE CoStats (r14 — closes the reference's hot cofreq
     * loop, CoStats.scala:7-35 + DfTest.scala:236-253: open two
@@ -2791,20 +2749,14 @@ final class StoredFrame(frameOf: => IndexedFrame,
     * rides f1's field scan ([[nPoint]], cached after the first
     * call; exact for an identity-indexed never-null field) and
     * fA/fB/fAB come from one [[PointRead.StorePoint.multiStats]]
-    * streaming walk. Transparent plan fallback (no point face,
-    * gated hot entry) computes the identical counts with one
-    * aggregation pass.
+    * streaming walk. Transparent plan fallback (a gated hot entry)
+    * computes the identical counts with one aggregation pass.
     */
   def coStatsPoint(f1: String, v1: String, f2: String, v2: String,
-                   maxF: Long = pairPointMaxF): CoStats = {
-    val fast = for {
-      p <- point
-      s <- p.multiStats(Seq((f1, v1), (f2, v2)), maxF)
-      n <- nPoint(f1)
-    } yield CoStats(n, s._1(0), s._1(1), s._2)
-    fast.getOrElse(
-      frame.coStats(frame.predicate(f1, v1), frame.predicate(f2, v2)))
-  }
+                   maxF: Long = pairPointMaxF): CoStats =
+    point.multiStats(Seq((f1, v1), (f2, v2)), maxF)
+      .map(s => CoStats(nPoint(f1), s._1(0), s._1(1), s._2))
+      .getOrElse(frame.coStats(frame.predicate(f1, v1), frame.predicate(f2, v2)))
 
   /** INTERACTIVE single-query knn (r14 — the reference's `knn(k, v)`
     * posture, ml/Knn.scala:71-76: ONE query row served from the held
@@ -2817,8 +2769,8 @@ final class StoredFrame(frameOf: => IndexedFrame,
     * plan computes, so the top-k (ties by key) pins to the plan row.
     *
     * The accumulator is O(n) driver memory — the reference's own
-    * single-node posture — so the op self-gates: None when the handle
-    * has no point face, when n (from [[nPoint]] on `weights`' first
+    * single-node posture — so the op self-gates: None when there is
+    * no weight, when n (from [[nPoint]] on `weights`' first
     * field) exceeds `maxRows`, or when some rows carry NO weighted
     * feature (their keys are unenumerable driver-side but could tie
     * into the top-k at exactly `baseline`). Callers fall back to
@@ -2830,10 +2782,10 @@ final class StoredFrame(frameOf: => IndexedFrame,
                maxRows: Long = pairPointMaxF): Option[Seq[(Any, Double)]] =
     // k <= 0 mirrors the plan path's limit(0): empty, never a heap
     // probe on an empty PriorityQueue (r14 advice #2)
-    if (k <= 0) point.map(_ => Seq.empty)
-    else point.flatMap { p =>
+    if (k <= 0) Some(Seq.empty)
+    else {
       val nFieldOpt = weights.headOption.map(_._1)
-      val n = nFieldOpt.flatMap(nPoint).getOrElse(0L)
+      val n = nFieldOpt.map(nPoint).getOrElse(0L)
       if (nFieldOpt.isEmpty || n > maxRows) None
       else {
         val baseline = weights.collect {
@@ -2845,7 +2797,7 @@ final class StoredFrame(frameOf: => IndexedFrame,
           math.min(n * 2, 1L << 26).toInt)
         weights.foreach { case (f, v, w1, w2) =>
           val delta = if (queryKVs.get(f).contains(v)) -w2 else w1
-          p.rowStreams(f, v).foreach(_.foreach { key =>
+          point.rowStreams(f, v).foreach(_.foreach { key =>
             acc.merge(key, delta, (a, b) => a + b)
           })
         }

@@ -9,79 +9,35 @@ import org.apache.spark.sql.functions._
   * candidate self-join, bounding the join's per-key fan-out (a key
   * shared by c rows creates c² candidate pairs).
   *
-  * Three spellings of the same row-set, selected by config:
-  *
-  * - EXCHANGE (default): repartition the stream on the cap keys —
-  *   the exact hashpartitioning the downstream self-join needs —
-  *   then derive BOTH the over-cap key set (post-shuffle hash
-  *   aggregation: no sort, a mega-hot partition streams through one
-  *   hash-table entry) and the anti-join probe side from that ONE
-  *   exchange (ReusedExchange / AQE stage reuse). One evaluation of
-  *   the input, one shuffle of the stream, no window sort: this
-  *   combines the window spelling's plan-sharing with the grouped
-  *   spelling's straggler-safety — the hot key's partition is only
-  *   ever STREAMED (hash-count, then filter), never externally
-  *   sorted. (Measured: the grouped default's second evaluation of a
-  *   shingle stream cost ~2× on ngram_jaccard; the window's sort of
-  *   a planted 2M-row hot key cost a 22 s straggler task. This
-  *   spelling pays neither.)
-  *
-  * - GROUPED (`spark.graft.skew.capImpl=grouped`): per-key counts
-  *   via map-side-combined groupBy on the UNSHUFFLED input, over-cap
-  *   keys become a broadcast LEFT ANTI join. Evaluates the input
-  *   twice but never shuffles the full stream — the right trade when
-  *   the downstream does NOT need the stream partitioned by the cap
-  *   key (no caller here is in that position today) or when the
-  *   input evaluation is cheaper than a stream shuffle.
-  *
-  * - WINDOW (`spark.graft.skew.capImpl=window`, legacy
-  *   `spark.graft.skew.windowCap=true`): a count window over
-  *   partitionBy(keys). Single evaluation and single exchange like
-  *   the default, but WindowExec SORTS each partition — the hot
-  *   key's entire stream external-sorts in one task before being
-  *   dropped. Kept as the reference spelling the others are
-  *   spec-checked against.
-  *
-  * All spellings keep/drop IDENTICAL row sets (spec-checked), so
-  * flipping the conf can never change operator results, only the
-  * physical plan.
+  * One spelling: repartition the stream on the cap keys — the exact
+  * hashpartitioning the downstream self-join needs — then derive BOTH
+  * the over-cap key set (post-shuffle hash aggregation: no sort, a
+  * mega-hot partition streams through one hash-table entry) and the
+  * anti-join probe side from that ONE exchange (ReusedExchange / AQE
+  * stage reuse). One evaluation of the input, one shuffle of the
+  * stream, no window sort: the hot key's partition is only ever
+  * STREAMED (hash-count, then filter), never externally sorted.
+  * (Measured: a grouped spelling's second evaluation of a shingle
+  * stream cost ~2× on ngram_jaccard; the window spelling's sort of a
+  * planted 2M-row hot key cost a 22 s straggler task. This spelling
+  * pays neither.) The window spelling ([[dropHotKeysWindow]]) stays
+  * as the reference SkewSpec checks it against: both keep/drop
+  * IDENTICAL row sets.
   */
 object Skew {
-
-  /** "exchange" (default) | "grouped" | "window" */
-  val CapImplConf = "spark.graft.skew.capImpl"
-
-  /** legacy boolean: "true" selects the window spelling */
-  val WindowCapConf = "spark.graft.skew.windowCap"
 
   /** drop all rows of keys occurring more than `maxFreq` times.
     *
     * NULL keys are dropped up front, for two reasons: (a) a null key
     * cannot form a candidate pair in any downstream equi-join, so the
-    * rows are dead weight; (b) the spellings would otherwise DIVERGE
-    * on them — a window partitions nulls into one countable group
-    * while an anti-join never matches null keys — and the identical-
-    * row-set contract is the whole point of the conf.
+    * rows are dead weight; (b) the reference window spelling would
+    * otherwise DIVERGE on them — a window partitions nulls into one
+    * countable group while an anti-join never matches null keys.
     */
   private[graft] def dropHotKeys(df: DataFrame, keys: Seq[String],
                                  maxFreq: Long): DataFrame = {
-    val conf = df.sparkSession.conf
-    val impl = conf.getOption(CapImplConf).getOrElse(
-      if (conf.getOption(WindowCapConf).exists(_.toBoolean)) "window"
-      else "exchange")
-    val nonNull = df.where(keys.map(col(_).isNotNull).reduce(_ && _))
-    impl match {
-      case "exchange" => dropHotKeysExchange(nonNull, keys, maxFreq)
-      case "grouped"  => dropHotKeysGrouped(nonNull, keys, maxFreq)
-      case "window"   => dropHotKeysWindow(nonNull, keys, maxFreq)
-      case other => throw new IllegalArgumentException(
-        s"$CapImplConf must be exchange|grouped|window, got '$other'")
-    }
-  }
-
-  private[graft] def dropHotKeysExchange(df: DataFrame, keys: Seq[String],
-                                         maxFreq: Long): DataFrame = {
-    val parted = df.repartition(keys.map(col): _*)
+    val parted = df.where(keys.map(col(_).isNotNull).reduce(_ && _))
+      .repartition(keys.map(col): _*)
     val hot = parted.groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("kn"))
       .where(col("kn") > maxFreq)
@@ -89,15 +45,8 @@ object Skew {
     parted.join(broadcast(hot), keys, "left_anti")
   }
 
-  private[graft] def dropHotKeysGrouped(df: DataFrame, keys: Seq[String],
-                                        maxFreq: Long): DataFrame = {
-    val hot = df.groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("kn"))
-      .where(col("kn") > maxFreq)
-      .select(keys.map(col): _*)
-    df.join(broadcast(hot), keys, "left_anti")
-  }
-
+  /** the reference spelling of [[dropHotKeys]] over non-null keys: a
+    * count window over partitionBy(keys), which SORTS each partition */
   private[graft] def dropHotKeysWindow(df: DataFrame, keys: Seq[String],
                                        maxFreq: Long): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
@@ -117,7 +66,7 @@ object Skew {
     * contract would otherwise silently diverge. Null keys are dropped
     * like dropHotKeys (they can't form pairs downstream).
     *
-    * Same exchange shape as the default cap spelling: one shuffle of
+    * Same exchange shape as [[dropHotKeys]]: one shuffle of
     * the stream on the cap keys (reused by any downstream equi-join
     * on them), over-cap keys derived post-shuffle and broadcast back;
     * the guard rides in a filter (a pruned projection could be

@@ -261,7 +261,7 @@ class CurationSpec extends SparkSpec {
       (1 to 20).map(i => (i.toLong, "aa bb aa bb aa bb", true)) ++
       (21 to 40).map(i => (i.toLong, "cc dd cc dd cc dd", false))
     ).toDF("doc_id", "text", "is_t")
-    val dir = java.nio.file.Files.createTempDirectory("dsirw").toString
+    val dir = tempDir("dsirw")
     Curation.dsirWeights(docs, col("text"), col("doc_id"), col("is_t"))
       .write.parquet(s"$dir/w")
     val w = spark.read.parquet(s"$dir/w")

@@ -67,7 +67,7 @@ class DedupSpec extends SparkSpec {
     val corpus = spark.read.parquet(s"$sfDir/documents.parquet")
     val batch = corpus.where(col("doc_id") % 5 === 3)
     val rest = corpus.where(col("doc_id") % 5 =!= 3)
-    val dir = java.nio.file.Files.createTempDirectory("graft_bands").toString
+    val dir = tempDir("graft_bands")
     Dedup.bandedSignatures(rest, col("text"), col("doc_id"))
       .write.mode("overwrite").parquet(dir)
     val viaStore = Dedup.minhashLshCrossBands(

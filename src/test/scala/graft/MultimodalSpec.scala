@@ -19,7 +19,7 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("metadata projection prunes the payload column from the scan") {
-    val dir = java.nio.file.Files.createTempDirectory("mm").toString
+    val dir = tempDir("mm")
     Multimodal.asPayload(docs, col("text"), col("doc_id"))
       .write.mode("overwrite").parquet(dir)
     val meta = Multimodal.metaOnly(spark.read.parquet(dir))

@@ -27,7 +27,7 @@ class PointReadSpec extends SparkSpec {
     st.f(f, v).collect().map(_.getLong(0)).sum
 
   test("point reads equal the plan path on a written store") {
-    val dir = java.nio.file.Files.createTempDirectory("pt").toString
+    val dir = tempDir("pt")
     Store.write(mkDf(0 until 500), s"$dir/s", spec)
     val st = Store.open(spark, s"$dir/s", spec)
     for (v <- Seq("c0", "c3", "c6")) {
@@ -42,7 +42,7 @@ class PointReadSpec extends SparkSpec {
   }
 
   test("multi-segment store: point read unions segments like the plan") {
-    val dir = java.nio.file.Files.createTempDirectory("pt").toString
+    val dir = tempDir("pt")
     Store.write(mkDf(0 until 200), s"$dir/s", spec)
     Store.append(mkDf(200 until 350), s"$dir/s", spec)
     Store.append(mkDf(350 until 420), s"$dir/s", spec)
@@ -55,7 +55,7 @@ class PointReadSpec extends SparkSpec {
   }
 
   test("no Spark job runs on the fast path") {
-    val dir = java.nio.file.Files.createTempDirectory("pt").toString
+    val dir = tempDir("pt")
     Store.write(mkDf(0 until 300), s"$dir/s", spec)
     val st = Store.open(spark, s"$dir/s", spec)
     st.rowsOfPoint("cat", "c2") // warm the footer cache too
@@ -69,7 +69,7 @@ class PointReadSpec extends SparkSpec {
   }
 
   test("tombstoned store is served FAST: netting + scoping, no job") {
-    val dir = java.nio.file.Files.createTempDirectory("pt").toString
+    val dir = tempDir("pt")
     Store.write(mkDf(0 until 280), s"$dir/s", spec)
     val victims = (0 until 280 by 7).map(_.toLong).toDF("id")
     Store.delete(spark, s"$dir/s", spec, "id", victims) // all of c0
@@ -100,7 +100,7 @@ class PointReadSpec extends SparkSpec {
   }
 
   test("renamed store is served FAST via the reverse name map") {
-    val dir = java.nio.file.Files.createTempDirectory("pt").toString
+    val dir = tempDir("pt")
     val sp = IndexSpec(Seq("cat"))
     Store.write(mkDf(0 until 100), s"$dir/s", sp)
     Store.renameColumn(spark, s"$dir/s", "cat", "category")
@@ -120,7 +120,7 @@ class PointReadSpec extends SparkSpec {
   }
 
   test("dropped-and-readded field: old entries never resurface") {
-    val dir = java.nio.file.Files.createTempDirectory("pt").toString
+    val dir = tempDir("pt")
     val sp = IndexSpec(Seq("cat"))
     Store.write(mkDf(0 until 70), s"$dir/s", sp)
     Store.dropColumn(spark, s"$dir/s", "cat")
@@ -137,7 +137,7 @@ class PointReadSpec extends SparkSpec {
   }
 
   test("delete + rename composed: fast equals plan on every route") {
-    val dir = java.nio.file.Files.createTempDirectory("pt").toString
+    val dir = tempDir("pt")
     Store.write(mkDf(0 until 210), s"$dir/s", spec)
     Store.delete(spark, s"$dir/s", spec, "id",
       (0 until 210 by 3).map(_.toLong).toDF("id"))
@@ -154,11 +154,62 @@ class PointReadSpec extends SparkSpec {
     assert(fastRows(st, "tag", "t4") === planRows(st, "tag", "t4"))
   }
 
+  test("an openAt handle serves every point face driver-side at a " +
+      "snapshot with a tombstone and a rename") {
+    val dir = tempDir("pt")
+    val sp2 = IndexSpec(Seq("category", "tag")).withRowRefs("id")
+    Store.write(mkDf(0 until 210), s"$dir/s", spec) // seg 0
+    Store.delete(spark, s"$dir/s", spec, "id", // del 1
+      (0 until 210 by 3).map(_.toLong).toDF("id"))
+    Store.renameColumn(spark, s"$dir/s", "cat", "category") // ren 2
+    Store.append(mkDf(210 until 280) // seg 3
+      .withColumnRenamed("cat", "category"), s"$dir/s", sp2)
+    // units after the snapshot, which the as-of handle must not serve
+    Store.append(mkDf(280 until 350)
+      .withColumnRenamed("cat", "category"), s"$dir/s", sp2)
+    Store.delete(spark, s"$dir/s", sp2, "id",
+      (1 until 350 by 5).map(_.toLong).toDF("id"))
+    val st = Store.openAt(spark, s"$dir/s", sp2, 3)
+    val terms = Seq(("category", "c2"), ("tag", "t4"))
+    def entries(f: String) = st.persistedIndex.where(col("field") === f)
+      .select("value", "f").collect()
+      .map(r => r.getString(0) -> r.getLong(1)).sortBy(_._1).toSeq
+    // the plan faces first: they run jobs
+    val plan = (Seq("c0", "c2", "c5").map(v => ("category", v)) :+ ("tag", "t4"))
+      .map { case (f, v) => (f, v) -> (planF(st, f, v), planRows(st, f, v)) }
+    val planAll = terms.map { case (f, v) => planRows(st, f, v).toSet }
+      .reduce(_ intersect _).toSeq.sorted
+    val planAny = terms.map { case (f, v) => planRows(st, f, v).toSet }
+      .reduce(_ union _).toSeq.sorted
+    val planPrefix = entries("tag").filter(_._1.startsWith("t1"))
+    val planN = entries("category").map(_._2).sum
+    assert(planN === st.frame.df.count())
+    assert(planN === 140 + 70) // as of seg 3: 2/3 of seg 0, all of seg 3
+    val rec = new JobRecorder(spark)
+    val sc = spark.sparkContext
+    val group = s"openat-point-${java.util.UUID.randomUUID}"
+    sc.setJobGroup(group, "openAt point faces")
+    try {
+      plan.foreach { case ((f, v), (pf, pr)) =>
+        assert(st.fPoint(f, v) === pf, s"fPoint($f, $v)")
+        assert(fastRows(st, f, v) === pr, s"rowsOfPoint($f, $v)")
+      }
+      assert(st.rowsOfAllPoint(terms).map(_.asInstanceOf[Long]) === planAll)
+      assert(st.rowsOfAnyPoint(terms).map(_.asInstanceOf[Long]) === planAny)
+      assert(st.prefixPoint("tag", "t1") === planPrefix)
+      assert(st.nPoint("category") === planN)
+    } finally sc.clearJobGroup()
+    try {
+      rec.flush()
+      assert(rec.jobsOf(group).isEmpty, "an openAt point face ran a Spark job")
+    } finally rec.close()
+  }
+
   test("a handle's point face is pinned to its open-time snapshot") {
     // an append committed AFTER open() must not surface through
     // fPoint/rowsOfPoint while the same handle's plan DataFrames
     // still serve the open-time segments
-    val dir = java.nio.file.Files.createTempDirectory("pt").toString
+    val dir = tempDir("pt")
     Store.write(mkDf(0 until 140), s"$dir/s", spec)
     val st = Store.open(spark, s"$dir/s", spec)
     val before = st.fPoint("cat", "c1")
@@ -190,7 +241,7 @@ class PointReadSpec extends SparkSpec {
   }
 
   test("fAndPoint equals the plan-path pair intersection, no job") {
-    val dir = java.nio.file.Files.createTempDirectory("pt").toString
+    val dir = tempDir("pt")
     Store.write(mkDf(0 until 400), s"$dir/s", spec)
     val st = Store.open(spark, s"$dir/s", spec)
     def planAnd(f1: String, v1: String, f2: String, v2: String) =
@@ -224,7 +275,7 @@ class PointReadSpec extends SparkSpec {
   }
 
   test("prefixPoint enumerates a field's values like the plan, no job") {
-    val dir = java.nio.file.Files.createTempDirectory("pt").toString
+    val dir = tempDir("pt")
     Store.write(mkDf(0 until 200), s"$dir/s", spec)
     Store.append(mkDf(200 until 300), s"$dir/s", spec)
     val st = Store.open(spark, s"$dir/s", spec)
@@ -266,7 +317,7 @@ class PointReadSpec extends SparkSpec {
 
   test("boolPoint: k-entry AND/OR/NOT equals set identities over " +
       "plan rows on clean/tombstoned/renamed stores, no job (r15)") {
-    val dir = java.nio.file.Files.createTempDirectory("pt").toString
+    val dir = tempDir("pt")
     Store.write(mkDf(0 until 420), s"$dir/s", spec)
     Store.append(mkDf(420 until 500), s"$dir/s", spec)
     val st = Store.open(spark, s"$dir/s", spec)
@@ -325,7 +376,7 @@ class PointReadSpec extends SparkSpec {
     def mkN(ids: Range) = ids.map(i =>
       (i.toLong, s"c${i % 5}", (i % 25).toLong, i * 1.0))
       .toDF("id", "cat", "num", "v")
-    val dir = java.nio.file.Files.createTempDirectory("pt").toString
+    val dir = tempDir("pt")
     Store.write(mkN(0 until 300), s"$dir/s", nspec)
     Store.append(mkN(300 until 400), s"$dir/s", nspec)
     val st = Store.open(spark, s"$dir/s", nspec)
@@ -372,7 +423,7 @@ class PointReadSpec extends SparkSpec {
       "large-|baseline| query still pins to the plan row (r15: the " +
       "two r14-advice knnPoint fixes)") {
     import graft.ops.Knn
-    val dir = java.nio.file.Files.createTempDirectory("pt").toString
+    val dir = tempDir("pt")
     val df = mkDf(0 until 240)
     Store.write(df, s"$dir/s", spec)
     val st = Store.open(spark, s"$dir/s", spec)
@@ -410,7 +461,7 @@ class PointReadSpec extends SparkSpec {
   }
 
   test("boolCountsPoint equals the set identities over plan rows") {
-    val dir = java.nio.file.Files.createTempDirectory("pt").toString
+    val dir = tempDir("pt")
     Store.write(mkDf(0 until 350), s"$dir/s", spec)
     val st = Store.open(spark, s"$dir/s", spec)
     val a = planRows(st, "cat", "c2").toSet
@@ -423,7 +474,7 @@ class PointReadSpec extends SparkSpec {
   }
 
   test("string row keys read back as strings") {
-    val dir = java.nio.file.Files.createTempDirectory("pt").toString
+    val dir = tempDir("pt")
     val df = (0 until 120)
       .map(i => (s"k$i", s"c${i % 4}")).toDF("name", "cat")
     val sp = IndexSpec(Seq("cat")).withRowRefs("name")
@@ -439,7 +490,7 @@ class PointReadSpec extends SparkSpec {
     // answer through the plan join instead — the hot-entry contract
     // (a 100 TB store's stopword-class pair should cost a Spark job,
     // not a driver merge of tens of millions of keys)
-    val dir = java.nio.file.Files.createTempDirectory("pt").toString
+    val dir = tempDir("pt")
     Store.write(mkDf(0 until 300), s"$dir/s", spec)
     val st = Store.open(spark, s"$dir/s", spec)
     val fastAnd = st.fAndPoint("cat", "c2", "tag", "t5")
@@ -452,7 +503,7 @@ class PointReadSpec extends SparkSpec {
     // the PLAN path filters the __graft_dropped_* namespace out of
     // every merged read; the fast path must not resurrect the dropped
     // column's entries when queried BY its reserved physical name
-    val dir = java.nio.file.Files.createTempDirectory("pt").toString
+    val dir = tempDir("pt")
     val sp = IndexSpec(Seq("cat", "tag")).withRowRefs("id")
     Store.write(mkDf(0 until 90), s"$dir/s", sp)
     Store.dropColumn(spark, s"$dir/s", "cat")
@@ -477,7 +528,7 @@ class PointReadSpec extends SparkSpec {
     // leaves them unreleasable by a second close() or by GC. (A
     // closed StorePoint is fine — it builds FRESH Readers with fresh
     // cleanables.)
-    val dir = java.nio.file.Files.createTempDirectory("pt").toString
+    val dir = tempDir("pt")
     Store.write(mkDf(0 until 50), s"$dir/s", spec)
     val rd = new graft.core.PointRead.Reader(
       spark.sparkContext.hadoopConfiguration,
@@ -488,7 +539,7 @@ class PointReadSpec extends SparkSpec {
   }
 
   test("coStatsPoint pins to the plan CoStats on clean and tombstoned stores, no job") {
-    val dir = java.nio.file.Files.createTempDirectory("pt").toString
+    val dir = tempDir("pt")
     Store.write(mkDf(0 until 420), s"$dir/s", spec)
     val st = Store.open(spark, s"$dir/s", spec)
     def planStats(s: graft.core.StoredFrame, v1: String, v2: String) =
@@ -520,7 +571,7 @@ class PointReadSpec extends SparkSpec {
 
   test("knnPoint pins to the Knn.topK plan row, no job") {
     import graft.ops.Knn
-    val dir = java.nio.file.Files.createTempDirectory("pt").toString
+    val dir = tempDir("pt")
     val df = mkDf(0 until 360)
     Store.write(df, s"$dir/s", spec)
     val st = Store.open(spark, s"$dir/s", spec)

@@ -21,7 +21,7 @@ class Round13Spec extends SparkSpec {
     // parquet's byte-ordered stats drops the file holding the emoji.
     val emoji = new String(Character.toChars(0x1F600))
     val priv = ""
-    val dir = java.nio.file.Files.createTempDirectory("r13pt").toString
+    val dir = tempDir("r13pt")
     val df = (0 until 60).map { i =>
       val cat = i % 3 match {
         case 0 => emoji
@@ -44,7 +44,7 @@ class Round13Spec extends SparkSpec {
   }
 
   test("SegmentedAgg rejects a buildCounts output with no Long column") {
-    val dir = java.nio.file.Files.createTempDirectory("r13agg").toString
+    val dir = tempDir("r13agg")
     val spec = IndexSpec(Seq("cat"))
     Store.write((0 until 40).map(i => (i.toLong, s"c${i % 4}"))
       .toDF("id", "cat"), dir, spec)
@@ -56,7 +56,7 @@ class Round13Spec extends SparkSpec {
   }
 
   test("SegmentedAgg rejects the delete key carried through as Long") {
-    val dir = java.nio.file.Files.createTempDirectory("r13agg").toString
+    val dir = tempDir("r13agg")
     val spec = IndexSpec(Seq("cat"))
     Store.write((0 until 40).map(i => (i.toLong, s"c${i % 4}"))
       .toDF("id", "cat"), dir, spec)
@@ -73,7 +73,7 @@ class Round13Spec extends SparkSpec {
     import graft.ops.Curation
     val docs = Tables.documents(spark, sfDir)
     val spec = IndexSpec(Seq("lang"))
-    val dir = java.nio.file.Files.createTempDirectory("r13dsir").toString
+    val dir = tempDir("r13dsir")
     def counts(df: org.apache.spark.sql.DataFrame) =
       Curation.dsirBucketCounts(df, col("text"), col("doc_id"),
         col("lang") === "en")
@@ -110,7 +110,7 @@ class Round13Spec extends SparkSpec {
     import graft.ops.TextAnalysis
     val docs = Tables.documents(spark, sfDir)
     val spec = IndexSpec(Seq("lang"))
-    val dir = java.nio.file.Files.createTempDirectory("r13clf").toString
+    val dir = tempDir("r13clf")
     def mom(df: org.apache.spark.sql.DataFrame) =
       TextAnalysis.clfMomentsObs(
         TextAnalysis.plantC4Docs(df, col("text"), col("doc_id")),
@@ -147,7 +147,7 @@ class Round13Spec extends SparkSpec {
         "CAST(id * 5 + 7 AS FLOAT)) AS v")
     assert(dense.schema("v").dataType ===
       ArrayType(FloatType, containsNull = false))
-    val p = java.nio.file.Files.createTempDirectory("vu").toString
+    val p = tempDir("vu")
     dense.write.mode("overwrite").parquet(p)
     val viaFile = spark.read.parquet(p)
     assert(viaFile.schema("v").dataType ===
@@ -173,7 +173,7 @@ class Round13Spec extends SparkSpec {
     val spec = IndexSpec(Seq("cat"))
     def mk(ids: Range, tag: String) =
       ids.map(i => (i.toLong, s"c${i % 4}", s"$tag-$i")).toDF("id", "cat", "pay")
-    val dir = java.nio.file.Files.createTempDirectory("r13ub").toString
+    val dir = tempDir("r13ub")
     // three batches with overlapping keys: 0..19, 10..29 (replaces
     // 10..19), 5..14 (replaces again)
     assert(Store.upsertBatch(mk(0 until 20, "b0"), dir, spec, "id", 0L))
@@ -211,7 +211,7 @@ class Round13Spec extends SparkSpec {
     assert(Store.upsertBatch(mk(5 until 15, "b2"), dir, spec, "id", 2L))
     assert(state(dir) === want)
     // equals the manual batch-upsert spelling on a twin store
-    val dir2 = java.nio.file.Files.createTempDirectory("r13ub2").toString
+    val dir2 = tempDir("r13ub2")
     Store.write(mk(0 until 20, "b0"), dir2, spec)
     Store.upsert(mk(10 until 30, "b1"), dir2, spec, "id")
     Store.upsert(mk(5 until 15, "b2"), dir2, spec, "id")
@@ -219,7 +219,7 @@ class Round13Spec extends SparkSpec {
   }
 
   test("write/append reject the reserved dropped-column namespace") {
-    val dir = java.nio.file.Files.createTempDirectory("r13ns").toString
+    val dir = tempDir("r13ns")
     val bad = (0 until 10).map(i => (i.toLong, s"c$i"))
       .toDF("id", "__graft_dropped_0_x")
     val spec = IndexSpec(Seq("id"))

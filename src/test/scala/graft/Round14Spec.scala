@@ -21,7 +21,7 @@ class Round14Spec extends SparkSpec {
   test("fuzz: random append/delete lifecycle keeps every point pair op == plan") {
     val spec = IndexSpec(Seq("cat", "tag")).withRowRefs("id")
     val rnd = new scala.util.Random(14L) // seeded — no flaky reruns
-    val dir = java.nio.file.Files.createTempDirectory("r14fuzz").toString
+    val dir = tempDir("r14fuzz")
     Store.write(mkDf(0 until 120), s"$dir/s", spec)
     var next = 120
     (1 to 5).foreach { _ =>
@@ -87,7 +87,7 @@ class Round14Spec extends SparkSpec {
   test("upsertBatch fails loudly on a FOREIGN committed segment at its id " +
       "(r14 advice: was a silent batch drop)") {
     val spec = IndexSpec(Seq("cat"))
-    val dir = java.nio.file.Files.createTempDirectory("r14up").toString
+    val dir = tempDir("r14up")
     val df0 = mkDf(0 until 40).select("id", "cat", "v")
     Store.write(df0, s"$dir/s", spec)
     assert(Store.upsertBatch(mkDf(40 until 60).select("id", "cat", "v"),
@@ -110,7 +110,7 @@ class Round14Spec extends SparkSpec {
   test("a failed delete precondition does not leak a claim file " +
       "(r14 advice: requires run before claimUnitId)") {
     val spec = IndexSpec(Seq("cat")).withRowRefs("id")
-    val dir = java.nio.file.Files.createTempDirectory("r14cl").toString
+    val dir = tempDir("r14cl")
     Store.write(mkDf(0 until 30), s"$dir/s", spec)
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -142,7 +142,7 @@ class Round14Spec extends SparkSpec {
     import scala.concurrent.ExecutionContext.Implicits.global
     val spec = IndexSpec(Seq("cat"))
     (0 until 3).foreach { round =>
-      val dir = java.nio.file.Files.createTempDirectory("r14race").toString
+      val dir = tempDir("r14race")
       Store.write(mkDf(0 until 60).select("id", "cat", "v"), s"$dir/s", spec)
       def tryDel(step: Int) = Future {
         try Right(Store.delete(spark, s"$dir/s", spec, "id",
@@ -177,7 +177,7 @@ class Round14Spec extends SparkSpec {
     import graft.ops.Knn
     val spec = IndexSpec(Seq("cat", "tag")).withRowRefs("id")
     val rnd = new scala.util.Random(41L)
-    val dir = java.nio.file.Files.createTempDirectory("r14knn").toString
+    val dir = tempDir("r14knn")
     Store.write(mkDf(0 until 150), s"$dir/s", spec)
     Store.append(mkDf(150 until 260), s"$dir/s", spec)
     Store.delete(spark, s"$dir/s", spec, "id",

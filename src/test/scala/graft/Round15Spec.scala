@@ -15,7 +15,7 @@ class Round15Spec extends SparkSpec {
     import scala.concurrent.ExecutionContext.Implicits.global
     val spec = IndexSpec(Seq("cat"))
     (0 until 2).foreach { round =>
-      val dir = java.nio.file.Files.createTempDirectory("r15race3").toString
+      val dir = tempDir("r15race3")
       (0 until 120).map(i => (i.toLong, s"c${i % 4}"))
         .toDF("id", "cat").write.mode("overwrite")
         .parquet(s"$dir/raw") // seed via Store.write below
@@ -51,7 +51,7 @@ class Round15Spec extends SparkSpec {
       "(r14 verdict #4: the ×1.59-at-3× growth is output-shaped)") {
     val docs = Tables.documents(spark, sfDir)
     val spec = IndexSpec(Seq("lang"))
-    val dir = java.nio.file.Files.createTempDirectory("r15dsir").toString
+    val dir = tempDir("r15dsir")
     def counts(df: org.apache.spark.sql.DataFrame) =
       Curation.dsirBucketCounts(df, col("text"), col("doc_id"),
         col("lang") === "en")

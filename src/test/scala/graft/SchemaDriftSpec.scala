@@ -26,7 +26,7 @@ class SchemaDriftSpec extends SparkSpec {
   test("Tables.events canonicalizes long-nanos and timestamp[us] encodings identically") {
     val base = Tables.events(spark, sfDir)
       .orderBy("event_id").limit(500)
-    val dir = Files.createTempDirectory("events-drift").toString
+    val dir = tempDir("events-drift")
 
     // fixture A: ts as raw int64 nanoseconds since epoch
     base.withColumn("ts", expr("unix_micros(cast(ts as timestamp)) * 1000L"))
@@ -71,7 +71,7 @@ class SchemaDriftSpec extends SparkSpec {
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
     import org.apache.parquet.example.data.simple.SimpleGroupFactory
     import org.apache.parquet.hadoop.example.ExampleParquetWriter
-    val dir = Files.createTempDirectory("events-drift-nanos").toString
+    val dir = tempDir("events-drift-nanos")
     val schema = Types.buildMessage()
       .required(PrimitiveTypeName.INT64).named("event_id")
       .required(PrimitiveTypeName.INT64)

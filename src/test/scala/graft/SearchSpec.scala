@@ -59,7 +59,7 @@ class SearchSpec extends SparkSpec {
       (1L, "cat dog bird"), (2L, "cat cat dog"), (3L, "dog dog dog"),
       (4L, "cat mouse mouse mouse"), (5L, "bird bird cat dog cat")
     ).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("bm25ix").toString
+    val dir = tempDir("bm25ix")
     Search.bm25Postings(docs, col("text"), col("doc_id"))
       .write.parquet(s"$dir/postings")
     Search.bm25Totals(docs, col("text"), col("doc_id"))

@@ -24,7 +24,7 @@ class SegmentedAggSpec extends SparkSpec {
       (r.getLong(2), r.getLong(3))).toMap
 
   test("netted counts equal the from-scratch counts over live rows") {
-    val dir = java.nio.file.Files.createTempDirectory("segagg").toString
+    val dir = tempDir("segagg")
     Store.write(mkDf(0 until 60), dir, spec)
     Store.append(mkDf(60 until 100), dir, spec)
     Store.delete(spark, dir, spec, "id",
@@ -38,7 +38,7 @@ class SegmentedAggSpec extends SparkSpec {
   }
 
   test("no double negation: overlapping deletes with a re-append between") {
-    val dir = java.nio.file.Files.createTempDirectory("segagg").toString
+    val dir = tempDir("segagg")
     Store.write(mkDf(0 until 50), dir, spec)
     // delete evens, re-append ids 0..9, then delete multiples of 4 —
     // the second tombstone's victims in seg_0 must EXCLUDE rows the
@@ -54,7 +54,7 @@ class SegmentedAggSpec extends SparkSpec {
   }
 
   test("refresh after an append scans only the delta segment") {
-    val dir = java.nio.file.Files.createTempDirectory("segagg").toString
+    val dir = tempDir("segagg")
     Store.write(mkDf(0 until 60), dir, spec)
     SegmentedAgg.have(spark, dir, "kc", "id")(counts)
     Store.append(mkDf(60 until 90), dir, spec)
@@ -71,7 +71,7 @@ class SegmentedAggSpec extends SparkSpec {
   }
 
   test("a delete's negative partial scans only the affected segment") {
-    val dir = java.nio.file.Files.createTempDirectory("segagg").toString
+    val dir = tempDir("segagg")
     Store.write(mkDf(0 until 60), dir, spec)
     Store.append(mkDf(60 until 90), dir, spec)
     SegmentedAgg.have(spark, dir, "kc", "id")(counts)
@@ -86,7 +86,7 @@ class SegmentedAggSpec extends SparkSpec {
   }
 
   test("compact retires partials and the fold rebuilds identically") {
-    val dir = java.nio.file.Files.createTempDirectory("segagg").toString
+    val dir = tempDir("segagg")
     Store.write(mkDf(0 until 60), dir, spec)
     Store.append(mkDf(60 until 90), dir, spec)
     Store.delete(spark, dir, spec, "id",
@@ -104,7 +104,7 @@ class SegmentedAggSpec extends SparkSpec {
   }
 
   test("weights from netted counts equal keyValueWeights over live rows") {
-    val dir = java.nio.file.Files.createTempDirectory("segagg").toString
+    val dir = tempDir("segagg")
     val part = Tables.part(spark, sfDir)
     val kspec = IndexSpec(Seq("p_brand"))
     Store.write(part.where($"p_partkey" % 2 === 0), dir, kspec)

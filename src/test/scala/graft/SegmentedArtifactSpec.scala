@@ -17,7 +17,7 @@ class SegmentedArtifactSpec extends SparkSpec {
     graft.ops.Search.bm25Postings(df, col("text"), col("doc_id"))
 
   private def freshStore(slice: org.apache.spark.sql.Column): String = {
-    val dir = java.nio.file.Files.createTempDirectory("segart").toString
+    val dir = tempDir("segart")
     Store.write(Tables.documents(spark, sfDir).where(slice), dir, spec)
     dir
   }
@@ -109,7 +109,7 @@ class SegmentedArtifactSpec extends SparkSpec {
 
   test("ExactSubstr windows as a segmented family: identical to the full build") {
     val docs = Tables.documents(spark, sfDir).where(col("doc_id") % 3 === 0)
-    val dir = java.nio.file.Files.createTempDirectory("segartw").toString
+    val dir = tempDir("segartw")
     Store.write(docs.where(col("doc_id") % 2 === 0), dir, spec)
     Store.append(docs.where(col("doc_id") % 2 === 1), dir, spec)
     def wins(df: org.apache.spark.sql.DataFrame) =
@@ -126,7 +126,7 @@ class SegmentedArtifactSpec extends SparkSpec {
   test("IVF codes as a segmented family: artifact serve == inline ivfTopK over live rows") {
     import graft.ops.Similarity
     val e = Tables.embeddings(spark, sfDir)
-    val dir = java.nio.file.Files.createTempDirectory("segivf").toString
+    val dir = tempDir("segivf")
     val espec = IndexSpec(Seq("vec_id"))
     Store.write(e.where(col("vec_id") % 2 === 0), dir, espec)
     Store.append(e.where(col("vec_id") % 2 =!= 0), dir, espec)

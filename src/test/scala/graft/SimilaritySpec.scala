@@ -126,7 +126,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("pq codebooks persist and reopen via the build-once lifecycle") {
-    val dir = java.nio.file.Files.createTempDirectory("pq").toString + "/books"
+    val dir = tempDir("pq") + "/books"
     var fits = 0
     def fit = { fits += 1; Similarity.pqCodebooks(emb, sampleFraction = 0.5) }
     val b1 = Similarity.havePqCodebooks(spark, dir)(fit)
@@ -142,7 +142,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("centroids persist and reopen via the build-once store lifecycle") {
-    val dir = java.nio.file.Files.createTempDirectory("ivf").toString + "/centroids"
+    val dir = tempDir("ivf") + "/centroids"
     var fits = 0
     def fit = { fits += 1; Similarity.ivfCentroids(emb, nlist = 8, sampleFraction = 0.5) }
     val c1 = Similarity.haveCentroids(spark, dir)(fit)

@@ -3,27 +3,20 @@ package graft
 import graft.ops.{Dedup, Skew}
 import org.apache.spark.sql.functions._
 
-/** The three hot-key cap spellings (exchange default, grouped,
-  * window) must keep/drop IDENTICAL row sets — flipping
-  * `spark.graft.skew.capImpl` may change the physical plan, never a
-  * result. Checked directly on the helper with a planted mega-hot key
-  * (plus null keys, which the dispatcher drops so the spellings
-  * cannot diverge on them) and end-to-end on the pair operators that
-  * route through it.
+/** The hot-key cap (the exchange spelling of `Skew.dropHotKeys`) must
+  * keep/drop the IDENTICAL row set its reference window spelling does.
+  * Checked directly on the helper with a planted mega-hot key (plus
+  * null keys, which the cap drops so the spellings cannot diverge on
+  * them) and end-to-end on the pair operators that route through it.
   */
 class SkewSpec extends SparkSpec {
   import spark.implicits._
 
-  private def withWindowCap[T](body: => T): T = {
-    spark.conf.set(Skew.WindowCapConf, "true")
-    try body finally spark.conf.unset(Skew.WindowCapConf)
-  }
-
-  test("grouped and window cap spellings keep identical row sets") {
+  test("exchange and window cap spellings keep identical row sets") {
     // key 7 is the planted mega-hot key (3000 rows); everything else
     // is under the cap, including key 8 sitting exactly AT it; null
     // keys (which a window would count as one hot group but an
-    // anti-join can never match) are dropped by the dispatcher so the
+    // anti-join can never match) are dropped by the cap so the
     // spellings cannot diverge on them
     val df = ((1 to 3000).map(i => (7L, i.toLong)) ++
         (1 to 100).map(i => (8L, i.toLong)) ++
@@ -31,32 +24,23 @@ class SkewSpec extends SparkSpec {
       .toDF("k", "v")
     val withNulls = df.unionByName(
       (1 to 500).map(i => (Option.empty[Long], i.toLong)).toDF("k", "v"))
-    Seq("exchange", "grouped", "window").foreach { impl =>
-      spark.conf.set(Skew.CapImplConf, impl)
-      try {
-        val kept = Skew.dropHotKeys(withNulls, Seq("k"), 100L)
-          .collect().map(r => (if (r.isNullAt(0)) null
-                               else java.lang.Long.valueOf(r.getLong(0)),
-                               r.getLong(1))).toSet
-        assert(!kept.exists(_._1 == null), s"$impl kept null keys")
-        assert(kept.map(_._2).nonEmpty, impl)
-      } finally spark.conf.unset(Skew.CapImplConf)
-    }
-    val grouped = Skew.dropHotKeysGrouped(df, Seq("k"), 100L)
-      .as[(Long, Long)].collect().toSet
+    val kept = Skew.dropHotKeys(withNulls, Seq("k"), 100L)
+      .collect().map(r => (if (r.isNullAt(0)) None else Some(r.getLong(0)),
+                           r.getLong(1))).toSet
+    assert(!kept.exists(_._1.isEmpty), "the cap kept null keys")
     val window = Skew.dropHotKeysWindow(df, Seq("k"), 100L)
       .as[(Long, Long)].collect().toSet
-    val exchange = Skew.dropHotKeysExchange(df, Seq("k"), 100L)
+    val exchange = Skew.dropHotKeys(df, Seq("k"), 100L)
       .as[(Long, Long)].collect().toSet
-    assert(grouped === window)
     assert(exchange === window)
-    assert(!grouped.exists(_._1 == 7L)) // hot key fully dropped
-    assert(grouped.count(_._1 == 8L) === 100) // at-cap key fully kept
+    assert(kept === window.map { case (k, v) => (Some(k), v) })
+    assert(!exchange.exists(_._1 == 7L)) // hot key fully dropped
+    assert(exchange.count(_._1 == 8L) === 100) // at-cap key fully kept
   }
 
-  test("pair operators produce identical pairs under all three spellings") {
+  test("pair operators produce pairs through the hot-key cap") {
     val corpus = spark.read.parquet(s"$sfDir/documents.parquet")
-    def allPairs() = Map(
+    val pairs = Map(
       "minhash" -> Dedup.minhashLsh(corpus, col("text"), col("doc_id"))
         .select("a", "b").as[(Long, Long)].collect().toSet,
       "ngram" -> Dedup.ngramJaccard(corpus, col("text"), col("doc_id"))
@@ -66,17 +50,8 @@ class SkewSpec extends SparkSpec {
       "substring" -> Dedup.substringPairs(Dedup.plantSpanDups(corpus),
           col("text"), col("doc_id"))
         .select("a", "b").as[(Long, Long)].collect().toSet)
-    def withImpl[T](impl: String)(body: => T): T = {
-      spark.conf.set(Skew.CapImplConf, impl)
-      try body finally spark.conf.unset(Skew.CapImplConf)
-    }
-    val exchange = allPairs() // default
-    val grouped = withImpl("grouped")(allPairs())
-    val window = withWindowCap(allPairs())
-    exchange.foreach { case (name, pairs) =>
-      assert(pairs === window(name), s"$name: exchange vs window differs")
-      assert(pairs === grouped(name), s"$name: exchange vs grouped differs")
-      assert(pairs.nonEmpty, s"$name produced no pairs")
+    pairs.foreach { case (name, ps) =>
+      assert(ps.nonEmpty, s"$name produced no pairs")
     }
   }
 

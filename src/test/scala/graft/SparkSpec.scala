@@ -4,10 +4,26 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** shared local SparkSession fixture */
+/** shared local SparkSession fixture, plus temp dirs the suite deletes
+  * when it ends */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   val sfDir = "/root/testdata/sf0.001"
+
+  private val tempDirs =
+    new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+
+  /** a fresh dir in the system temp dir, deleted with everything under
+    * it after the suite's last test */
+  def tempDir(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    tempDirs.add(d)
+    d.toString
+  }
+
+  override def afterAll(): Unit =
+    try tempDirs.forEach(d => SparkSpec.deleteRecursively(d.toFile))
+    finally super.afterAll()
 }
 
 /** records the start properties and outcome of every Spark job while
@@ -57,6 +73,12 @@ final class JobRecorder(spark: SparkSession)
 }
 
 object SparkSpec {
+  private def deleteRecursively(f: java.io.File): Unit = {
+    if (!java.nio.file.Files.isSymbolicLink(f.toPath))
+      Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
+    f.delete()
+  }
+
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")

@@ -24,7 +24,7 @@ class StoreConcurrencySpec extends SparkSpec {
   }
 
   test("concurrent appenders commit independent segments — no clobber") {
-    val dir = java.nio.file.Files.createTempDirectory("conc").toString
+    val dir = tempDir("conc")
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
@@ -63,7 +63,7 @@ class StoreConcurrencySpec extends SparkSpec {
   }
 
   test("append concurrent with delete (disjoint keys): both units survive") {
-    val dir = java.nio.file.Files.createTempDirectory("concdel").toString
+    val dir = tempDir("concdel")
     Store.write((0L until 40L).map(i => (i, s"c${i % 4}", i.toDouble))
       .toDF("id", "cat", "v"), dir, spec)
     import scala.concurrent.{Await, Future}
@@ -90,7 +90,7 @@ class StoreConcurrencySpec extends SparkSpec {
   }
 
   test("a crashed writer's bare claim is skipped, never reused") {
-    val dir = java.nio.file.Files.createTempDirectory("claim").toString
+    val dir = tempDir("claim")
     Store.append(Seq((1L, "a", 1.0)).toDF("id", "cat", "v"), dir, spec)
     // simulate a writer that claimed id 1 and died before committing
     touch(s"$dir/index/_claim_1")
@@ -102,7 +102,7 @@ class StoreConcurrencySpec extends SparkSpec {
   }
 
   test("upsert is ordered tombstone-then-segment and both commit") {
-    val dir = java.nio.file.Files.createTempDirectory("upsord").toString
+    val dir = tempDir("upsord")
     Store.write(Seq((1L, "a", 1.0), (2L, "b", 2.0)).toDF("id", "cat", "v"),
       dir, spec)
     Store.upsert(Seq((2L, "bb", 20.0), (3L, "c", 3.0)).toDF("id", "cat", "v"),
@@ -119,7 +119,7 @@ class StoreConcurrencySpec extends SparkSpec {
   }
 
   test("an uncommitted tombstone (upsert crash before append commit) is invisible and vacuumable") {
-    val dir = java.nio.file.Files.createTempDirectory("upscrash").toString
+    val dir = tempDir("upscrash")
     Store.write(Seq((1L, "a", 1.0), (2L, "b", 2.0)).toDF("id", "cat", "v"),
       dir, spec)
     val before = Store.open(spark, dir, spec).frame.df.orderBy("id")
@@ -149,7 +149,7 @@ class StoreConcurrencySpec extends SparkSpec {
   }
 
   test("compact high-water: a folded batchId redelivery is a no-op") {
-    val dir = java.nio.file.Files.createTempDirectory("hw").toString
+    val dir = tempDir("hw")
     def batch(b: Int) = (0 until 5)
       .map(i => ((b * 5 + i).toLong, s"c${i % 2}", i.toDouble))
       .toDF("id", "cat", "v")
@@ -179,7 +179,7 @@ class StoreConcurrencySpec extends SparkSpec {
         assert(Store.appendBatch(batch(5), dir, spec, 5L))
         assert(new java.io.File(s"$dir/index/seg_5/_MANIFEST").delete())
       }).foreach { crash =>
-      val dir = java.nio.file.Files.createTempDirectory("hwclaim").toString
+      val dir = tempDir("hwclaim")
       assert(Store.appendBatch(batch(0), dir, spec, 0L))
       assert(Store.appendBatch(batch(1), dir, spec, 1L))
       crash(dir)
@@ -192,7 +192,7 @@ class StoreConcurrencySpec extends SparkSpec {
   }
 
   test("mixed legacy+manifest store: refused until compact modernizes it; vacuum keeps its rows") {
-    val dir = java.nio.file.Files.createTempDirectory("mixed").toString
+    val dir = tempDir("mixed")
     Store.write(Seq((1L, "a", 1.0), (2L, "b", 2.0)).toDF("id", "cat", "v"),
       dir, spec)
     // hand-plant a PRE-MANIFEST segment (the r11-advice scenario: a
@@ -289,7 +289,7 @@ class StoreConcurrencySpec extends SparkSpec {
   }
 
   test("overlapped upsert: a failed tombstone branch commits no segment; re-run converges") {
-    val dir = java.nio.file.Files.createTempDirectory("upsfailT").toString
+    val dir = tempDir("upsfailT")
     val (tspec, arm, clear) = tombstoneFault()
     Store.write(base.toDF("id", "cat", "v"), dir, tspec)
     val before = live(dir, tspec)
@@ -311,7 +311,7 @@ class StoreConcurrencySpec extends SparkSpec {
   }
 
   test("overlapped upsert: a failed segment branch commits no tombstone; re-run converges") {
-    val dir = java.nio.file.Files.createTempDirectory("upsfailS").toString
+    val dir = tempDir("upsfailS")
     Store.write(base.toDF("id", "cat", "v"), dir, spec)
     val before = live(dir, spec)
     val (batch, arm, clear) = segmentFault()
@@ -331,7 +331,7 @@ class StoreConcurrencySpec extends SparkSpec {
   }
 
   test("overlapped upsertBatch: a failed tombstone branch commits no segment; redelivery converges") {
-    val dir = java.nio.file.Files.createTempDirectory("upbfailT").toString
+    val dir = tempDir("upbfailT")
     val (tspec, arm, clear) = tombstoneFault()
     assert(Store.upsertBatch(base.toDF("id", "cat", "v"), dir, tspec, "id", 0L))
     val before = live(dir, tspec)
@@ -351,7 +351,7 @@ class StoreConcurrencySpec extends SparkSpec {
   }
 
   test("overlapped upsertBatch: a failed segment branch commits no tombstone; redelivery converges") {
-    val dir = java.nio.file.Files.createTempDirectory("upbfailS").toString
+    val dir = tempDir("upbfailS")
     assert(Store.upsertBatch(base.toDF("id", "cat", "v"), dir, spec, "id", 0L))
     val before = live(dir, spec)
     val (batch, arm, clear) = segmentFault()
@@ -375,7 +375,7 @@ class StoreConcurrencySpec extends SparkSpec {
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.jdk.CollectionConverters._
     val rspec = IndexSpec(Seq("cat")).withRowRefs("id")
-    val dir = java.nio.file.Files.createTempDirectory("props").toString
+    val dir = tempDir("props")
     Store.write((0L until 40L).map(i => (i, s"c${i % 4}", i.toDouble))
       .toDF("id", "cat", "v"), dir, rspec)
     val sc = spark.sparkContext

@@ -17,8 +17,7 @@ class StoreDeleteSpec extends SparkSpec {
     (1L, "a", 10.0), (2L, "b", 20.0), (3L, "a", 30.0), (4L, "c", 40.0)
   ).toDF("id", "cat", "v")
 
-  private def tmp(p: String) =
-    java.nio.file.Files.createTempDirectory(p).toString
+  private def tmp(p: String) = tempDir(p)
 
   private def liveIds(st: graft.core.StoredFrame): Seq[Long] =
     st.frame.df.select("id").collect().map(_.getLong(0)).toSeq.sorted

@@ -14,7 +14,7 @@ class StoreEvolutionSpec extends SparkSpec {
   private val spec = IndexSpec(Seq("cat"))
 
   test("int->long widening: union serves long, old segments promote, narrowing fails") {
-    val dir = java.nio.file.Files.createTempDirectory("widen").toString
+    val dir = tempDir("widen")
     Store.write(Seq((1L, "a", 10), (2L, "b", 20)).toDF("id", "cat", "n"),
       dir, spec)
     // widen: the new segment carries n as LONG (values past int range)
@@ -41,7 +41,7 @@ class StoreEvolutionSpec extends SparkSpec {
   }
 
   test("float->double widening composes with compact") {
-    val dir = java.nio.file.Files.createTempDirectory("widenf").toString
+    val dir = tempDir("widenf")
     Store.write(Seq((1L, "a", 1.5f)).toDF("id", "cat", "v"), dir, spec)
     Store.append(Seq((2L, "b", 2.5d)).toDF("id", "cat", "v"), dir, spec)
     def check(): Unit = {
@@ -57,7 +57,7 @@ class StoreEvolutionSpec extends SparkSpec {
   }
 
   test("rename is metadata-only: data, index, f() and later appends all serve the new name") {
-    val dir = java.nio.file.Files.createTempDirectory("ren").toString
+    val dir = tempDir("ren")
     Store.write(Seq((1L, "a", 10L), (2L, "b", 20L), (3L, "a", 30L))
       .toDF("id", "cat", "n"), dir, spec)
     val filesBefore = Store.history(spark, dir)
@@ -83,7 +83,7 @@ class StoreEvolutionSpec extends SparkSpec {
   }
 
   test("openAt before the rename serves the as-of (old) name") {
-    val dir = java.nio.file.Files.createTempDirectory("renat").toString
+    val dir = tempDir("renat")
     Store.write(Seq((1L, "a", 10L)).toDF("id", "cat", "n"), dir, spec)
     Store.renameColumn(spark, dir, "cat", "category")
     val asOf = Store.openAt(spark, dir, spec, 0)
@@ -95,7 +95,7 @@ class StoreEvolutionSpec extends SparkSpec {
   }
 
   test("a tombstone written before a rename of its key column still applies") {
-    val dir = java.nio.file.Files.createTempDirectory("rendel").toString
+    val dir = tempDir("rendel")
     Store.write(Seq((1L, "a", 10L), (2L, "b", 20L)).toDF("id", "cat", "n"),
       dir, spec)
     Store.delete(spark, dir, spec, "id", Seq(1L).toDF("id"))
@@ -108,7 +108,7 @@ class StoreEvolutionSpec extends SparkSpec {
   }
 
   test("a delete keyed on a renamed or a dropped column checks the served columns") {
-    val dir = java.nio.file.Files.createTempDirectory("delkey").toString
+    val dir = tempDir("delkey")
     Store.write(Seq((1L, "a", "x1"), (2L, "b", "x2"), (3L, "a", "x3"))
       .toDF("id", "cat", "flag"), dir, spec)
     Store.renameColumn(spark, dir, "id", "doc_id")
@@ -135,7 +135,7 @@ class StoreEvolutionSpec extends SparkSpec {
   }
 
   test("chained renames fold in order; a retired name is reusable for a new column") {
-    val dir = java.nio.file.Files.createTempDirectory("renchain").toString
+    val dir = tempDir("renchain")
     Store.write(Seq((1L, "a", 10L)).toDF("id", "cat", "n"), dir, spec)
     Store.renameColumn(spark, dir, "n", "count")
     Store.renameColumn(spark, dir, "count", "tokens")
@@ -154,7 +154,7 @@ class StoreEvolutionSpec extends SparkSpec {
   }
 
   test("compact folds renames physically: the new generation needs no mapping") {
-    val dir = java.nio.file.Files.createTempDirectory("renfold").toString
+    val dir = tempDir("renfold")
     Store.write(Seq((1L, "a", 10), (2L, "b", 20)).toDF("id", "cat", "n"),
       dir, spec)
     Store.renameColumn(spark, dir, "cat", "category")
@@ -182,7 +182,7 @@ class StoreEvolutionSpec extends SparkSpec {
   }
 
   test("dropColumn hides the column, keeps rows, and re-adding never resurrects") {
-    val dir = java.nio.file.Files.createTempDirectory("drop").toString
+    val dir = tempDir("drop")
     Store.write(Seq((1L, "a", "x1"), (2L, "b", "x2")).toDF("id", "cat", "flag"),
       dir, spec)
     Store.dropColumn(spark, dir, "flag")
@@ -220,7 +220,7 @@ class StoreEvolutionSpec extends SparkSpec {
   }
 
   test("dropping an INDEXED field removes its entries from the merged index") {
-    val dir = java.nio.file.Files.createTempDirectory("dropix").toString
+    val dir = tempDir("dropix")
     val two = IndexSpec(Seq("cat", "tag"))
     Store.write(Seq((1L, "a", "t1"), (2L, "b", "t2"))
       .toDF("id", "cat", "tag"), dir, two)
@@ -231,7 +231,7 @@ class StoreEvolutionSpec extends SparkSpec {
     assert(fields === Set("cat"))
     // the tombstone-key guard: deleting by a column then dropping it
     // is refused until compact folds the tombstone
-    val dir2 = java.nio.file.Files.createTempDirectory("dropdel").toString
+    val dir2 = tempDir("dropdel")
     Store.write(Seq((1L, "a", "x"), (2L, "b", "y"))
       .toDF("id", "cat", "flag"), dir2, spec)
     Store.delete(spark, dir2, spec, "id", Seq(1L).toDF("id"))

@@ -13,7 +13,7 @@ class StoreSpec extends SparkSpec {
   ).toDF("id", "cat", "v")
 
   test("write/open round-trips rows and index") {
-    val dir = java.nio.file.Files.createTempDirectory("store").toString
+    val dir = tempDir("store")
     Store.write(data, dir, spec)
     val st = Store.open(spark, dir, spec)
     assert(st.frame.df.count() === 4)
@@ -24,7 +24,7 @@ class StoreSpec extends SparkSpec {
   }
 
   test("have() writes once, then reopens without rewriting") {
-    val dir = java.nio.file.Files.createTempDirectory("store2").toString
+    val dir = tempDir("store2")
     var calls = 0
     def provide = { calls += 1; data }
     Store.have(spark, dir, spec)(provide)
@@ -33,7 +33,7 @@ class StoreSpec extends SparkSpec {
   }
 
   test("have() re-provides after a write() that died before its manifest") {
-    val dir = java.nio.file.Files.createTempDirectory("store3").toString
+    val dir = tempDir("store3")
     Store.write(data, dir, spec)
     // the state a write() leaves when it dies after its index write:
     // seg_0 claimed and indexed, no manifest
@@ -46,8 +46,8 @@ class StoreSpec extends SparkSpec {
   }
 
   test("incremental appends equal a one-shot write of the union") {
-    val dirA = java.nio.file.Files.createTempDirectory("inc").toString
-    val dirB = java.nio.file.Files.createTempDirectory("oneshot").toString
+    val dirA = tempDir("inc")
+    val dirB = tempDir("oneshot")
     val batch1 = data.where($"id" <= 2)
     val batch2 = data.where($"id" > 2)
     Store.append(batch1, dirA, spec)
@@ -64,7 +64,7 @@ class StoreSpec extends SparkSpec {
   test("streaming foreachBatch ingest builds the same store as a batch write") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("ingest").toString
+    val dir = tempDir("ingest")
     val stream = MemoryStream[(Long, String, Double)]
     val q = stream.toDF().toDF("id", "cat", "v")
       .writeStream
@@ -86,7 +86,7 @@ class StoreSpec extends SparkSpec {
   }
 
   test("append never reads or rewrites existing index segments") {
-    val dir = java.nio.file.Files.createTempDirectory("seg").toString
+    val dir = tempDir("seg")
     Store.append(data.where($"id" <= 2), dir, spec)
     val seg0 = new java.io.File(s"$dir/index/seg_0")
     val before = seg0.listFiles().map(f => f.getName -> f.lastModified()).toMap
@@ -100,7 +100,7 @@ class StoreSpec extends SparkSpec {
   }
 
   test("compact folds segments to one generation and preserves the merged index") {
-    val dir = java.nio.file.Files.createTempDirectory("cmp").toString
+    val dir = tempDir("cmp")
     Store.append(data.where($"id" <= 2), dir, spec)
     Store.append(data.where($"id" > 2), dir, spec)
     val beforeIx = Store.open(spark, dir, spec).persistedIndex
@@ -119,7 +119,7 @@ class StoreSpec extends SparkSpec {
   }
 
   test("a reader opened before compact survives the compact (reader-safe)") {
-    val dir = java.nio.file.Files.createTempDirectory("cmpr").toString
+    val dir = tempDir("cmpr")
     Store.append(data.where($"id" <= 2), dir, spec)
     Store.append(data.where($"id" > 2), dir, spec)
     val reader = Store.open(spark, dir, spec) // planned against gen 0 segs
@@ -142,7 +142,7 @@ class StoreSpec extends SparkSpec {
   }
 
   test("a loose-index store is refused until compact upgrades it; append then keeps the original index") {
-    val dir = java.nio.file.Files.createTempDirectory("leg").toString
+    val dir = tempDir("leg")
     // fabricate the legacy layout: index parquet directly under
     // <dir>/index, no seg_* dirs
     data.write.parquet(s"$dir/data")
@@ -173,7 +173,7 @@ class StoreSpec extends SparkSpec {
     // still-present loose <dir>/index. That dir is only the generation
     // below the live one: reads must resolve g1, append must land in
     // g1, and the next compact reclaims the dir.
-    val dir = java.nio.file.Files.createTempDirectory("legorphan").toString
+    val dir = tempDir("legorphan")
     data.write.parquet(s"$dir/data")
     graft.core.IndexedFrame(data, spec).entries
       .write.parquet(s"$dir/index")                  // legacy (orphan)
@@ -205,7 +205,7 @@ class StoreSpec extends SparkSpec {
   }
 
   test("partitioned write prunes non-matching partitions at the scan") {
-    val dir = java.nio.file.Files.createTempDirectory("storep").toString
+    val dir = tempDir("storep")
     Store.writePartitioned(data, dir, "cat")
     val q = Store.openPartitioned(spark, dir).where($"cat" === "a")
     // correctness: only cat=a rows come back
@@ -227,7 +227,7 @@ class StoreSpec extends SparkSpec {
   private val refsSpec = IndexSpec(Seq("cat")).withRowRefs("id")
 
   test("row-refs artifact serves rowsOf index-only and matches a live scan") {
-    val dir = java.nio.file.Files.createTempDirectory("rowref").toString
+    val dir = tempDir("rowref")
     Store.write(data, dir, refsSpec)
     val st = Store.open(spark, dir, refsSpec)
     val served = st.rowsOf("cat", "a")
@@ -246,7 +246,7 @@ class StoreSpec extends SparkSpec {
     assert(st.frame.rowsOf("cat", "a").collect().map(_.getLong(0)).toSet ===
       Set(1L, 3L))
     // a store written WITHOUT refs refuses rowsOf rather than rescanning
-    val bare = java.nio.file.Files.createTempDirectory("norefs").toString
+    val bare = tempDir("norefs")
     Store.write(data, bare, spec)
     intercept[IllegalStateException] {
       Store.open(spark, bare, spec).rowsOf("cat", "a")
@@ -254,7 +254,7 @@ class StoreSpec extends SparkSpec {
   }
 
   test("have() re-provides when the spec demands row-refs the store lacks") {
-    val dir = java.nio.file.Files.createTempDirectory("uprefs").toString
+    val dir = tempDir("uprefs")
     var calls = 0
     def provide = { calls += 1; data }
     Store.have(spark, dir, spec)(provide)          // refs-less store
@@ -267,7 +267,7 @@ class StoreSpec extends SparkSpec {
   }
 
   test("row-refs segments mirror index segments across append and compact") {
-    val dir = java.nio.file.Files.createTempDirectory("rowrefseg").toString
+    val dir = tempDir("rowrefseg")
     Store.append(data.where($"id" <= 2), dir, refsSpec)
     Store.append(data.where($"id" > 2), dir, refsSpec)
     assert(new java.io.File(s"$dir/index/rows_0").isDirectory)
@@ -292,7 +292,7 @@ class StoreSpec extends SparkSpec {
   }
 
   test("second compact reclaims generations two compacts old; vacuum trims the rest") {
-    val dir = java.nio.file.Files.createTempDirectory("gc").toString
+    val dir = tempDir("gc")
     Store.append(data.where($"id" <= 2), dir, spec)
     Store.append(data.where($"id" > 2), dir, spec)
     Store.compact(spark, dir) // publishes g1, retains gen0 (index/)
@@ -318,7 +318,7 @@ class StoreSpec extends SparkSpec {
   }
 
   test("persisted index f() matches live recount") {
-    val dir = java.nio.file.Files.createTempDirectory("store3").toString
+    val dir = tempDir("store3")
     Store.write(data, dir, spec)
     val st = Store.open(spark, dir, spec)
     val live = st.frame.fDF("cat", "a").head().getLong(0)
@@ -326,7 +326,7 @@ class StoreSpec extends SparkSpec {
   }
 
   test("openAt serves each append snapshot; latest equals open()") {
-    val dir = java.nio.file.Files.createTempDirectory("tt").toString
+    val dir = tempDir("tt")
     val b1 = data.where($"id" <= 2)
     val b2 = data.where($"id" === 3)
     val b3 = data.where($"id" === 4)
@@ -344,7 +344,7 @@ class StoreSpec extends SparkSpec {
     assert(ids(Store.openAt(spark, dir, spec, 1)) === Seq(1L, 2L, 3L))
     assert(ids(Store.openAt(spark, dir, spec, 2)) === Seq(1L, 2L, 3L, 4L))
     // the snapshot index equals a fresh store built from the same rows
-    val dirRef = java.nio.file.Files.createTempDirectory("ttref").toString
+    val dirRef = tempDir("ttref")
     Store.write(data.where($"id" <= 3), dirRef, spec)
     assert(ix(Store.openAt(spark, dir, spec, 1)) ===
       ix(Store.open(spark, dirRef, spec)))
@@ -358,7 +358,7 @@ class StoreSpec extends SparkSpec {
     // a store with a tombstone, a rename and a drop: at the latest id
     // openAt serves exactly open()'s index, rows and row refs
     val rspec = IndexSpec(Seq("cat", "tag")).withRowRefs("id")
-    val dirEv = java.nio.file.Files.createTempDirectory("ttev").toString
+    val dirEv = tempDir("ttev")
     val tagged = data.withColumn("tag",
       concat(lit("t"), ($"id" % 2).cast("string")))
     Store.append(tagged.where($"id" <= 2), dirEv, rspec)
@@ -383,7 +383,7 @@ class StoreSpec extends SparkSpec {
 
   test("compact folds only committed segments: a crashed append stays invisible") {
     val rspec = IndexSpec(Seq("cat")).withRowRefs("id")
-    val dir = java.nio.file.Files.createTempDirectory("cmpcrash").toString
+    val dir = tempDir("cmpcrash")
     Store.append(data.where($"id" <= 2), dir, rspec)
     Store.append(data.where($"id" > 2), dir, rspec)
     // the state a crash between the second append's index writes and
@@ -416,7 +416,7 @@ class StoreSpec extends SparkSpec {
   }
 
   test("compact collapses snapshot history to the manifest union") {
-    val dir = java.nio.file.Files.createTempDirectory("ttc").toString
+    val dir = tempDir("ttc")
     Store.append(data.where($"id" <= 2), dir, spec)
     Store.append(data.where($"id" > 2), dir, spec)
     Store.compact(spark, dir)
@@ -435,7 +435,7 @@ class StoreSpec extends SparkSpec {
 
   test("openAt serves row-refs of only the snapshot's segments") {
     val rspec = IndexSpec(Seq("cat")).withRowRefs("id")
-    val dir = java.nio.file.Files.createTempDirectory("ttr").toString
+    val dir = tempDir("ttr")
     Store.append(data.where($"id" <= 2), dir, rspec)
     Store.append(data.where($"id" > 2), dir, rspec)
     val snap = Store.openAt(spark, dir, rspec, 0)
@@ -446,7 +446,7 @@ class StoreSpec extends SparkSpec {
   }
 
   test("schema evolution: appended column reads as null for old rows") {
-    val dir = java.nio.file.Files.createTempDirectory("ev").toString
+    val dir = tempDir("ev")
     Store.append(data.where($"id" <= 2), dir, spec)
     val withQ = data.where($"id" > 2).withColumn("quality", $"v" * 2)
     Store.append(withQ, dir, spec)
@@ -464,7 +464,7 @@ class StoreSpec extends SparkSpec {
   }
 
   test("schema evolution: time travel serves the schema as of the snapshot") {
-    val dir = java.nio.file.Files.createTempDirectory("ev2").toString
+    val dir = tempDir("ev2")
     Store.append(data.where($"id" <= 2), dir, spec)
     Store.append(data.where($"id" > 2).withColumn("quality", $"v" * 2),
       dir, spec)
@@ -475,7 +475,7 @@ class StoreSpec extends SparkSpec {
   }
 
   test("schema evolution: compact folds to one segment with the union schema") {
-    val dir = java.nio.file.Files.createTempDirectory("ev3").toString
+    val dir = tempDir("ev3")
     Store.append(data.where($"id" <= 2), dir, spec)
     Store.append(data.where($"id" > 2).withColumn("quality", $"v" * 2),
       dir, spec)
@@ -493,8 +493,8 @@ class StoreSpec extends SparkSpec {
     val grid = spark.range(0, 64L * 64)
       .select((col("id") / 64).cast("long").as("a"),
         pmod(col("id"), lit(64L)).as("b"))
-    val zDir = java.nio.file.Files.createTempDirectory("zo").toString
-    val sDir = java.nio.file.Files.createTempDirectory("so").toString
+    val zDir = tempDir("zo")
+    val sDir = tempDir("so")
     Store.writeZOrdered(grid, zDir, col("a"), col("b"), numFiles = 16)
     grid.repartitionByRange(16, col("a")).sortWithinPartitions("a")
       .write.parquet(s"$sDir/data")
@@ -543,7 +543,7 @@ class StoreSpec extends SparkSpec {
     val grid = spark.range(0, 64L * 64)
       .select(((col("id") / 64).cast("long") - 32L).as("a"),
         (pmod(col("id"), lit(64L)) * (1L << 26)).as("b"))
-    val dir = java.nio.file.Files.createTempDirectory("zdom").toString
+    val dir = tempDir("zdom")
     Store.writeZOrdered(grid, dir, col("a"), col("b"), numFiles = 16)
     val spans = spark.read.parquet(s"$dir/data")
       .groupBy(input_file_name().as("f"))
@@ -561,7 +561,7 @@ class StoreSpec extends SparkSpec {
   }
 
   test("schema evolution rejects a type change BEFORE mutating the store") {
-    val dir = java.nio.file.Files.createTempDirectory("ev4").toString
+    val dir = tempDir("ev4")
     Store.append(data.where($"id" <= 2), dir, spec)
     // the violating append must fail while the store is still intact —
     // a rejection only at open()/compact() time would come AFTER the
@@ -578,7 +578,7 @@ class StoreSpec extends SparkSpec {
 
   test("a point-only handle plans nothing: each plan face is built on first access") {
     val rspec = IndexSpec(Seq("cat")).withRowRefs("id")
-    val dir = java.nio.file.Files.createTempDirectory("lazyfaces").toString
+    val dir = tempDir("lazyfaces")
     Store.write(data, dir, rspec)
     val st0 = Store.open(spark, dir, rspec)
     val (f0, rows0) = (st0.fPoint("cat", "a"), st0.rowsOfPoint("cat", "a"))
@@ -602,7 +602,7 @@ class StoreSpec extends SparkSpec {
     val rec = new JobRecorder(spark)
     val sc = spark.sparkContext
     def jobsOf(kind: String)(commit: String => Unit): Int = {
-      val dir = java.nio.file.Files.createTempDirectory(s"jobs_$kind").toString
+      val dir = tempDir(s"jobs_$kind")
       Store.write(data, dir, rspec) // fresh store: no tombstones
       val group = s"jobs-$kind-${java.util.UUID.randomUUID}"
       sc.setJobGroup(group, kind)
@@ -643,7 +643,7 @@ class StoreSpec extends SparkSpec {
     // victims (bounded by a one-split key set) are indexed in one
     // task; a compaction keeps its range-partitioned
     // plans, so its count does not move.
-    val dir = java.nio.file.Files.createTempDirectory("jobs_onefile").toString
+    val dir = tempDir("jobs_onefile")
     Store.write(churnRows(0 until 400, "O").repartition(2), dir, churnSpec)
     val rec = new JobRecorder(spark)
     val sc = spark.sparkContext
@@ -675,7 +675,7 @@ class StoreSpec extends SparkSpec {
   }
 
   test("a multi-split append and upsert keep parallel index units, sorted in file-name order") {
-    val dir = java.nio.file.Files.createTempDirectory("multifile").toString
+    val dir = tempDir("multifile")
     Store.write(churnRows(0 until 200, "O").coalesce(1), dir, churnSpec)
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {

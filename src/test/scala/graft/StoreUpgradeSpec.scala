@@ -23,8 +23,7 @@ class StoreUpgradeSpec extends SparkSpec {
   private def rm(p: String): Unit =
     assert(fsOf(p).delete(new org.apache.hadoop.fs.Path(p), true), p)
 
-  private def tmp(name: String) =
-    java.nio.file.Files.createTempDirectory(name).toString
+  private def tmp(name: String) = tempDir(name)
 
   /** every file under `dir`, relative, with its length */
   private def files(dir: String): Set[(String, Long)] = {

@@ -9,11 +9,12 @@ import org.apache.spark.sql.functions._
   * heals what a crashed writer left before it serves.
   *
   * The specs drive the EXACT interleavings through the private[core]
-  * seams (claim / appendSegment / writeTombstone / commitTombstone),
-  * freeze crash states by hand, then true thread races check the
-  * invariant end-to-end. The invariant everywhere: the merged index
-  * equals a from-scratch index of the live data, and the live data
-  * equals the expected survivor set.
+  * steps of the one commit routine (an id claim, then write units,
+  * publish and heal: `Store.writeUnits`, `Store.publish`,
+  * `Store.finish`, `Store.commit`), freeze crash states by hand, then
+  * true thread races check the invariant end-to-end. The invariant
+  * everywhere: the merged index equals a from-scratch index of the
+  * live data, and the live data equals the expected survivor set.
   */
 class ConflictDetectionSpec extends graft.SparkSpec {
   import spark.implicits._
@@ -30,6 +31,26 @@ class ConflictDetectionSpec extends graft.SparkSpec {
     df.collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2))
       .toMap
 
+  /** a delete run through step 1 of its commit: validated and claimed
+    * over a fresh snapshot, its units written, nothing published */
+  private def writtenDelete(dir: String, keys: org.apache.spark.sql.DataFrame,
+                            s: IndexSpec = spec): Store.Commit = {
+    val c = Store.deleteCommit(spark, Store.resolveSnapshot(spark, dir), s,
+      "id", keys)
+    Store.writeUnits(spark, c)
+    c
+  }
+
+  /** the rest of a written delete's commit: publish, then heal */
+  private def finish(c: Store.Commit): Unit = Store.finish(spark, c, None)
+
+  private def idOf(c: Store.Commit): Int = c.del.get.id
+
+  /** an append's whole commit at an already-claimed id */
+  private def appendAt(dir: String, id: Int, rows: Seq[Int]): Unit =
+    Store.commit(spark, Store.Commit(Store.resolveSnapshot(spark, dir), spec,
+      seg = Some(Store.SegUnit(id, mkDf(rows), s"seg_$id", commitEmpty = false))))
+
   /** ground truth: a from-scratch index of the live rows */
   private def check(dir: String): Unit = {
     val st = Store.open(spark, dir, spec)
@@ -41,7 +62,7 @@ class ConflictDetectionSpec extends graft.SparkSpec {
 
   test("append commits AFTER the victim scan, BEFORE the marker: " +
       "validate loop covers it") {
-    val dir = java.nio.file.Files.createTempDirectory("cds").toString
+    val dir = tempDir("cds")
     Store.write(mkDf(0 until 40), dir, spec)
     val fs = fsOf(dir)
     val root = s"$dir/index"
@@ -49,13 +70,14 @@ class ConflictDetectionSpec extends graft.SparkSpec {
     val apId = Store.claimUnitId(fs, root)
     assert(apId === 1)
     // the delete's scan runs now — seg_1 is uncommitted, unseen
-    val delId = Store.writeTombstone(spark, dir, spec, "id",
-      (0 until 100 by 4).map(_.toLong).toDF("id"), commit = false)
+    val delC = writtenDelete(dir,
+      (0 until 100 by 4).map(_.toLong).toDF("id"))
+    val delId = idOf(delC)
     assert(delId === 2)
     // the appender's segment (WRITING victim keys) commits in between
-    Store.appendSegment(mkDf(40 until 80), dir, spec, apId, root)
+    appendAt(dir, apId, 40 until 80)
     // ... and the heal after the delete's marker repairs it
-    Store.commitTombstone(spark, dir, s"$dir/index", spec, delId)
+    finish(delC)
     assert(fs.exists(new org.apache.hadoop.fs.Path(
       s"$root/del_$delId/_scope_$apId")))
     assert(fs.exists(new org.apache.hadoop.fs.Path(
@@ -69,20 +91,21 @@ class ConflictDetectionSpec extends graft.SparkSpec {
 
   test("append's manifest lands AFTER the marker: the appender's " +
       "post-commit check repairs") {
-    val dir = java.nio.file.Files.createTempDirectory("cds").toString
+    val dir = tempDir("cds")
     Store.write(mkDf(0 until 40), dir, spec)
     val fs = fsOf(dir)
     val root = s"$dir/index"
     val apId = Store.claimUnitId(fs, root)
-    val delId = Store.writeTombstone(spark, dir, spec, "id",
-      (0 until 100 by 4).map(_.toLong).toDF("id"), commit = false)
+    val delC = writtenDelete(dir,
+      (0 until 100 by 4).map(_.toLong).toDF("id"))
+    val delId = idOf(delC)
     // the tombstone commits first — seg_1 still invisible to it
-    Store.commitTombstone(spark, dir, s"$dir/index", spec, delId)
+    finish(delC)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(
       s"$root/del_$delId/_scope_$apId")))
     // the appender commits second; its post-commit check must find
     // the committed tombstone that missed it and write the repair
-    Store.appendSegment(mkDf(40 until 80), dir, spec, apId, root)
+    appendAt(dir, apId, 40 until 80)
     assert(fs.exists(new org.apache.hadoop.fs.Path(
       s"$root/del_$delId/ixrepair_$apId/_SUCCESS")),
       "appender-side conflict repair missing")
@@ -92,15 +115,16 @@ class ConflictDetectionSpec extends graft.SparkSpec {
   }
 
   test("racing append of NON-victim keys: token only, no repair dir") {
-    val dir = java.nio.file.Files.createTempDirectory("cds").toString
+    val dir = tempDir("cds")
     Store.write(mkDf(0 until 40), dir, spec)
     val fs = fsOf(dir)
     val root = s"$dir/index"
     val apId = Store.claimUnitId(fs, root)
-    val delId = Store.writeTombstone(spark, dir, spec, "id",
-      (0 until 40 by 4).map(_.toLong).toDF("id"), commit = false)
-    Store.appendSegment(mkDf(1000 until 1040), dir, spec, apId, root)
-    Store.commitTombstone(spark, dir, s"$dir/index", spec, delId)
+    val delC = writtenDelete(dir,
+      (0 until 40 by 4).map(_.toLong).toDF("id"))
+    val delId = idOf(delC)
+    appendAt(dir, apId, 1000 until 1040)
+    finish(delC)
     assert(fs.exists(new org.apache.hadoop.fs.Path(
       s"$root/del_$delId/_scope_$apId")))
     assert(!fs.exists(new org.apache.hadoop.fs.Path(
@@ -111,42 +135,46 @@ class ConflictDetectionSpec extends graft.SparkSpec {
 
   test("then-live repair: an intermediate tombstone's kills are " +
       "not negated twice") {
-    val dir = java.nio.file.Files.createTempDirectory("cds").toString
+    val dir = tempDir("cds")
     Store.write(mkDf(0 until 40), dir, spec) // seg 0
     val fs = fsOf(dir)
     val root = s"$dir/index"
     // in-flight appender claims 1 (will write ids 40..79)
     val apId = Store.claimUnitId(fs, root)
     // tombstone A (id 2) deletes %3 keys — scans seg 0 only
-    val delA = Store.writeTombstone(spark, dir, spec, "id",
-      (0 until 80 by 3).map(_.toLong).toDF("id"), commit = false)
-    Store.commitTombstone(spark, dir, s"$dir/index", spec, delA)
+    val delAc = writtenDelete(dir,
+      (0 until 80 by 3).map(_.toLong).toDF("id"))
+    val delA = idOf(delAc)
+    finish(delAc)
     // tombstone B (id 3) deletes %2 keys — also scans seg 0 only
-    val delB = Store.writeTombstone(spark, dir, spec, "id",
-      (0 until 80 by 2).map(_.toLong).toDF("id"), commit = false)
-    Store.commitTombstone(spark, dir, s"$dir/index", spec, delB)
+    val delBc = writtenDelete(dir,
+      (0 until 80 by 2).map(_.toLong).toDF("id"))
+    val delB = idOf(delBc)
+    finish(delBc)
     // the appender commits LAST: its post-commit check must repair
     // BOTH tombstones, and B's repair must exclude rows A killed
     // (ids divisible by 6 would otherwise be negated twice)
-    Store.appendSegment(mkDf(40 until 80), dir, spec, apId, root)
+    appendAt(dir, apId, 40 until 80)
     check(dir)
     val live = Store.open(spark, dir, spec).frame.df
     assert(live.count() === (0 until 80).count(i => i % 3 != 0 && i % 2 != 0))
   }
 
   test("racing earlier-id tombstone triggers a full rescan at commit") {
-    val dir = java.nio.file.Files.createTempDirectory("cds").toString
+    val dir = tempDir("cds")
     Store.write(mkDf(0 until 60), dir, spec) // seg 0
     // tombstone A claims 1, tombstone B claims 2; B scans while A is
     // uncommitted (B's victim set still contains rows A will kill),
     // then A commits, then B commits — the heal after B's marker must
     // find the unseen tombstone and rescan B, or the %6 rows net twice
-    val delA = Store.writeTombstone(spark, dir, spec, "id",
-      (0 until 60 by 3).map(_.toLong).toDF("id"), commit = false)
-    val delB = Store.writeTombstone(spark, dir, spec, "id",
-      (0 until 60 by 2).map(_.toLong).toDF("id"), commit = false)
-    Store.commitTombstone(spark, dir, s"$dir/index", spec, delA)
-    Store.commitTombstone(spark, dir, s"$dir/index", spec, delB)
+    val delAc = writtenDelete(dir,
+      (0 until 60 by 3).map(_.toLong).toDF("id"))
+    val delA = idOf(delAc)
+    val delBc = writtenDelete(dir,
+      (0 until 60 by 2).map(_.toLong).toDF("id"))
+    val delB = idOf(delBc)
+    finish(delAc)
+    finish(delBc)
     check(dir)
     val live = Store.open(spark, dir, spec).frame.df
     assert(live.count() === (0 until 60).count(i => i % 3 != 0 && i % 2 != 0))
@@ -154,7 +182,7 @@ class ConflictDetectionSpec extends graft.SparkSpec {
 
   test("delete ∥ delete, overlapping keys, markers inside each other's " +
       "gap: AUTO-HEALED at commit (r15 — was detect-and-throw in r14)") {
-    val dir = java.nio.file.Files.createTempDirectory("cds").toString
+    val dir = tempDir("cds")
     Store.write(mkDf(0 until 60), dir, spec) // seg 0
     // A claims 1, B claims 2; BOTH scan while the other is
     // uncommitted. B commits first — A is invisible to the heal after
@@ -162,16 +190,18 @@ class ConflictDetectionSpec extends graft.SparkSpec {
     // Then A's marker lands inside what used to be the undetectable
     // window: pre-r14 both committed silently and the merged index
     // over-negated the %6 rows until compact; r14 threw; r15 heals.
-    val delA = Store.writeTombstone(spark, dir, spec, "id",
-      (0 until 60 by 3).map(_.toLong).toDF("id"), commit = false)
-    val delB = Store.writeTombstone(spark, dir, spec, "id",
-      (0 until 60 by 2).map(_.toLong).toDF("id"), commit = false)
-    Store.commitTombstone(spark, dir, s"$dir/index", spec, delB)
+    val delAc = writtenDelete(dir,
+      (0 until 60 by 3).map(_.toLong).toDF("id"))
+    val delA = idOf(delAc)
+    val delBc = writtenDelete(dir,
+      (0 until 60 by 2).map(_.toLong).toDF("id"))
+    val delB = idOf(delBc)
+    finish(delBc)
     // the later publisher ALWAYS sees the earlier one: the heal after
     // A's marker finds del_2 missing _delseen_1 and RESCANS the stale
     // unit (del_B) itself — versioned write + atomic publish, no
     // throw, no manual intervention
-    Store.commitTombstone(spark, dir, s"$dir/index", spec, delA)
+    finish(delAc)
     val fs = fsOf(dir)
     assert(fs.exists(new org.apache.hadoop.fs.Path(
       s"$dir/index/del_$delB/ixdelta_v1/_IXPUBLISHED")),
@@ -198,14 +228,16 @@ class ConflictDetectionSpec extends graft.SparkSpec {
     // interleaving), so the fold's refs-derived entries heal the
     // index WITHOUT a rescan
     val rspec = IndexSpec(Seq("cat")).withRowRefs("id")
-    val dir = java.nio.file.Files.createTempDirectory("cds").toString
+    val dir = tempDir("cds")
     Store.write(mkDf(0 until 60), dir, rspec)
-    val delA = Store.writeTombstone(spark, dir, rspec, "id",
-      (0 until 60 by 3).map(_.toLong).toDF("id"), commit = false)
-    val delB = Store.writeTombstone(spark, dir, rspec, "id",
-      (0 until 60 by 2).map(_.toLong).toDF("id"), commit = false)
-    Store.commitTombstone(spark, dir, s"$dir/index", rspec, delB)
-    Store.commitTombstone(spark, dir, s"$dir/index", rspec, delA) // r15: auto-heals
+    val delAc = writtenDelete(dir,
+      (0 until 60 by 3).map(_.toLong).toDF("id"), rspec)
+    val delA = idOf(delAc)
+    val delBc = writtenDelete(dir,
+      (0 until 60 by 2).map(_.toLong).toDF("id"), rspec)
+    val delB = idOf(delBc)
+    finish(delBc)
+    finish(delAc) // r15: auto-heals
     Store.compact(spark, dir)
     val st = Store.open(spark, dir, rspec)
     val fresh = indexAsMap(IndexedFrame(st.frame.df, rspec).entries)
@@ -216,14 +248,16 @@ class ConflictDetectionSpec extends graft.SparkSpec {
 
   test("vacuum reclaims superseded rescan versions and the original " +
       "ixdelta; the healed store still serves exactly (r15)") {
-    val dir = java.nio.file.Files.createTempDirectory("cds").toString
+    val dir = tempDir("cds")
     Store.write(mkDf(0 until 60), dir, spec)
-    val delA = Store.writeTombstone(spark, dir, spec, "id",
-      (0 until 60 by 3).map(_.toLong).toDF("id"), commit = false)
-    val delB = Store.writeTombstone(spark, dir, spec, "id",
-      (0 until 60 by 2).map(_.toLong).toDF("id"), commit = false)
-    Store.commitTombstone(spark, dir, s"$dir/index", spec, delB)
-    Store.commitTombstone(spark, dir, s"$dir/index", spec, delA) // heals B → v1
+    val delAc = writtenDelete(dir,
+      (0 until 60 by 3).map(_.toLong).toDF("id"))
+    val delA = idOf(delAc)
+    val delBc = writtenDelete(dir,
+      (0 until 60 by 2).map(_.toLong).toDF("id"))
+    val delB = idOf(delBc)
+    finish(delBc)
+    finish(delAc) // heals B → v1
     // a second (manual) heal supersedes v1 with v2
     Store.rescanTombstoneIndex(spark, dir, spec, delB)
     val fs = fsOf(dir)
@@ -243,7 +277,7 @@ class ConflictDetectionSpec extends graft.SparkSpec {
 
   test("REPAIR-ON-OPEN: an uncovered (tombstone, segment) pair left " +
       "by a crashed writer is healed before the first read (r15)") {
-    val dir = java.nio.file.Files.createTempDirectory("cds").toString
+    val dir = tempDir("cds")
     Store.write(mkDf(0 until 40), dir, spec)
     val fs = fsOf(dir)
     val root = s"$dir/index"
@@ -253,10 +287,11 @@ class ConflictDetectionSpec extends graft.SparkSpec {
     // then deleting its artifacts (token + ixrepair), exactly the
     // on-disk state a crash right after the manifest commit leaves
     val apId = Store.claimUnitId(fs, root)
-    val delId = Store.writeTombstone(spark, dir, spec, "id",
-      (0 until 100 by 4).map(_.toLong).toDF("id"), commit = false)
-    Store.commitTombstone(spark, dir, s"$dir/index", spec, delId)
-    Store.appendSegment(mkDf(40 until 80), dir, spec, apId, root)
+    val delC = writtenDelete(dir,
+      (0 until 100 by 4).map(_.toLong).toDF("id"))
+    val delId = idOf(delC)
+    finish(delC)
+    appendAt(dir, apId, 40 until 80)
     fs.delete(new org.apache.hadoop.fs.Path(
       s"$root/del_$delId/_scope_$apId"), false)
     fs.delete(new org.apache.hadoop.fs.Path(
@@ -274,15 +309,16 @@ class ConflictDetectionSpec extends graft.SparkSpec {
   test("coverSegment crash states self-heal: a published repair " +
       "missing its token is re-tokenized, a staging orphan is never " +
       "read and vacuum reclaims it (r15 — token now claimed LAST)") {
-    val dir = java.nio.file.Files.createTempDirectory("cds").toString
+    val dir = tempDir("cds")
     Store.write(mkDf(0 until 40), dir, spec)
     val fs = fsOf(dir)
     val root = s"$dir/index"
     val apId = Store.claimUnitId(fs, root)
-    val delId = Store.writeTombstone(spark, dir, spec, "id",
-      (0 until 100 by 4).map(_.toLong).toDF("id"), commit = false)
-    Store.commitTombstone(spark, dir, s"$dir/index", spec, delId)
-    Store.appendSegment(mkDf(40 until 80), dir, spec, apId, root)
+    val delC = writtenDelete(dir,
+      (0 until 100 by 4).map(_.toLong).toDF("id"))
+    val delId = idOf(delC)
+    finish(delC)
+    appendAt(dir, apId, 40 until 80)
     // crash state A (the ONLY mid-crash state the r15 ordering can
     // leave): repair published, token not yet claimed
     fs.delete(new org.apache.hadoop.fs.Path(
@@ -311,17 +347,19 @@ class ConflictDetectionSpec extends graft.SparkSpec {
 
   test("delete ∥ delete, DISJOINT keys, same interleaving: cleared " +
       "with a coverage token, index exact (r14)") {
-    val dir = java.nio.file.Files.createTempDirectory("cds").toString
+    val dir = tempDir("cds")
     Store.write(mkDf(0 until 60), dir, spec)
-    val delA = Store.writeTombstone(spark, dir, spec, "id",
-      (0 until 10).map(_.toLong).toDF("id"), commit = false)
-    val delB = Store.writeTombstone(spark, dir, spec, "id",
-      (30 until 40).map(_.toLong).toDF("id"), commit = false)
-    Store.commitTombstone(spark, dir, s"$dir/index", spec, delB)
+    val delAc = writtenDelete(dir,
+      (0 until 10).map(_.toLong).toDF("id"))
+    val delA = idOf(delAc)
+    val delBc = writtenDelete(dir,
+      (30 until 40).map(_.toLong).toDF("id"))
+    val delB = idOf(delBc)
+    finish(delBc)
     // disjoint pair: the then-live rule is vacuous between them; the
     // heal after A's marker rescans B anyway (correct for disjoint
     // keys too) and writes the missing token instead of throwing
-    Store.commitTombstone(spark, dir, s"$dir/index", spec, delA)
+    finish(delAc)
     val fs = fsOf(dir)
     assert(fs.exists(new org.apache.hadoop.fs.Path(
       s"$dir/index/del_$delB/_delseen_$delA")))
@@ -332,7 +370,7 @@ class ConflictDetectionSpec extends graft.SparkSpec {
 
   test("crash after an append's manifest, before its repair: compact " +
       "refuses until an open heals the pair") {
-    val dir = java.nio.file.Files.createTempDirectory("cds").toString
+    val dir = tempDir("cds")
     Store.write(mkDf(0 until 40), dir, spec)
     val fs = fsOf(dir)
     val root = s"$dir/index"
@@ -340,7 +378,7 @@ class ConflictDetectionSpec extends graft.SparkSpec {
     val delId = Store.delete(spark, dir, spec, "id",
       (0 until 100 by 4).map(_.toLong).toDF("id"))
     assert(delId === 2)
-    Store.appendSegment(mkDf(40 until 80), dir, spec, apId, root)
+    appendAt(dir, apId, 40 until 80)
     // the on-disk state of an appender that died right after its
     // manifest: the pair (del_2, seg_1) has neither repair nor token
     fs.delete(new org.apache.hadoop.fs.Path(
@@ -360,18 +398,19 @@ class ConflictDetectionSpec extends graft.SparkSpec {
 
   test("crash after a tombstone's marker, before its check: an earlier " +
       "tombstone it never saw is healed by open") {
-    val dir = java.nio.file.Files.createTempDirectory("cds").toString
+    val dir = tempDir("cds")
     Store.write(mkDf(0 until 40), dir, spec)
     // B scans while A is uncommitted, so B's victims hold the %8 rows
     // A kills; A commits, then B's marker lands and B dies before its
     // post-marker check
-    val delA = Store.writeTombstone(spark, dir, spec, "id",
-      (0 until 40 by 4).map(_.toLong).toDF("id"), commit = false)
-    val delB = Store.writeTombstone(spark, dir, spec, "id",
-      (0 until 40 by 8).map(_.toLong).toDF("id"), commit = false)
-    Store.commitTombstone(spark, dir, s"$dir/index", spec, delA)
-    fsOf(dir).create(new org.apache.hadoop.fs.Path(
-      s"$dir/index/del_$delB/_COMMITTED")).close()
+    val delAc = writtenDelete(dir,
+      (0 until 40 by 4).map(_.toLong).toDF("id"))
+    val delA = idOf(delAc)
+    val delBc = writtenDelete(dir,
+      (0 until 40 by 8).map(_.toLong).toDF("id"))
+    val delB = idOf(delBc)
+    finish(delAc)
+    Store.publish(spark, delBc, None)
     val e = intercept[IllegalStateException](Store.compact(spark, dir))
     assert(e.getMessage.contains("open it once with its IndexSpec"))
     check(dir) // the open rescans B
@@ -387,7 +426,7 @@ class ConflictDetectionSpec extends graft.SparkSpec {
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
     (0 until 3).foreach { round =>
-      val dir = java.nio.file.Files.createTempDirectory("cdr").toString
+      val dir = tempDir("cdr")
       Store.write(mkDf(0 until 50), dir, spec)
       val del = Future {
         Store.delete(spark, dir, spec, "id",
@@ -414,7 +453,7 @@ class ConflictDetectionSpec extends graft.SparkSpec {
     import scala.concurrent.ExecutionContext.Implicits.global
     val steps = Seq(2, 3)
     (0 until 3).foreach { round =>
-      val dir = java.nio.file.Files.createTempDirectory("cdr3").toString
+      val dir = tempDir("cdr3")
       Store.write(mkDf(0 until 50), dir, spec)
       val dels = steps.map(step => Future {
         Store.delete(spark, dir, spec, "id",
